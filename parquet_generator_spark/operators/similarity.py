@@ -720,14 +720,15 @@ def embedding_dup_pairs_lsh(df: DataFrame, threshold: float,
         # arrays (the embeddings table contract; enforced at
         # generation). np.array over a ragged/null batch would
         # raise where the replaced SQL fold degraded to bucket 0 —
-        # assert so a contract break fails loudly, not obscurely.
+        # check so a contract break fails loudly, not obscurely.
         import pandas as pd
         if len(vs) == 0:
             return pd.Series([], dtype="object")
         rows = vs.tolist()
-        assert all(r is not None and len(r) == len(rows[0])
-                   for r in rows), \
-            "band_buckets: null or ragged embedding in batch"
+        if not all(r is not None and len(r) == len(rows[0])
+                   for r in rows):
+            raise ValueError(
+                "band_buckets: null or ragged embedding in batch")
         mat = np.array(rows, dtype=np.float64)
         return pd.Series(list(band_buckets_np(mat, planes, n_bands)))
 

@@ -257,3 +257,21 @@ FROM (
 GROUP BY user_id
 ORDER BY user_id
 """
+
+QUERIES = {
+    "sessionize": sessionize,
+    "q1_pricing_summary": q1_pricing_summary,
+    "q3_shipping_priority": q3_shipping_priority,
+    "q5_local_supplier": q5_local_supplier,
+    "q6_forecast_revenue": q6_forecast_revenue,
+    "topk_per_group": topk_per_group,
+}
+
+ORACLES = {
+    "sessionize": SESSIONIZE_ORACLE,
+    "q1_pricing_summary": Q1_ORACLE,
+    "q3_shipping_priority": Q3_ORACLE,
+    "q5_local_supplier": Q5_ORACLE,
+    "q6_forecast_revenue": Q6_ORACLE,
+    "topk_per_group": TOPK_ORACLE,
+}

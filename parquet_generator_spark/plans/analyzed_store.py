@@ -9,8 +9,9 @@ on two languages (es 71.5s query-time -> 0.6-0.8s stored at sf1,
 the 18-100x index-time amortization). This module completes it:
 
 - ONE store per sf_dir holding the planted multilingual text plus
-  an ``analyzed_<lang>`` stemmed token array for EVERY
-  registered language and the CASE-routed ``analyzed_routed`` column (each
+  an ``analyzed_<lang>`` stemmed token array for every language in
+  ``plans/analyzer_queries.SPECS`` and the CASE-routed
+  ``analyzed_routed`` column (each
   document pays exactly its own language's chain there — the ES
   per-language-sub-field pattern);
 - built in STAGES of at most two expensive stemmers per projection
@@ -24,8 +25,8 @@ the 18-100x index-time amortization). This module completes it:
   planted literal, so a stemmer fidelity fix (like round 13's
   french/romanian canonical corrections) rebuilds the store
   automatically instead of serving stale analysis;
-- every ``dsl_match_analyzer_*`` / ``dsl_match_phrase_analyzer_*``
-  key and ``dsl_match_lang_routed`` then serve from these arrays
+- every key in ``plans/analyzer_queries.py`` then serves from
+  these arrays
   (plain membership / adjacency scans — zero stemmer expressions in
   the query plan) while their ORACLES still recompute the full
   analysis from raw text in DuckDB, so the driver itself proves
@@ -52,68 +53,26 @@ from parquet_generator_spark.operators.analyzers import (
     analyzed_tokens_sql,
     get_analyzer,
 )
+from parquet_generator_spark.plans.analyzer_queries import (
+    ROUTE,
+    SPECS,
+    planted_expr,
+    routed_planted_expr,
+)
 from parquet_generator_spark.sources.catalog import load_table
 
 
 def _specs() -> list[tuple[str, str, str]]:
     """(column-suffix, analyzer name, mixed-text SQL expr) per
-    language — the planted-literal exprs are imported from the plan
-    modules that own each query key, so plan and store stay in
-    lockstep by construction."""
-    from parquet_generator_spark.plans.reference_queries25 import (
-        _DE_SNIPPETS,
-        _ES_SNIPPETS,
-        _FR_SNIPPETS,
-        _planted_expr,
-    )
-    from parquet_generator_spark.plans.reference_queries27 import (
-        _it_planted_expr,
-    )
-    from parquet_generator_spark.plans.reference_queries28 import (
-        _pt_planted_expr,
-        _scand_planted_expr,
-    )
-    from parquet_generator_spark.plans.reference_queries30 import (
-        _nl_planted_expr,
-        _ro_planted_expr,
-        _ru_planted_expr,
-    )
-    from parquet_generator_spark.plans.reference_queries31 import (
-        _fi_planted_expr,
-        _hu_planted_expr,
-    )
-    from parquet_generator_spark.plans.reference_queries32 import (
-        _ar_planted_expr,
-    )
-
-    return [
-        ("fi", "finnish", _fi_planted_expr()),
-        ("hu", "hungarian", _hu_planted_expr()),
-        ("ar", "arabic", _ar_planted_expr()),
-        ("es", "spanish", _planted_expr("es", _ES_SNIPPETS)),
-        ("de", "german", _planted_expr("de", _DE_SNIPPETS)),
-        ("fr", "french", _planted_expr("fr", _FR_SNIPPETS)),
-        ("it", "italian", _it_planted_expr()),
-        ("pt", "portuguese", _pt_planted_expr()),
-        ("nl", "dutch", _nl_planted_expr()),
-        ("ro", "romanian", _ro_planted_expr()),
-        ("ru", "russian", _ru_planted_expr()),
-        ("sv", "swedish", _scand_planted_expr("sv")),
-        ("da", "danish", _scand_planted_expr("da")),
-        ("no", "norwegian", _scand_planted_expr("no")),
-    ]
+    language, from the analyzer-match spec table."""
+    return [(s.lang, s.analyzer, planted_expr(s)) for s in SPECS]
 
 
 def _routed() -> tuple[str, dict]:
     """(mixed SQL expr, lang -> analyzer name) for the CASE-routed
     multilingual column (dsl_match_lang_routed's field)."""
-    from parquet_generator_spark.plans.reference_queries28 import (
-        _ROUTE,
-        _routed_planted_expr,
-    )
-
-    return (_routed_planted_expr(),
-            {lang: a for lang, (a, _, _) in _ROUTE.items()})
+    return (routed_planted_expr(),
+            {lang: a for lang, (a, _, _) in ROUTE.items()})
 
 
 # stemmer-cost groups per projection pass: at most two expensive

@@ -533,7 +533,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (docs
                .select("doc_id", F.expr(toks_spark("text")).alias("tk"))
                .select("doc_id", F.size("tk").alias("dl"),
-                       *[F.expr(f"size(filter(tk, x -> x = '{t}'))")
+                       *[F.size(F.filter("tk", lambda x: x == F.lit(t)))
                          .alias(c)
                          for t, c in zip(BM25_TERMS, tf_cols)])
                .filter(F.col("dl") > 0))

@@ -123,122 +123,6 @@ ORACLES.update({
 })
 
 
-# ------------------------- snowball language analyzers (de / fr)
-
-# the synthetic corpus is ASCII English, so de/fr documents get
-# deterministic planted payloads (literal constants shared by plan
-# and oracle — the text_tokens_cjk posture): inflected forms the
-# english chain provably cannot fold onto the query's terms
-_DE_SNIPPETS = [
-    "die häuser wurden gebaut",
-    "kategorien für häusern geordnet",
-    "schönheit alter häuser",
-]
-_DE_QUERY = "haus kategorie"
-
-_FR_SNIPPETS = [
-    "les maisons nationales sont grandes",
-    "arrangements nationaux et continuité",
-    "qualification nationale première",
-]
-_FR_QUERY = "national arrangement"
-
-
-def _planted_expr(lang: str, snippets: list[str]) -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(snippets))
-            + " END")
-    return (f"CASE WHEN lang = '{lang}' THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def _match_lang_df(spark: SparkSession, sf_dir: str, lang: str,
-                   snippets: list[str], query: str,
-                   analyzer_name: str) -> DataFrame:
-    """Since round 13: served from the INGEST-TIME analyzed store
-    (plans/analyzed_store.py) — the query side is stemmed at plan
-    time and the field side is a stored-array membership scan, zero
-    stemmer expressions in the query plan (the ES index-time
-    contract; VERDICT r12 mandate #1). The ORACLE still recomputes
-    the full analysis from raw text in DuckDB, so the driver proves
-    stored == query-time every round."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match(f"analyzed_{lang}", query,
-                        get_analyzer(analyzer_name), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _match_lang_oracle(lang: str, snippets: list[str], query: str,
-                       analyzer_name: str) -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", query, get_analyzer(analyzer_name), operator="and")
-    return f"""
-WITH m AS (SELECT source,
-                  {_planted_expr(lang, snippets)} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-def dsl_match_analyzer_de(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "german"`` (snowball german,
-    operator AND): the query's dictionary forms (haus, kategorie)
-    match the planted declensions (häusern, kategorien) only through
-    the full stemmer chain — umlaut-aware tokenization, R1/R2 suffix
-    removal, umlaut folding. The english chain provably matches ZERO
-    documents here (pinned in tests/test_snowball_de.py's sibling
-    analyzer test): ä splits its tokenizer and the S-stemmer cannot
-    fold häusern -> haus. Stemmer bound ONCE per document
-    (operators/analyzers._stemmed_match_sql)."""
-    return _match_lang_df(spark, sf_dir, "de", _DE_SNIPPETS,
-                          _DE_QUERY, "german")
-
-
-def dsl_match_analyzer_fr(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "french"`` (snowball french,
-    operator AND): nationaux/nationales/arrangements all fold to the
-    query's stems through RV/R1/R2 suffix removal + residual steps —
-    the english chain matches zero."""
-    return _match_lang_df(spark, sf_dir, "fr", _FR_SNIPPETS,
-                          _FR_QUERY, "french")
-
-
-QUERIES.update({
-    "dsl_match_analyzer_de": dsl_match_analyzer_de,
-    "dsl_match_analyzer_fr": dsl_match_analyzer_fr,
-})
-ORACLES.update({
-    "dsl_match_analyzer_de": _match_lang_oracle(
-        "de", _DE_SNIPPETS, _DE_QUERY, "german"),
-    "dsl_match_analyzer_fr": _match_lang_oracle(
-        "fr", _FR_SNIPPETS, _FR_QUERY, "french"),
-})
-
-
 # -------------------------------------- dsl_scripted_metric_loop
 
 def dsl_scripted_metric_loop(spark: SparkSession,
@@ -296,63 +180,6 @@ QUERIES.update({"dsl_scripted_metric_loop": dsl_scripted_metric_loop})
 ORACLES.update({"dsl_scripted_metric_loop": _SCRIPTED_LOOP_ORACLE})
 
 
-# ------------------------------- dsl_match_phrase_analyzer_de
-
-_DE_PHRASE = "hauses geordnetes"
-
-
-def dsl_match_phrase_analyzer_de(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """``match_phrase`` with ``analyzer: "german"``: the query's
-    forms (hauses, geordnetes) and the planted declensions (häusern,
-    geordnet) meet only at the snowball stems [haus, geordnet], and
-    the two stems must be CONSECUTIVE field positions. Since round
-    13 the adjacency windows scan the PERSISTED stemmed positions
-    from the central analyzed store — zero stemmer expressions in
-    the query plan; the oracle still recomputes from raw text."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match_phrase,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match_phrase("analyzed_de", _DE_PHRASE,
-                               get_analyzer("german"))
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("lang"))
-
-
-def _phrase_de_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_phrase_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_phrase_duck_sql(
-        "mixed", _DE_PHRASE, get_analyzer("german"))
-    return f"""
-WITH m AS (SELECT lang,
-                  {_planted_expr("de", _DE_SNIPPETS)} AS mixed
-           FROM documents)
-SELECT lang, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY lang ORDER BY lang
-"""
-
-
-QUERIES.update(
-    {"dsl_match_phrase_analyzer_de": dsl_match_phrase_analyzer_de})
-ORACLES.update(
-    {"dsl_match_phrase_analyzer_de": _phrase_de_oracle()})
-
-
 # ------------------------------------------------ esql_rename_drop
 
 ESQL_RENAME_QUERY = (
@@ -384,31 +211,3 @@ QUERIES.update({"esql_rename_drop": esql_rename_drop})
 ORACLES.update({
     "esql_rename_drop": esql_duck_sql(parse_esql(ESQL_RENAME_QUERY)),
 })
-
-
-# ---------------------------------------- dsl_match_analyzer_es
-
-_ES_SNIPPETS = [
-    "las canciones fueron grabadas",
-    "trabajadores cantando canciones",
-    "la comunicación llegó rápidamente",
-]
-_ES_QUERY = "cancion trabajador"
-
-
-def dsl_match_analyzer_es(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "spanish"`` (snowball spanish,
-    operator AND): the query's dictionary forms (cancion,
-    trabajador) reach the planted inflections (canciones,
-    trabajadores) only through the full stemmer — accent-aware
-    tokenization, RV/R1/R2 suffix system, pronoun step, accent
-    folding. The english chain matches zero of the same documents
-    (canciones S-stems to cancione, never cancion)."""
-    return _match_lang_df(spark, sf_dir, "es", _ES_SNIPPETS,
-                          _ES_QUERY, "spanish")
-
-
-QUERIES.update({"dsl_match_analyzer_es": dsl_match_analyzer_es})
-ORACLES.update({"dsl_match_analyzer_es": _match_lang_oracle(
-    "es", _ES_SNIPPETS, _ES_QUERY, "spanish")})

@@ -1,28 +1,14 @@
-"""Round-11 tranche four: the Italian snowball analyzer match plus
-the ES|QL 8.14-8.16 feature tranche (numeric BUCKET histograms,
-per-aggregate STATS ... WHERE filters, the TOP aggregate, and the
-DATE_DIFF / POW / LOG10 / GREATEST / LEAST scalar functions).
+"""Round-11 tranche four: the ES|QL 8.14-8.16 feature tranche
+(numeric BUCKET histograms, per-aggregate STATS ... WHERE filters,
+the TOP aggregate, and the DATE_DIFF / POW / LOG10 / GREATEST /
+LEAST scalar functions).
 
-Scale notes for the ES|QL keys: every pipeline is one hash
-aggregation over a narrow scan — BUCKET/DATE_DIFF/CASE math is
-pure codegen in the scan projection, per-aggregate FILTER clauses
-ride the same partial aggregate (map-side combine), and TOP's
-collect_list runs per group (bounded by the BY cardinality), so
-nothing here widens at 100 TB beyond the one shuffle the
-aggregation already pays.
-
-Reference parity: ES/Lucene's ``italian`` analyzer (stop +
-snowball-italian stemmer filter) applied through the same
-plan-time-analysis / codegen-field-side match translation as the
-german/french/spanish siblings (operators/analyzers.py); the
-reference repo (liujiawinds/parquet-generator, Bootstrap.java) is an
-ETL tool whose ES indices declare language analyzers — the match
-semantics generalize what those indices get queried WITH.
-
-Scale notes: the stemmer is ONE codegen expression bound once per
-document (operators/analyzers._stemmed_match_sql), no UDF, no
-shuffle before the small groupBy; at 100 TB the documents scan
-partitions freely and the match predicate rides the scan filter.
+Scale notes: every pipeline is one hash aggregation over a narrow
+scan — BUCKET/DATE_DIFF/CASE math is pure codegen in the scan
+projection, per-aggregate FILTER clauses ride the same partial
+aggregate (map-side combine), and TOP's collect_list runs per group
+(bounded by the BY cardinality), so nothing here widens at 100 TB
+beyond the one shuffle the aggregation already pays.
 """
 
 from __future__ import annotations
@@ -33,84 +19,6 @@ from parquet_generator_spark.sources.catalog import load_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-# ------------------------------------------ dsl_match_analyzer_it
-
-# the synthetic corpus has no Italian rows, so a deterministic
-# doc_id slice gets planted payloads (literal constants shared by
-# plan and oracle — the de/fr/es posture in reference_queries25):
-# inflections the english chain provably cannot fold onto the
-# query's dictionary forms
-_IT_SNIPPETS = [
-    "le canzoni furono cantate",
-    "lavoratori cantando canzoni",
-    "la comunicazione arrivò rapidamente",
-]
-_IT_QUERY = "canzone lavoratore"
-
-
-def _it_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_IT_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 2 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_it(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "italian"`` (snowball italian,
-    operator AND): the query's dictionary forms (canzone,
-    lavoratore) reach the planted inflections (canzoni, lavoratori)
-    only through the full stemmer — acute->grave prelude, u/i
-    consonant marking, RV/R1/R2 suffix system, attached-pronoun
-    step, residual vowel + ch/gh steps. The english chain matches
-    zero of the same documents (canzoni never S-stems to canzon;
-    pinned in tests/test_snowball_it.py). Since round 13: served
-    from the central analyzed store (plans/analyzed_store.py) —
-    stored-array membership, zero stemmer expressions in the plan;
-    the oracle still recomputes from raw text."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match("analyzed_it", _IT_QUERY,
-                        get_analyzer("italian"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _match_it_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _IT_QUERY, get_analyzer("italian"), operator="and")
-    return f"""
-WITH m AS (SELECT source, {_it_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_it": dsl_match_analyzer_it})
-ORACLES.update({"dsl_match_analyzer_it": _match_it_oracle()})
 
 
 # ------------------------------------------- ES|QL feature tranche

@@ -1,22 +1,5 @@
-"""Round-11 tranche eight: the Portuguese snowball analyzer match
-(the FIFTH language analyzer) plus the ES|QL SAMPLE / IP-function
-tranche.
-
-Reference parity: ES/Lucene's ``portuguese`` analyzer (stop +
-snowball-portuguese stemmer filter) applied through the same
-plan-time-analysis / codegen-field-side match translation as the
-german/french/spanish/italian siblings (operators/analyzers.py);
-the reference repo (liujiawinds/parquet-generator, Bootstrap.java)
-is an ETL tool whose ES indices declare language analyzers — the
-match semantics generalize what those indices get queried WITH.
-
-Scale notes: the stemmer is ONE codegen expression bound once per
-document (operators/analyzers._stemmed_match_sql) behind the
-prefix-2 guard (sound for portuguese — the nasal prelude
-round-trips and cuts keep >= 3 chars), no UDF, no shuffle before
-the small groupBy; at 100 TB the documents scan partitions freely
-and the match predicate rides the scan filter.
-"""
+"""Round-11 tranche eight: the ES|QL FORK, IP-function
+(CIDR_MATCH / IP_PREFIX) and SAMPLE commands."""
 
 from __future__ import annotations
 
@@ -26,86 +9,6 @@ from parquet_generator_spark.sources.catalog import load_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-# ------------------------------------------ dsl_match_analyzer_pt
-
-# the synthetic corpus has no Portuguese rows, so a deterministic
-# doc_id slice gets planted payloads (literal constants shared by
-# plan and oracle — the de/fr/es/it posture): inflections the
-# english chain provably cannot fold onto the query's dictionary
-# forms (comunicações never S-stems to comunicação; pinned in
-# tests/test_snowball_pt.py)
-_PT_SNIPPETS = [
-    "as comunicações entre equipas",
-    "os trabalhadores chegaram cedo",
-    "comunicações dos trabalhadores portugueses",
-]
-_PT_QUERY = "comunicação trabalhador"
-
-
-def _pt_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_PT_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 2 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_pt(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "portuguese"`` (snowball
-    portuguese, operator AND): the query's dictionary forms
-    (comunicação, trabalhador) reach the planted inflections
-    (comunicações, trabalhadores) only through the full stemmer —
-    nasal prelude (ã->a~), RV/R1/R2 suffix system over the preluded
-    spelling (aço~es group), step-3 i-after-c, residual steps, and
-    the nasal postlude. The english chain matches zero of the same
-    documents (pinned in tests/test_snowball_pt.py). Since round
-    13: served from the central analyzed store — stored-array
-    membership, zero stemmer expressions in the plan; the oracle
-    still recomputes from raw text."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match("analyzed_pt", _PT_QUERY,
-                        get_analyzer("portuguese"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _match_pt_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _PT_QUERY, get_analyzer("portuguese"),
-        operator="and")
-    return f"""
-WITH m AS (SELECT source, {_pt_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_pt": dsl_match_analyzer_pt})
-ORACLES.update({"dsl_match_analyzer_pt": _match_pt_oracle()})
 
 
 # ---------------------------------------------------- esql_fork
@@ -217,99 +120,6 @@ QUERIES.update({"esql_cidr_match": esql_cidr_match})
 ORACLES.update({"esql_cidr_match": _esql_cidr_oracle()})
 
 
-# ----------------------- dsl_match_analyzer_sv / _da / _no
-
-# the Scandinavian trio (snowball swedish/danish/norwegian,
-# operators/snowball_scand.py): per-language planted inflections
-# the english chain provably cannot fold onto the query's
-# dictionary forms (pinned in tests/test_snowball_scand.py)
-_SCAND = {
-    "sv": ("swedish", "flicka klok",
-           ["flickorna var kloka",
-            "den kloka flickorna sprang",
-            "flickorna och de kloka"]),
-    "da": ("danish", "indtagelse venlig",
-           ["indtagelsen var venligst",
-            "den venligst indtagelsen",
-            "venligst efter indtagelsen"]),
-    "no": ("norwegian", "kassere hus",
-           ["husene ble kasserte",
-            "kasserte ved husene",
-            "husene og de kasserte"]),
-}
-
-
-def _scand_planted_expr(lang: str) -> str:
-    snippets = _SCAND[lang][2]
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(snippets))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 2 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def _scand_query(lang: str):
-    analyzer_name, query, _ = _SCAND[lang]
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # since round 13: served from the central analyzed store
-        # (stored-array membership, zero stemmer expressions in the
-        # plan); the oracle still recomputes from raw text
-        from pyspark.sql import functions as F
-
-        from parquet_generator_spark.operators.analyzers import (
-            get_analyzer,
-            stored_match,
-        )
-        from parquet_generator_spark.plans.analyzed_store import (
-            load_store,
-        )
-
-        pred = stored_match(f"analyzed_{lang}", query,
-                            get_analyzer(analyzer_name),
-                            operator="and")
-        return (load_store(spark, sf_dir)
-                .filter(pred)
-                .groupBy("source")
-                .agg(F.count(F.lit(1)).alias("doc_count"))
-                .orderBy("source"))
-
-    run.__doc__ = (
-        f"``match`` with ``analyzer: \"{analyzer_name}\"`` "
-        f"(snowball {analyzer_name}, operator AND): the query's "
-        f"dictionary forms reach the planted inflections only "
-        f"through the full stemmer (R1-limited among, consonant "
-        f"pairs, per-language s-endings); the english chain "
-        f"matches zero of the same documents.")
-    return run
-
-
-def _scand_oracle(lang: str) -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    analyzer_name, query, _ = _SCAND[lang]
-    pred = analyzed_match_duck_sql(
-        "mixed", query, get_analyzer(analyzer_name),
-        operator="and")
-    return f"""
-WITH m AS (SELECT source, {_scand_planted_expr(lang)} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-for _lang in ("sv", "da", "no"):
-    QUERIES[f"dsl_match_analyzer_{_lang}"] = _scand_query(_lang)
-    ORACLES[f"dsl_match_analyzer_{_lang}"] = _scand_oracle(_lang)
-
-
 # ---------------------------------------------------- esql_sample
 
 ESQL_SAMPLE_QUERY = """
@@ -350,97 +160,3 @@ def _esql_sample_oracle() -> str:
 
 QUERIES.update({"esql_sample": esql_sample})
 ORACLES.update({"esql_sample": _esql_sample_oracle()})
-
-
-# ------------------------------------------ dsl_match_lang_routed
-
-# the multilingual-index pattern: per-language sub-fields analyzed
-# with that language's chain (title.es/title.de/...), the match
-# ROUTED by the document's lang field. The corpus lang column
-# really carries en/zh/es/de/fr; each language's slice gets its own
-# planted inflection, and the query carries the DICTIONARY form per
-# language — only the language-correct stemmer folds them together.
-# zh routes to no analyzer here (the CJK bigram path is its own key,
-# text_tokens_cjk) and therefore never matches.
-_ROUTE = {
-    "es": ("spanish", "comunicación",
-           "las comunicaciones llegaron tarde"),
-    "de": ("german", "mitteilung",
-           "die mitteilungen kamen gestern an"),
-    "fr": ("french", "communication",
-           "les communications sont arrivées"),
-    "en": ("english", "communication",
-           "the communications arrived yesterday"),
-}
-
-
-def _routed_planted_expr() -> str:
-    whens = " ".join(
-        f"WHEN '{lang}' THEN concat('{snippet}', ' ', "
-        f"substr(text, 1, 40))"
-        for lang, (_, _, snippet) in _ROUTE.items())
-    return (f"CASE WHEN doc_id % 3 = 1 THEN "
-            f"(CASE lang {whens} ELSE substr(text, 1, 40) END) "
-            f"ELSE substr(text, 1, 40) END")
-
-
-def dsl_match_lang_routed(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """Language-routed multilingual match: the per-doc predicate is
-    CASE on the lang field, each arm that language's analyzer
-    matching that language's query form — the ES
-    per-language-sub-field pattern. Since round 13 every arm is a
-    stored-array membership over the INGEST-TIME routed column
-    (each document was analyzed once at ingest with exactly its own
-    language's chain — plans/analyzed_store.py), so the plan
-    carries zero stemmer expressions; the oracle still recomputes
-    the full per-language analysis from raw text. Counts matched
-    docs per (lang, source)."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    routed = None
-    for lang, (analyzer, query, _) in _ROUTE.items():
-        # each arm matches that language's query form against the
-        # STORED routed column (analyzed at ingest with that
-        # language's chain for exactly its own lang rows)
-        arm = stored_match("analyzed_routed", query,
-                           get_analyzer(analyzer), operator="and")
-        routed = (F.when(F.col("lang") == lang, arm)
-                  if routed is None
-                  else routed.when(F.col("lang") == lang, arm))
-    pred = routed.otherwise(F.lit(False))
-    return (load_store(spark, sf_dir).filter(pred)
-            .groupBy("lang", "source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("lang", "source"))
-
-
-def _routed_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    arms = " ".join(
-        f"WHEN '{lang}' THEN ({analyzed_match_duck_sql('mixed', q, get_analyzer(a), operator='and')})"
-        for lang, (a, q, _) in _ROUTE.items())
-    return f"""
-WITH m AS (SELECT lang, source, {_routed_planted_expr()} AS mixed
-           FROM documents)
-SELECT lang, source, count(*) AS doc_count
-FROM m
-WHERE (CASE lang {arms} ELSE false END)
-GROUP BY lang, source ORDER BY lang, source
-"""
-
-
-QUERIES.update({"dsl_match_lang_routed": dsl_match_lang_routed})
-ORACLES.update({"dsl_match_lang_routed": _routed_oracle()})

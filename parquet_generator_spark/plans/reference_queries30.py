@@ -1,320 +1,14 @@
-"""Round-12 reference tranche: ingest-time analyzed columns.
-
-ES analyzes text at INDEX time — every doc the reference's writer
-pulls (the match_phrase against an analyzed field,
-EsParquetWriter.java:69) was stemmed once at ingest, then queries
-hit the inverted index. Until this tranche the engine re-ran the
-full snowball expression over the corpus on EVERY analyzer match
-(the slowest bench class: es 9.2s, routed 6.5s at sf0.1; fr 24.2s at
-sf1 — VERDICT r11 "what's missing" #1). These keys close that gap:
-
-- the corpus is materialized ONCE (fingerprint-gated) through
-  ``etl.materialize_analyzed`` — the planted multilingual text plus
-  ``analyzed_es`` / ``analyzed_de`` stemmed token arrays, written as
-  plain parquet (at 100 TB this is the ingest ETL's write path, paid
-  zero extra shuffles: one more projected column per analyzer);
-- ``dsl_match_analyzer_stored`` then runs the spanish match and
-  ``dsl_match_phrase_analyzer_stored`` the german phrase against the
-  STORED arrays via plain array membership / adjacency
-  (operators/analyzers.stored_match*) — no stemmer anywhere in the
-  query plan;
-- both keys reuse the QUERY-TIME keys' oracles verbatim
-  (dsl_match_analyzer_es / dsl_match_phrase_analyzer_de recompute
-  the full analysis from raw text in DuckDB), so the driver itself
-  proves the stored path value-identical to query-time analysis.
-
-Scale: the stored column converts each analyzer match from a
-~55 KB-expression CPU pass per document per query into an
-array-membership scan filter — the ES index-time amortization,
-re-expressed columnar.
-"""
+"""Round-12 reference tranche: a bounded painless ``while`` loop in
+``scripted_metric``."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from parquet_generator_spark.operators.analyzers import (
-    get_analyzer,
-    stored_match,
-    stored_match_phrase,
-)
-from parquet_generator_spark.plans.reference_queries25 import (
-    _DE_PHRASE,
-    _DE_SNIPPETS,
-    _ES_SNIPPETS,
-    _ES_QUERY,
-    _match_lang_oracle,
-    _phrase_de_oracle,
-    _planted_expr,
-)
 from parquet_generator_spark.sources.catalog import load_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def _ensure_store(spark: SparkSession, sf_dir: str) -> str:
-    """Ingest once — since round 13 the CENTRAL all-language store
-    (plans/analyzed_store.py): planted multilingual text +
-    index-time analyzed token arrays for all eleven languages plus
-    the routed column, fingerprint-gated on the source parquet AND
-    the analyzer version hash."""
-    from parquet_generator_spark.plans.analyzed_store import (
-        ensure_store,
-    )
-
-    return ensure_store(spark, sf_dir)
-
-
-def dsl_match_analyzer_stored(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """dsl_match_analyzer_es served from the INGEST-TIME analyzed
-    column: same spanish query, same AND algebra, but the field side
-    is `exists(analyzed_es, ...)` array membership — zero stemmer
-    expressions in the plan. Oracle = the query-time key's oracle,
-    so the driver proves stored == query-time."""
-    data = _ensure_store(spark, sf_dir)
-    pred = stored_match("analyzed_es", _ES_QUERY,
-                        get_analyzer("spanish"), operator="and")
-    from parquet_generator_spark.sources.catalog import (
-        cached_read_parquet,
-    )
-    return (cached_read_parquet(spark, data)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def dsl_match_phrase_analyzer_stored(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """dsl_match_phrase_analyzer_de over the stored german array:
-    the adjacency windows scan the PERSISTED stemmed positions."""
-    data = _ensure_store(spark, sf_dir)
-    pred = stored_match_phrase("analyzed_de", _DE_PHRASE,
-                               get_analyzer("german"))
-    from parquet_generator_spark.sources.catalog import (
-        cached_read_parquet,
-    )
-    return (cached_read_parquet(spark, data)
-            .filter(pred)
-            .groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("lang"))
-
-
-# ------------------------------------------ dsl_match_analyzer_nl
-
-# planted Dutch inflections the english chain provably cannot fold
-# onto the query's dictionary forms (pinned in
-# tests/test_snowball_nl.py): gekke/gekken -> gek (e-deletion +
-# kk-undouble), katten -> kat (en-ending + undouble)
-_NL_SNIPPETS = [
-    "de gekken en de katten",
-    "een gekke kat speelde",
-    "kat bij de gekken",
-]
-_NL_QUERY = "gekke katten"
-
-
-def _nl_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_NL_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 3 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_nl(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "dutch"`` (snowball dutch,
-    operators/snowball_nl.py, operator AND): the query's forms
-    (gekke, katten) and the planted inflections (gekken, kat) meet
-    only at the dutch stems [gek, kat] — e-deletion, en-ending with
-    the gem guard, kk/tt undoubling, the marked-consonant prelude.
-    The english chain matches zero of the same documents (pinned in
-    tests/test_snowball_nl.py)."""
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    # since round 13: served from the central analyzed store
-    # (stored-array membership, zero stemmer expressions in the
-    # plan); the oracle still recomputes from raw text
-    pred = stored_match("analyzed_nl", _NL_QUERY,
-                        get_analyzer("dutch"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _nl_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _NL_QUERY, get_analyzer("dutch"), operator="and")
-    return f"""
-WITH m AS (SELECT source, {_nl_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_nl": dsl_match_analyzer_nl})
-ORACLES.update({"dsl_match_analyzer_nl": _nl_oracle()})
-
-
-# ------------------------------------------ dsl_match_analyzer_ro
-
-# planted Romanian inflections the english chain provably cannot
-# fold (and whose diacritics SPLIT the english tokenizer — pinned
-# in tests/test_snowball_ro.py): casele/casa -> cas (step-0 plural
-# + final vowel), cântate/cântata -> cântat (participle family)
-_RO_SNIPPETS = [
-    "casele erau cântate",
-    "cântata din casele vechi",
-    "casele cu ziduri cântate",
-]
-_RO_QUERY = "casa cântat"
-
-
-def _ro_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_RO_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 4 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_ro(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "romanian"`` (snowball romanian,
-    operators/snowball_ro.py, operator AND): the query's forms
-    (casa, cântat) and the planted inflections (casele, cântate)
-    meet only at the romanian stems [cas, cântat] — step-0 plural
-    removal, RV-limited verb among, final-vowel drop, the marked
-    I/U prelude. The english chain matches zero (its tokenizer
-    splits on the diacritics)."""
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    # since round 13: served from the central analyzed store
-    # (stored-array membership, zero stemmer expressions in the
-    # plan); the oracle still recomputes from raw text
-    pred = stored_match("analyzed_ro", _RO_QUERY,
-                        get_analyzer("romanian"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _ro_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _RO_QUERY, get_analyzer("romanian"),
-        operator="and")
-    return f"""
-WITH m AS (SELECT source, {_ro_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_ro": dsl_match_analyzer_ro})
-ORACLES.update({"dsl_match_analyzer_ro": _ro_oracle()})
-
-
-# ------------------------------------------ dsl_match_analyzer_ru
-
-# planted cyrillic declensions (the first non-Latin-script analyzer
-# — the english tokenizer produces NO tokens from them at all):
-# книги/книгами -> книг (noun endings + step-2 и),
-# красивые/красивая/красивых -> красив (adjective endings)
-_RU_SNIPPETS = [
-    "красивые книги на столе",
-    "книгами и красивая полка",
-    "пять красивых книг",
-]
-_RU_QUERY = "книга красивый"
-
-
-def _ru_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_RU_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 1 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_ru(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "russian"`` (snowball russian,
-    operators/snowball_ru.py, operator AND) — language ELEVEN and
-    the first non-Latin script: the query's dictionary forms
-    (книга, красивый) reach the planted declensions (книгами,
-    красивых) only through the cyrillic chain — noun/adjective
-    amongs inside RV, the step-2 и, the commit-then-test gerund
-    semantics, the ё prelude. Cyrillic literals flow through the
-    same portable SQL subset as the Latin languages (length/substr
-    are codepoint-based in both engines)."""
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    # since round 13: served from the central analyzed store
-    # (stored-array membership, zero stemmer expressions in the
-    # plan); the oracle still recomputes from raw text
-    pred = stored_match("analyzed_ru", _RU_QUERY,
-                        get_analyzer("russian"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _ru_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _RU_QUERY, get_analyzer("russian"), operator="and")
-    return f"""
-WITH m AS (SELECT source, {_ru_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_ru": dsl_match_analyzer_ru})
-ORACLES.update({"dsl_match_analyzer_ru": _ru_oracle()})
 
 
 # -------------------------------------- dsl_scripted_metric_while
@@ -380,16 +74,5 @@ FROM t GROUP BY label
 ORDER BY doc_count DESC, key ASC LIMIT 20
 """
 
-QUERIES.update({
-    "dsl_match_analyzer_stored": dsl_match_analyzer_stored,
-    "dsl_match_phrase_analyzer_stored": dsl_match_phrase_analyzer_stored,
-    "dsl_scripted_metric_while": dsl_scripted_metric_while,
-})
-ORACLES.update({
-    "dsl_scripted_metric_while": _SCRIPTED_WHILE_ORACLE,
-})
-ORACLES.update({
-    "dsl_match_analyzer_stored": _match_lang_oracle(
-        "es", _ES_SNIPPETS, _ES_QUERY, "spanish"),
-    "dsl_match_phrase_analyzer_stored": _phrase_de_oracle(),
-})
+QUERIES.update({"dsl_scripted_metric_while": dsl_scripted_metric_while})
+ORACLES.update({"dsl_scripted_metric_while": _SCRIPTED_WHILE_ORACLE})

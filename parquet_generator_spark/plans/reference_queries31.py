@@ -1,12 +1,6 @@
-"""Round-13 reference tranche: finnish analysis on stored columns,
-FUSE full-document / linear forms, TSDS downsample-on-write.
-
-Every key follows the round-13 posture: analyzer matches are served
-from the CENTRAL ingest-time analyzed store (plans/analyzed_store.py)
-with zero stemmer expressions in the query plan, while the oracle
-recomputes the full analysis from raw text in DuckDB — the driver
-itself proves stored == query-time.
-"""
+"""Round-13 reference tranche: FUSE full-document / linear forms,
+TSDS downsample-on-write, ES|QL ROW / SHOW and the linear
+retriever."""
 
 from __future__ import annotations
 
@@ -15,158 +9,6 @@ from pyspark.sql import functions as F
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-# ------------------------------------------ dsl_match_analyzer_fi
-
-# planted Finnish inflections the english chain provably cannot
-# fold onto the query's dictionary forms (pinned in
-# tests/test_snowball_fi.py): taloissa/talojen -> talo (case system
-# + tidy), kirjoissakin -> kirj (particle kin + case + tidy-b)
-_FI_SNIPPETS = [
-    "taloissa ja kirjoissakin",
-    "talojen kirjassa luettiin",
-    "kirjat ovat taloissa",
-]
-_FI_QUERY = "talo kirja"
-
-
-def _fi_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_FI_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 0 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_fi(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "finnish"`` (snowball finnish,
-    operators/snowball_fi.py — language TWELVE, the hardest of the
-    snowballs: seven sequential suffix systems with harmony-matched
-    case endings, a carried ending-removed flag and a five-rule
-    tidy). The query's dictionary forms (talo, kirja) and the
-    planted inflections (taloissa, talojen, kirjoissakin, kirjassa)
-    meet only at the finnish stems [talo, kirj]; the english chain
-    matches zero of the same documents. Served from the central
-    analyzed store (stored-array membership, zero stemmer
-    expressions in the plan); the oracle recomputes the full
-    analysis from raw text."""
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match("analyzed_fi", _FI_QUERY,
-                        get_analyzer("finnish"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _fi_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _FI_QUERY, get_analyzer("finnish"), operator="and")
-    return f"""
-WITH m AS (SELECT source, {_fi_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_fi": dsl_match_analyzer_fi})
-ORACLES.update({"dsl_match_analyzer_fi": _fi_oracle()})
-
-
-# ------------------------------------------ dsl_match_analyzer_hu
-
-# planted Hungarian inflections the english chain provably cannot
-# fold onto the query's dictionary forms (the accented chars split
-# english tokens; pinned in tests/test_snowball_hu.py):
-# házakban -> ház (case ban + plural ak), virágokkal -> virág
-# (instrum kal with kk undouble + plural ok), házához -> ház
-# (case hoz + v_ending + sing_owner a)
-_HU_SNIPPETS = [
-    "házakban és virágokkal",
-    "házamban virágok nyílnak",
-    "a virágot a házához vitte",
-]
-_HU_QUERY = "ház virág"
-
-
-def _hu_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_HU_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 0 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_hu(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "hungarian"`` (snowball
-    hungarian, operators/snowball_hu.py — language THIRTEEN: nine
-    independent single-shot suffix routines whose chain semantics
-    were decoded against the canonical implementation this round).
-    The query's dictionary forms (ház, virág) and the planted
-    inflections (házakban, virágokkal, házamban, házához) meet only
-    at the hungarian stems; the english chain matches zero of the
-    same documents. Served from the central analyzed store
-    (stored-array membership, zero stemmer expressions in the
-    plan); the oracle recomputes the full analysis from raw text."""
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match("analyzed_hu", _HU_QUERY,
-                        get_analyzer("hungarian"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _hu_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _HU_QUERY, get_analyzer("hungarian"),
-        operator="and")
-    return f"""
-WITH m AS (SELECT source, {_hu_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_hu": dsl_match_analyzer_hu})
-ORACLES.update({"dsl_match_analyzer_hu": _hu_oracle()})
 
 
 # ------------------------------------- esql_fuse_docs / _linear

@@ -149,81 +149,6 @@ QUERIES.update({"esql_rate_served": esql_rate_served})
 ORACLES.update({"esql_rate_served": _esql_rate_served_oracle()})
 
 
-# ------------------------------------------ dsl_match_analyzer_ar
-
-# planted Arabic inflections (the second non-Latin script; the
-# english tokenizer produces NO tokens from them): الكتاب/كتابهم/
-# كتابا -> كتاب (article and possessive affixes),
-# المدرسة/مدرستنا/بالمدرسة -> مدرس (teh marbuta, the نا + ت verb
-# chain, the بال prefix)
-_AR_SNIPPETS = [
-    "الكتاب في المدرسة",
-    "كتابهم عند مدرستنا",
-    "قرأنا كتابا بالمدرسة",
-]
-_AR_QUERY = "كتاب مدرسة"
-
-
-def _ar_planted_expr() -> str:
-    snip = ("CASE CAST(doc_id % 3 AS INT) "
-            + " ".join(f"WHEN {i} THEN '{s}'"
-                       for i, s in enumerate(_AR_SNIPPETS))
-            + " END")
-    return (f"CASE WHEN doc_id % 5 = 2 THEN "
-            f"concat({snip}, ' ', substr(text, 1, 60)) "
-            f"ELSE substr(text, 1, 60) END")
-
-
-def dsl_match_analyzer_ar(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    """``match`` with ``analyzer: "arabic"`` (snowball arabic,
-    operators/snowball_ar.py — language FOURTEEN, the first with
-    PREFIX stripping, boolean noun/verb/defined flags, and script
-    normalization: hamza carriers, presentation forms, harakat).
-    The query's dictionary forms (كتاب, مدرسة) reach the planted
-    inflections (الكتاب, كتابهم, مدرستنا, بالمدرسة) only through
-    the arabic chain — the definite-article flag, the repeated
-    pronoun suffixes, teh marbuta, and the cursor-sequential
-    prefix pass. Served from the central analyzed store; the
-    oracle recomputes the full analysis from raw text."""
-    from parquet_generator_spark.operators.analyzers import (
-        get_analyzer,
-        stored_match,
-    )
-    from parquet_generator_spark.plans.analyzed_store import (
-        load_store,
-    )
-
-    pred = stored_match("analyzed_ar", _AR_QUERY,
-                        get_analyzer("arabic"), operator="and")
-    return (load_store(spark, sf_dir)
-            .filter(pred)
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("doc_count"))
-            .orderBy("source"))
-
-
-def _ar_oracle() -> str:
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match_duck_sql,
-        get_analyzer,
-    )
-
-    pred = analyzed_match_duck_sql(
-        "mixed", _AR_QUERY, get_analyzer("arabic"), operator="and")
-    return f"""
-WITH m AS (SELECT source, {_ar_planted_expr()} AS mixed
-           FROM documents)
-SELECT source, count(*) AS doc_count
-FROM m WHERE {pred}
-GROUP BY source ORDER BY source
-"""
-
-
-QUERIES.update({"dsl_match_analyzer_ar": dsl_match_analyzer_ar})
-ORACLES.update({"dsl_match_analyzer_ar": _ar_oracle()})
-
-
 # -------------------------------------------------- dsl_rrf_weighted
 
 _RRF_WEIGHTS = (0.7, 0.3)  # text, vector

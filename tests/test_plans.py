@@ -330,6 +330,24 @@ def test_front_keys_lead_queries():
     assert not missing, missing
 
 
+def test_registry_rejects_a_key_defined_twice():
+    """Two plan modules registering one key is an error naming both
+    modules, never a silent overwrite."""
+    from types import SimpleNamespace
+
+    def q(spark, sf_dir):
+        return None
+
+    one = SimpleNamespace(__name__="plans.one", QUERIES={"k": q},
+                          ORACLES={"k": "SELECT 1"})
+    two = SimpleNamespace(__name__="plans.two", QUERIES={"k": q},
+                          ORACLES={})
+    with pytest.raises(ValueError, match="plans.one and plans.two"):
+        entrymod.merge_registries([one, two])
+    queries, oracles = entrymod.merge_registries([one])
+    assert queries == {"k": q} and oracles == {"k": "SELECT 1"}
+
+
 def test_no_empty_partition_windows_in_source():
     """Tripwire for the scalar-aggregate-as-global-window
     anti-pattern: ``Window.partitionBy()`` (empty spec) funnels its
@@ -347,17 +365,16 @@ def test_no_empty_partition_windows_in_source():
     import pathlib
 
     root = pathlib.Path(__file__).resolve().parent.parent
-    allowed = {"plans/reference_queries31.py", "operators/esql.py"}
-    offenders = [
-        str(p.relative_to(root / "parquet_generator_spark"))
+    # exact per-file site counts: a new site in an allowlisted file
+    # trips this as surely as a site in a new file
+    allowed = {"plans/reference_queries31.py": 1, "operators/esql.py": 1}
+    found = {
+        str(p.relative_to(root / "parquet_generator_spark")): n
         for p in (root / "parquet_generator_spark").rglob("*.py")
-        if ".partitionBy()" in p.read_text()
-    ]
-    assert sorted(set(offenders) - allowed) == [], offenders
-    # stale allowlist entries must be pruned when the site goes away
-    assert set(offenders) >= allowed, (
-        "allowlisted empty-partition window site no longer exists — "
-        "remove it from `allowed`")
+        if (n := p.read_text().count(".partitionBy()"))
+    }
+    # a stale allowlist entry (the site went away) must be pruned too
+    assert found == allowed, found
 
 
 @pytest.mark.parametrize("name", ["q15_top_supplier", "vocab_coverage",

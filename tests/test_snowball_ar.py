@@ -135,23 +135,3 @@ def test_spark_matches_python(spark):
            df.select("w", F.expr(sql).alias("s")).collect()}
     for w in words:
         assert got[w] == arabic_stem(w), w
-
-
-def test_arabic_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    planted = ("CASE CAST(doc_id % 2 AS INT) "
-               "WHEN 0 THEN 'الكتاب في المدرسة' "
-               "ELSE 'كتابهم عند مدرستنا' END")
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(planted))
-    ar = get_analyzer("arabic")
-    own = analyzed_match("mixed", "كتاب مدرسة", ar, operator="and")
-    assert docs.filter(own).count() == docs.count()

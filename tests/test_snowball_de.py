@@ -87,36 +87,3 @@ def test_spark_matches_python(spark):
            for r in df.select("w", F.expr(sql).alias("s")).collect()}
     for w in words:
         assert got[w] == german_stem(w), (w, got[w], german_stem(w))
-
-
-def test_german_analyzer_catches_what_english_cannot(spark):
-    """The dsl_match_analyzer_de demo claim: the english chain
-    (ASCII tokenizer + S-stemmer) matches ZERO of the planted German
-    declensions, the german chain matches them all."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.plans.reference_queries25 import (
-        _DE_QUERY,
-        dsl_match_analyzer_de,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    rows = dsl_match_analyzer_de(spark, sf).collect()
-    assert sum(r["doc_count"] for r in rows) > 0
-
-    # english chain on the same planted column: zero matches
-    from parquet_generator_spark.plans.reference_queries25 import (
-        _DE_SNIPPETS,
-        _planted_expr,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(_planted_expr("de", _DE_SNIPPETS)))
-    en_pred = analyzed_match("mixed", _DE_QUERY,
-                             get_analyzer("english"), operator="and")
-    assert docs.filter(en_pred).count() == 0

@@ -83,29 +83,3 @@ def test_spark_matches_python(spark):
     for w in words:
         assert got[w] == spanish_stem(w), (w, got[w],
                                            spanish_stem(w))
-
-
-def test_spanish_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.plans.reference_queries25 import (
-        _ES_QUERY,
-        _ES_SNIPPETS,
-        _planted_expr,
-        dsl_match_analyzer_es,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = dsl_match_analyzer_es(spark, sf).collect()
-    assert sum(r["doc_count"] for r in rows) > 0
-
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(_planted_expr("es", _ES_SNIPPETS)))
-    en_pred = analyzed_match("mixed", _ES_QUERY,
-                             get_analyzer("english"), operator="and")
-    assert docs.filter(en_pred).count() == 0

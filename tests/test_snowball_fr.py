@@ -132,29 +132,3 @@ def test_spark_matches_python(spark):
            for r in df.select("w", F.expr(sql).alias("s")).collect()}
     for w in words:
         assert got[w] == french_stem(w), (w, got[w], french_stem(w))
-
-
-def test_french_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.plans.reference_queries25 import (
-        _FR_QUERY,
-        _FR_SNIPPETS,
-        _planted_expr,
-        dsl_match_analyzer_fr,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = dsl_match_analyzer_fr(spark, sf).collect()
-    assert sum(r["doc_count"] for r in rows) > 0
-
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(_planted_expr("fr", _FR_SNIPPETS)))
-    en_pred = analyzed_match("mixed", _FR_QUERY,
-                             get_analyzer("english"), operator="and")
-    assert docs.filter(en_pred).count() == 0

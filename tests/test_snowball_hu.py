@@ -159,29 +159,3 @@ def test_shrink_and_first_char_invariant(w):
     assert len(s) <= len(w)
     if s and w:
         assert s[0] == w[0]
-
-
-def test_hungarian_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    planted = ("CASE CAST(doc_id % 2 AS INT) "
-               "WHEN 0 THEN 'házakban és virágokkal' "
-               "ELSE 'a virágot a házához vitte' END")
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(planted))
-    hu = get_analyzer("hungarian")
-    own = analyzed_match("mixed", "ház virág", hu, operator="and")
-    assert docs.filter(own).count() == docs.count()
-    # the english chain tokenizes the accented forms apart and
-    # folds none of them onto the dictionary forms
-    en = get_analyzer("english")
-    other = analyzed_match("mixed", "ház virág", en,
-                           operator="and")
-    assert docs.filter(other).count() == 0

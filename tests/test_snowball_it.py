@@ -122,31 +122,6 @@ def test_spark_matches_python(spark):
                                            italian_stem(w))
 
 
-def test_italian_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.plans.reference_queries27 import (
-        _IT_QUERY,
-        _it_planted_expr,
-        dsl_match_analyzer_it,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = dsl_match_analyzer_it(spark, sf).collect()
-    assert sum(r["doc_count"] for r in rows) > 0
-
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(_it_planted_expr()))
-    en_pred = analyzed_match("mixed", _IT_QUERY,
-                             get_analyzer("english"), operator="and")
-    assert docs.filter(en_pred).count() == 0
-
-
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet="abcdeghilmnoqrstuvzàèìòùáéíóúy",
                min_size=0, max_size=14))

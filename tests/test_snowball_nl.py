@@ -119,28 +119,3 @@ def test_spark_matches_python(spark):
            df.select("w", F.expr(sql).alias("s")).collect()}
     for w in words:
         assert got[w] == dutch_stem(w), w
-
-
-def test_dutch_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    planted = ("CASE CAST(doc_id % 2 AS INT) "
-               "WHEN 0 THEN 'de mogelijkheden waren gek' "
-               "ELSE 'katten in oude huizen' END")
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(planted))
-    nl = get_analyzer("dutch")
-    # mogelijk + gek fold only through the dutch chain
-    own = analyzed_match("mixed", "mogelijk gekke", nl,
-                         operator="and")
-    assert docs.filter(own).count() > 0
-    en = analyzed_match("mixed", "mogelijk gekke",
-                        get_analyzer("english"), operator="and")
-    assert docs.filter(en).count() == 0

@@ -127,31 +127,6 @@ def test_spark_matches_python(spark):
                                               portuguese_stem(w))
 
 
-def test_portuguese_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.plans.reference_queries28 import (
-        _PT_QUERY,
-        _pt_planted_expr,
-        dsl_match_analyzer_pt,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = dsl_match_analyzer_pt(spark, sf).collect()
-    assert sum(r["doc_count"] for r in rows) > 0
-
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(_pt_planted_expr()))
-    en_pred = analyzed_match("mixed", _PT_QUERY,
-                             get_analyzer("english"), operator="and")
-    assert docs.filter(en_pred).count() == 0
-
-
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet=_PT_ALPHABET, min_size=0, max_size=14))
 def test_prefix2_invariant(w):

@@ -198,27 +198,3 @@ def test_prefix2_invariant(w):
     s = romanian_stem(w)
     if len(s) >= 2 and len(w) >= 2:
         assert s[:2] == w[:2], (w, s)
-
-
-def test_romanian_analyzer_catches_what_english_cannot(spark):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    planted = ("CASE CAST(doc_id % 2 AS INT) "
-               "WHEN 0 THEN 'casele erau cântate' "
-               "ELSE 'cântata din casele vechi' END")
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(planted))
-    ro = get_analyzer("romanian")
-    own = analyzed_match("mixed", "casa cântat", ro,
-                         operator="and")
-    assert docs.filter(own).count() > 0
-    en = analyzed_match("mixed", "casa cântat",
-                        get_analyzer("english"), operator="and")
-    assert docs.filter(en).count() == 0

@@ -125,33 +125,6 @@ def test_spark_matches_python(spark):
             assert got[w] == scand_stem(cfg, w), (lang, w)
 
 
-@pytest.mark.parametrize("lang", ["sv", "da", "no"])
-def test_scand_analyzer_catches_what_english_cannot(spark, lang):
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.operators.analyzers import (
-        analyzed_match,
-        get_analyzer,
-    )
-    from parquet_generator_spark.plans.reference_queries28 import (
-        _SCAND,
-        _scand_planted_expr,
-    )
-    from parquet_generator_spark.sources.catalog import load_table
-
-    sf = "/root/testdata/sf0.001"
-    analyzer_name, query, _ = _SCAND[lang]
-    docs = load_table(spark, "documents", sf).withColumn(
-        "mixed", F.expr(_scand_planted_expr(lang)))
-    own = analyzed_match("mixed", query,
-                         get_analyzer(analyzer_name),
-                         operator="and")
-    assert docs.filter(own).count() > 0
-    en = analyzed_match("mixed", query, get_analyzer("english"),
-                        operator="and")
-    assert docs.filter(en).count() == 0
-
-
 @settings(max_examples=150, deadline=None)
 @given(st.data())
 def test_prefix2_invariant(data):

@@ -18,6 +18,7 @@ from parquet_generator_spark.operators.analyzers import (
     stored_match_duck_sql,
     stored_match_phrase,
 )
+from parquet_generator_spark.plans.analyzer_queries import SPECS
 
 ROWS = [
     (1, "las canciones fueron grabadas ayer"),
@@ -167,9 +168,8 @@ def test_central_store_all_languages(spark):
 
     store = load_store(spark, SF_SMALL)
     cols = set(store.columns)
-    for sfx in ("es", "de", "fr", "it", "pt", "nl", "ro", "ru",
-                "sv", "da", "no"):
-        assert f"analyzed_{sfx}" in cols, sfx
+    for spec in SPECS:
+        assert f"analyzed_{spec.lang}" in cols, spec.lang
     assert "analyzed_routed" in cols
     assert {"doc_id", "source", "lang"} <= cols
     # no leftover staging columns
@@ -183,25 +183,48 @@ def test_converted_keys_plans_are_stemmer_free(spark):
     from stored arrays: the optimized plan must carry array
     membership and NO stemmer machinery (the giant let-bound
     transform(array(...)) chains)."""
-    from parquet_generator_spark.plans.reference_queries25 import (
-        dsl_match_analyzer_fr,
-    )
-    from parquet_generator_spark.plans.reference_queries28 import (
-        dsl_match_lang_routed,
-    )
-    from parquet_generator_spark.plans.reference_queries30 import (
-        dsl_match_analyzer_ru,
-    )
+    from parquet_generator_spark.plans.analyzer_queries import QUERIES
 
-    for fn in (dsl_match_analyzer_fr, dsl_match_analyzer_ru,
-               dsl_match_lang_routed):
-        plan = (fn(spark, SF_SMALL)
+    for key in ("dsl_match_analyzer_fr", "dsl_match_analyzer_ru",
+                "dsl_match_lang_routed"):
+        plan = (QUERIES[key](spark, SF_SMALL)
                 ._jdf.queryExecution().optimizedPlan().toString())
-        assert "exists(" in plan, fn.__name__
+        assert "exists(" in plan, key
         # the stemmer generator's signature shape: a let-bound
         # lambda chain over a carried struct
-        assert "named_struct" not in plan, fn.__name__
-        assert len(plan) < 40_000, (fn.__name__, len(plan))
+        assert "named_struct" not in plan, key
+        assert len(plan) < 40_000, (key, len(plan))
+
+
+@pytest.mark.parametrize("spec", SPECS, ids=lambda s: s.lang)
+def test_analyzer_catches_what_english_cannot(spark, spec):
+    """Each language's planted inflections: its stored key finds
+    them (as many documents as the same chain finds at query time
+    over the planted column), the english chain finds none."""
+    from parquet_generator_spark.plans.analyzer_queries import (
+        QUERIES,
+        planted_expr,
+    )
+    from parquet_generator_spark.sources.catalog import load_table
+
+    rows = QUERIES[f"dsl_match_analyzer_{spec.lang}"](
+        spark, SF_SMALL).collect()
+    stored = sum(r["doc_count"] for r in rows)
+    assert stored > 0
+
+    docs = load_table(spark, "documents", SF_SMALL).withColumn(
+        "mixed", F.expr(planted_expr(spec)))
+    own = analyzed_match("mixed", spec.query,
+                         get_analyzer(spec.analyzer), operator="and")
+    assert docs.filter(own).count() == stored
+    english = get_analyzer("english")
+    if not english.analyze(spec.query):
+        # arabic and cyrillic script: the english tokenizer yields no
+        # query terms at all (and a term-less match matches every doc)
+        assert spec.lang in ("ar", "ru")
+        return
+    en = analyzed_match("mixed", spec.query, english, operator="and")
+    assert docs.filter(en).count() == 0
 
 
 def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
