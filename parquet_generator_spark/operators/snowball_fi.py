@@ -150,7 +150,7 @@ def finnish_stem(word: str) -> str:
             + ["siin", "seen", "tten", "den", "tta", "ttä"]
             + sorted(_CASE_PLAIN, key=len, reverse=True)
             + ["a", "ä", "n"])
-    for s in sorted(set(case), key=len, reverse=True):
+    for s in sorted(dict.fromkeys(case), key=len, reverse=True):
         n = len(s)
         if w.endswith(s) and in_r1(n):
             if s in _HXN:
@@ -352,11 +352,7 @@ def _s3_sql(x: _Frag) -> str:
             + ["siin", "seen", "tten", "den", "tta", "ttä"]
             + sorted(_CASE_PLAIN, key=len, reverse=True)
             + ["a", "ä", "n"])
-    seen: list[str] = []
-    for s in sorted(set(case), key=len, reverse=True):
-        if s in seen:
-            continue
-        seen.append(s)
+    for s in sorted(dict.fromkeys(case), key=len, reverse=True):
         n = len(s)
         match = [x.ends(s), x.in_r1(n)]
         if s in _HXN:

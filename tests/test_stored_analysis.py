@@ -250,3 +250,24 @@ def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
     st.ensure_store(spark, SF_SMALL)
     with open(meta_p) as fh:
         assert json.load(fh)["fingerprint"] == fp1
+
+
+def test_store_fingerprint_ignores_hash_seed():
+    """The analyzer version hash must not depend on PYTHONHASHSEED,
+    or every fresh process would rebuild the store."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    code = ("from parquet_generator_spark.plans.analyzed_store "
+            "import version_hash; print(version_hash())")
+    root = pathlib.Path(__file__).resolve().parent.parent
+    hashes = [
+        subprocess.run([sys.executable, "-c", code], cwd=root,
+                       env={**os.environ, "PYTHONHASHSEED": seed},
+                       capture_output=True, text=True,
+                       check=True).stdout
+        for seed in ("1", "2")
+    ]
+    assert hashes[0] == hashes[1], hashes
