@@ -181,7 +181,6 @@ def match_query(spec: AnalyzerSpec):
     run = _served(lambda: stored_match(
         f"analyzed_{spec.lang}", spec.query,
         get_analyzer(spec.analyzer), operator="and"), ("source",))
-    run.__name__ = f"dsl_match_analyzer_{spec.lang}"
     run.__doc__ = (
         f"``match`` with ``analyzer: \"{spec.analyzer}\"`` (operator "
         f"AND) over the stored ``analyzed_{spec.lang}`` array: the "
@@ -281,8 +280,8 @@ ORACLES: dict = {f"dsl_match_analyzer_{s.lang}": match_oracle(s)
 QUERIES.update({
     "dsl_match_phrase_analyzer_de": dsl_match_phrase_analyzer_de,
     "dsl_match_lang_routed": dsl_match_lang_routed,
-    # the store-served names kept from before every analyzer key
-    # read the store: the same plans as their twins above
+    # aliases: the same plans and oracles as the spanish match and
+    # the german phrase
     "dsl_match_analyzer_stored": QUERIES["dsl_match_analyzer_es"],
     "dsl_match_phrase_analyzer_stored": dsl_match_phrase_analyzer_de,
 })
