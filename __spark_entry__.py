@@ -17,12 +17,12 @@ from types import ModuleType
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_generator_spark import plans
-from parquet_generator_spark.plans import analytics
+from parquet_generator_spark.plans import analytics as A
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# The driver's correctness sample is the first 50 keys of queries(),
-# so these lead it.
+# Correctness sampling reads the first 50 keys of queries(), so these
+# lead it.
 FRONT_KEYS = [
     "dsl_match_analyzer_fi",
     "dsl_match_analyzer_hu",
@@ -107,7 +107,7 @@ def _registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return analytics.q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    return A.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, QueryFn]:
