@@ -548,8 +548,8 @@ def main() -> None:
         # Release the query's tracked localCheckpoint blocks now that
         # its results are collected — without this the single-session
         # sweep accumulates storage blocks for the whole run (the
-        # round-8 mid-session slowdown band). The deliberate
-        # cross-query memo (near_dup_edges) is untracked and survives.
+        # round-8 mid-session slowdown band). No query keeps a frame
+        # for a later one, so the release leaves nothing behind.
         cache.release_all(spark)
         print(f"# {name}: median {timings[name]:.3f}s "
               f"(min {mins[name]:.3f}s, {n} rows)", file=sys.stderr)

@@ -47,14 +47,13 @@ def _cmd_discover(spark: SparkSession,
                   args: argparse.Namespace) -> int:
     from parquet_generator_spark.etl import discover_rules
     from parquet_generator_spark.schema.infer import infer_json_schema
+    from parquet_generator_spark.sources.es_source import decode_docs
 
     df = _load_source(spark, args.source, args.doc_column)
     if args.doc_column in df.columns:
         schema = infer_json_schema(spark, df, column=args.doc_column,
                                    sample_ratio=args.sample_ratio)
-        from pyspark.sql import functions as F
-        df = df.select(F.from_json(F.col(args.doc_column),
-                                   schema).alias("_r")).select("_r.*")
+        df = decode_docs(df, args.doc_column, schema)
     rows = discover_rules(df, field=args.field,
                           size=args.size).collect()
     print(f"{'rule':40s} {'doc_count':>10}")

@@ -79,12 +79,7 @@ def json_docs_to_parquet(
     """
     schema = infer_json_schema(spark, docs_df, column=doc_column,
                                sample_ratio=sample_ratio)
-    extra = [c for c in docs_df.columns if c != doc_column]
     decoded = decode_docs(docs_df, doc_column, schema)
-    if extra:
-        # keep passthrough columns (e.g. the source_date partition key)
-        decoded = (docs_df.withColumn("_rec", F.from_json(
-            F.col(doc_column), schema)).select(*extra, "_rec.*"))
     filtered = decoded.filter(match_phrase(rule_field, rule_name))
     if analyzed_columns:
         filtered = materialize_analyzed(filtered, analyzed_columns)

@@ -43,7 +43,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -124,8 +123,7 @@ def _params_df(spark: SparkSession, centroids: np.ndarray,
 
 def train_ivfpq_index(spark: SparkSession, corpus: DataFrame,
                       root: str, n_cells: int, n_sub: int,
-                      n_codes: int, fingerprint: str = "",
-                      id_col: str = "vec_id",
+                      n_codes: int, id_col: str = "vec_id",
                       vec_col: str = "embedding") -> int:
     """Train + commit (or re-train + overwrite) the index artifact.
     Returns the committed version. Quantizers use the reproducible
@@ -165,8 +163,7 @@ def train_ivfpq_index(spark: SparkSession, corpus: DataFrame,
                                    stat_cols=["cell"])
         snapshots.create_table(spark, params_path, params)
     with open(os.path.join(root, _META), "w") as fh:
-        json.dump({"fingerprint": fingerprint, "n_cells": n_cells,
-                   "n_sub": n_sub, "n_codes": n_codes,
+        json.dump({"n_cells": n_cells, "n_sub": n_sub, "n_codes": n_codes,
                    "version": v, "id_col": id_col}, fh)
     return v
 
@@ -253,15 +250,3 @@ def append_ivfpq_batch(spark: SparkSession, root: str,
         _params_df(spark, cents, sub_books))
     return v
 
-
-def read_index_meta(root: str) -> dict | None:
-    p = os.path.join(root, _META)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
-
-
-def drop_index(root: str) -> None:
-    if os.path.exists(root):
-        shutil.rmtree(root)

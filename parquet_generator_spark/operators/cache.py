@@ -9,13 +9,13 @@ a production curation service) those blocks accumulate and squeeze
 the executor storage pool (round-8 verdict: 33 checkpoint sites,
 1 unpersist, and a non-reproducing 2-4.7x mid-session slowdown band).
 
-Fix: every transient barrier routes through :func:`checkpoint`,
-which registers the frame; a harness (bench.py, verify scripts, any
-long-lived caller) calls :func:`release_all` AFTER materializing a
-query's results, dropping the checkpointed blocks deterministically
-instead of waiting for GC. Deliberate cross-query memos (the
-near-dup edge cache) call ``localCheckpoint`` directly and are never
-tracked, so their reuse contract survives a release.
+Fix: every barrier in ``plans/`` and ``operators/`` routes through
+:func:`checkpoint`, which registers the frame; a harness (bench.py,
+verify scripts, any long-lived caller) calls :func:`release_all`
+AFTER materializing a query's results, dropping the checkpointed
+blocks deterministically instead of waiting for GC. No frame is
+kept across queries, so after a release the session holds no
+storage block any query created.
 
 IMPORTANT contract: ``localCheckpoint`` TRUNCATES lineage — once a
 tracked frame's blocks are dropped it cannot be recomputed. Callers
@@ -56,29 +56,17 @@ def _register(df: DataFrame) -> DataFrame:
 
 def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager)`` + registration for later
-    deterministic release via :func:`release_all`."""
+    deterministic release via :func:`release_all` — the one way a
+    plan cuts lineage.
+
+    ``eager=False`` keeps the lineage cut and compute-once sharing,
+    but materialization FUSES into the first downstream job instead
+    of running a dedicated job at plan-build time (round 13, guide
+    §1.2: don't run jobs you can fuse). Use it for barriers whose
+    first consumer reads every partition (aggregations, joins); keep
+    the eager form where the first consumer is partial
+    (limit/take)."""
     return _register(df.localCheckpoint(eager))
-
-
-def lazy(df: DataFrame) -> DataFrame:
-    """Lazy tracked barrier: ``localCheckpoint(eager=False)`` +
-    registration. The lineage cut and compute-once sharing are the
-    same as the eager form, but materialization FUSES into the first
-    downstream job instead of running a dedicated job at plan-build
-    time — at bench scale each eager site was a whole extra job of
-    fixed scheduling overhead (round 13, guide §1.2: don't run jobs
-    you can fuse). Use for barriers whose first consumer reads every
-    partition (aggregations, joins); keep ``eager=True`` where the
-    first consumer is partial (limit/take) and splitting
-    materialization would be confusing."""
-    return _register(df.localCheckpoint(False))
-
-
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-checkpointed frame for release; returns it
-    unchanged, so chained sites read
-    ``expr.localCheckpoint().transform(cache.track)``."""
-    return _register(df)
 
 
 @contextlib.contextmanager

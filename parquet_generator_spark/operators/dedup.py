@@ -59,9 +59,10 @@ def _drop_hot_buckets(bands: DataFrame, keys: list[str],
     loss, never a silent truncation."""
     if bucket_cap is None:
         return bands
-    hot = (bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-           .filter(F.col("n") > bucket_cap)
-           .transform(_cache.lazy))  # materialized by the count below
+    # lazy: materialized by the count below
+    hot = _cache.checkpoint(
+        bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > bucket_cap), eager=False)
     n_hot = hot.count()
     if n_hot:
         worst = hot.agg(F.max("n")).collect()[0][0]
@@ -223,7 +224,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
         # pin the expensive signature stage to compute exactly once
         # (lazy: the hot-count job is its single first consumer, so
         # materialization fuses into it — one fewer job, round 13)
-        sig = sig.transform(_cache.lazy)
+        sig = _cache.checkpoint(sig, eager=False)
     bands = sig.select(
         "id",
         F.posexplode(
@@ -235,13 +236,13 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
     buckets = (bands.groupBy("band", "band_key")
                .agg(F.array_sort(F.collect_list("id")).alias("ids"))
                .filter(F.size("ids") > 1))
-    cand = (buckets.select(F.explode(F.expr(
-        "flatten(transform(sequence(0, size(ids) - 2), "
-        "i -> transform(sequence(i + 1, size(ids) - 1), "
-        "j -> struct(ids[i] AS id_a, ids[j] AS id_b))))")).alias("p"))
+    cand = _cache.checkpoint(
+        buckets.select(F.explode(F.expr(
+            "flatten(transform(sequence(0, size(ids) - 2), "
+            "i -> transform(sequence(i + 1, size(ids) - 1), "
+            "j -> struct(ids[i] AS id_a, ids[j] AS id_b))))")).alias("p"))
         .select("p.id_a", "p.id_b")
-        .distinct()
-        .localCheckpoint().transform(_cache.track))
+        .distinct())
     # verify pass: shingle only the candidate ids (a tiny fraction of
     # the corpus) and materialize them once. Without the checkpoints
     # the signature pipeline would re-run for the semi-join AND the
@@ -250,7 +251,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
     cand_ids = (cand.select(F.col("id_a").alias("id"))
                 .union(cand.select(F.col("id_b").alias("id")))
                 .distinct())
-    shc = sh.join(cand_ids, "id", "left_semi").localCheckpoint().transform(_cache.track)
+    shc = _cache.checkpoint(sh.join(cand_ids, "id", "left_semi"))
     a = shc.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = shc.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -329,7 +330,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     fixpoint — the standard distributed CC loop. Only pair-connected
     nodes enter the loop (near-dup graphs are a tiny fraction of the
     corpus); singletons are handled by the caller with a left join.
-    localCheckpoint() cuts the growing lineage each round so plans
+    A tracked checkpoint cuts the growing lineage each round so plans
     stay O(1); convergence is detected by the monotone-decreasing
     label sum reaching a fixpoint.
 
@@ -342,23 +343,25 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # checkpoint the pair list BEFORE the symmetrizing union: both
     # union branches read `pairs`, so an unmaterialized pairs pipeline
     # (LSH + verify joins) would execute twice
-    pairs = pairs.select("id_a", "id_b").localCheckpoint().transform(_cache.track)
+    pairs = _cache.checkpoint(pairs.select("id_a", "id_b"))
     edges = (pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
              .union(pairs.select(F.col("id_b").alias("src"),
                                  F.col("id_a").alias("dst"))))
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .transform(_cache.lazy))  # materialized by the agg below
+    # lazy: materialized by the agg below
+    labels = _cache.checkpoint(
+        edges.select(F.col("src").alias("id")).distinct()
+        .withColumn("label", F.col("id")), eager=False)
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
     for _ in range(max_iter):
         neigh = (edges.join(labels, edges["src"] == labels["id"])
                  .groupBy("dst").agg(F.min("label").alias("nlabel")))
-        labels = (labels.join(neigh, labels["id"] == neigh["dst"], "left")
-                  .select(labels["id"],
-                          F.least(F.col("label"),
-                                  F.coalesce("nlabel", "label")).alias("label"))
-                  .transform(_cache.lazy))  # materialized by the agg below
+        labels = _cache.checkpoint(
+            labels.join(neigh, labels["id"] == neigh["dst"], "left")
+            .select(labels["id"],
+                    F.least(F.col("label"),
+                            F.coalesce("nlabel", "label")).alias("label")),
+            eager=False)
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             converged = True
@@ -386,13 +389,15 @@ def connected_components_star(pairs: DataFrame,
     per round. Edges shrink monotonically toward (node, cluster-min)
     stars, so later rounds touch ever-less data.
     """
-    edges = (pairs.select(F.col("id_a").alias("u"),
-                          F.col("id_b").alias("v"))
-             .filter(F.col("u") != F.col("v"))
-             .distinct().localCheckpoint().transform(_cache.track))
-    nodes = (edges.select(F.col("u").alias("id"))
-             .union(edges.select(F.col("v").alias("id")))
-             .distinct().localCheckpoint().transform(_cache.track))
+    edges = _cache.checkpoint(
+        pairs.select(F.col("id_a").alias("u"),
+                     F.col("id_b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct())
+    nodes = _cache.checkpoint(
+        edges.select(F.col("u").alias("id"))
+        .union(edges.select(F.col("v").alias("id")))
+        .distinct())
 
     def sym(e: DataFrame) -> DataFrame:
         return e.union(e.select(F.col("v").alias("u"),
@@ -416,8 +421,8 @@ def connected_components_star(pairs: DataFrame,
     prev = None
     converged = False
     for _ in range(max_iter):
-        edges = star(star(edges, large=True), large=False) \
-            .localCheckpoint().transform(_cache.track)
+        edges = _cache.checkpoint(
+            star(star(edges, large=True), large=False))
         sig = edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(u, v))").alias("h")).collect()[0]
@@ -527,7 +532,7 @@ def simhash_pairs(df: DataFrame, id_col: str, content_col: str,
         # pin the (expensive) signature expression to one computation;
         # the hot-bucket size pass re-derives only the cheap explode
         # (lazy: fuses into the hot-count job, round 13)
-        sig = sig.transform(_cache.lazy)
+        sig = _cache.checkpoint(sig, eager=False)
     mask = (1 << _BAND_BITS) - 1
     bands = sig.select(
         "id", "sig",
@@ -621,7 +626,7 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
            .select("id", "side", "sig"))
     if bucket_cap is not None:
         # lazy: fuses into the hot-count job (round 13)
-        sig = sig.transform(_cache.lazy)
+        sig = _cache.checkpoint(sig, eager=False)
     bands = sig.select(
         "id", "side",
         F.posexplode(
@@ -638,17 +643,18 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
                         F.when(F.col("side") == 1, F.col("id"))))
                     .alias("inc"))
                .filter((F.size("corp") > 0) & (F.size("inc") > 0)))
-    cand = (buckets.select(F.explode(F.expr(
-        "flatten(transform(inc, a -> transform(corp, "
-        "b -> struct(a AS id_in, b AS id_corp))))")).alias("p"))
+    cand = _cache.checkpoint(
+        buckets.select(F.explode(F.expr(
+            "flatten(transform(inc, a -> transform(corp, "
+            "b -> struct(a AS id_in, b AS id_corp))))")).alias("p"))
         .select("p.id_in", "p.id_corp")
-        .distinct()
-        .localCheckpoint().transform(_cache.track))
+        .distinct())
     cand_ids = (cand.select(F.col("id_in").alias("id"))
                 .union(cand.select(F.col("id_corp").alias("id")))
                 .distinct())
-    shc = (sh.select("id", "sh")
-           .join(cand_ids, "id", "left_semi").localCheckpoint().transform(_cache.track))
+    shc = _cache.checkpoint(
+        sh.select("id", "sh")
+        .join(cand_ids, "id", "left_semi"))
     a = shc.select(F.col("id").alias("id_in"), F.col("sh").alias("sh_a"))
     b = shc.select(F.col("id").alias("id_corp"),
                    F.col("sh").alias("sh_b"))
@@ -773,20 +779,23 @@ def containment_pairs(df: DataFrame, id_col: str, content_col: str,
     # struct-bound form is safe): the inline form re-tokenizes per
     # shingle index — measured 3x slower on this, the one stage that
     # touches every document's full text
-    sh = (widen_if_narrow(df).select(
-        F.col(id_col).alias("id"),
-        F.expr(shingles_spark(content_col, k)).alias("sh"))
+    # shingling reused by index + verify
+    sh = _cache.checkpoint(
+        widen_if_narrow(df).select(
+            F.col(id_col).alias("id"),
+            F.expr(shingles_spark(content_col, k)).alias("sh"))
         .select("id", F.col("sh"), F.size("sh").alias("nsh"))
-        .filter(F.col("nsh") > 0)
-        .localCheckpoint().transform(_cache.track))  # shingling reused by index + verify
+        .filter(F.col("nsh") > 0))
     inv = sh.select("id", "nsh", F.explode("sh").alias("s"))
     dfreq = inv.groupBy("s").agg(F.count(F.lit(1)).alias("dfq"))
     ranked = inv.join(dfreq, "s").withColumn(
         "rk", F.row_number().over(
             Window.partitionBy("id").orderBy(F.asc("dfq"), F.asc("s"))))
-    prefix = (ranked.filter(F.expr(f"rk <= {_prefix_bound(threshold)}"))
-              .select("id", "s", "dfq")
-              .transform(_cache.lazy))  # tiny; reused for hot-count + join (lazy: the cap agg below materializes it)
+    # tiny; reused for hot-count + join (lazy: the cap agg below
+    # materializes it)
+    prefix = _cache.checkpoint(
+        ranked.filter(F.expr(f"rk <= {_prefix_bound(threshold)}"))
+        .select("id", "s", "dfq"), eager=False)
     if shingle_df_cap is not None:
         # one bounded-scalar job over the (tiny, checkpointed) prefix
         n_hot, worst = prefix.agg(

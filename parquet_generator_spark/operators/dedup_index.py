@@ -18,7 +18,7 @@ manifests, time travel):
   same storage class as a search engine's term index; signatures
   alone would verify on ESTIMATED similarity — a different, weaker
   contract than `minhash_lsh_pairs_cross`'s exact verify)
-- ``meta.json`` — corpus fingerprint + parameters
+- ``index_meta.json`` — parameters (k, n_bands, version, appends)
 
 Serving semantics are VALUE-IDENTICAL to running
 ``dedup.minhash_lsh_pairs_cross`` over corpus+batch (same
@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,20 +50,7 @@ from parquet_generator_spark.sinks import snapshots
 
 
 def _meta_path(root: str) -> str:
-    return os.path.join(root, "meta.json")
-
-
-def read_index_meta(root: str) -> dict | None:
-    p = _meta_path(root)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
-
-
-def drop_index(root: str) -> None:
-    if os.path.exists(root):
-        shutil.rmtree(root)
+    return os.path.join(root, "index_meta.json")
 
 
 def _staged(df: DataFrame, id_col: str, content_col: str,
@@ -92,14 +78,14 @@ def _bands_of(sig: DataFrame) -> DataFrame:
 
 def train_dedup_index(spark: SparkSession, corpus: DataFrame,
                       root: str, id_col: str = "id",
-                      content_col: str = "text", k: int = 3,
-                      fingerprint: str = "") -> int:
+                      content_col: str = "text", k: int = 3) -> int:
     """Build + commit the artifact. One signature pass over the
     corpus (the same pass every in-query run would pay), then three
     snapshot commits; re-train overwrites, old versions stay
     time-travelable."""
     sig = _staged(corpus, id_col, content_col, k)
-    sig = sig.transform(_cache.lazy)  # fuses into first consumer job (round 13)
+    # lazy: fuses into the first consumer's job (round 13)
+    sig = _cache.checkpoint(sig, eager=False)
     bands = _bands_of(sig)
     hashes = sig.select("id", F.md5("_text").alias("h"))
     shingles = sig.select("id", "sh")
@@ -121,15 +107,13 @@ def train_dedup_index(spark: SparkSession, corpus: DataFrame,
     _commit("buckets", buckets)
     _commit("shingles", shingles)
     with open(_meta_path(root), "w") as fh:
-        json.dump({"fingerprint": fingerprint, "k": k,
-                   "n_bands": _N_BANDS, "version": v}, fh)
+        json.dump({"k": k, "n_bands": _N_BANDS, "version": v}, fh)
     return v
 
 
 def append_dedup_batch(spark: SparkSession, root: str,
                        batch: DataFrame, id_col: str = "id",
-                       content_col: str = "text",
-                       fingerprint: str | None = None) -> int:
+                       content_col: str = "text") -> int:
     """Merge-on-append (the IVF-PQ ``append_ivfpq_batch`` analog,
     ann_index.py:241): one signature pass over the NEW batch only,
     then append its hashes/bands/shingles and MERGE the bucket
@@ -140,12 +124,14 @@ def append_dedup_batch(spark: SparkSession, root: str,
     index is value-identical to a full rebuild over corpus+appends
     (pinned in tests/test_dedup_index.py::test_append_equals_rebuild).
     """
-    meta = read_index_meta(root)
-    if meta is None:
+    if not os.path.exists(_meta_path(root)):
         raise FileNotFoundError(
             f"no dedup index at {root} — train_dedup_index first")
+    with open(_meta_path(root)) as fh:
+        meta = json.load(fh)
     sig = _staged(batch, id_col, content_col, meta["k"])
-    sig = sig.transform(_cache.lazy)  # fuses into first consumer job (round 13)
+    # lazy: fuses into the first consumer's job (round 13)
+    sig = _cache.checkpoint(sig, eager=False)
     bands = _bands_of(sig)
 
     snapshots.commit_append(
@@ -172,8 +158,6 @@ def append_dedup_batch(spark: SparkSession, root: str,
 
     meta["version"] = v
     meta["appends"] = meta.get("appends", 0) + 1
-    if fingerprint is not None:
-        meta["fingerprint"] = fingerprint
     with open(_meta_path(root), "w") as fh:
         json.dump(meta, fh)
     return v
@@ -191,7 +175,8 @@ def classify_served(spark: SparkSession, root: str, batch: DataFrame,
     evaluated on stored-count + batch-count per bucket — the same
     TOTAL-size semantics as `_drop_hot_buckets` over the union."""
     sig = _staged(batch, id_col, content_col, k)
-    sig = sig.transform(_cache.lazy)  # fuses into first consumer job (round 13)
+    # lazy: fuses into the first consumer's job (round 13)
+    sig = _cache.checkpoint(sig, eager=False)
     inc_bands = _bands_of(sig)
     inc_h = sig.select("id", F.md5("_text").alias("h"))
 
@@ -219,9 +204,8 @@ def classify_served(spark: SparkSession, root: str, batch: DataFrame,
                        (F.col("n_inc")
                         + F.coalesce(F.col("n_corp"), F.lit(0)))
                        .alias("n")))
-        hot = (tot.filter(F.col("n") > bucket_cap)
-               .select(*keys)
-               .localCheckpoint().transform(_cache.track))
+        hot = _cache.checkpoint(
+            tot.filter(F.col("n") > bucket_cap).select(*keys))
         inc_bands = inc_bands.join(F.broadcast(hot), keys,
                                    "left_anti")
         st_bands = st_bands.join(F.broadcast(hot), keys, "left_anti")
@@ -230,11 +214,11 @@ def classify_served(spark: SparkSession, root: str, batch: DataFrame,
     # into the stored band table — the corpus side is never shuffled
     # (guide §3.1: broadcast the small side; at 100 TB st_bands is
     # the corpus-scale side and the ingest batch is the small one)
-    cand = (st_bands.select(*keys, F.col("id").alias("id_corp"))
-            .join(F.broadcast(inc_bands), keys)
-            .select(F.col("id").alias("id_in"), "id_corp")
-            .distinct()
-            .localCheckpoint().transform(_cache.track))
+    cand = _cache.checkpoint(
+        st_bands.select(*keys, F.col("id").alias("id_corp"))
+        .join(F.broadcast(inc_bands), keys)
+        .select(F.col("id").alias("id_in"), "id_corp")
+        .distinct())
     a = sig.select(F.col("id").alias("id_in"),
                    F.col("sh").alias("sh_a"))
     b = (st_sh.join(F.broadcast(cand.select(F.col("id_corp")

@@ -36,12 +36,12 @@ def pagerank(pairs: DataFrame, iters: int = 3,
     # ONCE as (u, v, deg), and each round shuffles only the
     # node-bounded rank frame plus the one unavoidable contribution
     # aggregation (the matvec).
-    edges = (pairs.select(F.col("id_a").alias("u"),
-                          F.col("id_b").alias("v"))
-             .unionByName(pairs.select(F.col("id_b").alias("u"),
-                                       F.col("id_a").alias("v")))
-             .repartition("u")
-             .localCheckpoint().transform(_cache.track))
+    edges = _cache.checkpoint(
+        pairs.select(F.col("id_a").alias("u"),
+                     F.col("id_b").alias("v"))
+        .unionByName(pairs.select(F.col("id_b").alias("u"),
+                                  F.col("id_a").alias("v")))
+        .repartition("u"))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     n = deg.count()  # bounded scalar: node count
     if n == 0:
@@ -49,8 +49,8 @@ def pagerank(pairs: DataFrame, iters: int = 3,
                             F.lit(0.0).alias("rank")).limit(0)
     # undirected: out-degree = degree; co-partitioned join, no
     # exchange, and the checkpoint frees the loop from re-deriving it
-    edgesd = (edges.join(deg, "u").select("u", "v", "deg")
-              .localCheckpoint().transform(_cache.track))
+    edgesd = _cache.checkpoint(
+        edges.join(deg, "u").select("u", "v", "deg"))
     base = (1.0 - damping) / n
     ranks = deg.select("u", F.lit(round(1.0 / n, PR_QUANT))
                        .alias("rank"))
@@ -59,11 +59,11 @@ def pagerank(pairs: DataFrame, iters: int = 3,
                    .select(F.col("v").alias("u"),
                            (F.col("rank") / F.col("deg"))
                            .alias("c")))
-        ranks = (contrib.groupBy("u")
-                 .agg(F.round(F.lit(base)
-                              + F.lit(damping) * F.sum("c"),
-                              PR_QUANT).alias("rank"))
-                 .localCheckpoint(False).transform(_cache.track))
+        ranks = _cache.checkpoint(
+            contrib.groupBy("u")
+            .agg(F.round(F.lit(base)
+                         + F.lit(damping) * F.sum("c"),
+                         PR_QUANT).alias("rank")), eager=False)
     return ranks.select(F.col("u").alias("id"), "rank")
 
 

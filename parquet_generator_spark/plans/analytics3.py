@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_generator_spark.operators import cache
 from parquet_generator_spark.operators.util import broadcast_scalars
 from parquet_generator_spark.sources.catalog import load_table
 
@@ -411,10 +412,10 @@ def ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, the per-partition sort, and the final decile groupBy."""
     orders = load_table(spark, "orders", sf_dir)
     sort_cols = [F.asc("o_totalprice"), F.asc("o_orderkey")]
-    part = (orders.select("o_orderkey", "o_totalprice")
-            .repartitionByRange(NTILE_RANGE_PARTS, *sort_cols)
-            .withColumn("pid", F.spark_partition_id())
-            .localCheckpoint())  # materialize once: counts + rank pass
+    part = cache.checkpoint(  # materialize once: counts + rank pass
+        orders.select("o_orderkey", "o_totalprice")
+        .repartitionByRange(NTILE_RANGE_PARTS, *sort_cols)
+        .withColumn("pid", F.spark_partition_id()))
     counts = {row["pid"]: row["n"]
               for row in part.groupBy("pid")
               .agg(F.count(F.lit(1)).alias("n")).collect()}

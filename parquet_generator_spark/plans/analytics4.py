@@ -96,13 +96,13 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(F.broadcast(nation.filter(F.col("n_name") == Q11_NATION)),
                   F.col("s_nationkey") == F.col("n_nationkey"))
             .select("s_suppkey"))
-    pv = (li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"),
-                  "left_semi")
-          .groupBy(F.col("l_partkey").alias("partkey"))
-          .agg(F.sum(_rev()).alias("raw_value"))
-          # part-cardinality; materialize once so the scalar threshold
-          # doesn't re-run the whole lineitem scan + aggregate
-          .localCheckpoint().transform(_cache.track))
+    # part-cardinality; materialize once so the scalar threshold
+    # doesn't re-run the whole lineitem scan + aggregate
+    pv = _cache.checkpoint(
+        li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"),
+                "left_semi")
+        .groupBy(F.col("l_partkey").alias("partkey"))
+        .agg(F.sum(_rev()).alias("raw_value")))
     thresh = pv.agg((Q11_FACTOR * F.avg("raw_value")).alias("thresh"))
     return (broadcast_scalars(pv, thresh)
             .filter(F.col("raw_value") > F.col("thresh"))

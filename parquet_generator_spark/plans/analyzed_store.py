@@ -41,7 +41,6 @@ to a pruned array-membership scan.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 import shutil
 
@@ -59,7 +58,10 @@ from parquet_generator_spark.plans.analyzer_queries import (
     planted_expr,
     routed_planted_expr,
 )
+from parquet_generator_spark.sinks import stores
 from parquet_generator_spark.sources.catalog import load_table
+
+_DATA = "documents_analyzed"
 
 
 def _specs() -> list[tuple[str, str, str]]:
@@ -104,39 +106,18 @@ def version_hash() -> str:
     return h.hexdigest()
 
 
-def store_root(sf_dir: str) -> str:
-    from parquet_generator_spark.plans.llm_queries25 import (
-        _REPO_ROOT,
-    )
-
-    return os.path.join(
-        _REPO_ROOT, ".scratch", "analyzed_store",
-        os.path.basename(os.path.normpath(sf_dir)))
-
-
 def ensure_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the analyzed store for ``sf_dir``; returns
     the parquet path of the analyzed documents table."""
-    root = store_root(sf_dir)
-    data = os.path.join(root, "documents_analyzed")
-    meta_p = os.path.join(root, "meta.json")
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = f"{st.st_mtime_ns}:{st.st_size}:{version_hash()}"
-    if os.path.exists(meta_p):
-        with open(meta_p) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return data
-    _build(spark, sf_dir, root, data)
-    with open(meta_p, "w") as fh:
-        json.dump({"fingerprint": fp}, fh)
-    return data
+    root = stores.ensure(
+        "analyzed_store", sf_dir, ["documents.parquet"],
+        lambda r: _build(spark, sf_dir, r), tag=version_hash())
+    return os.path.join(root, _DATA)
 
 
-def _build(spark: SparkSession, sf_dir: str, root: str,
-           data: str) -> None:
+def _build(spark: SparkSession, sf_dir: str, root: str) -> None:
     specs = _specs()
     routed_mixed, route = _routed()
-    os.makedirs(root, exist_ok=True)
 
     # stage 0: cheap string staging — every planted mixed_<lang>
     # column at once (plain concat/substr/CASE, no stemmers), text
@@ -180,7 +161,7 @@ def _build(spark: SparkSession, sf_dir: str, root: str,
                                            arm))
     df = (df.withColumn("analyzed_routed", routed_col)
           .drop("mixed_routed"))
-    df.write.mode("overwrite").parquet(data)
+    df.write.mode("overwrite").parquet(os.path.join(root, _DATA))
     shutil.rmtree(cur)
 
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_generator_spark.operators import dedup, similarity
+from parquet_generator_spark.operators import cache, dedup, similarity
 from parquet_generator_spark.operators import text as tx
 from parquet_generator_spark.operators.multimodal import (
     extract_features,
@@ -21,32 +21,17 @@ ANN_QUERY_PRED = "vec_id < 10"
 
 # --- shared near-dup edge stage -------------------------------------
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash-LSH near-dup pair list over documents, memoized
-    per (Spark application, sf_dir) as a localCheckpointed frame:
-    `dedup_minhash`, `dedup_clusters`, and `dedup_pagerank` all
-    consume this same edge list, and the signature + banding +
-    verify pipeline dominates each of them — in any run that
-    composes the queries (the bench sweep, the driver's correctness
-    pass, a real curation job chaining pairs -> clusters -> ranks)
-    the expensive stage computes ONCE and the iterative consumers
-    start from materialized edges. Each query is still self-contained
-    (first caller pays the build); results are identical by
-    construction because every caller declared this exact edge build
-    before the factoring."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _EDGE_CACHE.get(key)
-    if got is not None:
-        return got
+    """The MinHash-LSH near-dup pair list over documents, behind a
+    tracked checkpoint: `dedup_minhash`, `dedup_clusters`,
+    `dedup_pagerank` and the other near-dup consumers all start from
+    this same edge list, so the iterative ones read materialized
+    edges instead of re-running the signature + banding + verify
+    pipeline per round. Each query builds its own edges; nothing is
+    shared across queries."""
     docs = load_table(spark, "documents", sf_dir)
-    pairs = (dedup.minhash_lsh_pairs(docs, "doc_id", "text",
-                                     JACCARD_THRESHOLD)
-             .localCheckpoint())
-    _EDGE_CACHE[key] = pairs
-    return pairs
+    return cache.checkpoint(dedup.minhash_lsh_pairs(
+        docs, "doc_id", "text", JACCARD_THRESHOLD))
 
 
 # --- dedup ----------------------------------------------------------

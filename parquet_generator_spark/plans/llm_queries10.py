@@ -143,7 +143,8 @@ def gini_source_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus passes and three jobs; now one pass, one scalar
     # collect). Lazy: the first consumer is the full-scan totals
     # aggregate.
-    ranked = cache.lazy(per.withColumn("rk", F.row_number().over(w)))
+    ranked = cache.checkpoint(per.withColumn("rk", F.row_number().over(w)),
+                              eager=False)
     tot = ranked.agg(
         F.sum("tokens").alias("t"),
         F.count(F.lit(1)).alias("k"),

@@ -6,7 +6,7 @@ pairwise Jensen-Shannon source-divergence matrix.
 Scale posture: everything is grouped aggregates and key-cardinality
 joins; the JS matrix shuffles on the token key (a token in k sources
 contributes k^2 bounded pair rows, never a doc-level cross join);
-the calibration queries ride the memoized near-dup edge stage.
+the calibration queries ride the shared near-dup edge stage.
 """
 
 from __future__ import annotations

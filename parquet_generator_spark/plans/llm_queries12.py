@@ -3,7 +3,7 @@ near-dup threshold sweep and the IVF probe/recall curve. Both turn a
 "what should this knob be?" question into ONE query whose expensive
 stage runs once.
 
-Scale posture: the threshold sweep reuses the memoized near-dup edge
+Scale posture: the threshold sweep reuses the shared near-dup edge
 stage (one signature+banding+verify pass at the loosest threshold,
 then pure aggregation); the recall curve runs the corpus-scan
 kernels once per probe setting over the bounded query set and joins
@@ -102,22 +102,23 @@ def ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     queries = emb.filter(ANN_QUERY_PRED)
-    truth = (similarity.brute_force_topk(emb, queries, ANN_K)
-             .select("qid", "nid").localCheckpoint().transform(_cache.track))
+    truth = _cache.checkpoint(
+        similarity.brute_force_topk(emb, queries, ANN_K)
+        .select("qid", "nid"))
     n_truth = truth.count()  # bounded: queries x k
     cents = similarity.make_centroids_from_corpus(emb, IVF_CURVE_CELLS)
-    c = (similarity.ivf_assign_cells(emb, cents, 1)
-         .select(F.col("vec_id").alias("nid"),
-                 F.col("embedding").alias("nvec"),
-                 similarity.norm("embedding").alias("nn"), "cell")
-         .localCheckpoint().transform(_cache.track))
-    qmax = (similarity.ivf_assign_cells(queries, cents,
-                                        max(IVF_PROBES))
-            .select(F.col("vec_id").alias("qid"),
-                    F.col("embedding").alias("qvec"),
-                    similarity.norm("embedding").alias("qn"),
-                    "cell", "probe_rank")
-            .localCheckpoint().transform(_cache.track))
+    c = _cache.checkpoint(
+        similarity.ivf_assign_cells(emb, cents, 1)
+        .select(F.col("vec_id").alias("nid"),
+                F.col("embedding").alias("nvec"),
+                similarity.norm("embedding").alias("nn"), "cell"))
+    qmax = _cache.checkpoint(
+        similarity.ivf_assign_cells(queries, cents,
+                                    max(IVF_PROBES))
+        .select(F.col("vec_id").alias("qid"),
+                F.col("embedding").alias("qvec"),
+                similarity.norm("embedding").alias("qn"),
+                "cell", "probe_rank"))
     # one corpus-to-query join at the loosest setting; min shared
     # probe_rank decides every tighter setting's membership
     scored = (c.join(F.broadcast(qmax), "cell")

@@ -7,7 +7,7 @@ keep-one-per-cluster policy).
 Scale posture: purity/NMI reduce a (cells x labels)-cardinality
 contingency table (bounded, not data-scale) built from one narrow
 cell-assignment map + one grouped pass; the size distribution rides
-the memoized near-dup edge stage and the existing CC operator, then
+the shared near-dup edge stage and the existing CC operator, then
 aggregates cluster-cardinality rows.
 """
 
@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_generator_spark.operators import dedup, similarity
+from parquet_generator_spark.operators import cache, dedup, similarity
 from parquet_generator_spark.operators.util import broadcast_scalars
 from parquet_generator_spark.plans.llm_queries import near_dup_edges
 from parquet_generator_spark.sources.catalog import load_table
@@ -40,9 +40,9 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = (similarity.ivf_assign_cells(emb, cents, 1)
               .select("vec_id", "cell"))
     labeled = assign.join(emb.select("vec_id", "label"), "vec_id")
-    cnt = (labeled.groupBy("cell", "label")
-           .agg(F.count(F.lit(1)).alias("n"))
-           .localCheckpoint())  # bounded: cells x labels rows
+    cnt = cache.checkpoint(  # bounded: cells x labels rows
+        labeled.groupBy("cell", "label")
+        .agg(F.count(F.lit(1)).alias("n")))
     per_cell = cnt.groupBy("cell").agg(F.sum("n").alias("nc"))
     per_label = cnt.groupBy("label").agg(F.sum("n").alias("nl"))
     n_total = float(cnt.agg(F.sum("n")).collect()[0][0])
@@ -111,7 +111,7 @@ def dedup_cluster_size_dist(spark: SparkSession, sf_dir: str
     size the corpus contains and how many documents each size class
     would delete under keep-one-per-cluster — the report that decides
     whether near-dup removal is worth a corpus rewrite. Rides the
-    memoized edge stage; singleton docs count as size-1 clusters via
+    shared edge stage; singleton docs count as size-1 clusters via
     the total as a plan literal (never joined back to the corpus)."""
     docs = load_table(spark, "documents", sf_dir)
     pairs = near_dup_edges(spark, sf_dir)

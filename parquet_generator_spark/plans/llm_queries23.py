@@ -56,10 +56,10 @@ def source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch (three heavy passes / six scans in the before-plan) the
     # pair aggregate materializes once — a source^2-bounded frame —
     # and both denominator sides are filters over it.
-    shared = (pairs.groupBy("p.src_a", "p.src_b")
-              .agg(F.count(F.lit(1)).alias("shared_shingles"))
-              .select("src_a", "src_b", "shared_shingles")
-              .localCheckpoint().transform(_cache.track))
+    shared = _cache.checkpoint(
+        pairs.groupBy("p.src_a", "p.src_b")
+        .agg(F.count(F.lit(1)).alias("shared_shingles"))
+        .select("src_a", "src_b", "shared_shingles"))
     a = (shared.filter(F.col("src_a") == F.col("src_b"))
          .select("src_a", F.col("shared_shingles").alias("n_a")))
     b = (shared.filter(F.col("src_a") == F.col("src_b"))

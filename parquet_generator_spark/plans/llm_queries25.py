@@ -18,8 +18,6 @@ serving ADC sum preserves the kernel's sequential add order.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_generator_spark.operators import ann_index
@@ -31,48 +29,27 @@ from parquet_generator_spark.plans.llm_queries24 import (
     _ivfpq_oracle,
 )
 from parquet_generator_spark.plans.llm_queries15 import PQ_K, PQ_M
+from parquet_generator_spark.sinks import stores
 from parquet_generator_spark.sources.catalog import load_table
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__))))
-
-
-def index_root(sf_dir: str) -> str:
-    return os.path.join(_REPO_ROOT, ".scratch", "ivfpq_index",
-                        os.path.basename(os.path.normpath(sf_dir)))
-
-
-def corpus_fingerprint(sf_dir: str) -> str:
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(p)
-    return f"{st.st_mtime_ns}:{st.st_size}"
-
-
-def ensure_index(spark: SparkSession, sf_dir: str) -> str:
-    """Train-if-stale: rebuild only when the corpus file fingerprint
-    changed (the materialized-view refresh contract). Returns the
-    index root."""
-    root = index_root(sf_dir)
-    fp = corpus_fingerprint(sf_dir)
-    meta = ann_index.read_index_meta(root)
-    if meta is None or meta.get("fingerprint") != fp:
-        ann_index.drop_index(root)
-        emb = load_table(spark, "embeddings", sf_dir)
-        ann_index.train_ivfpq_index(
-            spark, emb, root, n_cells=IVFPQ_CELLS, n_sub=PQ_M,
-            n_codes=PQ_K, fingerprint=fp)
-    return root
 
 
 def ann_ivfpq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k by IVF-probe + PQ-ADC served from the persisted index:
     (rank, vec_id, adc), value-identical to ann_ivfpq. The serving
     DAG touches only the codes snapshot (filter on cell pushed to
-    its parquet scan) plus ~8 KB of ADC literals."""
-    root = ensure_index(spark, sf_dir)
+    its parquet scan) plus ~8 KB of ADC literals. The index is
+    trained once per embeddings file version (the materialized-view
+    refresh contract)."""
+    def build(root: str) -> None:
+        ann_index.train_ivfpq_index(
+            spark, load_table(spark, "embeddings", sf_dir), root,
+            n_cells=IVFPQ_CELLS, n_sub=PQ_M, n_codes=PQ_K)
+
+    root = stores.ensure("ivfpq_index", sf_dir, ["embeddings.parquet"],
+                         build)
     return ann_index.serve_ivfpq(spark, root, IVFPQ_QUERY,
                                  IVFPQ_TOPK, n_probe=IVFPQ_PROBE)
 

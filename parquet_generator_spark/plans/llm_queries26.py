@@ -274,8 +274,6 @@ def ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizers, no retrain — and serve the same literal query from
     the merged codes snapshot. Value-identical to `ann_ivfpq`; the
     oracle is the full from-corpus rebuild."""
-    import os
-
     from parquet_generator_spark.operators import ann_index
     from parquet_generator_spark.plans.llm_queries15 import PQ_K, PQ_M
     from parquet_generator_spark.plans.llm_queries24 import (
@@ -284,16 +282,9 @@ def ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         IVFPQ_QUERY,
         IVFPQ_TOPK,
     )
-    from parquet_generator_spark.plans.llm_queries25 import (
-        corpus_fingerprint,
-        index_root,
-    )
+    from parquet_generator_spark.sinks import stores
 
-    root = os.path.join(index_root(sf_dir) + "_appended")
-    fp = corpus_fingerprint(sf_dir) + ":appended"
-    meta = ann_index.read_index_meta(root)
-    if meta is None or meta.get("fingerprint") != fp:
-        ann_index.drop_index(root)
+    def build(root: str) -> None:
         emb = load_table(spark, "embeddings", sf_dir)
         cnt = emb.count()
         k = max(PQ_K, IVFPQ_CELLS, (3 * cnt) // 4)
@@ -303,9 +294,12 @@ def ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = emb.filter(F.col("vec_id") > cut)
         ann_index.train_ivfpq_index(
             spark, base, root, n_cells=IVFPQ_CELLS, n_sub=PQ_M,
-            n_codes=PQ_K, fingerprint=fp)
+            n_codes=PQ_K)
         if batch.limit(1).count():
             ann_index.append_ivfpq_batch(spark, root, batch)
+
+    root = stores.ensure("ivfpq_index_appended", sf_dir,
+                         ["embeddings.parquet"], build, tag="appended")
     return ann_index.serve_ivfpq(spark, root, IVFPQ_QUERY,
                                  IVFPQ_TOPK, n_probe=IVFPQ_PROBE)
 

@@ -184,9 +184,9 @@ def dsir_importance_weights(spark: SparkSession,
     # corpus passes in the before-plan; round 13, guide §1.2) — the
     # checkpoint pins it at 128 rows so only the model build and the
     # scoring pass scan the corpus
-    dist = cache.lazy(
+    dist = cache.checkpoint(
         tok.groupBy("b").agg(F.sum(is_t).alias("nt"),
-                             F.count(F.lit(1)).alias("nr")))
+                             F.count(F.lit(1)).alias("nr")), eager=False)
     totals = dist.agg(F.sum("nt").alias("_tt"),
                       F.sum("nr").alias("_tr"))
     sb = _DSIR_SMOOTH * DSIR_BUCKETS
@@ -385,7 +385,7 @@ def quality_classifier_gd(spark: SparkSession,
                   & ~F.expr("contains(page, '{')")
                   & (kept >= _C4_MIN_SENTENCES))
               .drop("page"))
-    staged = staged.localCheckpoint()  # 3 reuses of the features
+    staged = cache.checkpoint(staged)  # 3 reuses of the features
 
     x1, x2, x3, y = _gd_feature_exprs("spark")
     w = [0.0, 0.0, 0.0, 0.0]
@@ -489,27 +489,19 @@ def dedup_index_served(spark: SparkSession,
     signatures, band keys, TOTAL-bucket-cap semantics, round-3
     exact-Jaccard verify), so the oracle IS incremental_dedup's
     from-scratch rebuild. The dedup analog of ann_ivfpq_served."""
-    import os
-
     from parquet_generator_spark.operators import dedup_index
     from parquet_generator_spark.plans.llm_queries8 import INC_TAU
-    from parquet_generator_spark.plans.llm_queries25 import (
-        _REPO_ROOT,
-    )
+    from parquet_generator_spark.sinks import stores
 
-    root = os.path.join(
-        _REPO_ROOT, ".scratch", "dedup_index",
-        os.path.basename(os.path.normpath(sf_dir)))
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = f"{st.st_mtime_ns}:{st.st_size}"
-    meta = dedup_index.read_index_meta(root)
     docs = load_table(spark, "documents", sf_dir)
-    if meta is None or meta.get("fingerprint") != fp:
-        dedup_index.drop_index(root)
-        corpus = docs.filter(F.col("doc_id") % 2 == 0)
+
+    def build(root: str) -> None:
         dedup_index.train_dedup_index(
-            spark, corpus, root, id_col="doc_id",
-            content_col="text", fingerprint=fp)
+            spark, docs.filter(F.col("doc_id") % 2 == 0), root,
+            id_col="doc_id", content_col="text")
+
+    root = stores.ensure("dedup_index", sf_dir, ["documents.parquet"],
+                         build)
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     out = dedup_index.classify_served(
         spark, root, batch, INC_TAU, id_col="doc_id",

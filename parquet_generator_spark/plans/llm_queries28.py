@@ -16,8 +16,6 @@ O(new batch) compute, the corpus side is never re-signed.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,27 +32,20 @@ def dedup_index_appended(spark: SparkSession,
     the from-scratch oracle is shared."""
     from parquet_generator_spark.operators import dedup_index
     from parquet_generator_spark.plans.llm_queries8 import INC_TAU
-    from parquet_generator_spark.plans.llm_queries25 import (
-        _REPO_ROOT,
-    )
+    from parquet_generator_spark.sinks import stores
 
-    root = os.path.join(
-        _REPO_ROOT, ".scratch", "dedup_index_app",
-        os.path.basename(os.path.normpath(sf_dir)))
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = f"{st.st_mtime_ns}:{st.st_size}:appended"
-    meta = dedup_index.read_index_meta(root)
     docs = load_table(spark, "documents", sf_dir)
-    if meta is None or meta.get("fingerprint") != fp:
-        dedup_index.drop_index(root)
-        base = docs.filter(F.col("doc_id") % 4 == 0)
+
+    def build(root: str) -> None:
         dedup_index.train_dedup_index(
-            spark, base, root, id_col="doc_id",
-            content_col="text", fingerprint=fp + ":partial")
-        ingest = docs.filter(F.col("doc_id") % 4 == 2)
+            spark, docs.filter(F.col("doc_id") % 4 == 0), root,
+            id_col="doc_id", content_col="text")
         dedup_index.append_dedup_batch(
-            spark, root, ingest, id_col="doc_id",
-            content_col="text", fingerprint=fp)
+            spark, root, docs.filter(F.col("doc_id") % 4 == 2),
+            id_col="doc_id", content_col="text")
+
+    root = stores.ensure("dedup_index_appended", sf_dir,
+                         ["documents.parquet"], build, tag="appended")
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     out = dedup_index.classify_served(
         spark, root, batch, INC_TAU, id_col="doc_id",

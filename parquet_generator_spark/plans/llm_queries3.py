@@ -226,14 +226,14 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the (small) candidate list, then shingle ONLY the
     # docs that appear in a pair — without the semi-join both verify
     # sides would re-tokenize the full corpus
-    cand = embedding_dup_pairs(emb, SEM_THRESHOLD).localCheckpoint().transform(_cache.track)
+    cand = _cache.checkpoint(embedding_dup_pairs(emb, SEM_THRESHOLD))
     cand_ids = (cand.select(F.col("id_a").alias("doc_id"))
                 .union(cand.select(F.col("id_b").alias("doc_id")))
                 .distinct())
-    sh = (docs.join(cand_ids, "doc_id", "left_semi")
-          .select(F.col("doc_id"),
-                  F.expr(shingles_spark("text", 3)).alias("sh"))
-          .localCheckpoint().transform(_cache.track))
+    sh = _cache.checkpoint(
+        docs.join(cand_ids, "doc_id", "left_semi")
+        .select(F.col("doc_id"),
+                F.expr(shingles_spark("text", 3)).alias("sh")))
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

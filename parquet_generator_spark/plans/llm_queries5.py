@@ -348,14 +348,14 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"j -> struct(least(t[i], t[j]) AS w1, "
         f"greatest(t[i], t[j]) AS w2)))) "
         f"ELSE array() END)")
-    model = (docs.select(F.expr(toks_spark("text")).alias("t"))
-             .select(F.explode(F.expr(combined_expr)).alias("p"))
-             .select("p.w1", "p.w2")
-             .groupBy("w1", "w2")
-             .agg(F.count(F.lit(1)).alias("cnt"))
-             # EAGER: the final job reads the model through three
-             # subtrees (pair branch + both unigram join sides)
-             .localCheckpoint().transform(_cache.track))
+    # EAGER: the final job reads the model through three
+    # subtrees (pair branch + both unigram join sides)
+    model = _cache.checkpoint(
+        docs.select(F.expr(toks_spark("text")).alias("t"))
+        .select(F.explode(F.expr(combined_expr)).alias("p"))
+        .select("p.w1", "p.w2")
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("cnt")))
     tot = model.agg(
         F.sum(F.when(F.col("w2").isNull(), F.col("cnt")))
         .alias("t_w"),
@@ -537,7 +537,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .alias(c)
                          for t, c in zip(BM25_TERMS, tf_cols)])
                .filter(F.col("dl") > 0))
-    per_doc = _cache.lazy(per_doc)
+    per_doc = _cache.checkpoint(per_doc, eager=False)
     stats = per_doc.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.avg("dl").alias("avgdl"),

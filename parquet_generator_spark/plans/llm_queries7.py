@@ -57,9 +57,9 @@ def bigram_logprob_frame(docs: DataFrame) -> DataFrame:
     # sits on the aggregated table — vocab^2-bounded, tiny next to
     # the corpus — never on the corpus-sized bigram stream, so the
     # same shape holds at 100 TB.
-    model = (bg.groupBy("w1", "w2")
-             .agg(F.count(F.lit(1)).alias("c12"))
-             .localCheckpoint().transform(_cache.track))
+    model = _cache.checkpoint(
+        bg.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c12")))
     left = model.groupBy("w1").agg(F.sum("c12").alias("c1"))
     vocab = (t.select(F.explode("tk").alias("w"))
              .agg(F.countDistinct("w").alias("v")))

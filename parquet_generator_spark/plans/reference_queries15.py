@@ -73,9 +73,9 @@ def _ip_source(ev: DataFrame) -> DataFrame:
     stores the ip string, so the checkpointed column IS the
     realistic scan shape; downstream packed-int predicates then
     cost one split chain per use over all cores."""
-    return (widen_if_narrow(ev)
-            .select(F.expr(IP_S).alias("client_ip"))
-            .localCheckpoint().transform(_cache.track))
+    return _cache.checkpoint(
+        widen_if_narrow(ev)
+        .select(F.expr(IP_S).alias("client_ip")))
 
 
 IP_FILTER = {"bool": {

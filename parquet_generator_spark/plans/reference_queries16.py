@@ -325,9 +325,9 @@ def dsl_phrase_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize+explode chain (eight scans in the before-plan; round
     # 13, guide §1.2) — checkpoint both models, and derive the token
     # total as sum(unigram counts) instead of a dedicated pass
-    uni = cache.lazy(
+    uni = cache.checkpoint(
         t.select(F.explode("tk").alias("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")))
+        .groupBy("w").agg(F.count(F.lit(1)).alias("cnt")), eager=False)
     n_tok = uni.agg(F.sum("cnt").alias("n"))
     bg = (t.select(F.explode(F.expr(
         "CASE WHEN size(tk) >= 2 THEN "

@@ -108,44 +108,21 @@ ORACLES.update({
 
 # --------------------------------------- dsl_tsds_downsample_served
 
-def _rollup_root(sf_dir: str) -> str:
-    import os
-
-    from parquet_generator_spark.plans.llm_queries25 import (
-        _REPO_ROOT,
-    )
-
-    return os.path.join(
-        _REPO_ROOT, ".scratch", "tsds_rollup",
-        os.path.basename(os.path.normpath(sf_dir)))
-
-
 def _ensure_rollup(spark: SparkSession, sf_dir: str) -> str:
-    """Downsample-on-write, fingerprint-gated per sf_dir: the 6h
-    rollup is materialized through the snapshot table format ONCE
-    per corpus version (sinks/tsds_rollup.py owns the
-    merge-on-append lifecycle for incremental slices)."""
-    import json
-    import os
-
+    """Downsample-on-write: the 6h rollup is materialized through the
+    snapshot table format ONCE per events version
+    (sinks/tsds_rollup.py owns the merge-on-append lifecycle for
+    incremental slices)."""
+    from parquet_generator_spark.sinks import stores
     from parquet_generator_spark.sinks.tsds_rollup import (
         train_rollup,
     )
     from parquet_generator_spark.sources.catalog import load_table
 
-    root = _rollup_root(sf_dir)
-    meta_p = os.path.join(root, "source_meta.json")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    fp = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.exists(meta_p):
-        with open(meta_p) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return root
-    ev = load_table(spark, "events", sf_dir)
-    train_rollup(spark, ev, root)
-    with open(meta_p, "w") as fh:
-        json.dump({"fingerprint": fp}, fh)
-    return root
+    return stores.ensure(
+        "tsds_rollup", sf_dir, ["events.parquet"],
+        lambda root: train_rollup(
+            spark, load_table(spark, "events", sf_dir), root))
 
 
 def dsl_tsds_downsample_served(spark: SparkSession,

@@ -25,7 +25,6 @@ first/last+increase per downsample bucket.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,42 +75,24 @@ ORACLES.update({"dsl_rate_served": _dsl_rate_served_oracle()})
 
 # ------------------------------------------------ esql_rate_served
 
-def _ctr_rollup_root(sf_dir: str) -> str:
-    from parquet_generator_spark.plans.llm_queries25 import (
-        _REPO_ROOT,
-    )
-
-    return os.path.join(
-        _REPO_ROOT, ".scratch", "tsds_ctr_rollup",
-        os.path.basename(os.path.normpath(sf_dir)))
-
-
 def _ensure_ctr_rollup(spark: SparkSession, sf_dir: str) -> str:
-    """Counter downsample-on-write, fingerprint-gated per sf_dir:
-    the per-(user, 6h) first/last+increase rollup of the synthetic
-    cumulative counter, materialized once per corpus version."""
+    """Counter downsample-on-write: the per-(user, 6h)
+    first/last+increase rollup of the synthetic cumulative counter,
+    materialized once per events version."""
     from parquet_generator_spark.plans.reference_queries29 import (
         _ctr_source,
     )
+    from parquet_generator_spark.sinks import stores
     from parquet_generator_spark.sinks.tsds_rollup import (
         train_ctr_rollup,
     )
     from parquet_generator_spark.sources.catalog import load_table
 
-    root = _ctr_rollup_root(sf_dir)
-    meta_p = os.path.join(root, "source_meta.json")
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    fp = f"{st.st_mtime_ns}:{st.st_size}"
-    if os.path.exists(meta_p):
-        with open(meta_p) as fh:
-            if json.load(fh).get("fingerprint") == fp:
-                return root
-    ev = load_table(spark, "events", sf_dir)
-    train_ctr_rollup(spark, _ctr_source(ev), root,
-                     series="user_id")
-    with open(meta_p, "w") as fh:
-        json.dump({"fingerprint": fp}, fh)
-    return root
+    return stores.ensure(
+        "tsds_ctr_rollup", sf_dir, ["events.parquet"],
+        lambda root: train_ctr_rollup(
+            spark, _ctr_source(load_table(spark, "events", sf_dir)),
+            root, series="user_id"))
 
 
 def esql_rate_served(spark: SparkSession,

@@ -100,11 +100,11 @@ def dsl_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate share ONE explode pass (round 14: un-barriered, the
     # explode+groupBy lineage re-ran for the entropy branch). Lazy:
     # the first consumer is the full-scan sum aggregate.
-    chars = cache.lazy(
+    chars = cache.checkpoint(
         ev.select(F.explode(F.expr(
             "transform(sequence(1, length(event_type)), "
             "i -> substring(event_type, i, 1))")).alias("ch"))
-        .groupBy("ch").agg(F.count(F.lit(1)).alias("n")))
+        .groupBy("ch").agg(F.count(F.lit(1)).alias("n")), eager=False)
     total = chars.agg(F.sum("n")).collect()[0][0]  # bounded scalar
     ent = chars.agg(F.round(
         -F.sum((F.col("n") / F.lit(float(total)))

@@ -203,9 +203,17 @@ def read_elasticsearch(spark: SparkSession, cfg: EsSourceConfig,
 
 def decode_docs(df: DataFrame, column: str,
                 schema: T.StructType) -> DataFrame:
-    """Lenient JSON decode of a document column to top-level fields."""
+    """Lenient JSON decode of a document column to top-level fields.
+    The frame's other columns pass through ahead of the fields; on a
+    name clash the passthrough column wins (it is the caller's, e.g.
+    a partition key) and the document's field is not decoded."""
+    keep = [c for c in df.columns if c != column]
+    # Spark resolves names case-insensitively, so a clash is too
+    taken = {c.lower() for c in keep}
+    schema = T.StructType([f for f in schema.fields
+                           if f.name.lower() not in taken])
     return (df.withColumn("_rec", lenient_decode(F.col(column), schema))
-              .select("_rec.*"))
+              .select(*keep, "_rec.*"))
 
 
 def read_json_fixture(spark: SparkSession, path: str,

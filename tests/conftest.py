@@ -45,8 +45,6 @@ _SLOW_TESTS = {
     ("test_ann_index", "test_retrain_is_versioned_time_travel"),
     ("test_ann_index", "test_incremental_append_matches_full_build"),
     ("test_ann_index", "test_served_equals_in_query_build"),
-    ("test_ann_index",
-     "test_ensure_index_trains_once_and_refreshes_on_fingerprint"),
     ("test_ann_recall_curve",
      "test_curve_matches_per_probe_ivf_topk_replay"),
     ("test_cache_hygiene",

@@ -4,8 +4,6 @@ append, and snapshot-versioned retrain."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from parquet_generator_spark.operators import ann_index
@@ -32,7 +30,7 @@ def _train(spark, root, df=None):
                                                SF)
     return ann_index.train_ivfpq_index(
         spark, emb, root, n_cells=IVFPQ_CELLS, n_sub=PQ_M,
-        n_codes=PQ_K, fingerprint="t")
+        n_codes=PQ_K)
 
 
 def _serve(spark, root, version=None):
@@ -96,24 +94,3 @@ def test_retrain_is_versioned_time_travel(spark, root):
     cur = [tuple(r) for r in _serve(spark, root).collect()]
     assert cur == [tuple(r) for r in ann_ivfpq(spark, SF).collect()]
     assert cur != v1
-
-
-def test_ensure_index_trains_once_and_refreshes_on_fingerprint(
-        spark, tmp_path, monkeypatch):
-    from parquet_generator_spark.plans import llm_queries25 as L25
-
-    monkeypatch.setattr(L25, "_REPO_ROOT", str(tmp_path))
-    monkeypatch.setattr(
-        ann_index, "train_ivfpq_index",
-        _count_calls(ann_index.train_ivfpq_index))
-    L25.ensure_index(spark, SF)
-    L25.ensure_index(spark, SF)  # fingerprint unchanged -> no train
-    assert ann_index.train_ivfpq_index.calls == 1
-
-
-def _count_calls(fn):
-    def wrapper(*a, **kw):
-        wrapper.calls += 1
-        return fn(*a, **kw)
-    wrapper.calls = 0
-    return wrapper

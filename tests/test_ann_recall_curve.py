@@ -30,9 +30,9 @@ def curve_rows(spark):
 def test_curve_matches_per_probe_ivf_topk_replay(spark, curve_rows):
     emb = load_table(spark, "embeddings", SF_DIR)
     queries = emb.filter(ANN_QUERY_PRED)
-    truth = (similarity.brute_force_topk(emb, queries, ANN_K)
-             .select("qid", "nid").localCheckpoint()
-             .transform(cache.track))
+    truth = cache.checkpoint(
+        similarity.brute_force_topk(emb, queries, ANN_K)
+        .select("qid", "nid"))
     n_truth = truth.count()
     cents = similarity.make_centroids_from_corpus(emb, IVF_CURVE_CELLS)
     expected = []

@@ -1,9 +1,10 @@
 """Persisted MinHash dedup-index lifecycle: build, serve,
-value-identity with the in-query cross classification,
-retrain-on-fingerprint, and snapshot time travel."""
+value-identity with the in-query cross classification, merge on
+append, and snapshot time travel."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -30,8 +31,7 @@ def test_build_serve_matches_in_query(spark, root):
     batch = docs.filter(F.col("doc_id") % 2 == 1)
     dedup_index.train_dedup_index(spark, corpus, root,
                                   id_col="doc_id",
-                                  content_col="text",
-                                  fingerprint="t1")
+                                  content_col="text")
     served = {(r["id"], r["status"]) for r in
               dedup_index.classify_served(
                   spark, root, batch, INC_TAU, id_col="doc_id",
@@ -58,21 +58,18 @@ def test_retrain_is_time_travelable(spark, root):
     docs = load_table(spark, "documents", SF)
     c1 = docs.filter(F.col("doc_id") % 4 == 0)
     dedup_index.train_dedup_index(spark, c1, root, id_col="doc_id",
-                                  content_col="text",
-                                  fingerprint="v1")
+                                  content_col="text")
     n1 = snapshots.read_snapshot(
         spark, os.path.join(root, "hashes")).count()
     c2 = docs.filter(F.col("doc_id") % 2 == 0)
     dedup_index.train_dedup_index(spark, c2, root, id_col="doc_id",
-                                  content_col="text",
-                                  fingerprint="v2")
+                                  content_col="text")
     hashes = os.path.join(root, "hashes")
     assert snapshots.current_version(hashes) >= 2
     # current = the retrained corpus; version 1 still readable
     assert (snapshots.read_snapshot(spark, hashes).count()
             == c2.count())
     assert snapshots.read_snapshot(spark, hashes, 1).count() == n1
-    assert dedup_index.read_index_meta(root)["fingerprint"] == "v2"
 
 
 def test_append_equals_rebuild(spark, root, tmp_path):
@@ -89,15 +86,13 @@ def test_append_equals_rebuild(spark, root, tmp_path):
 
     dedup_index.train_dedup_index(spark, part_a, root,
                                   id_col="doc_id",
-                                  content_col="text",
-                                  fingerprint="base")
+                                  content_col="text")
     v = dedup_index.append_dedup_batch(spark, root, part_b,
                                        id_col="doc_id",
-                                       content_col="text",
-                                       fingerprint="base+b")
+                                       content_col="text")
     assert v >= 2
-    meta = dedup_index.read_index_meta(root)
-    assert meta["appends"] == 1 and meta["fingerprint"] == "base+b"
+    with open(os.path.join(root, "index_meta.json")) as fh:
+        assert json.load(fh)["appends"] == 1
     got = {(r["id"], r["status"]) for r in
            dedup_index.classify_served(
                spark, root, batch, INC_TAU, id_col="doc_id",
@@ -106,7 +101,7 @@ def test_append_equals_rebuild(spark, root, tmp_path):
     rebuilt_root = str(tmp_path / "rebuilt")
     dedup_index.train_dedup_index(
         spark, docs.filter(F.col("doc_id") % 2 == 0), rebuilt_root,
-        id_col="doc_id", content_col="text", fingerprint="full")
+        id_col="doc_id", content_col="text")
     want = {(r["id"], r["status"]) for r in
             dedup_index.classify_served(
                 spark, rebuilt_root, batch, INC_TAU,
@@ -131,14 +126,3 @@ def test_append_requires_trained_index(spark, root):
         dedup_index.append_dedup_batch(spark, root, docs,
                                        id_col="doc_id",
                                        content_col="text")
-
-
-def test_drop_index(spark, root):
-    docs = load_table(spark, "documents", SF).limit(20)
-    dedup_index.train_dedup_index(spark, docs, root,
-                                  id_col="doc_id",
-                                  content_col="text",
-                                  fingerprint="x")
-    assert dedup_index.read_index_meta(root) is not None
-    dedup_index.drop_index(root)
-    assert dedup_index.read_index_meta(root) is None

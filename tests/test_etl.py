@@ -101,6 +101,24 @@ def test_json_docs_pipeline(spark, tmp_path):
     assert set(written.columns) >= {"rule_name", "sev", "msg", "source_date"}
 
 
+def test_json_docs_passthrough_column_wins_name_clash(spark, tmp_path):
+    """A document holding a passthrough column's name (here the
+    source_date partition key, matched case-insensitively as Spark
+    resolves names) decodes without AMBIGUOUS_REFERENCE; the
+    passthrough value wins and the record's field is dropped."""
+    docs = [{"rule_name": "login-anomaly", "msg": f"event {i}",
+             ("source_date" if i < 3 else "Source_Date"): "1999-12-31"}
+            for i in range(6)]
+    rows = [(json.dumps(d), f"2024-01-{(i % 2) + 1:02d}")
+            for i, d in enumerate(docs)]
+    docs_df = spark.createDataFrame(rows, "doc string, source_date string")
+    out = json_docs_to_parquet(
+        spark, docs_df, "login-anomaly", str(tmp_path), sample_ratio=1.0)
+    got = spark.read.parquet(out).groupBy("source_date").count().collect()
+    assert sorted((str(r[0]), r[1]) for r in got) == [
+        ("2024-01-01", 3), ("2024-01-02", 3)]
+
+
 def test_fixture_reader_lenient_decode(spark, tmp_path):
     p = tmp_path / "hits.jsonl"
     p.write_text('{"a": 1, "b": "x"}\n{"a": 2}\n{"b": "y", "c": true}\n')

@@ -377,6 +377,30 @@ def test_no_empty_partition_windows_in_source():
     assert found == allowed, found
 
 
+def test_barriers_and_stores_have_one_owner_each():
+    """Tripwire: in ``plans/`` and ``operators/`` every lineage
+    barrier goes through ``cache.checkpoint`` (so ``release_all``
+    drops its blocks), and only ``sinks/stores.py`` places a store
+    under ``.scratch`` or reads/writes a store marker."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / \
+        "parquet_generator_spark"
+    store_marks = (".scratch", '"meta.json"', "'meta.json'",
+                   'get("fingerprint")', '["fingerprint"]')
+    barriers, stores = [], []
+    for sub in ("plans", "operators"):
+        for p in sorted((pkg / sub).rglob("*.py")):
+            rel = str(p.relative_to(pkg))
+            text = p.read_text()
+            if "localCheckpoint(" in text and rel != "operators/cache.py":
+                barriers.append(rel)
+            if any(m in text for m in store_marks):
+                stores.append(rel)
+    assert barriers == [], barriers
+    assert stores == [], stores
+
+
 @pytest.mark.parametrize("name", ["q15_top_supplier", "vocab_coverage",
                                   "dsl_significant_terms",
                                   "embedding_norm_outliers"])
@@ -759,7 +783,7 @@ def test_dedup_index_serving_has_no_corpus_signature_pass(spark):
     # Python evaluations — only snapshot scans + joins
     evals = _re.findall(r"ArrowEvalPython|BatchEvalPython", plan)
     assert evals == [], evals
-    assert ".scratch/dedup_index" in plan  # stored tables feed it
+    assert ".scratch/stores/dedup_index/" in plan  # stored tables feed it
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -237,9 +237,8 @@ def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
 
     from parquet_generator_spark.plans import analyzed_store as st
 
-    root = st.store_root(SF_SMALL)
+    root = os.path.dirname(st.ensure_store(spark, SF_SMALL))
     meta_p = os.path.join(root, "meta.json")
-    st.ensure_store(spark, SF_SMALL)
     with open(meta_p) as fh:
         fp1 = json.load(fh)["fingerprint"]
     assert fp1.endswith(st.version_hash())
