@@ -24,6 +24,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def _read_json(spark: SparkSession, docs: DataFrame) -> DataFrame:
+    """``spark.read.json`` over a one-string-column frame, handed to
+    the JVM reader as a ``Dataset[String]``: the documents never pass
+    through a Python worker (the ``_jdf`` route of operators/cache.py)."""
+    jvm = spark.sparkContext._jvm
+    strings = getattr(docs._jdf, "as")(jvm.org.apache.spark.sql.Encoders.STRING())
+    reader = spark.read
+    return reader._df(reader._jreader.json(strings))
+
+
 def infer_json_schema(
     spark: SparkSession,
     json_docs: DataFrame | list[str],
@@ -58,8 +68,8 @@ def infer_json_schema(
                 sampled.select(F.col(column).cast("string")).collect()]
         widest: T.StructType | None = None
         for doc in docs:
-            one = spark.read.json(
-                spark.sparkContext.parallelize([doc], 1))
+            one = _read_json(
+                spark, spark.createDataFrame([(doc,)], "value string"))
             schema = T.StructType(
                 [f for f in one.schema.fields
                  if not f.name.startswith("_corrupt")])
@@ -71,8 +81,7 @@ def infer_json_schema(
         return promote_nullable(widest or T.StructType([]))
     if mode != "merge":
         raise ValueError(f"unknown inference mode {mode!r}")
-    inferred = spark.read.json(
-        sampled.select(F.col(column).cast("string")).rdd.map(lambda r: r[0]))
+    inferred = _read_json(spark, sampled.select(F.col(column).cast("string")))
     schema = T.StructType(
         [f for f in inferred.schema.fields if not f.name.startswith("_corrupt")])
     return promote_nullable(schema)

@@ -673,6 +673,25 @@ def test_bpe_encode_stats_single_corpus_pass(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_bpe_training_is_one_vocabulary_collect(spark):
+    """Building bpe_encode_stats trains the merges on the driver from
+    one collect of the word-frequency table: at most two jobs (its
+    shuffle and result) and no checkpoint. A per-round Spark loop
+    would fire jobs and register barriers on every merge."""
+    from parquet_generator_spark.operators import cache
+
+    sc = spark.sparkContext
+    group = "bpe_build_jobs"
+    before = cache.tracked_count()
+    sc.setJobGroup(group, group)
+    try:
+        entrymod.queries()["bpe_encode_stats"](spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert cache.tracked_count() == before
+
+
 def test_jpeg_decode_stats_is_one_narrow_pandas_map(spark):
     """The decode is ONE mapInPandas over the filtered scan: no
     shuffle before the pandas node (Exchange only for the final

@@ -43,6 +43,32 @@ def test_infer_merges_across_docs(spark):
     assert types["a"] == "long" and types["b"] == "double"
 
 
+def test_infer_odd_docs_value_identity(spark):
+    """Null, malformed, top-level-array and scalar-string docs infer
+    the exact schema the JSON reader gives them (pinned values, in
+    both modes): a top-level array contributes its elements' fields,
+    the rest contribute nothing, and the corrupt-record column is
+    dropped."""
+    docs = [None, '{"a": 1, "b": {"c": "x"}}', '{bad json',
+            '[{"d": 2.5}, {"e": true}]', '"just a string"',
+            '{"a": "str", "f": [1, 2]}']
+    merged = T.StructType([
+        T.StructField("a", T.StringType()),
+        T.StructField("b", T.StructType(
+            [T.StructField("c", T.StringType())])),
+        T.StructField("d", T.DoubleType()),
+        T.StructField("e", T.BooleanType()),
+        T.StructField("f", T.ArrayType(T.LongType())),
+    ])
+    assert infer_json_schema(spark, docs) == merged
+    assert infer_json_schema(spark, docs, mode="widest") == T.StructType(
+        [merged["a"], merged["f"]])
+    for odd in (None, "{bad json", '"just a string"'):
+        for mode in ("merge", "widest"):
+            assert infer_json_schema(spark, [odd], mode=mode) == \
+                T.StructType([])
+
+
 def test_merge_widen_and_conflict():
     a = T.StructType([T.StructField("x", T.IntegerType()),
                       T.StructField("y", T.StringType())])
