@@ -11,8 +11,9 @@ Scale design (the whole point at 100 TB):
   per row), linear scan, no shuffle.
 - SimHash: md5 -> 60-bit int per token stays a Catalyst expression
   (DuckDB-reproducible, oracle-checked exactly); the 60-bit majority
-  vote over those integers is one numpy matrix op per row in an
-  Arrow-vectorized UDF (bit-identical, ~2x the HOF fold's speed).
+  vote over those integers is one numpy pass per Arrow batch
+  (``simhash_vote``), which the pair search runs inside the same
+  mapInPandas kernel that emits the band keys.
 """
 
 from __future__ import annotations
@@ -42,37 +43,30 @@ logger = logging.getLogger(__name__)
 # thousands of near-empty docs sharing a signature): the pair
 # expansion is O(cap^2) per bucket and the collect_list builds one
 # giant array in a single task. Buckets above the cap are SKIPPED
-# (never truncated) and the skip is logged — set bucket_cap=None to
+# (never truncated), on both engines alike — set bucket_cap=None to
 # disable.
 DEFAULT_BUCKET_CAP = 4096
 
 
 def _drop_hot_buckets(bands: DataFrame, keys: list[str],
-                      bucket_cap: int | None, what: str) -> DataFrame:
+                      bucket_cap: int | None) -> DataFrame:
     """Remove rows belonging to band buckets with > bucket_cap
     members BEFORE the bucket collect, so the oversized array is
-    never materialized. The size pass is a map-side-partial count
-    over the (cheap, lazily re-derived) band explosion — the caller
-    checkpoints the expensive signature stage so it computes once.
-    The hot-key list is tiny, so the anti-join broadcasts. Skipped
-    buckets are logged loudly — dropped candidates are a recall
-    loss, never a silent truncation."""
+    never built.
+
+    The size is ``count(1) OVER (PARTITION BY keys)``: the window
+    needs the same ``hashpartitioning(keys)`` as the bucket
+    ``groupBy`` that follows, so both share one exchange, and a hot
+    bucket sits in Spark's spillable window buffer instead of an
+    array. No job runs at plan build, so a skipped bucket is not
+    logged; the oracles mirror the cap, and ``bucket_cap=None``
+    reports the uncapped pairs."""
     if bucket_cap is None:
         return bands
-    # lazy: materialized by the count below
-    hot = _cache.checkpoint(
-        bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap), eager=False)
-    n_hot = hot.count()
-    if n_hot:
-        worst = hot.agg(F.max("n")).collect()[0][0]
-        logger.warning(
-            "%s: skipping %d LSH bucket(s) over cap=%d (largest=%d); "
-            "pairs inside them are NOT reported", what, n_hot,
-            bucket_cap, worst)
-        return bands.join(F.broadcast(hot.select(*keys)), keys,
-                          "left_anti")
-    return bands
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (bands.withColumn("_bucket_n", n)
+            .filter(F.col("_bucket_n") <= bucket_cap)
+            .drop("_bucket_n"))
 
 # ------------------------------------------------------------------
 # exact dedup
@@ -217,22 +211,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
         F.expr(shingles_spark_inline(content_col, k)).alias("sh"))
     sig = (sh.withColumn("bh", F.expr(shingle_hashes_spark("sh")))
            .withColumn("sig", minhash_signature("bh"))
-           .select("id", "sig"))  # banding needs nothing else: keep
-    # the intermediate shingle/hash arrays out of the checkpoint
-    if bucket_cap is not None:
-        # the hot-bucket size pass re-derives the band explosion, so
-        # pin the expensive signature stage to compute exactly once
-        # (lazy: the hot-count job is its single first consumer, so
-        # materialization fuses into it — one fewer job, round 13)
-        sig = _cache.checkpoint(sig, eager=False)
+           .select("id", "sig"))
     bands = sig.select(
         "id",
         F.posexplode(
             F.expr(f"transform(sequence(0, {_N_BANDS - 1}), "
                    f"b -> concat_ws(',', sig[2*b], sig[2*b+1]))")
         ).alias("band", "band_key"))
-    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap,
-                              "minhash_lsh_pairs")
+    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap)
     buckets = (bands.groupBy("band", "band_key")
                .agg(F.array_sort(F.collect_list("id")).alias("ids"))
                .filter(F.size("ids") > 1))
@@ -455,6 +441,8 @@ def connected_components_star(pairs: DataFrame,
 _SIM_BITS = 60
 _SIM_BANDS = 4          # 15 bits each; hamming<=3 pairs always collide
 _BAND_BITS = _SIM_BITS // _SIM_BANDS
+_SIM_SHIFTS = np.arange(_SIM_BITS, dtype=np.int64)
+_BAND_SHIFTS = _BAND_BITS * np.arange(_SIM_BANDS, dtype=np.int64)
 
 
 def _tok_hashes_spark(c: str) -> str:
@@ -468,23 +456,43 @@ def _tok_hashes_duck(c: str) -> str:
             f"t -> CAST(concat('0x', substr(md5(t), 1, 15)) AS BIGINT))")
 
 
+def simhash_vote(th: pd.Series) -> np.ndarray:
+    """60-bit majority vote of each row's token hashes, for a whole
+    Arrow batch at once: bit i of row r is set iff
+    ``2 * (hashes of r with bit i set) >= len(r)``.
+
+    The batch's hash lists are flattened into one (tokens x 60) bit
+    matrix; its cumulative sum, differenced at the per-row offsets,
+    gives every row's per-bit counts in whole-batch numpy ops (only
+    the list lengths are read row by row). Matches
+    ``simhash_vote_duck`` exactly, edges included: an empty list
+    passes every vote (all-ones signature) and a NULL list passes
+    none (0, as DuckDB's NULL comparisons fall to ELSE 0)."""
+    null = np.fromiter((h is None for h in th), bool, len(th))
+    lists = [np.asarray(h, dtype="<i8") for h in th if h is not None]
+    lens = np.zeros(len(th), dtype=np.int64)
+    lens[~null] = [len(h) for h in lists]
+    offsets = np.zeros(len(th) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offsets[1:])
+    flat = np.concatenate(lists) if lists else np.empty(0, dtype="<i8")
+    # little-endian bytes -> bit i of each hash in column i
+    bits = np.unpackbits(flat.view(np.uint8).reshape(-1, 8), axis=1,
+                         bitorder="little")[:, :_SIM_BITS]
+    csum = np.zeros((len(flat) + 1, _SIM_BITS), dtype=np.int32)
+    np.cumsum(bits, axis=0, out=csum[1:])
+    ones = csum[offsets[1:]] - csum[offsets[:-1]]
+    maj = 2 * ones >= lens[:, None]
+    sig = (maj.astype(np.int64) << _SIM_SHIFTS).sum(axis=1)
+    sig[null] = 0
+    return sig
+
+
 @pandas_udf(T.LongType())
 def _simhash_from_hashes(th: pd.Series) -> pd.Series:
-    """Majority-vote fold of the 60-bit token hashes, vectorized in
-    numpy per row (guide §4.2: hand whole batches to native code).
-    Exactly mirrors the former Catalyst fold, including the empty
-    edge (0 tokens => every ``2*0 >= 0`` vote passes => all-ones
-    signature) and a NULL hash array => NULL signature."""
-    shifts = np.arange(_SIM_BITS, dtype=np.int64)
-    out: list = []
-    for hs in th:
-        if hs is None:
-            out.append(None)
-            continue
-        h = np.asarray(hs, dtype=np.int64).reshape(-1, 1)
-        maj = (2 * ((h >> shifts) & 1).sum(axis=0)) >= h.shape[0]
-        out.append(int((maj.astype(np.int64) << shifts).sum()))
-    return pd.Series(out, dtype="Int64")
+    """Row-wise SimHash column for the callers that need the
+    signature itself (bit-balance QA, streaming signature dedup):
+    the same batch vote as the ``simhash_pairs`` kernel."""
+    return pd.Series(simhash_vote(th))
 
 
 def simhash_spark(c: str) -> Column:
@@ -493,23 +501,37 @@ def simhash_spark(c: str) -> Column:
 
     The md5-derived 60-bit token hashes stay a JVM expression (so
     the oracle-exact integer construction is shared with DuckDB);
-    the 60-bit majority fold over them runs as one numpy matrix vote
-    per row inside an Arrow-vectorized UDF. History: the fold was a
-    Catalyst higher-order ``aggregate`` (itself ~60x faster than the
-    naive 60-CASE inline form), but HOF lambdas execute interpreted
-    per element — the numpy vote measured another ~2x faster at the
-    signature stage with bit-identical output (round 13, guide
-    §4.2)."""
+    the vote over them is ``simhash_vote`` on each Arrow batch,
+    inside an Arrow-vectorized UDF."""
     return _simhash_from_hashes(F.expr(_tok_hashes_spark(c)))
 
 
-def simhash_duck(c: str) -> str:
-    th = _tok_hashes_duck(c)
+def simhash_vote_duck(th: str) -> str:
+    """DuckDB twin of ``simhash_vote`` over a hash-list expression."""
     n = f"len({th})"
     return " + ".join(
         f"(CASE WHEN 2 * len(list_filter({th}, h -> (h >> {i}) & 1 = 1)) "
         f">= {n} THEN {1 << i}::BIGINT ELSE 0 END)"
         for i in range(_SIM_BITS))
+
+
+def simhash_duck(c: str) -> str:
+    return simhash_vote_duck(_tok_hashes_duck(c))
+
+
+def _simhash_bands(batches):
+    """mapInPandas kernel: (id, th) -> (id, sig, band, band_key),
+    one row per document and band, from one batch vote."""
+    for pdf in batches:
+        sig = simhash_vote(pdf["th"])
+        yield pd.DataFrame({
+            "id": np.repeat(pdf["id"].to_numpy(), _SIM_BANDS),
+            "sig": np.repeat(sig, _SIM_BANDS),
+            "band": np.tile(np.arange(_SIM_BANDS, dtype=np.int32),
+                            len(pdf)),
+            "band_key": ((sig[:, None] >> _BAND_SHIFTS)
+                         & ((1 << _BAND_BITS) - 1)).ravel(),
+        })
 
 
 def simhash_pairs(df: DataFrame, id_col: str, content_col: str,
@@ -520,28 +542,25 @@ def simhash_pairs(df: DataFrame, id_col: str, content_col: str,
     banding the 60-bit signature into 4 x 15-bit keys (pigeonhole:
     any pair within hamming 3 shares at least one band).
 
-    Same bucket-collect shape as minhash_lsh_pairs — a band self-join
-    would re-evaluate the (expensive) signature expression for the
-    second side and re-scan the corpus; instead signatures are
-    computed once, buckets collect (id, sig) structs, and pairs
-    expand inside each bucket."""
-    sig = widen_if_narrow(df).select(
-        F.col(id_col).alias("id"),
-        simhash_spark(content_col).alias("sig"))
-    if bucket_cap is not None:
-        # pin the (expensive) signature expression to one computation;
-        # the hot-bucket size pass re-derives only the cheap explode
-        # (lazy: fuses into the hot-count job, round 13)
-        sig = _cache.checkpoint(sig, eager=False)
-    mask = (1 << _BAND_BITS) - 1
-    bands = sig.select(
-        "id", "sig",
-        F.posexplode(F.expr(
-            f"transform(sequence(0, {_SIM_BANDS - 1}), "
-            f"b -> (sig div cast(pow(2, {_BAND_BITS} * b) as bigint)) "
-            f"% {mask + 1})")).alias("band", "band_key"))
-    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap,
-                              "simhash_pairs")
+    One lazy plan: scan -> JVM token hashes -> ONE ``mapInPandas``
+    kernel (``_simhash_bands``: batch vote plus the 4 band rows per
+    document) -> ONE exchange on (band, band_key), shared by the
+    hot-bucket window and the bucket collect -> pair expansion
+    inside each bucket -> distinct. Building it runs no job. A band
+    self-join would re-evaluate the signature for the second side;
+    buckets collect (id, sig) structs instead.
+
+    The input is NOT widened (``widen_if_narrow``): the per-row work
+    is a few numpy ops, so a one-split input is cheaper in one
+    Python worker than round-robined to every core."""
+    th = df.select(F.col(id_col).alias("id"),
+                   F.expr(_tok_hashes_spark(content_col)).alias("th"))
+    bands = th.mapInPandas(_simhash_bands, T.StructType([
+        T.StructField("id", th.schema["id"].dataType),
+        T.StructField("sig", T.LongType()),
+        T.StructField("band", T.IntegerType()),
+        T.StructField("band_key", T.LongType())]))
+    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap)
     buckets = (bands.groupBy("band", "band_key")
                .agg(F.array_sort(F.collect_list(F.struct("id", "sig")))
                     .alias("xs"))
@@ -624,17 +643,13 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
     sig = (sh.withColumn("bh", F.expr(shingle_hashes_spark("sh")))
            .withColumn("sig", minhash_signature("bh"))
            .select("id", "side", "sig"))
-    if bucket_cap is not None:
-        # lazy: fuses into the hot-count job (round 13)
-        sig = _cache.checkpoint(sig, eager=False)
     bands = sig.select(
         "id", "side",
         F.posexplode(
             F.expr(f"transform(sequence(0, {_N_BANDS - 1}), "
                    f"b -> concat_ws(',', sig[2*b], sig[2*b+1]))")
         ).alias("band", "band_key"))
-    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap,
-                              "minhash_lsh_pairs_cross")
+    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap)
     buckets = (bands.groupBy("band", "band_key")
                .agg(F.array_sort(F.collect_list(
                         F.when(F.col("side") == 0, F.col("id"))))

@@ -14,6 +14,13 @@ def widen_if_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     whole pipeline behind a single task; at real scale the scan
     already has >= cluster-parallelism splits and this is a no-op —
     so the shuffle this inserts only ever moves tiny inputs.
+
+    It pays only for heavy per-row work. MinHash signatures (128
+    permutations per shingle) at sf0.1 ran in about 5.8 s with it
+    and about 15 s without; the SimHash kernel (a few numpy ops per
+    document) spent more on the round-robin shuffle and the extra
+    Python workers than it saved, so ``simhash_pairs`` does not call
+    this.
     """
     spark = df.sparkSession
     target = min_parts or spark.sparkContext.defaultParallelism

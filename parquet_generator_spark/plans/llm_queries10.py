@@ -182,8 +182,8 @@ def simhash_bit_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature-health QA: the set-rate of each of the 60 SimHash
     bits across the corpus — a healthy hash sits near 0.5 everywhere;
     a skewed bit weakens the hamming-band guarantee. One signature
-    pass (the same pure-Catalyst simhash the dedup path uses) + a
-    map-side bit explode; output is 60 bounded rows with an
+    pass (the same batch vote, ``simhash_vote``, the dedup path
+    uses) + a map-side bit explode; output is 60 bounded rows with an
     in-balance boolean so the gate pins health, not noise."""
     docs = load_table(spark, "documents", sf_dir)
     sig = docs.select(dedup.simhash_spark("text").alias("sig"))

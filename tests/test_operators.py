@@ -4,6 +4,7 @@ behavior."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -312,6 +313,38 @@ def test_lsh_bucket_cap_skips_hot_bucket(spark):
                                      bucket_cap=10)
     sgot = {(r["id_a"], r["id_b"]) for r in sim_capped.collect()}
     assert not any(a < 100 and b < 100 for a, b in sgot)
+
+
+_DEGENERATE_DOCS = {
+    "zero_rows": [],
+    "all_null_text": [(i, None) for i in range(4)],
+    "all_empty_text": [(i, "") for i in range(4)],
+    "one_row": [(7, "a single short document about spark")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DEGENERATE_DOCS))
+@pytest.mark.parametrize("op", ["simhash", "minhash"])
+def test_near_dup_degenerate_inputs_match_oracle(spark, op, case):
+    """Both LSH pipelines are total on degenerate corpora and give
+    exactly their DuckDB oracle's pairs over the same rows: an empty
+    batch must come back as a correctly typed empty frame, and NULL
+    or empty text must vote like the oracle does."""
+    rows = _DEGENERATE_DOCS[case]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    if op == "simhash":
+        got = dedup.simhash_pairs(df, "doc_id", "text", 3)
+        sql = dedup.simhash_pairs_duck_sql("documents", "doc_id", "text", 3)
+    else:
+        got = dedup.minhash_lsh_pairs(df, "doc_id", "text", 0.5)
+        sql = dedup.minhash_lsh_pairs_duck_sql(
+            "documents", "doc_id", "text", 0.5)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    if rows:
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    assert sorted(tuple(r) for r in got.collect()) \
+        == sorted(con.sql(sql).fetchall())
 
 
 def test_star_cc_matches_min_label_on_real_pairs(spark):

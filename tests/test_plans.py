@@ -692,6 +692,35 @@ def test_bpe_training_is_one_vocabulary_collect(spark):
     assert cache.tracked_count() == before
 
 
+def test_dedup_simhash_is_one_lazy_plan(spark):
+    """Building dedup_simhash fires no job and registers no
+    checkpoint: the hot-bucket cap is a window inside the bucket
+    exchange, not an eager size pass. The executed plan computes the
+    signature and band keys in ONE mapInPandas kernel, with no
+    scalar-UDF node, no broadcast and no anti-join."""
+    from parquet_generator_spark.operators import cache
+
+    sc = spark.sparkContext
+    group = "simhash_build_jobs"
+    before = cache.tracked_count()
+    sc.setJobGroup(group, group)
+    try:
+        df = entrymod.queries()["dedup_simhash"](spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert cache.tracked_count() == before
+    df.collect()
+    plan = (df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan
+    assert "BroadcastExchange" not in plan
+    assert "LeftAnti" not in plan
+    # the cap window and the bucket collect share one band exchange
+    assert len(re.findall(r"Exchange hashpartitioning\(band", plan)) == 1
+
+
 def test_jpeg_decode_stats_is_one_narrow_pandas_map(spark):
     """The decode is ONE mapInPandas over the filtered scan: no
     shuffle before the pandas node (Exchange only for the final
