@@ -18,12 +18,16 @@ module keeps the whole thing plan-time + codegen:
 
 Stemmers: Harman's S-stemmer ("How Effective Is Suffixing?", JASIS
 1991) — the three plural rules with the published exception lists,
-one CASE expression in both engines — and the full Porter 1980
-algorithm (operators/porter.py, the ES ``porter_stem`` filter),
-selected per analyzer via ``stemmer="s"|"porter"``. ``english``
-keeps the S-stemmer (cheap, stable); ``english_porter`` is the
-ES-fidelity chain (stop + Porter) for the verb-form/derivational
-vocabulary the S-stemmer misses (running->run, relational->relat).
+one CASE expression in both engines — plus the full stemmers of the
+``_STEMMERS`` table: Porter 1980 (operators/porter.py, the ES
+``porter_stem`` filter) and 14 snowball languages
+(operators/snowball_*.py), all rendered through the dialect kit in
+operators/stem_sql.py. An analyzer picks one with
+``stemmer="s"|<table kind>``; any other name is a ValueError.
+``english`` keeps the S-stemmer (cheap, stable); ``english_porter``
+is the ES-fidelity chain (stop + Porter) for the verb-form/
+derivational vocabulary the S-stemmer misses (running->run,
+relational->relat).
 
 Stopword list: Lucene's EnglishAnalyzer default stop set (public,
 org.apache.lucene.analysis.en.EnglishAnalyzer#ENGLISH_STOP_WORDS_SET).
@@ -31,16 +35,12 @@ org.apache.lucene.analysis.en.EnglishAnalyzer#ENGLISH_STOP_WORDS_SET).
 
 from __future__ import annotations
 
+import importlib
 import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from parquet_generator_spark.operators.porter import (
-    porter_stem,
-    porter_stem_sql,
-)
 
 # Lucene EnglishAnalyzer default stop words (public constant)
 LUCENE_ENGLISH_STOPWORDS = frozenset("""
@@ -110,80 +110,42 @@ def s_stem_sql(ref: str) -> str:
         f"ELSE {ref} END")
 
 
+# The full stemmers, one row each: kind -> (module under operators/
+# defining f"{kind}_stem" and f"{kind}_stem_sql", prefix-guard probe).
+# Each renders an expression expensive enough that the match renderer
+# binds ONE stemmed array per document. The probe is the token
+# expression whose first two chars every >= 3-char stem keeps (None =
+# no sound guard; see _prefix_guarded_stem). The S-stemmer ("s") is
+# the cheap CASE above and stays outside the table.
+_STEMMERS = {
+    "porter": ("porter", "{}"),
+    "german": ("snowball_de", None),
+    "french": ("snowball_fr", None),
+    "spanish": ("snowball_es", None),
+    "italian": ("snowball_it", "translate({}, 'áéíóú', 'àèìòù')"),
+    "portuguese": ("snowball_pt", "{}"),
+    "dutch": ("snowball_nl", None),
+    "romanian": ("snowball_ro", "{}"),
+    "russian": ("snowball_ru", "replace({}, 'ё', 'е')"),
+    "finnish": ("snowball_fi", None),
+    "hungarian": ("snowball_hu", None),
+    "arabic": ("snowball_ar", None),
+    "swedish": ("snowball_scand", "{}"),
+    "danish": ("snowball_scand", "{}"),
+    "norwegian": ("snowball_scand", "{}"),
+}
+
+
+def _stemmer(kind: str, suffix: str):
+    """The ``{kind}_stem{suffix}`` function of a table stemmer."""
+    mod = importlib.import_module(f"{__package__}.{_STEMMERS[kind][0]}")
+    return getattr(mod, f"{kind}_stem{suffix}")
+
+
 def _stem_py(kind, w: str) -> str:
     if kind is None:
         return w
-    if kind == "porter":
-        return porter_stem(w)
-    if kind == "german":
-        from parquet_generator_spark.operators.snowball_de import (
-            german_stem,
-        )
-        return german_stem(w)
-    if kind == "french":
-        from parquet_generator_spark.operators.snowball_fr import (
-            french_stem,
-        )
-        return french_stem(w)
-    if kind == "spanish":
-        from parquet_generator_spark.operators.snowball_es import (
-            spanish_stem,
-        )
-        return spanish_stem(w)
-    if kind == "italian":
-        from parquet_generator_spark.operators.snowball_it import (
-            italian_stem,
-        )
-        return italian_stem(w)
-    if kind == "portuguese":
-        from parquet_generator_spark.operators.snowball_pt import (
-            portuguese_stem,
-        )
-        return portuguese_stem(w)
-    if kind == "dutch":
-        from parquet_generator_spark.operators.snowball_nl import (
-            dutch_stem,
-        )
-        return dutch_stem(w)
-    if kind == "romanian":
-        from parquet_generator_spark.operators.snowball_ro import (
-            romanian_stem,
-        )
-        return romanian_stem(w)
-    if kind == "russian":
-        from parquet_generator_spark.operators.snowball_ru import (
-            russian_stem,
-        )
-        return russian_stem(w)
-    if kind == "finnish":
-        from parquet_generator_spark.operators.snowball_fi import (
-            finnish_stem,
-        )
-        return finnish_stem(w)
-    if kind == "hungarian":
-        from parquet_generator_spark.operators.snowball_hu import (
-            hungarian_stem,
-        )
-        return hungarian_stem(w)
-    if kind == "arabic":
-        from parquet_generator_spark.operators.snowball_ar import (
-            arabic_stem,
-        )
-        return arabic_stem(w)
-    if kind in ("swedish", "danish", "norwegian"):
-        from parquet_generator_spark.operators import snowball_scand
-        return getattr(snowball_scand, f"{kind}_stem")(w)
-    return s_stem(w)
-
-
-# stemmers whose SQL expression is expensive enough that the match
-# renderer binds ONE stemmed array per document instead of stemming
-# per query group
-_EXPENSIVE_STEMMERS = ("porter", "german", "french", "spanish",
-                       "italian", "portuguese", "swedish",
-                       "danish", "norwegian", "dutch",
-                       "romanian", "russian", "finnish",
-                       "hungarian", "arabic")
+    return s_stem(w) if kind == "s" else _stemmer(kind, "")(w)
 
 
 def _stem_expr(kind, ref: str, engine: str) -> str:
@@ -192,68 +154,9 @@ def _stem_expr(kind, ref: str, engine: str) -> str:
     the full stemmers need per-engine binding syntax)."""
     if kind is None:
         return ref
-    if kind == "porter":
-        return porter_stem_sql(ref, engine)
-    if kind == "german":
-        from parquet_generator_spark.operators.snowball_de import (
-            german_stem_sql,
-        )
-        return german_stem_sql(ref, engine)
-    if kind == "french":
-        from parquet_generator_spark.operators.snowball_fr import (
-            french_stem_sql,
-        )
-        return french_stem_sql(ref, engine)
-    if kind == "spanish":
-        from parquet_generator_spark.operators.snowball_es import (
-            spanish_stem_sql,
-        )
-        return spanish_stem_sql(ref, engine)
-    if kind == "italian":
-        from parquet_generator_spark.operators.snowball_it import (
-            italian_stem_sql,
-        )
-        return italian_stem_sql(ref, engine)
-    if kind == "portuguese":
-        from parquet_generator_spark.operators.snowball_pt import (
-            portuguese_stem_sql,
-        )
-        return portuguese_stem_sql(ref, engine)
-    if kind == "dutch":
-        from parquet_generator_spark.operators.snowball_nl import (
-            dutch_stem_sql,
-        )
-        return dutch_stem_sql(ref, engine)
-    if kind == "romanian":
-        from parquet_generator_spark.operators.snowball_ro import (
-            romanian_stem_sql,
-        )
-        return romanian_stem_sql(ref, engine)
-    if kind == "russian":
-        from parquet_generator_spark.operators.snowball_ru import (
-            russian_stem_sql,
-        )
-        return russian_stem_sql(ref, engine)
-    if kind == "finnish":
-        from parquet_generator_spark.operators.snowball_fi import (
-            finnish_stem_sql,
-        )
-        return finnish_stem_sql(ref, engine)
-    if kind == "hungarian":
-        from parquet_generator_spark.operators.snowball_hu import (
-            hungarian_stem_sql,
-        )
-        return hungarian_stem_sql(ref, engine)
-    if kind == "arabic":
-        from parquet_generator_spark.operators.snowball_ar import (
-            arabic_stem_sql,
-        )
-        return arabic_stem_sql(ref, engine)
-    if kind in ("swedish", "danish", "norwegian"):
-        from parquet_generator_spark.operators import snowball_scand
-        return getattr(snowball_scand,
-                       f"{kind}_stem_sql")(ref, engine)
-    return s_stem_sql(ref)
+    if kind == "s":
+        return s_stem_sql(ref)
+    return _stemmer(kind, "_sql")(ref, engine)
 
 
 @dataclass(frozen=True)
@@ -264,8 +167,14 @@ class Analyzer:
     stopwords: frozenset = frozenset()
     synonyms: dict = field(default_factory=dict)  # token -> [token...]
     stem: bool = False
-    stemmer: str = "s"  # s | porter | german | french | spanish
+    stemmer: str = "s"  # "s" or a _STEMMERS kind
     charset: str = _CHARSET  # token alphabet (regex class body)
+
+    def __post_init__(self):
+        if self.stemmer not in ("s", *_STEMMERS):
+            raise ValueError(
+                f"analyzer {self.name!r}: unknown stemmer "
+                f"{self.stemmer!r}; known: {['s', *_STEMMERS]}")
 
     @property
     def stem_kind(self):
@@ -634,22 +543,15 @@ def _prefix_guarded_stem(kind, ref: str, engine: str,
     Falls back to unconditional stemming when any group stem is
     shorter than 3 chars (the invariants don't cover those)."""
     stem = _stem_expr(kind, ref, engine)
-    if kind not in ("porter", "italian", "portuguese", "swedish",
-                    "danish", "norwegian", "romanian", "russian"):
+    probe = _STEMMERS[kind][1] if kind in _STEMMERS else None
+    if probe is None:
         return stem
     stems = [g for grp in groups for g in grp]
     if not stems or any(len(g) < 3 for g in stems):
         return stem
     lits = ", ".join(_quote(g[:2]) for g in sorted({g[:2]
                                                     for g in stems}))
-    probe = ref
-    if kind == "italian":
-        probe = f"translate({ref}, 'áéíóú', 'àèìòù')"
-    elif kind == "russian":
-        # the only body rewrite is the ё->е prelude — fold the
-        # compared prefix the same way (group stems are post-fold)
-        probe = f"replace({ref}, 'ё', 'е')"
-    return (f"CASE WHEN substr({probe}, 1, 2) IN ({lits}) "
+    return (f"CASE WHEN substr({probe.format(ref)}, 1, 2) IN ({lits}) "
             f"THEN {stem} ELSE {ref} END")
 
 
@@ -694,7 +596,7 @@ def analyzed_match(col: str, query: str, analyzer: Analyzer,
     if (minimum_should_match is not None
             and int(minimum_should_match) > len(groups)):
         return F.lit(False)
-    if analyzer.stem_kind in _EXPENSIVE_STEMMERS:
+    if analyzer.stem_kind in _STEMMERS:
         # stem once per document, not once per group (the full
         # stemmer expressions are ~100x the S-stemmer's CASE)
         return F.expr(_stemmed_match_sql(
@@ -736,7 +638,7 @@ def analyzed_match_duck_sql(col: str, query: str, analyzer: Analyzer,
     if (minimum_should_match is not None
             and int(minimum_should_match) > len(groups)):
         return "FALSE"
-    if analyzer.stem_kind in _EXPENSIVE_STEMMERS:
+    if analyzer.stem_kind in _STEMMERS:
         return _stemmed_match_sql(
             col, groups, analyzer.stem_kind, "duck", operator,
             minimum_should_match, analyzer.sep)

@@ -39,6 +39,14 @@ tests/test_porter.py (paper vectors + Hypothesis).
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    Frag,
+    chain,
+    let,
+    quote_list,
+    struct,
+)
+
 # vowels -> a; everything else except y -> b; then resolve y
 # (consonant at word start, vowel after consonant, consonant after
 # vowel) with three alternating replace passes. Implemented with
@@ -204,44 +212,11 @@ def _cv_sql(engine: str, ref: str) -> str:
     return s
 
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-def _st(engine: str, w: str, c: str) -> str:
-    if engine == "spark":
-        return f"named_struct('w', {w}, 'c', {c})"
-    return f"struct_pack(w := {w}, c := {c})"
-
-
-def _quote_list(items) -> str:
-    return ", ".join(f"'{i}'" for i in items)
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, c) struct variable."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.c = f"{x}.w", f"{x}.c"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, app: str = "") -> str:
-        """Struct after dropping n chars and appending ``app``."""
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        c = f"substr({self.c}, 1, {self.ln} - {n})"
-        if app:
-            w, c = f"{w} || '{app}'", f"{c} || '{_cvof(app)}'"
-        return _st(self.engine, w, c)
-
-    def keep(self) -> str:
-        return _st(self.engine, self.w, self.c)
+    FIELDS = ("w", "c")
+    cv = staticmethod(_cvof)
 
     def stem_cv(self, n: int) -> str:
         """Skeleton of the word minus its last n chars."""
@@ -270,7 +245,7 @@ class _Frag:
         return (f"({self.ln} - {n} >= 3 AND "
                 f"substr({self.c}, {self.ln} - {n} - 2, 3) = 'bab' "
                 f"AND substr({self.w}, {self.ln} - {n}, 1) NOT IN "
-                f"({_quote_list('wxy')}))")
+                f"({quote_list('wxy')}))")
 
 
 def porter_stem_sql(ref: str, engine: str) -> str:
@@ -282,9 +257,6 @@ def porter_stem_sql(ref: str, engine: str) -> str:
     shrink the expression and sent DuckDB's binder into the weeds —
     nesting DEPTH, not text size, is the hazard; this shape keeps
     depth at one binding per step.)"""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     def s1a(x: _Frag) -> str:
         return (f"CASE WHEN {x.ends('sses')} THEN {x.cut(2)} "
                 f"WHEN {x.ends('ies')} THEN {x.cut(2)} "
@@ -308,9 +280,9 @@ def porter_stem_sql(ref: str, engine: str) -> str:
 
         def post(r: _Frag) -> str:
             at_bl_iz = (f"right({r.w}, 2) IN "
-                        f"({_quote_list(['at', 'bl', 'iz'])})")
+                        f"({quote_list(['at', 'bl', 'iz'])})")
             dbl = (f"({r.doublec()} AND right({r.w}, 1) NOT IN "
-                   f"({_quote_list('lsz')}))")
+                   f"({quote_list('lsz')}))")
             m_eq1 = f"({r.m_gt0(0)} AND NOT {r.m_gt1(0)})"
             return (f"CASE WHEN NOT {did_post} THEN {r.keep()} "
                     f"WHEN {at_bl_iz} THEN {r.cut(0, 'e')} "
@@ -320,7 +292,7 @@ def porter_stem_sql(ref: str, engine: str) -> str:
                     f"ELSE {r.keep()} END")
 
         rv = f"{x.x}r"
-        return _let(x.engine, removed, rv, post(_Frag(x.engine, rv)))
+        return let(x.engine, removed, rv, post(_Frag(x.engine, rv)))
 
     def s1c(x: _Frag) -> str:
         return (f"CASE WHEN {x.ends('y')} AND {x.has_vowel(1)} "
@@ -349,7 +321,7 @@ def porter_stem_sql(ref: str, engine: str) -> str:
             cond = x.ends(suf)
             if suf == "ion":
                 cond += (f" AND substr({x.w}, {x.ln} - 3, 1) IN "
-                         f"({_quote_list('st')})")
+                         f"({quote_list('st')})")
             whens.append(
                 f"WHEN {cond} THEN "
                 f"(CASE WHEN {x.m_gt1(n)} THEN {x.cut(n)} "
@@ -367,13 +339,9 @@ def porter_stem_sql(ref: str, engine: str) -> str:
                 f"AND {x.m_gt1(0)} THEN {x.cut(1)} "
                 f"ELSE {x.keep()} END")
 
-    steps = [s1a, s1b, s1c, s2, s3, s4, s5a, s5b]
     # innermost-out let chain: x0 = (ref, cv(ref)); xi+1 = step(xi)
-    body = "x8.w"
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    seed = _st(engine, ref, _cv_sql(engine, ref))
-    pipeline = _let(engine, seed, "x0", body)
+    seed = struct(engine, w=ref, c=_cv_sql(engine, ref))
+    pipeline = chain(engine, _Frag, seed,
+                     [s1a, s1b, s1c, s2, s3, s4, s5a, s5b], "x8.w")
     return (f"CASE WHEN length({ref}) <= 2 THEN {ref} "
             f"ELSE {pipeline} END")

@@ -22,11 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def _as_double(c) -> Column:
-    return F.expr(f"transform({c}, x -> cast(x AS DOUBLE))") \
-        if isinstance(c, str) else c
-
-
 def dot(a: str, b: str) -> Column:
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS DOUBLE) * y), "

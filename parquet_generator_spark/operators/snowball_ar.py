@@ -63,6 +63,8 @@ analyzers at write time (reference EsParquetWriter.java:69);
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import let, quote_list
+
 A = "ا"      # ا
 HAMZA = "ء"  # ء
 AHA = "أ"    # أ
@@ -285,17 +287,6 @@ def arabic_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-def _ql(items) -> str:
-    return ", ".join(f"'{i}'" for i in items)
-
-
 def _strip_sql(w: str, table) -> str:
     """Longest-match-commit among as a CASE; keeps ``w`` on a
     failed length condition (the no-fallback semantics)."""
@@ -308,7 +299,7 @@ def _strip_sql(w: str, table) -> str:
         for nd in needs:
             sufs = [s for s, n in by_len[ln] if n == nd]
             whens.append(
-                f"WHEN right({w}, {ln}) IN ({_ql(sufs)}) THEN "
+                f"WHEN right({w}, {ln}) IN ({quote_list(sufs)}) THEN "
                 f"CASE WHEN length({w}) >= {nd} THEN "
                 f"substr({w}, 1, length({w}) - {ln}) "
                 f"ELSE {w} END")
@@ -333,9 +324,6 @@ def arabic_stem_sql(ref: str, engine: str) -> str:
     for ``engine`` in {'spark', 'duck'}: the defined flag binds
     once from the RAW token, normalization and the suffix/prefix
     phases thread through nested lambda lets."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     # normalize_pre: ligature replaces, then one translate for the
     # 1:1 folds + harakat/tatweel deletion
     pre = "g0"
@@ -354,19 +342,19 @@ def arabic_stem_sql(ref: str, engine: str) -> str:
     v1_stage = lambda x: _strip_sql(x, _V1)          # noqa: E731
     body_v = f"v{_V1_ROUNDS}"
     for i in range(_V1_ROUNDS - 1, -1, -1):
-        body_v = _let(engine, v1_stage(f"v{i}"), f"v{i + 1}",
-                      body_v)
+        body_v = let(engine, v1_stage(f"v{i}"), f"v{i + 1}",
+                     body_v)
     # after-step1 combination (va): 2a else 2c on u0 (= post-step1)
-    va = _let(engine, _strip_sql("u0", _V2A), "a0",
-              f"CASE WHEN a0 <> u0 THEN a0 ELSE "
-              + _strip_sql("u0", _V2C) + " END")
+    va = let(engine, _strip_sql("u0", _V2A), "a0",
+             f"CASE WHEN a0 <> u0 THEN a0 ELSE "
+             + _strip_sql("u0", _V2C) + " END")
     # no-step1 combination (vb): 2b else 2a on w0
-    vb = _let(engine, _strip_sql("w0", _V2B), "b0",
-              f"CASE WHEN b0 <> w0 THEN b0 ELSE "
-              + _strip_sql("w0", _V2A) + " END")
+    vb = let(engine, _strip_sql("w0", _V2B), "b0",
+             f"CASE WHEN b0 <> w0 THEN b0 ELSE "
+             + _strip_sql("w0", _V2A) + " END")
     # verb result = struct-free: bind u0 = unrolled step1 output
-    verb = _let(
-        engine, _let(engine, "w0", "v0", body_v), "u0",
+    verb = let(
+        engine, let(engine, "w0", "v0", body_v), "u0",
         f"CASE WHEN d = 1 THEN w0 "
         f"WHEN u0 <> w0 THEN {va} ELSE {vb} END")
 
@@ -378,14 +366,14 @@ def arabic_stem_sql(ref: str, engine: str) -> str:
         f"CASE WHEN right(s0, 1) = '{TM}' AND length(s0) >= 4 "
         f"THEN substr(s0, 1, length(s0) - 1) "
         # 1a (undefined) then 2a/2b/2c1
-        f"ELSE " + _let(
+        f"ELSE " + let(
             engine,
             f"CASE WHEN d = 0 THEN {n1a} ELSE s0 END", "q0",
             "CASE WHEN q0 <> s0 THEN " + _post23_sql("q0") + " "
             # 1b: noon
             f"WHEN right(s0, 1) = '{N}' AND length(s0) > 5 THEN "
-            + _let(engine, "substr(s0, 1, length(s0) - 1)", "q1",
-                   _post23_sql("q1")) + " "
+            + let(engine, "substr(s0, 1, length(s0) - 1)", "q1",
+                  _post23_sql("q1")) + " "
             # bare 2a (undefined)
             f"WHEN d = 0 AND right(s0, 1) IN ('{A}', '{YEH}', "
             f"'{WAW}') AND length(s0) > 4 THEN "
@@ -395,20 +383,20 @@ def arabic_stem_sql(ref: str, engine: str) -> str:
             f"THEN substr(s0, 1, length(s0) - 2) "
             f"ELSE s0 END") + " END")
     # step3 else maqsura
-    noun_final = _let(
+    noun_final = let(
         engine, noun, "t0",
         f"CASE WHEN right(t0, 1) = '{YEH}' AND length(t0) >= 3 "
         f"THEN substr(t0, 1, length(t0) - 1) "
         f"WHEN right(t0, 1) = '{AMQ}' THEN "
         f"substr(t0, 1, length(t0) - 1) || '{YEH}' ELSE t0 END")
-    suffixed = _let(
+    suffixed = let(
         engine, verb, "s0",
         f"CASE WHEN s0 <> w0 THEN s0 ELSE {noun_final} END")
 
     # ---- prefixes (cursor-sequential: p in {'', aha}) ----
     pairs = (AHA + AHA, AHA + A, AHA + AMD, AHA + WHZ, AHA + AHB)
     pm = (f"CASE WHEN length(x0) > 3 AND left(x0, 2) IN "
-          f"({_ql(pairs)}) THEN 1 ELSE 0 END")
+          f"({quote_list(pairs)}) THEN 1 ELSE 0 END")
     t0 = "CASE WHEN pm = 1 THEN substr(x0, 3) ELSE x0 END"
     # step2 on y0 (tail), total length = length(y0) + pm
     step2 = (f"CASE WHEN length(y0) + pm > 3 AND left(y0, 1) IN "
@@ -426,7 +414,7 @@ def arabic_stem_sql(ref: str, engine: str) -> str:
     verb_pre = (
         f"CASE WHEN length(z0) + pm > 4 AND left(z0, 2) IN "
         f"('{S}{YEH}', '{S}{T}', '{S}{N}', '{S}{AHA}') THEN "
-        + _let(engine, "substr(z0, 2)", "r0", st4_after) + " "
+        + let(engine, "substr(z0, 2)", "r0", st4_after) + " "
         f"WHEN length(z0) + pm > 4 AND left(z0, 3) IN ({ist}) "
         f"THEN '{A}{S}{T}' || substr(z0, 4) ELSE z0 END")
     step3 = (
@@ -442,30 +430,30 @@ def arabic_stem_sql(ref: str, engine: str) -> str:
         f"left(z0, 1) = '{B}' AND substr(z0, 2, 1) <> '{A}' "
         f"THEN substr(z0, 2) "
         f"WHEN d = 0 THEN {verb_pre} ELSE z0 END")
-    prefixed = _let(
+    prefixed = let(
         engine, t0, "y0",
-        _let(engine, step2, "z0",
-             _let(engine, step3, "z1",
-                  f"CASE WHEN pm = 1 THEN '{AHA}' || z1 "
-                  f"ELSE z1 END")))
+        let(engine, step2, "z0",
+            let(engine, step3, "z1",
+                f"CASE WHEN pm = 1 THEN '{AHA}' || z1 "
+                f"ELSE z1 END")))
 
     # ---- normalize_post + empty guard ----
     post = (f"CASE WHEN right(f0, 1) IN ('{AHA}', '{AHB}', "
             f"'{AMD}', '{WHZ}', '{YHZ}') THEN "
             f"substr(f0, 1, length(f0) - 1) || '{HAMZA}' "
             f"ELSE f0 END")
-    post = _let(engine, post, "f1",
-                f"translate(f1, '{AHA}{AHB}{AMD}{WHZ}{YHZ}', "
-                f"'{A}{A}{A}{WAW}{YEH}')")
-    final = _let(engine, post,
-                 "f2", "CASE WHEN f2 = '' THEN g0 ELSE f2 END")
+    post = let(engine, post, "f1",
+               f"translate(f1, '{AHA}{AHB}{AMD}{WHZ}{YHZ}', "
+               f"'{A}{A}{A}{WAW}{YEH}')")
+    final = let(engine, post,
+                "f2", "CASE WHEN f2 = '' THEN g0 ELSE f2 END")
 
     # assemble inside-out:
     # g0 (raw) -> d -> w0 (normalized) -> x0 (suffixed) -> pm ->
     # y0 (step1 tail) -> z0 (step2) -> z1 (step3) -> f0 -> final
-    body = _let(engine, prefixed, "f0", final)
-    body = _let(engine, pm, "pm", body)
-    body = _let(engine, suffixed, "x0", body)
-    body = _let(engine, pre, "w0", body)
-    body = _let(engine, dflag, "d", body)
-    return _let(engine, ref, "g0", body)
+    body = let(engine, prefixed, "f0", final)
+    body = let(engine, pm, "pm", body)
+    body = let(engine, suffixed, "x0", body)
+    body = let(engine, pre, "w0", body)
+    body = let(engine, dflag, "d", body)
+    return let(engine, ref, "g0", body)

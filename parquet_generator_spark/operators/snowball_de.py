@@ -42,6 +42,14 @@ DuckDB; parity is pinned three ways in tests/test_snowball_de.py
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    Frag,
+    chain,
+    let,
+    quote_list,
+    struct,
+)
+
 _TRUE_VOWELS = "aeioäöü"   # u/y handled by the marking pass
 _S_ENDING = "bdfghklmnrt"
 _ST_ENDING = "bdfghklmnt"
@@ -157,50 +165,10 @@ def _skeleton_sql(ref: str) -> str:
     return f"translate({s}, 'u', 'a')"
 
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-def _st(engine: str, w: str, r1: str, r2: str) -> str:
-    if engine == "spark":
-        return f"named_struct('w', {w}, 'r1', {r1}, 'r2', {r2})"
-    return f"struct_pack(w := {w}, r1 := {r1}, r2 := {r2})"
-
-
-def _quote_list(items) -> str:
-    return ", ".join(f"'{i}'" for i in items)
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, r1, r2) struct variable."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.r1, self.r2 = f"{x}.w", f"{x}.r1", f"{x}.r2"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int):
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        return _st(self.engine, w, self.r1, self.r2)
-
-    def keep(self) -> str:
-        return _st(self.engine, self.w, self.r1, self.r2)
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
-
-    def char_back(self, k: int) -> str:
-        """1-char slice k positions before the end (k=1 -> last)."""
-        return f"substr({self.w}, {self.ln} - {k - 1}, 1)"
+    FIELDS = ("w", "r1", "r2")
 
 
 def german_stem_sql(ref: str, engine: str) -> str:
@@ -208,8 +176,6 @@ def german_stem_sql(ref: str, engine: str) -> str:
     ``ref`` for ``engine`` in {'spark', 'duck'} — three let-bound
     steps over a carried (w, r1, r2) struct (the porter.py depth
     posture: one binding per step keeps DuckDB's binder happy)."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
 
     def s1(x: _Frag) -> str:
         niss = []
@@ -220,7 +186,7 @@ def german_stem_sql(ref: str, engine: str) -> str:
                 f"THEN {x.cut(len(suf) + 1)} "
                 f"ELSE {x.cut(len(suf))} END)")
         s_arm = (f"WHEN {x.ends('s')} AND {x.in_r1(1)} AND "
-                 f"{x.char_back(2)} IN ({_quote_list(_S_ENDING)}) "
+                 f"{x.prev_char(1)} IN ({quote_list(_S_ENDING)}) "
                  f"THEN {x.cut(1)}")
         return (f"CASE "
                 f"WHEN {x.ends('ern')} AND {x.in_r1(3)} "
@@ -234,8 +200,8 @@ def german_stem_sql(ref: str, engine: str) -> str:
 
     def s2(x: _Frag) -> str:
         st_arm = (f"WHEN {x.ends('st')} AND {x.in_r1(2)} AND "
-                  f"{x.ln} >= 6 AND {x.char_back(3)} IN "
-                  f"({_quote_list(_ST_ENDING)}) THEN {x.cut(2)}")
+                  f"{x.ln} >= 6 AND {x.prev_char(2)} IN "
+                  f"({quote_list(_ST_ENDING)}) THEN {x.cut(2)}")
         return (f"CASE "
                 f"WHEN {x.ends('est')} AND {x.in_r1(3)} "
                 f"THEN {x.cut(3)} "
@@ -272,40 +238,32 @@ def german_stem_sql(ref: str, engine: str) -> str:
                 f"WHEN {x.ends(suf)} AND {x.in_r2(3)} THEN "
                 f"(CASE WHEN {x.ends('ig' + suf)} AND "
                 f"{x.in_r2(len(suf) + 2)} AND "
-                f"{x.char_back(len(suf) + 3)} <> 'e' "
+                f"{x.prev_char(len(suf) + 2)} <> 'e' "
                 f"THEN {x.cut(len(suf) + 2)} "
                 f"ELSE {x.cut(3)} END)")
         ig_ik = []
         for suf in ("ig", "ik"):
             ig_ik.append(
                 f"WHEN {x.ends(suf)} AND {x.in_r2(2)} AND "
-                f"{x.char_back(3)} <> 'e' THEN {x.cut(2)}")
+                f"{x.prev_char(2)} <> 'e' THEN {x.cut(2)}")
         isch = (f"WHEN {x.ends('isch')} AND {x.in_r2(4)} AND "
-                f"{x.char_back(5)} <> 'e' THEN {x.cut(4)}")
+                f"{x.prev_char(4)} <> 'e' THEN {x.cut(4)}")
         return ("CASE " + isch + " " + " ".join(lich_heit) + " "
                 + keit + " " + " ".join(end_ung) + " "
                 + " ".join(ig_ik) + f" ELSE {x.keep()} END")
 
     # binding chain: g0 = ß-replaced word; g1 = (word, skeleton);
     # x0 = (word, r1, r2); then one binding per step
-    def pack2(w: str, m: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'm', {m})"
-        return f"struct_pack(w := {w}, m := {m})"
-
     p1 = "instr(g1.m, 'ab')"
     q = f"instr(substr(g1.m, {p1} + 2), 'ab')"
-    seed = _st(
-        engine, "g1.w",
-        f"CASE WHEN {p1} = 0 THEN length(g1.w) + 1 "
-        f"ELSE greatest({p1} + 2, 4) END",
-        f"CASE WHEN {p1} = 0 OR {q} = 0 THEN length(g1.w) + 1 "
-        f"ELSE {p1} + 2 + {q} + 1 END")
-    steps = [s1, s2, s3]
-    body = "translate(x3.w, 'äöü', 'aou')"
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", _skeleton_sql("g0")), "g1", body)
-    return _let(engine, f"replace({ref}, 'ß', 'ss')", "g0", body)
+    seed = struct(
+        engine, w="g1.w",
+        r1=f"CASE WHEN {p1} = 0 THEN length(g1.w) + 1 "
+           f"ELSE greatest({p1} + 2, 4) END",
+        r2=f"CASE WHEN {p1} = 0 OR {q} = 0 THEN length(g1.w) + 1 "
+           f"ELSE {p1} + 2 + {q} + 1 END")
+    body = chain(engine, _Frag, seed, [s1, s2, s3],
+                 "translate(x3.w, 'äöü', 'aou')")
+    body = let(engine, struct(engine, w="g0", m=_skeleton_sql("g0")),
+               "g1", body)
+    return let(engine, f"replace({ref}, 'ß', 'ss')", "g0", body)

@@ -32,6 +32,16 @@ Hypothesis).
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    R1,
+    R2,
+    RV3,
+    Frag,
+    chain,
+    let,
+    struct,
+)
+
 _VOWELS = "aeiouáéíóúü"
 
 # step 0: pronouns and the bases they may follow
@@ -282,62 +292,11 @@ def _skeleton_sql(ref: str) -> str:
     return f"translate({s}, '{cons}', '{'b' * len(cons)}')"
 
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "rv", "r1", "r2", "d")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, rv, r1, r2, d) struct."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w = f"{x}.w"
-        self.rv, self.r1, self.r2 = f"{x}.rv", f"{x}.r1", f"{x}.r2"
-        self.d = f"{x}.d"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "", d: str = "1") -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        if rep:
-            w = f"{w} || '{rep}'"
-        return _st(self.engine, w=w, rv=self.rv, r1=self.r1,
-                   r2=self.r2, d=d)
-
-    def keep(self, d: str | None = None) -> str:
-        return _st(self.engine, w=self.w, rv=self.rv, r1=self.r1,
-                   r2=self.r2, d=self.d if d is None else d)
-
-    def in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.rv}"
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
-
-    def prev_in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} >= {self.rv}"
-
-    def prev_char(self, n: int) -> str:
-        return f"substr({self.w}, {self.ln} - {n}, 1)"
+    FIELDS = ("w", "rv", "r1", "r2", "d")
+    CUT = {"d": "1"}
 
 
 def _s0_sql(x: _Frag) -> str:
@@ -352,7 +311,7 @@ def _s0_sql(x: _Frag) -> str:
         whens.append(f"WHEN {x.ends(combo)} AND "
                      f"{x.in_rv(len(combo))} THEN {arm}")
     # step 0 never sets the step-1/2 'changed' flag (d stays 0)
-    return "CASE " + " ".join(whens) + f" ELSE {x.keep('0')} END"
+    return "CASE " + " ".join(whens) + f" ELSE {x.st(d='0')} END"
 
 
 def _s1_sql(x: _Frag) -> str:
@@ -459,38 +418,10 @@ def spanish_stem_sql(ref: str, engine: str) -> str:
     """Render the full stemmer over the (lowercase) token expression
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, rv, r1, r2, d) struct."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
-    ln = "length(g1.w)"
-    j1 = "instr(substr(g1.c, 3), 'a')"
-    j2 = "instr(substr(g1.c, 3), 'b')"
-    rv = (f"CASE WHEN {ln} < 3 THEN {ln} + 1 "
-          f"WHEN substr(g1.c, 2, 1) = 'b' THEN "
-          f"(CASE WHEN {j1} = 0 THEN {ln} + 1 "
-          f"ELSE {j1} + 3 END) "
-          f"WHEN left(g1.c, 2) = 'aa' THEN "
-          f"(CASE WHEN {j2} = 0 THEN {ln} + 1 "
-          f"ELSE {j2} + 3 END) "
-          f"ELSE 4 END")
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r1 = f"CASE WHEN {p1} = 0 THEN {ln} + 1 ELSE {p1} + 2 END"
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", rv=rv, r1=r1, r2=r2, d="0")
-
-    steps = [_s0_sql, _s1_sql, _s2a_sql, _s2b_sql, _s3_sql]
-    last = _Frag(engine, f"x{len(steps)}")
-    body = (f"translate({last.w}, 'áéíóú', 'aeiou')")
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", _skeleton_sql("g0")), "g1", body)
-    return _let(engine, ref, "g0", body)
+    seed = struct(engine, w="g1.w", rv=RV3, r1=R1, r2=R2, d="0")
+    body = chain(engine, _Frag, seed,
+                 [_s0_sql, _s1_sql, _s2a_sql, _s2b_sql, _s3_sql],
+                 "translate(x5.w, 'áéíóú', 'aeiou')")
+    body = let(engine, struct(engine, w="g0", c=_skeleton_sql("g0")),
+               "g1", body)
+    return let(engine, ref, "g0", body)

@@ -42,6 +42,16 @@ Hypothesis).
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    R1,
+    R2,
+    Frag,
+    chain,
+    let,
+    quote_list,
+    struct,
+)
+
 _VOWELS = "aeiouyäö"
 _LONG = ("aa", "ee", "ii", "oo", "uu", "ää", "öö")
 
@@ -240,60 +250,11 @@ def finnish_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "r1", "r2", "f")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack(inner)".replace("inner", inner)
-
-
-def _ql(items) -> str:
-    return ", ".join(f"'{i}'" for i in items)
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, r1, r2, f) struct; f = '1' once
     step 3 removed a case ending."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w = f"{x}.w"
-        self.r1, self.r2, self.f = f"{x}.r1", f"{x}.r2", f"{x}.f"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, f: str | None = None) -> str:
-        return _st(self.engine,
-                   w=f"substr({self.w}, 1, {self.ln} - {n})",
-                   r1=self.r1, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def keep(self, f: str | None = None) -> str:
-        return _st(self.engine, w=self.w, r1=self.r1, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def st(self, w: str, f: str | None = None) -> str:
-        return _st(self.engine, w=w, r1=self.r1, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
+    FIELDS = ("w", "r1", "r2", "f")
 
     def prev(self, n: int, depth: int = 1) -> str:
         """SQL for the ``depth`` chars just before the last n
@@ -311,7 +272,7 @@ def _s1_sql(x: _Frag) -> str:
             cond = x.in_r2(n)
         else:
             cond = (f"({x.prev(n)} IN ('n', 't') OR "
-                    f"{x.prev(n)} IN ({_ql(_VOWELS)}))")
+                    f"{x.prev(n)} IN ({quote_list(_VOWELS)}))")
         whens.append(f"WHEN {x.ends(s)} AND {x.in_r1(n)} AND "
                      f"{cond} THEN {x.cut(n)}")
     return "CASE " + " ".join(whens) + f" ELSE {x.keep()} END"
@@ -329,17 +290,17 @@ def _s2_sql(x: _Frag) -> str:
         elif s == "ni":
             cw = f"substr({x.w}, 1, {x.ln} - 2)"
             arm = x.st(
-                f"CASE WHEN right({cw}, 3) = 'kse' THEN "
-                f"substr({cw}, 1, {x.ln} - 3) || 'i' "
-                f"ELSE {cw} END")
+                w=f"CASE WHEN right({cw}, 3) = 'kse' THEN "
+                  f"substr({cw}, 1, {x.ln} - 3) || 'i' "
+                  f"ELSE {cw} END")
         elif s == "an":
             conds.append(f"(right({x.prev(n, 3)}, 3) IN "
-                         f"({_ql(_AN_STEMS)}) OR {x.prev(n, 2)} IN "
-                         f"({_ql(_AN_STEMS)}))")
+                         f"({quote_list(_AN_STEMS)}) OR {x.prev(n, 2)} IN "
+                         f"({quote_list(_AN_STEMS)}))")
         elif s == "än":
             conds.append(f"(right({x.prev(n, 3)}, 3) IN "
-                         f"({_ql(_AEN_STEMS)}) OR {x.prev(n, 2)} "
-                         f"IN ({_ql(_AEN_STEMS)}))")
+                         f"({quote_list(_AEN_STEMS)}) OR {x.prev(n, 2)} "
+                         f"IN ({quote_list(_AEN_STEMS)}))")
         elif s == "en":
             conds.append(f"{x.prev(n, 3)} IN ('lle', 'ine')")
         whens.append(f"WHEN {' AND '.join(conds)} THEN ({arm})")
@@ -365,17 +326,17 @@ def _s3_sql(x: _Frag) -> str:
             p = x.prev(n, 2)
             match.append(
                 f"(length({p}) = 2 AND right({p}, 1) = 'i' AND "
-                f"left({p}, 1) IN ({_ql('aeiouäö')}))")
+                f"left({p}, 1) IN ({quote_list('aeiouäö')}))")
             arm = x.cut(n, f="'1'")
         elif s == "seen":
-            match.append(f"{x.prev(n, 2)} IN ({_ql(_LONG)})")
+            match.append(f"{x.prev(n, 2)} IN ({quote_list(_LONG)})")
             arm = x.cut(n, f="'1'")
         elif s in ("a", "ä"):
             p = x.prev(n, 2)
             match.append(
                 f"(length({p}) = 2 AND "
-                f"left({p}, 1) NOT IN ({_ql(_VOWELS)}) AND "
-                f"right({p}, 1) IN ({_ql(_VOWELS)}))")
+                f"left({p}, 1) NOT IN ({quote_list(_VOWELS)}) AND "
+                f"right({p}, 1) IN ({quote_list(_VOWELS)}))")
             arm = x.cut(n, f="'1'")
         elif s in ("tta", "ttä"):
             # bare-entry shadow like hXn
@@ -385,9 +346,9 @@ def _s3_sql(x: _Frag) -> str:
         elif s == "n":
             cw = f"substr({x.w}, 1, {x.ln} - 1)"
             arm = x.st(
-                f"CASE WHEN right({cw}, 2) IN ({_ql(_LONG)}) "
-                f"OR right({cw}, 2) = 'ie' THEN "
-                f"substr({cw}, 1, {x.ln} - 2) ELSE {cw} END",
+                w=f"CASE WHEN right({cw}, 2) IN ({quote_list(_LONG)}) "
+                  f"OR right({cw}, 2) = 'ie' THEN "
+                  f"substr({cw}, 1, {x.ln} - 2) ELSE {cw} END",
                 f="'1'")
         else:
             arm = x.cut(n, f="'1'")
@@ -420,8 +381,8 @@ def _s5_sql(engine: str, x: _Frag) -> str:
            f"ELSE {y.keep()} END")
     tb = (f"CASE WHEN right({x.w}, 1) = 't' AND {x.in_r1(1)} AND "
           f"{x.ln} >= 2 AND substr({x.w}, {x.ln} - 1, 1) IN "
-          f"({_ql(_VOWELS)}) THEN "
-          f"({_let(engine, x.cut(1), 't5', mma)}) "
+          f"({quote_list(_VOWELS)}) THEN "
+          f"({let(engine, x.cut(1), 't5', mma)}) "
           f"ELSE {x.keep()} END")
     return f"CASE WHEN {x.f} = '1' THEN ({ij}) ELSE ({tb}) END"
 
@@ -430,12 +391,12 @@ def _s6_sql(engine: str, x: _Frag) -> str:
     # five tidy rules IN SEQUENCE, one let-bound stage each
     a = _Frag(engine, "u0")
     t6a = (f"CASE WHEN {a.in_r1(2)} AND right({a.w}, 2) IN "
-           f"({_ql(_LONG)}) THEN {a.cut(1)} ELSE {a.keep()} END")
+           f"({quote_list(_LONG)}) THEN {a.cut(1)} ELSE {a.keep()} END")
     b = _Frag(engine, "u1")
     t6b = (f"CASE WHEN {b.in_r1(2)} AND {b.ln} >= 2 AND "
            f"right({b.w}, 1) IN ('a', 'ä', 'e', 'i') AND "
            f"substr({b.w}, {b.ln} - 1, 1) NOT IN "
-           f"({_ql(_VOWELS)}) THEN {b.cut(1)} ELSE {b.keep()} END")
+           f"({quote_list(_VOWELS)}) THEN {b.cut(1)} ELSE {b.keep()} END")
     c = _Frag(engine, "u2")
     t6c = (f"CASE WHEN {c.in_r1(2)} AND right({c.w}, 2) IN "
            f"('oj', 'uj') THEN {c.cut(1)} ELSE {c.keep()} END")
@@ -452,14 +413,14 @@ def _s6_sql(engine: str, x: _Frag) -> str:
     k = f"(instr(reverse({skel}) || 'b', 'b') - 1)"
     i = f"({e.ln} - {k})"   # 1-based pos of last non-vowel (0 if none)
     t6e = (f"CASE WHEN {i} >= 2 AND "
-           f"substr({e.w}, {i}, 1) NOT IN ({_ql(_VOWELS)}) AND "
+           f"substr({e.w}, {i}, 1) NOT IN ({quote_list(_VOWELS)}) AND "
            f"substr({e.w}, {i} - 1, 1) = substr({e.w}, {i}, 1) "
            f"THEN substr({e.w}, 1, {i} - 1) || "
            f"substr({e.w}, {i} + 1) ELSE {e.w} END")
     body = t6e
     for var, stage in (("u4", t6d), ("u3", t6c), ("u2", t6b),
                        ("u1", t6a)):
-        body = _let(engine, stage, var, body)
+        body = let(engine, stage, var, body)
     return body   # references u0 free — the caller binds it
 
 
@@ -467,35 +428,17 @@ def finnish_stem_sql(ref: str, engine: str) -> str:
     """Render the full stemmer over the (lowercase) token expression
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, r1, r2, f) struct."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     cons = "bcdfghjklmnpqrstvwxz0123456789"
     skel = (f"translate(translate(g0, '{_VOWELS}', "
             f"'{'a' * len(_VOWELS)}'), '{cons}', "
             f"'{'b' * len(cons)}')")
-    ln = "length(g1.w)"
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r1 = f"CASE WHEN {p1} = 0 THEN {ln} + 1 ELSE {p1} + 2 END"
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", r1=r1, r2=r2, f="'0'")
-
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
     steps = [_s1_sql, _s2_sql, _s3_sql, _s4_sql,
              lambda x: _s5_sql(engine, x)]
     last = _Frag(engine, f"x{len(steps)}")
     # step 6 operates on the final struct's word via the u0 binding
-    body = _let(engine, last.keep(), "u0", _s6_sql(engine, last))
-    # _s6_sql builds over u0..u4 word stages; bind u0 to the struct
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", skel), "g1", body)
-    return _let(engine, ref, "g0", body)
+    # (_s6_sql builds over u0..u4 word stages)
+    seed = struct(engine, w="g1.w", r1=R1, r2=R2, f="'0'")
+    body = chain(engine, _Frag, seed, steps,
+                 let(engine, last.keep(), "u0", _s6_sql(engine, last)))
+    body = let(engine, struct(engine, w="g0", c=skel), "g1", body)
+    return let(engine, ref, "g0", body)

@@ -40,6 +40,16 @@ DuckDB; parity is pinned three ways in tests/test_snowball_fr.py
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    R1,
+    R2,
+    Frag,
+    chain,
+    let,
+    quote_list,
+    struct,
+)
+
 # true vowels (i, u, y handled by the marking pass)
 _TRUE_VOWELS = "aeoâàëéêèïîôûù"
 _MARK_ROUNDS = 3
@@ -404,69 +414,16 @@ def _skeleton_sql(ref: str) -> str:
     return (f"translate({s}, 'iyqh', 'aabb')")
 
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "c", "rv", "r1", "r2", "d")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-def _quote_list(items) -> str:
-    return ", ".join(f"'{i}'" for i in items)
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, c, rv, r1, r2, d) struct."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.c = f"{x}.w", f"{x}.c"
-        self.rv, self.r1, self.r2 = f"{x}.rv", f"{x}.r1", f"{x}.r2"
-        self.d = f"{x}.d"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "", d: str = "1") -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        c = f"substr({self.c}, 1, {self.ln} - {n})"
-        if rep:
-            w, c = f"{w} || '{rep}'", f"{c} || '{_rep_cv(rep)}'"
-        return _st(self.engine, w=w, c=c, rv=self.rv, r1=self.r1,
-                   r2=self.r2, d=d)
-
-    def keep(self, d: str | None = None) -> str:
-        return _st(self.engine, w=self.w, c=self.c, rv=self.rv,
-                   r1=self.r1, r2=self.r2,
-                   d=self.d if d is None else d)
-
-    def in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.rv}"
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
+    FIELDS = ("w", "c", "rv", "r1", "r2", "d")
+    CUT = {"d": "1"}
+    cv = staticmethod(_rep_cv)
 
     def prev_is(self, n: int, cls: str) -> str:
         """Skeleton class of the char just before the last n."""
         return f"substr({self.c}, {self.ln} - {n}, 1) = '{cls}'"
-
-    def prev_in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} >= {self.rv}"
 
 
 def _s1_sql(x: _Frag) -> str:
@@ -618,7 +575,7 @@ def _step34_sql(engine: str, x: _Frag) -> str:
         f"CASE WHEN {x.ends('s')} AND {x.ln} >= 2 AND ("
         f"substr({x.w}, {x.ln} - 2, 2) = 'Hi' OR NOT ("
         f"substr({x.w}, {x.ln} - 1, 1) IN "
-        f"({_quote_list('aoès')}) OR "
+        f"({quote_list('aoès')}) OR "
         f"(substr({x.w}, {x.ln} - 1, 1) IN ('i', 'u') AND "
         f"substr({x.c}, {x.ln} - 1, 1) = 'a'))) "
         f"THEN {x.cut(1)} ELSE {x.keep()} END")
@@ -635,7 +592,7 @@ def _step34_sql(engine: str, x: _Frag) -> str:
         f"{r.prev_in_rv(3)} THEN {r.cut(3)} ELSE {r.keep()} END) "
         f"WHEN {r.ends('e')} AND {r.in_rv(1)} THEN {r.cut(1)} "
         f"ELSE {r.keep()} END")
-    residual = _let(engine, s_removed, "rr", among)
+    residual = let(engine, s_removed, "rr", among)
     return (f"CASE WHEN {x.d} = 1 THEN ({fixup}) "
             f"ELSE ({residual}) END")
 
@@ -663,14 +620,6 @@ def french_stem_sql(ref: str, engine: str) -> str:
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, c, rv, r1, r2, d) struct (one binding per
     step keeps DuckDB's binder under its depth hazard)."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
     # regions from the bound (word, skeleton) pair g1
     first_v = "instr(substr(g1.c, 2), 'a')"  # vowel not at start
     rv = (f"CASE WHEN length(g1.w) >= 3 AND ("
@@ -678,30 +627,22 @@ def french_stem_sql(ref: str, engine: str) -> str:
           f"('par', 'col', 'tap')) THEN 4 "
           f"WHEN {first_v} = 0 THEN length(g1.w) + 1 "
           f"ELSE {first_v} + 2 END")
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r1 = (f"CASE WHEN {p1} = 0 THEN length(g1.w) + 1 "
-          f"ELSE {p1} + 2 END")
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN length(g1.w) + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", c="g1.c", rv=rv, r1=r1, r2=r2,
-               d="0")
+    seed = struct(engine, w="g1.w", c="g1.c", rv=rv, r1=R1, r2=R2,
+                  d="0")
 
     steps = [_s1_sql, _s2a_sql, _s2b_sql,
              lambda x: _step34_sql(engine, x), _undouble_sql]
     # postlude mirrors the twin: surviving He/Hi pairs fold back to
     # ë/ï, a bare marker disappears
-    body = (f"replace(replace(replace("
-            f"{_unaccent_sql(_Frag(engine, 'x5'))}, "
-            f"'Hi', 'ï'), 'He', 'ë'), 'H', '')")
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("gp", _skeleton_sql("gp")), "g1", body)
+    body = chain(engine, _Frag, seed, steps,
+                 f"replace(replace(replace("
+                 f"{_unaccent_sql(_Frag(engine, 'x5'))}, "
+                 f"'Hi', 'ï'), 'He', 'ë'), 'H', '')")
+    body = let(engine, struct(engine, w="gp", c=_skeleton_sql("gp")),
+               "g1", body)
     # prelude mirrors the twin: ë -> He, ï -> Hi before skeleton and
     # regions (french.sbl 2018+ diaeresis handling)
-    body = _let(
+    body = let(
         engine,
         "replace(replace(g0, 'ë', 'He'), 'ï', 'Hi')", "gp", body)
-    return _let(engine, ref, "g0", body)
+    return let(engine, ref, "g0", body)

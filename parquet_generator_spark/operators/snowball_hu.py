@@ -52,6 +52,8 @@ analyzers at write time (reference EsParquetWriter.java:69);
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import let, quote_list
+
 _VOWELS = "aáeéiíoóöőuúüű"
 _DIGRAPHS = ("cs", "gy", "ly", "ny", "sz", "ty", "zs")  # + dzs
 _DOUBLES2 = ("bb", "cc", "dd", "ff", "gg", "jj", "kk", "ll", "mm",
@@ -212,17 +214,6 @@ def hungarian_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-def _ql(items) -> str:
-    return ", ".join(f"'{i}'" for i in items)
-
-
 def _ends(w: str, suf: str) -> str:
     return f"right({w}, {len(suf)}) = '{suf}'"
 
@@ -258,8 +249,8 @@ def _doubled_sql(w: str, table) -> str:
     for suf, _ in _by_len(table):
         n = len(suf)
         stem = f"substr({w}, 1, length({w}) - {n})"
-        dbl = (f"(right({stem}, 3) IN ({_ql(_DOUBLES3)}) OR "
-               f"right({stem}, 2) IN ({_ql(_DOUBLES2)}))")
+        dbl = (f"(right({stem}, 3) IN ({quote_list(_DOUBLES3)}) OR "
+               f"right({stem}, 2) IN ({quote_list(_DOUBLES2)}))")
         und = (f"substr({w}, 1, length({w}) - {n + 2}) || "
                f"substr({w}, length({w}) - {n}, 1)")
         whens.append(f"WHEN {_ends(w, suf)} THEN CASE WHEN "
@@ -281,7 +272,7 @@ def _case_sql(w: str, engine: str) -> str:
     for suf in sorted(_CASE, key=len, reverse=True):
         n = len(suf)
         cut = f"substr({w}, 1, length({w}) - {n})"
-        arm = _let(engine, cut, "cv", inner)
+        arm = let(engine, cut, "cv", inner)
         whens.append(f"WHEN {_ends(w, suf)} THEN CASE WHEN "
                      f"{_in_r1(w, n)} THEN {arm} ELSE {w} END")
     return "CASE " + " ".join(whens) + f" ELSE {w} END"
@@ -292,9 +283,6 @@ def hungarian_stem_sql(ref: str, engine: str) -> str:
     expression ``ref`` for ``engine`` in {'spark', 'duck'}: R1 is
     bound once as ``hr``, then the nine routines thread the word
     through nested lambda lets (w0..w8 -> result)."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     cons = "bcdfghjklmnpqrstvwxyz0123456789"
     # consonant skeleton: vowels -> 'a', everything else -> 'b'
     skel = (f"translate(translate(g0, '{_VOWELS}', "
@@ -303,7 +291,7 @@ def hungarian_stem_sql(ref: str, engine: str) -> str:
     fc = "instr(g1, 'b')"       # first consonant (vowel-start)
     fv = "instr(g1, 'a')"       # first vowel (consonant-start)
     dig3 = f"substr(g0, {fc}, 3) = 'dzs'"
-    dig2 = f"substr(g0, {fc}, 2) IN ({_ql(_DIGRAPHS)})"
+    dig2 = f"substr(g0, {fc}, 2) IN ({quote_list(_DIGRAPHS)})"
     # hr = 1-based start of R1; length+1 when R1 is empty
     hr = (f"CASE WHEN g1 = '' THEN 1 "
           f"WHEN left(g1, 1) = 'a' THEN "
@@ -327,8 +315,8 @@ def hungarian_stem_sql(ref: str, engine: str) -> str:
     ]
     body = f"w{len(stages)}"
     for i in range(len(stages) - 1, -1, -1):
-        body = _let(engine, stages[i](f"w{i}"), f"w{i + 1}", body)
-    body = _let(engine, "g0", "w0", body)
-    body = _let(engine, hr, "hr", body)
-    body = _let(engine, skel, "g1", body)
-    return _let(engine, ref, "g0", body)
+        body = let(engine, stages[i](f"w{i}"), f"w{i + 1}", body)
+    body = let(engine, "g0", "w0", body)
+    body = let(engine, hr, "hr", body)
+    body = let(engine, skel, "g1", body)
+    return let(engine, ref, "g0", body)

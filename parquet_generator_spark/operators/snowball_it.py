@@ -52,6 +52,16 @@ parity is pinned three ways in tests/test_snowball_it.py
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    R1,
+    R2,
+    RV3,
+    Frag,
+    chain,
+    let,
+    struct,
+)
+
 # true vowels (i and u handled by the marking pass; the acute forms
 # are folded to grave BEFORE the skeleton is computed)
 _TRUE_VOWELS = "aeoàèìòù"
@@ -326,61 +336,12 @@ def _skeleton_sql(ref: str) -> str:
     return f"translate({s}, 'iq', 'ab')"
 
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "c", "rv", "r1", "r2", "d")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, c, rv, r1, r2, d) struct."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.c = f"{x}.w", f"{x}.c"
-        self.rv, self.r1, self.r2 = f"{x}.rv", f"{x}.r1", f"{x}.r2"
-        self.d = f"{x}.d"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "", d: str = "1") -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        c = f"substr({self.c}, 1, {self.ln} - {n})"
-        if rep:
-            w, c = f"{w} || '{rep}'", f"{c} || '{_cvof(rep)}'"
-        return _st(self.engine, w=w, c=c, rv=self.rv, r1=self.r1,
-                   r2=self.r2, d=d)
-
-    def keep(self, d: str | None = None) -> str:
-        return _st(self.engine, w=self.w, c=self.c, rv=self.rv,
-                   r1=self.r1, r2=self.r2,
-                   d=self.d if d is None else d)
-
-    def in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.rv}"
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
-
-    def prev_in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} >= {self.rv}"
+    FIELDS = ("w", "c", "rv", "r1", "r2", "d")
+    CUT = {"d": "1"}
+    cv = staticmethod(_cvof)
 
 
 def _s0_sql(x: _Frag) -> str:
@@ -389,7 +350,7 @@ def _s0_sql(x: _Frag) -> str:
         arm = x.cut(plen, "e" if to_e else "", d="0")
         whens.append(f"WHEN {x.ends(combo)} AND "
                      f"{x.in_rv(len(combo))} THEN {arm}")
-    return "CASE " + " ".join(whens) + f" ELSE {x.keep('0')} END"
+    return "CASE " + " ".join(whens) + f" ELSE {x.st(d='0')} END"
 
 
 def _s1_sql(x: _Frag) -> str:
@@ -486,39 +447,12 @@ def italian_stem_sql(ref: str, engine: str) -> str:
     """Render the full stemmer over the (lowercase) token expression
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, c, rv, r1, r2, d) struct."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
-    ln = "length(g1.w)"
-    j1 = "instr(substr(g1.c, 3), 'a')"
-    j2 = "instr(substr(g1.c, 3), 'b')"
-    rv = (f"CASE WHEN {ln} < 3 THEN {ln} + 1 "
-          f"WHEN substr(g1.c, 2, 1) = 'b' THEN "
-          f"(CASE WHEN {j1} = 0 THEN {ln} + 1 "
-          f"ELSE {j1} + 3 END) "
-          f"WHEN left(g1.c, 2) = 'aa' THEN "
-          f"(CASE WHEN {j2} = 0 THEN {ln} + 1 "
-          f"ELSE {j2} + 3 END) "
-          f"ELSE 4 END")
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r1 = f"CASE WHEN {p1} = 0 THEN {ln} + 1 ELSE {p1} + 2 END"
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", c="g1.c", rv=rv, r1=r1, r2=r2,
-               d="0")
-
-    steps = [_s0_sql, _s1_sql, _s2_sql, _s3a_sql, _s3b_sql]
-    body = _Frag(engine, f"x{len(steps)}").w
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", _skeleton_sql("g0")), "g1", body)
+    seed = struct(engine, w="g1.w", c="g1.c", rv=RV3, r1=R1, r2=R2,
+                  d="0")
+    body = chain(engine, _Frag, seed,
+                 [_s0_sql, _s1_sql, _s2_sql, _s3a_sql, _s3b_sql],
+                 "x5.w")
+    body = let(engine, struct(engine, w="g0", c=_skeleton_sql("g0")),
+               "g1", body)
     norm = f"translate({ref}, 'áéíóú', 'àèìòù')"
-    return _let(engine, norm, "g0", body)
+    return let(engine, norm, "g0", body)

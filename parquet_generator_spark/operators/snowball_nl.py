@@ -47,6 +47,13 @@ parity is pinned three ways in tests/test_snowball_nl.py
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    Frag,
+    chain,
+    let,
+    struct,
+)
+
 # true vowels (i and y go through the marking pass)
 _TRUE_VOWELS = "aeouè"
 _VOWEL_CHARS = "aeiouyè"   # the spec's v set, pre-marking
@@ -215,63 +222,19 @@ def dutch_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "c", "r1", "r2", "e")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, c, r1, r2, e) struct."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.c = f"{x}.w", f"{x}.c"
-        self.r1, self.r2, self.e = f"{x}.r1", f"{x}.r2", f"{x}.e"
-        self.ln = f"length({x}.w)"
+    FIELDS = ("w", "c", "r1", "r2", "e")
 
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "", repc: str = "",
-            e: str | None = None) -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        c = f"substr({self.c}, 1, {self.ln} - {n})"
-        if rep:
-            w = f"{w} || '{rep}'"
-            c = f"{c} || '{repc}'"
-        return _st(self.engine, w=w, c=c, r1=self.r1, r2=self.r2,
-                   e=self.e if e is None else e)
-
-    def keep(self, e: str | None = None) -> str:
-        return _st(self.engine, w=self.w, c=self.c, r1=self.r1,
-                   r2=self.r2, e=self.e if e is None else e)
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
+    @staticmethod
+    def cv(app: str) -> str:
+        return {"heid": _HEID_CV}[app]
 
     def prev_cls_b(self, n: int) -> str:
         """Skeleton class of the char before the last n is 'b'."""
         return (f"({self.ln} - {n} >= 1 AND "
                 f"substr({self.c}, {self.ln} - {n}, 1) = 'b')")
-
-    def prev_char(self, n: int) -> str:
-        return f"substr({self.w}, {self.ln} - {n}, 1)"
 
     def valid_s(self, n: int) -> str:
         return (f"({self.prev_cls_b(n)} AND "
@@ -286,20 +249,20 @@ class _Frag:
         """Struct with a kk/dd/tt tail undoubled."""
         hit = f"right({self.w}, 2) IN ('kk', 'dd', 'tt')"
         return (f"CASE WHEN {hit} THEN {self.cut(1, e=e)} "
-                f"ELSE {self.keep(e=e)} END")
+                f"ELSE {self.st(e=e)} END")
 
 
 def _cut_then_undouble(x: _Frag, n: int, var: str,
                        e: str | None = None) -> str:
     """cut(n) then undouble, via a let-bound intermediate."""
     y = _Frag(x.engine, var)
-    return _let(x.engine, x.cut(n, e=e), var, y.undoubled(e=e))
+    return let(x.engine, x.cut(n, e=e), var, y.undoubled(e=e))
 
 
 def _s1_sql(x: _Frag) -> str:
     arms = [
         ("heden", f"CASE WHEN {x.in_r1(5)} "
-                  f"THEN {x.cut(5, 'heid', _HEID_CV)} "
+                  f"THEN {x.cut(5, 'heid')} "
                   f"ELSE {x.keep()} END"),
         ("ene", f"CASE WHEN {x.in_r1(3)} AND {x.valid_en(3)} "
                 f"THEN {_cut_then_undouble(x, 3, 'u1')} "
@@ -321,7 +284,7 @@ def _s2_sql(x: _Frag) -> str:
     return (f"CASE WHEN {x.ends('e')} AND {x.in_r1(1)} AND "
             f"{x.prev_cls_b(1)} "
             f"THEN {_cut_then_undouble(x, 1, 'u3', e='1')} "
-            f"ELSE {x.keep(e='0')} END")
+            f"ELSE {x.st(e='0')} END")
 
 
 def _s3a_sql(x: _Frag) -> str:
@@ -333,7 +296,7 @@ def _s3a_sql(x: _Frag) -> str:
     not_c = (f"NOT ({x.ln} >= 5 AND "
              f"{x.prev_char(4)} = 'c')")
     return (f"CASE WHEN {x.ends('heid')} AND {x.in_r2(4)} AND "
-            f"{not_c} THEN {_let(x.engine, x.cut(4), 'h1', after)} "
+            f"{not_c} THEN {let(x.engine, x.cut(4), 'h1', after)} "
             f"ELSE {x.keep()} END")
 
 
@@ -356,13 +319,13 @@ def _s3b_sql(x: _Frag) -> str:
         ("baar", f"CASE WHEN {x.in_r2(4)} THEN {x.cut(4)} "
                  f"ELSE {x.keep()} END"),
         ("lijk", f"CASE WHEN {x.in_r2(4)} "
-                 f"THEN {_let(x.engine, x.cut(4), 'l1', lijk_after)} "
+                 f"THEN {let(x.engine, x.cut(4), 'l1', lijk_after)} "
                  f"ELSE {x.keep()} END"),
         ("end", f"CASE WHEN {x.in_r2(3)} "
-                f"THEN {_let(x.engine, x.cut(3), 'n1', ending_after)} "
+                f"THEN {let(x.engine, x.cut(3), 'n1', ending_after)} "
                 f"ELSE {x.keep()} END"),
         ("ing", f"CASE WHEN {x.in_r2(3)} "
-                f"THEN {_let(x.engine, x.cut(3), 'n1', ending_after)} "
+                f"THEN {let(x.engine, x.cut(3), 'n1', ending_after)} "
                 f"ELSE {x.keep()} END"),
         ("bar", f"CASE WHEN {x.in_r2(3)} AND {x.e} = '1' "
                 f"THEN {x.cut(3)} ELSE {x.keep()} END"),
@@ -384,17 +347,13 @@ def _s4_sql(x: _Frag) -> str:
             f"right({x.w}, 1) <> 'i'")
     w = (f"substr({x.w}, 1, {x.ln} - 2) || right({x.w}, 1)")
     c = (f"substr({x.c}, 1, {x.ln} - 2) || right({x.c}, 1)")
-    out = _st(x.engine, w=w, c=c, r1=x.r1, r2=x.r2, e=x.e)
-    return f"CASE WHEN {cond} THEN {out} ELSE {x.keep()} END"
+    return f"CASE WHEN {cond} THEN {x.st(w=w, c=c)} ELSE {x.keep()} END"
 
 
 def dutch_stem_sql(ref: str, engine: str) -> str:
     """Render the stemmer over the (lowercase) token expression
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, c, r1, r2, e) struct."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     deacc = (f"translate(g0, '{_DEACCENT_FROM}', "
              f"'{_DEACCENT_TO}')")
     # raw classes over the 4-symbol alphabet
@@ -412,11 +371,6 @@ def dutch_stem_sql(ref: str, engine: str) -> str:
             marked = f"replace({marked}, '{pat}', '{rep}')"
     marked = (f"replace(replace({marked}, 'i', 'a'), 'y', 'a')")
 
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
     ln = "length(g1.w)"
     p1 = "instr(g1.c, 'ab')"
     r1_raw = f"CASE WHEN {p1} = 0 THEN {ln} + 1 ELSE {p1} + 2 END"
@@ -426,16 +380,11 @@ def dutch_stem_sql(ref: str, engine: str) -> str:
     q = f"instr(substr(g1.c, ({r1_raw})), 'ab')"
     r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
           f"ELSE ({r1_raw}) + {q} + 1 END")
-    seed = _st(engine, w="g1.w", c="g1.c", r1=r1, r2=r2, e="'0'")
-
-    steps = [_s1_sql, _s2_sql, _s3a_sql, _s3b_sql, _s4_sql]
-    last = _Frag(engine, f"x{len(steps)}")
-    body = last.w
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("w0", marked), "g1", body)
-    body = _let(engine, k, "k0", body)
-    body = _let(engine, deacc, "w0", body)
-    return _let(engine, ref, "g0", body)
+    seed = struct(engine, w="g1.w", c="g1.c", r1=r1, r2=r2, e="'0'")
+    body = chain(engine, _Frag, seed,
+                 [_s1_sql, _s2_sql, _s3a_sql, _s3b_sql, _s4_sql],
+                 "x5.w")
+    body = let(engine, struct(engine, w="w0", c=marked), "g1", body)
+    body = let(engine, k, "k0", body)
+    body = let(engine, deacc, "w0", body)
+    return let(engine, ref, "g0", body)

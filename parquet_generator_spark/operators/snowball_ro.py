@@ -58,6 +58,16 @@ parity is pinned three ways in tests/test_snowball_ro.py
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    R1,
+    R2,
+    RV3,
+    Frag,
+    chain,
+    let,
+    struct,
+)
+
 # true vowels (i and u go through the marking pass)
 _TRUE_VOWELS = "aăâeîo"
 _S1_ROUNDS = 2
@@ -322,60 +332,11 @@ def romanian_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "c", "rv", "r1", "r2", "f")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, c, rv, r1, r2, f) struct."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.c = f"{x}.w", f"{x}.c"
-        self.rv, self.r1, self.r2 = f"{x}.rv", f"{x}.r1", f"{x}.r2"
-        self.f = f"{x}.f"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "",
-            f: str | None = None) -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        c = f"substr({self.c}, 1, {self.ln} - {n})"
-        if rep:
-            w = f"{w} || '{rep}'"
-            c = f"{c} || '{_cvof(rep)}'"
-        return _st(self.engine, w=w, c=c, rv=self.rv, r1=self.r1,
-                   r2=self.r2, f=self.f if f is None else f)
-
-    def keep(self, f: str | None = None) -> str:
-        return _st(self.engine, w=self.w, c=self.c, rv=self.rv,
-                   r1=self.r1, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.rv}"
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
+    FIELDS = ("w", "c", "rv", "r1", "r2", "f")
+    cv = staticmethod(_cvof)
 
 
 def _unmarked_sql(x: _Frag, s: str) -> list:
@@ -490,9 +451,6 @@ def romanian_stem_sql(ref: str, engine: str) -> str:
     over a carried (w, c, rv, r1, r2, f) struct, with step 1
     unrolled ``_S1_ROUNDS`` times (each successful round strips
     >= 2 chars, so the unroll covers any real token)."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     cons = "".join(ch for ch in
                    "bcdfghjklmnpqrstvwxyz0123456789şţ"
                    if ch not in _TRUE_VOWELS)
@@ -505,36 +463,11 @@ def romanian_stem_sql(ref: str, engine: str) -> str:
             marked = f"replace({marked}, '{pat}', '{rep}')"
     marked = f"replace({marked}, 'i', 'a')"
 
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
-    ln = "length(g1.w)"
-    j1 = "instr(substr(g1.c, 3), 'a')"
-    j2 = "instr(substr(g1.c, 3), 'b')"
-    rv = (f"CASE WHEN {ln} < 3 THEN {ln} + 1 "
-          f"WHEN substr(g1.c, 2, 1) = 'b' THEN "
-          f"(CASE WHEN {j1} = 0 THEN {ln} + 1 ELSE {j1} + 3 END) "
-          f"WHEN left(g1.c, 2) = 'aa' THEN "
-          f"(CASE WHEN {j2} = 0 THEN {ln} + 1 ELSE {j2} + 3 END) "
-          f"ELSE 4 END")
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r1 = f"CASE WHEN {p1} = 0 THEN {ln} + 1 ELSE {p1} + 2 END"
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", c="g1.c", rv=rv, r1=r1, r2=r2,
-               f="'0'")
-
+    seed = struct(engine, w="g1.w", c="g1.c", rv=RV3, r1=R1, r2=R2,
+                  f="'0'")
     steps = ([_s0_sql] + [_s1_sql] * _S1_ROUNDS
              + [_s2_sql, _s3_sql, _s4_sql])
-    last = _Frag(engine, f"x{len(steps)}")
-    body = last.w
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", marked), "g1", body)
-    body = _let(engine, k, "k0", body)
-    return _let(engine, ref, "g0", body)
+    body = chain(engine, _Frag, seed, steps, f"x{len(steps)}.w")
+    body = let(engine, struct(engine, w="g0", c=marked), "g1", body)
+    body = let(engine, k, "k0", body)
+    return let(engine, ref, "g0", body)

@@ -36,6 +36,14 @@ Hypothesis-pinned in tests/test_snowball_ru.py).
 
 from __future__ import annotations
 
+from parquet_generator_spark.operators.stem_sql import (
+    R2,
+    Frag,
+    chain,
+    let,
+    struct,
+)
+
 _VOWELS = "аеиоуыэюя"
 
 # group-1 entries require the PRECEDING а/я (inside RV)
@@ -163,52 +171,11 @@ def russian_stem(word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "rv", "r2", "f")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
+class _Frag(Frag):
     """Fragments over a bound (w, rv, r2, f) struct; f = '1' once a
     step-1 try has removed an ending."""
 
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w = f"{x}.w"
-        self.rv, self.r2, self.f = f"{x}.rv", f"{x}.r2", f"{x}.f"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, f: str | None = None) -> str:
-        return _st(self.engine,
-                   w=f"substr({self.w}, 1, {self.ln} - {n})",
-                   rv=self.rv, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def keep(self, f: str | None = None) -> str:
-        return _st(self.engine, w=self.w, rv=self.rv, r2=self.r2,
-                   f=self.f if f is None else f)
-
-    def in_rv(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.rv}"
-
-    def in_r2(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r2}"
+    FIELDS = ("w", "rv", "r2", "f")
 
     def prev_a_ya(self, n: int) -> str:
         return (f"({self.ln} - {n} >= {self.rv} AND "
@@ -256,9 +223,9 @@ def _s_adjectival(x: _Frag) -> str:
     whens = []
     for s, _ in _merged((), _ADJECTIVE):
         n = len(s)
+        adj = let(x.engine, x.cut(n, f="'1'"), "p1", part)
         whens.append(
-            f"WHEN {x.ends(s)} AND {x.in_rv(n)} THEN "
-            f"({_let(x.engine, x.cut(n, f=chr(39) + '1' + chr(39)), 'p1', part)})")
+            f"WHEN {x.ends(s)} AND {x.in_rv(n)} THEN ({adj})")
     body = "CASE " + " ".join(whens) + f" ELSE {x.keep()} END"
     return _gated(x, body)
 
@@ -293,7 +260,7 @@ def _s_final(x: _Frag) -> str:
     for s in _SUPERLATIVE:
         n = len(s)
         sup.append(f"WHEN {x.ends(s)} AND {x.in_rv(n)} THEN "
-                   f"({_let(x.engine, x.cut(n), 'q1', undouble)})")
+                   f"({let(x.engine, x.cut(n), 'q1', undouble)})")
     return (f"CASE WHEN {x.ends('нн')} AND {x.in_rv(1)} "
             f"THEN {x.cut(1)} "
             + " ".join(sup)
@@ -305,9 +272,6 @@ def russian_stem_sql(ref: str, engine: str) -> str:
     """Render the stemmer over the (lowercase) token expression
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, rv, r2, f) struct."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     deyo = "replace(g0, 'ё', 'е')"
     # э is a VOWEL — the consonant translate carries every other
     # cyrillic letter (ё already folded by the prelude)
@@ -318,28 +282,13 @@ def russian_stem_sql(ref: str, engine: str) -> str:
             f"'{'a' * len(_VOWELS)}'), '{cons}', "
             f"'{'b' * len(cons)}')")
 
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
-    ln = "length(g1.w)"
     av = "instr(g1.c, 'a')"
-    rv = f"CASE WHEN {av} = 0 THEN {ln} + 1 ELSE {av} + 1 END"
-    p1 = "instr(g1.c, 'ab')"
-    q = f"instr(substr(g1.c, {p1} + 2), 'ab')"
-    r2 = (f"CASE WHEN {p1} = 0 OR {q} = 0 THEN {ln} + 1 "
-          f"ELSE {p1} + 2 + {q} + 1 END")
-    seed = _st(engine, w="g1.w", rv=rv, r2=r2, f="'0'")
-
-    steps = [_s_gerund, _s_reflexive, _s_adjectival, _s_verb,
-             _s_noun, _s_i, _s_derivational, _s_final]
-    last = _Frag(engine, f"x{len(steps)}")
-    body = last.w
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("w0", skel), "g1", body)
-    body = _let(engine, deyo, "w0", body)
-    return _let(engine, ref, "g0", body)
+    rv = (f"CASE WHEN {av} = 0 THEN length(g1.w) + 1 "
+          f"ELSE {av} + 1 END")
+    seed = struct(engine, w="g1.w", rv=rv, r2=R2, f="'0'")
+    body = chain(engine, _Frag, seed,
+                 [_s_gerund, _s_reflexive, _s_adjectival, _s_verb,
+                  _s_noun, _s_i, _s_derivational, _s_final], "x8.w")
+    body = let(engine, struct(engine, w="w0", c=skel), "g1", body)
+    body = let(engine, deyo, "w0", body)
+    return let(engine, ref, "g0", body)

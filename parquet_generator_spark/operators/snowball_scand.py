@@ -39,6 +39,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from parquet_generator_spark.operators.stem_sql import (
+    Frag,
+    chain,
+    let,
+    quote_list,
+    struct,
+)
+
 
 @dataclass(frozen=True)
 class ScandConfig:
@@ -211,59 +219,18 @@ def scand_stem(cfg: ScandConfig, word: str) -> str:
 # portable-SQL generator
 # ------------------------------------------------------------------
 
-def _let(engine: str, bind: str, var: str, body: str) -> str:
-    if engine == "spark":
-        return (f"element_at(transform(array({bind}), "
-                f"{var} -> {body}), 1)")
-    return f"(list_transform([{bind}], {var} -> {body}))[1]"
-
-
-_FIELDS = ("w", "r1")
-
-
-def _st(engine: str, **vals: str) -> str:
-    if engine == "spark":
-        inner = ", ".join(f"'{f}', {vals[f]}" for f in _FIELDS)
-        return f"named_struct({inner})"
-    inner = ", ".join(f"{f} := {vals[f]}" for f in _FIELDS)
-    return f"struct_pack({inner})"
-
-
-class _Frag:
-    def __init__(self, engine: str, x: str):
-        self.engine, self.x = engine, x
-        self.w, self.r1 = f"{x}.w", f"{x}.r1"
-        self.ln = f"length({x}.w)"
-
-    def ends(self, suf: str) -> str:
-        return f"right({self.w}, {len(suf)}) = '{suf}'"
-
-    def cut(self, n: int, rep: str = "") -> str:
-        w = f"substr({self.w}, 1, {self.ln} - {n})"
-        if rep:
-            w = f"{w} || '{rep}'"
-        return _st(self.engine, w=w, r1=self.r1)
-
-    def keep(self) -> str:
-        return _st(self.engine, w=self.w, r1=self.r1)
-
-    def in_r1(self, n: int) -> str:
-        return f"{self.ln} - {n} + 1 >= {self.r1}"
-
-    def char_at_end(self, back: int) -> str:
-        """back=2 -> second-to-last char, etc."""
-        return f"substr({self.w}, {self.ln} - {back - 1}, 1)"
+class _Frag(Frag):
+    FIELDS = ("w", "r1")
 
 
 def _s_pred(cfg: ScandConfig, x: _Frag) -> str:
-    prev = x.char_at_end(2)
-    lits = ", ".join(f"'{c}'" for c in cfg.s_endings)
-    pred = f"{prev} IN ({lits})"
+    prev = x.prev_char(1)
+    pred = f"{prev} IN ({quote_list(cfg.s_endings)})"
     if cfg.s_k_not_after_vowel:
-        before = x.char_at_end(3)
-        vlits = ", ".join(f"'{c}'" for c in cfg.vowels)
+        before = x.prev_char(2)
         pred = (f"({pred} OR ({prev} = 'k' AND "
-                f"({x.ln} < 3 OR {before} NOT IN ({vlits}))))")
+                f"({x.ln} < 3 OR {before} NOT IN "
+                f"({quote_list(cfg.vowels)}))))")
     return pred
 
 
@@ -298,7 +265,7 @@ def _pair_sql(cfg: ScandConfig, x: _Frag, w_ref: str | None = None):
 
 def _s2_sql(cfg: ScandConfig):
     def render(x: _Frag) -> str:
-        return _st(x.engine, w=_pair_sql(cfg, x), r1=x.r1)
+        return x.st(w=_pair_sql(cfg, x))
     return render
 
 
@@ -321,15 +288,14 @@ def _s3_sql(cfg: ScandConfig):
                 cutw = f"substr({y.w}, 1, {y.ln} - {n})"
                 if cfg.step3_rerun_pairs:
                     cutw = _pair_sql(cfg, y, cutw)
-                arm = _st(x.engine, w=cutw, r1=y.r1)
+                arm = y.st(w=cutw)
             else:
                 arm = y.cut(n, rep)
             whens.append(f"WHEN {y.ends(s)} AND {y.in_r1(n)} "
                          f"THEN ({arm})")
         inner = ("CASE " + " ".join(whens)
                  + f" ELSE {y.keep()} END")
-        return _let(x.engine, _st(x.engine, w=base, r1=x.r1),
-                    "y0", inner)
+        return let(x.engine, x.st(w=base), "y0", inner)
     return render
 
 
@@ -337,10 +303,9 @@ def _s4_sql(cfg: ScandConfig):
     def render(x: _Frag) -> str:
         if not cfg.undouble:
             return x.keep()
-        vlits = ", ".join(f"'{c}'" for c in cfg.vowels)
         return (f"CASE WHEN {x.ln} >= 2 AND "
-                f"right({x.w}, 1) NOT IN ({vlits}) AND "
-                f"right({x.w}, 1) = {x.char_at_end(2)} AND "
+                f"right({x.w}, 1) NOT IN ({quote_list(cfg.vowels)}) AND "
+                f"right({x.w}, 1) = {x.prev_char(1)} AND "
                 f"{x.in_r1(1)} THEN {x.cut(1)} "
                 f"ELSE {x.keep()} END")
     return render
@@ -350,9 +315,6 @@ def scand_stem_sql(cfg: ScandConfig, ref: str, engine: str) -> str:
     """Render the stemmer over the (lowercase) token expression
     ``ref`` for ``engine`` in {'spark', 'duck'} — let-bound steps
     over a carried (w, r1) struct."""
-    if engine not in ("spark", "duck"):
-        raise ValueError(f"unknown engine {engine!r}")
-
     # R1 from the CV skeleton: position of the first 'ab' + 2,
     # min-3 adjusted; len+1 when absent
     vow = cfg.vowels
@@ -362,29 +324,17 @@ def scand_stem_sql(cfg: ScandConfig, ref: str, engine: str) -> str:
     skel = (f"translate(translate(g0, '{vow}', '{'a' * len(vow)}'), "
             f"'{cons}', '{'b' * len(cons)}')")
 
-    def pack2(w: str, c: str) -> str:
-        if engine == "spark":
-            return f"named_struct('w', {w}, 'c', {c})"
-        return f"struct_pack(w := {w}, c := {c})"
-
     ln = "length(g1.w)"
     p1 = "instr(g1.c, 'ab')"
     r1 = (f"CASE WHEN {p1} = 0 THEN {ln} + 1 "
           f"WHEN {p1} + 2 < 4 THEN CASE WHEN {ln} >= 3 THEN 4 "
           f"ELSE {ln} + 1 END "
           f"ELSE {p1} + 2 END")
-    seed = _st(engine, w="g1.w", r1=r1)
-
-    steps = [_s1_sql(cfg), _s2_sql(cfg), _s3_sql(cfg),
-             _s4_sql(cfg)]
-    last = _Frag(engine, f"x{len(steps)}")
-    body = last.w
-    for i in range(len(steps) - 1, -1, -1):
-        frag = _Frag(engine, f"x{i}")
-        body = _let(engine, steps[i](frag), f"x{i + 1}", body)
-    body = _let(engine, seed, "x0", body)
-    body = _let(engine, pack2("g0", skel), "g1", body)
-    return _let(engine, ref, "g0", body)
+    body = chain(engine, _Frag, struct(engine, w="g1.w", r1=r1),
+                 [_s1_sql(cfg), _s2_sql(cfg), _s3_sql(cfg),
+                  _s4_sql(cfg)], "x4.w")
+    body = let(engine, struct(engine, w="g0", c=skel), "g1", body)
+    return let(engine, ref, "g0", body)
 
 
 # public per-language entry points (the analyzer registry contract)

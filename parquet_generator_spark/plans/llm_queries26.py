@@ -52,15 +52,6 @@ GR_DUP5_THRESH = 0.15
 _GR_NS = (2, 3, 4, 5)
 
 
-def _gram_struct_arr(n: int) -> str:
-    return (f"CASE WHEN size(t) >= {n} THEN "
-            f"transform(sequence(0, size(t) - {n}), "
-            f"i -> named_struct('n', {n}, 'gram', "
-            f"array_join(slice(t, i + 1, {n}), ' '))) "
-            f"ELSE CAST(array() AS ARRAY<STRUCT<n: INT, "
-            f"gram: STRING>>) END")
-
-
 def gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher repetition signals as CHARACTER-coverage fractions
     (the complement of gopher_quality's count fractions): per doc,

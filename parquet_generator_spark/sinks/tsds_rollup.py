@@ -52,14 +52,6 @@ def _meta_path(root: str) -> str:
     return os.path.join(root, "rollup_meta.json")
 
 
-def read_rollup_meta(root: str) -> dict | None:
-    p = _meta_path(root)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
-
-
 def _slice_rollup(events: DataFrame) -> DataFrame:
     """The internal per-slice rollup: one row per (series, bucket)
     with mergeable stats + the last-value witness."""

@@ -142,9 +142,3 @@ def load_tables(spark: SparkSession,
                 sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {t: load_table(spark, t, sf_dir) for t in TABLES}
 
-
-def register_temp_views(spark: SparkSession,
-                        sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so ``spark.sql`` works."""
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)

@@ -106,6 +106,16 @@ def test_unknown_analyzer_is_a_loud_error():
             "query": "x", "analyzer": "nope"}}})
 
 
+def test_unknown_stemmer_is_a_loud_error():
+    """A misspelled stemmer must not fall through to the S-stemmer:
+    the error names the analyzer, the bad kind and the known kinds."""
+    with pytest.raises(ValueError) as err:
+        Analyzer("x", stem=True, stemmer="germna")
+    msg = str(err.value)
+    assert "'x'" in msg and "'germna'" in msg
+    assert "'german'" in msg and "'s'" in msg
+
+
 def test_custom_analyzer_registration_roundtrip():
     a = Analyzer("tiny", stopwords=frozenset({"el"}),
                  synonyms={"auto": ["car"]}, stem=True)

@@ -401,6 +401,41 @@ def test_barriers_and_stores_have_one_owner_each():
     assert stores == [], stores
 
 
+def test_stemmer_sql_plumbing_has_one_owner():
+    """Tripwire: ``operators/stem_sql.py`` owns the dialect plumbing,
+    so no stemmer module defines its own ``_let``/``_st``/``_ql``/
+    ``_quote_list``, and ``analyzers.py`` picks a stemmer from its
+    one table, never through a ``kind == "<language>"`` branch."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parent.parent / \
+        "parquet_generator_spark" / "operators"
+    plumbing = {"_let", "_st", "_ql", "_quote_list"}
+    copies = []
+    for p in sorted([*ops.glob("snowball_*.py"), ops / "porter.py"]):
+        for node in ast.walk(ast.parse(p.read_text())):
+            names = ([node.name] if isinstance(
+                node, (ast.FunctionDef, ast.ClassDef)) else
+                [t.id for t in getattr(node, "targets", [])
+                 if isinstance(t, ast.Name)])
+            copies += [f"{p.name}:{n}" for n in names if n in plumbing]
+    branches = []
+    tree = ast.parse((ops / "analyzers.py").read_text())
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Compare)
+                and isinstance(node.left, ast.Name)
+                and node.left.id == "kind"):
+            lits = [c.value for side in node.comparators
+                    for c in ast.walk(side)
+                    if isinstance(c, ast.Constant)
+                    and isinstance(c.value, str)]
+            branches += [f"line {node.lineno}: {v!r}" for v in lits
+                         if v != "s"]
+    assert copies == [], copies
+    assert branches == [], branches
+
+
 @pytest.mark.parametrize("name", ["q15_top_supplier", "vocab_coverage",
                                   "dsl_significant_terms",
                                   "embedding_norm_outliers"])
