@@ -337,6 +337,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     labels = _cache.checkpoint(
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id")), eager=False)
+    # eager: the label sum is the loop's convergence test
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
     for _ in range(max_iter):
@@ -409,6 +410,7 @@ def connected_components_star(pairs: DataFrame,
     for _ in range(max_iter):
         edges = _cache.checkpoint(
             star(star(edges, large=True), large=False))
+        # eager: the edge-set signature is the loop's convergence test
         sig = edges.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(u, v))").alias("h")).collect()[0]
@@ -812,7 +814,8 @@ def containment_pairs(df: DataFrame, id_col: str, content_col: str,
         ranked.filter(F.expr(f"rk <= {_prefix_bound(threshold)}"))
         .select("id", "s", "dfq"), eager=False)
     if shingle_df_cap is not None:
-        # one bounded-scalar job over the (tiny, checkpointed) prefix
+        # eager: the count decides the warning and the cap filter; one
+        # bounded-scalar job over the (tiny, checkpointed) prefix
         n_hot, worst = prefix.agg(
             F.count(F.when(F.col("dfq") > shingle_df_cap, 1)),
             F.max(F.when(F.col("dfq") > shingle_df_cap,

@@ -2466,10 +2466,10 @@ def search(df: DataFrame, body: dict) -> DataFrame:
         # keeps the bucket count <= `buckets` (Kibana's default
         # histogram). Simplification vs ES: calendar units only
         # (minute/hour/day/week/month/year), no 5m/30m/3h subdivides.
-        # The choice needs the data's time bounds — a one-row scalar
-        # aggregate (eager, the repo's blessed scalar pattern); the
-        # span arithmetic below is mirrored verbatim in oracle SQL so
-        # both engines pick the same unit.
+        # The choice needs the data's time bounds — an eager one-row
+        # aggregate, because the unit decides the bucket expression
+        # (plan shape); the span arithmetic below is mirrored verbatim
+        # in oracle SQL so both engines pick the same unit.
         target = int(abody.get("buckets", 10))
         field = abody["field"]
         lo, hi = filtered.agg(F.min(field), F.max(field)).first()

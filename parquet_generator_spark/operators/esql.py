@@ -1850,8 +1850,8 @@ def _df_apply(df: DataFrame, commands: list,
             totals = df.agg(F.sum(val).alias("_total"),
                             F.count(F.lit(1)).alias("_nb"))
             # ordered window over the STATS-bucketed frame only
-            # (bounded by the parse-time contract); totals enter as
-            # plan literals (broadcast_scalars — no nested-loop join)
+            # (bounded by the parse-time contract); totals enter as a
+            # scalar subquery (broadcast_scalars — no nested-loop join)
             w = (Window.orderBy(key)
                  .rowsBetween(Window.unboundedPreceding, 0))
             pre = (broadcast_scalars(df, totals)

@@ -71,8 +71,8 @@ def cv_form(word: str) -> str:
 
 
 def _cvof(suffix: str) -> str:
-    """Skeleton of a fixed y-free replacement suffix."""
-    assert "y" not in suffix
+    """Skeleton of a fixed y-free replacement suffix (checked once,
+    below the suffix tables)."""
     return "".join("a" if ch in "aeiou" else "b" for ch in suffix)
 
 
@@ -94,6 +94,13 @@ _STEP3 = [
 _STEP4 = ["al", "ance", "ence", "er", "ic", "able", "ible", "ant",
           "ement", "ment", "ent", "ion", "ou", "ism", "ate", "iti",
           "ous", "ive", "ize"]
+
+# _cvof reads each replacement without its neighbours, which is exact
+# only without 'y' (a vowel or a consonant depending on its context)
+_REPLACEMENTS = sorted({rep for _, rep in _STEP2 + _STEP3} | {"e", "i"})
+if any("y" in rep for rep in _REPLACEMENTS):
+    raise ValueError(f"porter: a replacement suffix holds 'y': "
+                     f"{_REPLACEMENTS}")
 
 
 def _m_gt0(cv: str) -> bool:

@@ -884,6 +884,7 @@ def kmeans_lloyd(df: DataFrame, k: int = 8, iters: int = 2,
     # KMeans does; lazy persist, populated by the first round's pass)
     if iters > 1:
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
+    # eager: the centroids are the next round's assignment literals
     init_rows = base.orderBy("id").limit(k).collect()  # bounded: k rows
     if not init_rows:
         raise ValueError("kmeans_lloyd: input has no rows")

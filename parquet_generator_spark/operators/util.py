@@ -34,22 +34,31 @@ def broadcast_scalars(df: DataFrame, scalars: DataFrame) -> DataFrame:
     ``df`` — the scalar-subquery decorrelation pattern (corpus total,
     global max, ...).
 
-    The one-row frame is evaluated eagerly (a bounded scalar
-    collect, like every other scalar aggregate in this repo) and its
-    values enter the main plan as LITERALS shipped with the task
-    closure. This beats the two plan-side alternatives: an
-    empty-partition-spec window funnels the input through one
-    partition, and crossJoin(broadcast(one_row)) compiles to
-    BroadcastNestedLoopJoin — indistinguishable in plan text from a
-    real pairwise explosion, which would blind the tripwire tests
-    that assert no nested-loop join appears anywhere. (A constant-key
-    equi-join doesn't survive either: Catalyst constant-folds the key
-    and rewrites it back to a nested-loop cross join.)
+    The one-row frame is packed into one struct and planned as ONE
+    uncorrelated scalar subquery: building the plan runs no job, the
+    subquery is evaluated once when the caller's action runs, and
+    each column is a field of its result. A zero-row frame attaches
+    NULLs; more than one row fails the action. This beats the two
+    join-side alternatives: an empty-partition-spec window funnels
+    the input through one partition, and
+    crossJoin(broadcast(one_row)) compiles to BroadcastNestedLoopJoin
+    — indistinguishable in plan text from a real pairwise explosion,
+    which would blind the tripwire tests that assert no nested-loop
+    join appears anywhere.
+
+    Keep a multi-distinct aggregate on the ``df`` side: the
+    subquery's copy of a relation the outer plan also reads gets
+    fresh attribute ids on every build, a multi-distinct Expand
+    orders its projections by them, and the generated code then
+    misses the codegen cache on every run (table_profile at sf0.1:
+    about 0.4 s slower with its distinct counts as the subquery).
     """
     from pyspark.sql import functions as F
 
-    row = scalars.first()
-    if row is None:
-        raise ValueError("scalar frame produced no row")
-    return df.select(
-        "*", *[F.lit(v).alias(c) for c, v in row.asDict().items()])
+    packed = "__scalars"
+    s = scalars.select(F.struct(*scalars.columns)).scalar()
+    # ONE reference to the subquery, unpacked by a second projection:
+    # a field select per column plans one subquery instance each, and
+    # those are reused only when their plans canonicalize alike
+    return (df.select("*", s.alias(packed))
+            .select("*", f"{packed}.*").drop(packed))

@@ -63,11 +63,8 @@ def _basket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy(F.col("r.a").alias("item_a"),
                        F.col("r.b").alias("item_b"))
               .agg(F.count(F.lit(1)).alias("cnt")))
-    # EAGER: the first consumer is broadcast_scalars' partial
-    # first()/take(1) on the marker row — the lazy-barrier rule
-    # (operators/cache.py) keeps eager=True when the first consumer
-    # is partial, so materialization is never split across the
-    # take(1) job's partition subset (r13 ADVICE).
+    # EAGER: one plan reads the model through four subtrees (the
+    # basket-count subquery, both frequency lookups, the pair table)
     return cache.checkpoint(counts)
 
 

@@ -34,7 +34,7 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt(H(cell) * H(label)), in bits). Cell = nearest of the
     smallest-id coarse centroids (the oracle-reproducible quantizer
     ann_ivf uses); every statistic reduces the bounded contingency
-    table, with the total as a plan literal."""
+    table, with the total as a scalar subquery."""
     emb = load_table(spark, "embeddings", sf_dir)
     cents = similarity.make_centroids_from_corpus(emb, PURITY_CELLS)
     assign = (similarity.ivf_assign_cells(emb, cents, 1)
@@ -45,26 +45,27 @@ def cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n")))
     per_cell = cnt.groupBy("cell").agg(F.sum("n").alias("nc"))
     per_label = cnt.groupBy("label").agg(F.sum("n").alias("nl"))
-    n_total = float(cnt.agg(F.sum("n")).collect()[0][0])
-    purity = (cnt.groupBy("cell").agg(F.max("n").alias("mx"))
-              .agg((F.sum("mx") / F.lit(n_total)).alias("purity")))
-    mi = (cnt.join(F.broadcast(per_cell), "cell")
+    tot = cnt.agg(F.sum("n").cast("double").alias("n_total"))
+    n_total = F.col("n_total")
+    one = (cnt.groupBy("cell").agg(F.max("n").alias("mx"))
+           .agg(F.sum("mx").alias("mx")))
+    mi = (broadcast_scalars(cnt, tot).join(F.broadcast(per_cell), "cell")
           .join(F.broadcast(per_label), "label")
           .agg(F.sum((F.col("n") / n_total)
                      * F.log2(F.col("n") * n_total
                               / (F.col("nc") * F.col("nl"))))
                .alias("mi")))
-    hc = per_cell.agg(
+    hc = broadcast_scalars(per_cell, tot).agg(
         (-F.sum((F.col("nc") / n_total)
                 * F.log2(F.col("nc") / n_total))).alias("hc"))
-    hl = per_label.agg(
+    hl = broadcast_scalars(per_label, tot).agg(
         (-F.sum((F.col("nl") / n_total)
                 * F.log2(F.col("nl") / n_total))).alias("hl"))
-    one = broadcast_scalars(
-        broadcast_scalars(broadcast_scalars(purity, mi), hc), hl)
+    for part in (tot, mi, hc, hl):
+        one = broadcast_scalars(one, part)
     return one.select(
         F.lit(PURITY_CELLS).alias("n_cells"),
-        F.round("purity", 4).alias("purity"),
+        F.round(F.col("mx") / n_total, 4).alias("purity"),
         F.round(F.col("mi") / F.sqrt(F.col("hc") * F.col("hl")), 4)
         .alias("nmi"))
 

@@ -134,7 +134,7 @@ def lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources, with e = row_total*col_total/N. One corpus aggregate
     builds the contingency cells; row/col totals re-aggregate from
     the CELLS (label-cardinality, no second corpus scan), join back
-    on the label keys, and N attaches as a literal."""
+    on the label keys, and N attaches as a scalar subquery."""
     docs = load_table(spark, "documents", sf_dir)
     cells = (docs.groupBy("lang", "source")
              .agg(F.count(F.lit(1)).alias("o")))

@@ -385,7 +385,7 @@ def epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     temperature share w_s = c_s^alpha / sum(c^alpha) of the token
     budget; epochs_s = alloc_s / c_s says how many times the source
     repeats (>1 = upsampled). One grouped pass + a one-row scalar
-    aggregate attached as plan literals (broadcast_scalars — no
+    aggregate attached as a scalar subquery (broadcast_scalars — no
     unpartitioned window)."""
     from pyspark.sql import functions as F
 

@@ -279,6 +279,7 @@ def ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, "embeddings", sf_dir)
         cnt = emb.count()
         k = max(PQ_K, IVFPQ_CELLS, (3 * cnt) // 4)
+        # eager: a store build, run once per source fingerprint
         cut = (emb.orderBy("vec_id").limit(int(k))
                .agg(F.max("vec_id")).collect()[0][0])
         base = emb.filter(F.col("vec_id") <= cut)

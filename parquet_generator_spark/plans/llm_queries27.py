@@ -163,7 +163,7 @@ def dsir_importance_weights(spark: SparkSession,
 
     Scale: ONE token explode feeds both the B-row distribution agg
     and the scoring join; the distribution frame is 128 rows and
-    BROADCAST, totals enter as plan literals (broadcast_scalars),
+    BROADCAST, totals enter as a scalar subquery (broadcast_scalars),
     so the only wide shuffle is the per-doc rollup — the same
     two-pass shape DSIR runs over its full corpus."""
     from parquet_generator_spark.operators.util import (
@@ -393,6 +393,7 @@ def quality_classifier_gd(spark: SparkSession,
         z = (f"({w[0]!r} + {w[1]!r} * ({x1}) + {w[2]!r} * ({x2}) "
              f"+ {w[3]!r} * ({x3}))")
         resid = f"(1.0 / (1.0 + exp(-{z})) - ({y}))"
+        # eager: each round's weights are the next round's literals
         row = staged.agg(
             F.expr(f"sum({resid})").alias("g0"),
             F.expr(f"sum({resid} * ({x1}))").alias("g1"),

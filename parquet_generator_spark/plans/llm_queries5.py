@@ -360,7 +360,7 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("w2").isNull(), F.col("cnt")))
         .alias("t_w"),
         F.sum(F.when(F.col("w2").isNotNull(), F.col("cnt")))
-        .alias("t_p")).first()
+        .alias("t_p"))
     pair_cnt = (model.filter(F.col("w2").isNotNull()
                              & (F.col("cnt") >= PMI_MIN_COUNT))
                 .select("w1", "w2", F.col("cnt").alias("c_xy")))
@@ -369,15 +369,14 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.col("cnt").alias("c_w")))
     u1 = uni.select(F.col("w").alias("w1"), F.col("c_w").alias("c_x"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("c_w").alias("c_y"))
-    t_w, t_p = F.lit(tot["t_w"]), F.lit(tot["t_p"])
+    t_w, t_p = F.col("t_w"), F.col("t_p")
     pmi = (F.log2((F.col("c_xy").cast("double") / t_p)
                   / ((F.col("c_x").cast("double") / t_w)
                      * (F.col("c_y").cast("double") / t_w))))
     # u1/u2 are VOCAB-cardinality unigram tables — no broadcast hint
     # (billions of distinct tokens at web scale); the w1/w2 equi-joins
     # shuffle on the word key, and AQE still broadcasts small vocabs.
-    return (pair_cnt.join(u1, "w1")
-            .join(u2, "w2")
+    return (broadcast_scalars(pair_cnt.join(u1, "w1").join(u2, "w2"), tot)
             .select("w1", "w2", "c_xy",
                     F.round(pmi, 3).alias("pmi"))
             .orderBy("w1", "w2"))
@@ -503,10 +502,9 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan prunes everything else), per-doc tf agg, term df agg
     (query-term cardinality, bounded by |query| — joined without a
     forced hint; AQE broadcasts the 3-row frame at runtime), per-doc
-    length from the same token pass, corpus-wide aggs as literals.
-    Ranking compares
-    the ROUNDED score with doc_id tie-break, so float ulp noise
-    can't reorder engines.
+    length from the same token pass, corpus-wide aggs as one scalar
+    subquery. Ranking compares the ROUNDED score with doc_id
+    tie-break, so float ulp noise can't reorder engines.
 
     Scale note: the top-k is taken with ``orderBy(...).limit(k)``,
     which Catalyst compiles to ``TakeOrderedAndProject`` — each
@@ -522,9 +520,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle at all. ONE corpus tokenize pass builds the narrow
     (doc_id, dl, tf_0..tf_q) frame (checkpointed, model-sized per
     row); one agg over it yields n_docs/avgdl AND the per-term
-    document frequencies (query-cardinality scalars, so idf enters
-    the plan as constant-folded literals — the same Math.log the
-    per-row expression used); the score is then a pure projection
+    document frequencies (query-cardinality scalars, attached as one
+    scalar subquery); the score is then a pure projection
     + TakeOrderedAndProject. The round-13 window-over-(doc,term)
     shape carried the whole tf stream through a sort exchange with
     no partial aggregation and regressed the bench 2.2x."""
@@ -542,27 +539,23 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.avg("dl").alias("avgdl"),
         *[F.sum((F.col(c) > 0).cast("long")).alias(f"_df{i}")
-          for i, c in enumerate(tf_cols)]).collect()[0]
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
+          for i, c in enumerate(tf_cols)])
 
     def contrib(i: int) -> F.Column:
-        # idf constant-folds at plan time (df is a literal); tf=0
-        # terms contribute exactly 0.0, matching the former
+        # tf=0 terms contribute exactly 0.0, matching the former
         # explode/groupBy shape where absent terms emitted no row
-        tf = F.col(tf_cols[i])
-        idf = F.log(1.0 + (F.lit(n_docs) - F.lit(stats[f"_df{i}"])
-                           + 0.5)
-                    / (F.lit(stats[f"_df{i}"]) + 0.5))
+        tf, dfreq = F.col(tf_cols[i]), F.col(f"_df{i}")
+        idf = F.log(1.0 + (F.col("n_docs") - dfreq + 0.5) / (dfreq + 0.5))
         return (idf * tf * (BM25_K1 + 1.0)
                 / (tf + BM25_K1
                    * (1.0 - BM25_B
-                      + BM25_B * F.col("dl") / F.lit(avgdl))))
+                      + BM25_B * F.col("dl") / F.col("avgdl"))))
 
     any_hit = F.greatest(*[F.col(c) for c in tf_cols]) > 0
     score = contrib(0)
     for i in range(1, len(BM25_TERMS)):
         score = score + contrib(i)
-    scored = (per_doc.filter(any_hit)
+    scored = (broadcast_scalars(per_doc.filter(any_hit), stats)
               .select("doc_id", F.round(score, 4).alias("score")))
     top = (scored.orderBy(F.desc("score"), F.asc("doc_id"))
            .limit(BM25_TOP))

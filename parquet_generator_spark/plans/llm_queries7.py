@@ -35,7 +35,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model on (w1, w2) — an equi-join AQE broadcasts while the
     vocabulary is small and shuffles when it isn't. P(w2|w1) =
     (c12 + 1) / (c1 + V) with c1 = bigram-left count and V = corpus
-    vocabulary size (attached as a plan literal)."""
+    vocabulary size (attached as a scalar subquery)."""
     docs = widen_if_narrow(load_table(spark, "documents", sf_dir))
     return bigram_logprob_frame(docs)
 

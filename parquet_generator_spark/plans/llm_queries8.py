@@ -137,8 +137,8 @@ def data_mixture_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus 'data card': per-source document / token / byte
     counts with mixture shares — the report every training-data
     readme publishes. One grouped pass; the totals for the share
-    columns are a one-row scalar aggregate attached as plan
-    literals."""
+    columns are a one-row scalar aggregate attached as a scalar
+    subquery."""
     from parquet_generator_spark.operators.text import toks_spark
     from parquet_generator_spark.operators.util import broadcast_scalars
     docs = load_table(spark, "documents", sf_dir)
@@ -260,7 +260,7 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     distincts = li.agg(*[F.countDistinct(c).alias(f"{c}__distinct")
                          for c in PROFILE_COLS])
-    one = broadcast_scalars(li.agg(*plain), distincts)
+    one = broadcast_scalars(distincts, li.agg(*plain))
     structs = ", ".join(
         f"struct('{c}' AS column_name, {c}__rows AS n_rows, "
         f"{c}__nulls AS n_nulls, {c}__distinct AS n_distinct, "

@@ -64,7 +64,7 @@ def table_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     distincts = li.agg(*[F.countDistinct(c).alias(f"{c}__exact")
                          for c in PROFILE_COLS])
-    one = broadcast_scalars(profile_frame_approx(li), distincts)
+    one = broadcast_scalars(distincts, profile_frame_approx(li))
     structs = ", ".join(
         f"struct('{c}' AS column_name, {c}__rows AS n_rows, "
         f"{c}__nulls AS n_nulls, "

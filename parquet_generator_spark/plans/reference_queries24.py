@@ -305,6 +305,7 @@ def dsl_variable_width_histogram(spark: SparkSession,
     traffic = K floats per round."""
     orders = load_table(spark, "orders", sf_dir)
     vals = orders.select(F.col("o_totalprice").alias("v"))
+    # eager: the range seeds the centroid literals each round's CASE uses
     mm = vals.agg(F.min("v").alias("m"), F.max("v").alias("M")) \
         .collect()[0]
     m, mx = float(mm["m"]), float(mm["M"])

@@ -85,8 +85,8 @@ def dsl_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     analyzed event_type field: count, min/max/avg length in one
     scalar aggregate, and the Shannon entropy of the corpus-wide
     CHARACTER distribution from one (char)-keyed aggregation over a
-    sequence explode (no UDF; the total char count enters as a plan
-    literal — no global window)."""
+    sequence explode (no UDF; the total char count enters as a scalar
+    subquery — no global window)."""
     from parquet_generator_spark.operators import cache
     from parquet_generator_spark.operators.util import broadcast_scalars
     ev = load_table(spark, "events", sf_dir)
@@ -96,7 +96,7 @@ def dsl_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.length("event_type")).alias("max_length"),
         F.round(F.avg(F.length("event_type")), 4).alias("avg_length"))
     # the char-distribution model is alphabet-bounded after the
-    # groupBy — checkpoint it so the total collect and the entropy
+    # groupBy — checkpoint it so the total subquery and the entropy
     # aggregate share ONE explode pass (round 14: un-barriered, the
     # explode+groupBy lineage re-ran for the entropy branch). Lazy:
     # the first consumer is the full-scan sum aggregate.
@@ -105,11 +105,12 @@ def dsl_string_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(sequence(1, length(event_type)), "
             "i -> substring(event_type, i, 1))")).alias("ch"))
         .groupBy("ch").agg(F.count(F.lit(1)).alias("n")), eager=False)
-    total = chars.agg(F.sum("n")).collect()[0][0]  # bounded scalar
-    ent = chars.agg(F.round(
-        -F.sum((F.col("n") / F.lit(float(total)))
-               * F.log2(F.col("n") / F.lit(float(total)))), 4)
-        .alias("entropy"))
+    total = F.col("total")
+    ent = broadcast_scalars(
+        chars, chars.agg(F.sum("n").cast("double").alias("total"))
+    ).agg(F.round(-F.sum((F.col("n") / total)
+                         * F.log2(F.col("n") / total)), 4)
+          .alias("entropy"))
     return broadcast_scalars(lens, ent)
 
 

@@ -7,7 +7,7 @@ over a bounded sample), `filters` with `other_bucket`, and
 Scale posture: pipeline aggs operate over the BUCKET frame (bounded
 by the calendar span, never data-cardinality); the sampler's sample
 is TakeOrderedAndProject (per-partition top-k + k-row driver merge);
-bucket min/max scalars attach as plan literals, no global windows.
+bucket min/max scalars attach as scalar subqueries, no global windows.
 """
 
 from __future__ import annotations
@@ -63,8 +63,8 @@ FROM daily
 def dsl_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`normalize` pipeline agg (ES 7.9+, method rescale_0_1): each
     daily bucket's revenue rescaled to [0, 1] over the series. The
-    series min/max are a one-row scalar aggregate attached as plan
-    literals — no global window over the bucket frame."""
+    series min/max are a one-row scalar aggregate attached as a
+    scalar subquery — no global window over the bucket frame."""
     ev = load_table(spark, "events", sf_dir)
     daily = _daily(ev)
     mm = daily.agg(F.min("revenue").alias("_mn"),

@@ -261,7 +261,9 @@ def lenient_decode_avro(col, avsc: str | dict):
 
     record = json.loads(avsc) if isinstance(avsc, str) else avsc
     carrier = _carrier_type(record)
-    parsed = F.from_json(col, carrier, {"mode": "PERMISSIVE"})
+    # PERMISSIVE is the default; with no options Catalyst can prune
+    # the parsed schema to the fields read downstream
+    parsed = F.from_json(col, carrier)
     return F.when(parsed.isNotNull(), F.struct(*[
         _convert_expr(parsed[f["name"]], f["type"]).alias(f["name"])
         for f in record["fields"]]))

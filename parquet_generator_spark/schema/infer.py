@@ -142,8 +142,10 @@ def promote_nullable(dt: T.DataType) -> T.DataType:
 
 def lenient_decode(col: Column, schema: T.StructType) -> Column:
     """Decode a JSON string column against ``schema`` leniently:
-    missing fields -> null, type mismatches -> null (PERMISSIVE),
-    extra fields dropped. The Spark-native ExtendedJsonDecoder
-    (decode/ExtendedJsonDecoder.java): one JVM-side expression,
-    no Python in the loop."""
-    return F.from_json(col, schema, {"mode": "PERMISSIVE"})
+    missing fields -> null, type mismatches -> null (PERMISSIVE,
+    from_json's default), extra fields dropped. The Spark-native
+    ExtendedJsonDecoder (decode/ExtendedJsonDecoder.java): one
+    JVM-side expression, no Python in the loop. No options are
+    passed: Catalyst prunes a from_json schema to the fields read
+    downstream only when the expression has none."""
+    return F.from_json(col, schema)

@@ -121,79 +121,3 @@ def test_empty_topic_yields_empty_frame(spark, tmp_path):
     assert df.count() == 0
     assert end == {}
 
-
-def test_kafka_adapter_options_from_ledger(spark, tmp_path):
-    """The adapter renders the connector's exact option dict FROM
-    contract state: startingOffsets JSON mirrors the committed
-    ledger (earliest sentinel for never-committed partitions),
-    maxOffsetsPerTrigger scales the per-partition bound by the
-    fan-out, failOnDataLoss pinned off."""
-    import json
-
-    from parquet_generator_spark.sources import kafka_adapter as ka
-
-    topic = str(tmp_path / "t7")
-    group = str(tmp_path / "g7")
-    _seed_topic(topic)
-    # consume one bounded batch and commit, like a running consumer
-    bus.consume_once(spark, topic, group, lambda df: df.count(),
-                     max_records_per_partition=4)
-    committed = bus.read_committed(group)
-    assert committed == {0: 4, 1: 4, 2: 4}
-
-    parts = bus.discover_partitions(topic) + [9]  # 9: never seen
-    opts = ka.kafka_options("broker1:9092,broker2:9092", "events",
-                            committed, parts,
-                            max_records_per_partition=4)
-    assert opts["kafka.bootstrap.servers"] == \
-        "broker1:9092,broker2:9092"
-    assert opts["subscribe"] == "events"
-    assert opts["failOnDataLoss"] == "false"
-    assert json.loads(opts["startingOffsets"]) == {
-        "events": {"0": 4, "1": 4, "2": 4, "9": ka.EARLIEST}}
-    assert opts["maxOffsetsPerTrigger"] == str(4 * 4)
-
-
-def test_kafka_adapter_normalizes_wire_schema(spark, tmp_path):
-    """A frame shaped like the Kafka connector's output (binary
-    key/value, timestamp) normalizes to RECORD_SCHEMA and matches
-    the canned broker's fetch_batch for the same records — plans
-    written against either source see identical rows."""
-    import datetime
-
-    from parquet_generator_spark.sources import kafka_adapter as ka
-
-    topic = str(tmp_path / "t8")
-    bus.produce(topic, 0, [("k0", "v0", "2024-01-01 00:00:00"),
-                           ("k1", "v1", "2024-01-01 00:00:01")])
-    contract_rows = sorted(
-        tuple(r) for r in
-        bus.fetch_batch(spark, topic, {})[0]
-        .select("partition", "offset", "key", "value", "ts")
-        .collect())
-
-    wire = spark.createDataFrame(
-        [(bytearray(b"k0"), bytearray(b"v0"), "events", 0, 0,
-          datetime.datetime(2024, 1, 1, 0, 0, 0)),
-         (bytearray(b"k1"), bytearray(b"v1"), "events", 0, 1,
-          datetime.datetime(2024, 1, 1, 0, 0, 1))],
-        "key binary, value binary, topic string, partition int, "
-        "offset long, timestamp timestamp")
-    got = sorted(tuple(r)
-                 for r in ka.normalize_kafka_frame(wire).collect())
-    assert got == contract_rows
-    assert [f.name for f in ka.normalize_kafka_frame(wire).schema] \
-        == [f.name for f in bus.RECORD_SCHEMA.fields]
-
-
-def test_kafka_adapter_read_stream_surfaces_missing_jar(spark, tmp_path):
-    """Without the connector jar the entry raises the pointed
-    message (not an opaque ClassNotFound), keeping the canned-broker
-    path as the documented fallback."""
-    import pytest as _pytest
-
-    from parquet_generator_spark.sources import kafka_adapter as ka
-
-    with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
-        ka.read_stream(spark, "localhost:9092", "events",
-                       str(tmp_path / "g9"), [0, 1])

@@ -62,6 +62,30 @@ def test_discover_rules_terms_agg(spark, dated_fixture_dir):
     assert set(rules[0].asDict()) == {"key", "doc_count"}
 
 
+def test_discover_rules_parses_only_the_rule_field(spark):
+    """``discover`` reads one field of each decoded document, so the
+    optimized plan's from_json parses that field alone: Catalyst
+    prunes the schema only when the decode passes no options."""
+    import re
+
+    from pyspark.sql import types as T
+
+    from parquet_generator_spark.sources.es_source import decode_docs
+
+    schema = T.StructType([T.StructField(n, T.StringType())
+                           for n in ("msg", "rule_name", "user", "ip")])
+    raw = spark.createDataFrame(
+        [('{"rule_name": "r1", "msg": "m", "user": "u", "ip": "i"}',)],
+        "doc string")
+    df = discover_rules(decode_docs(raw, "doc", schema))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    decodes = re.findall(r"from_json\(StructField\(([^,]+),", plan)
+    # one decode in the projection, one in the pushed-down null filter
+    assert decodes and set(decodes) == {"rule_name"}, plan
+    assert "StructField(msg" not in plan
+    assert [(r["key"], r["doc_count"]) for r in df.collect()] == [("r1", 1)]
+
+
 def test_dated_parquet_pipeline_end_to_end(spark, tmp_path,
                                            dated_fixture_dir):
     rule = "office365_signin"

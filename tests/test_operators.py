@@ -618,3 +618,31 @@ def test_palette_png_decodes_via_plte_lookup():
     got = _decode_png(png)
     assert got.shape == (6, 9, 3)
     assert np.array_equal(got, palette[idx])
+
+
+@pytest.mark.parametrize("n_scalar_rows", [0, 1])
+def test_broadcast_scalars_matches_duckdb_scalar_subquery(spark,
+                                                          n_scalar_rows):
+    """broadcast_scalars is an uncorrelated scalar subquery: one row
+    attaches its values to every row, and ZERO rows attach NULLs —
+    what DuckDB's ``(SELECT ...)`` gives for the same frames."""
+    from parquet_generator_spark.operators.util import broadcast_scalars
+
+    rows = [(1, "a"), (2, "b"), (3, None)]
+    df = spark.createDataFrame(rows, "k int, s string")
+    scalars = (df.filter(F.col("k") <= n_scalar_rows)
+               .select((F.col("k") * 10).alias("m"),
+                       F.lit("x").alias("tag")))
+    got = sorted(tuple(r) for r in broadcast_scalars(df, scalars)
+                 .collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (k INTEGER, s VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = sorted(con.execute(f"""
+        WITH sc AS (SELECT k * 10 AS m, 'x' AS tag FROM t
+                    WHERE k <= {n_scalar_rows})
+        SELECT t.*, (SELECT m FROM sc) AS m, (SELECT tag FROM sc) AS tag
+        FROM t""").fetchall())
+    assert got == want
+    assert (got[0][2] is None) == (n_scalar_rows == 0)

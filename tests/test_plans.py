@@ -352,7 +352,8 @@ def test_no_empty_partition_windows_in_source():
     """Tripwire for the scalar-aggregate-as-global-window
     anti-pattern: ``Window.partitionBy()`` (empty spec) funnels its
     whole input through one partition. Corpus-scale uses were
-    converted to eager one-row scalar attachment (broadcast_scalars).
+    converted to one-row scalar attachment (broadcast_scalars, a
+    scalar subquery).
 
     Allowlisted sites (round 14): windows whose input is ALREADY
     LIMITed to the rank-window cap (retriever/fusion legs, <= 40
@@ -440,12 +441,72 @@ def test_stemmer_sql_plumbing_has_one_owner():
                                   "dsl_significant_terms",
                                   "embedding_norm_outliers"])
 def test_scalar_literal_queries_have_no_nested_loop(spark, name):
-    """Queries whose corpus-wide scalars are attached as plan
-    literals (broadcast_scalars) must stay free of the nested-loop
+    """Queries whose corpus-wide scalars are attached as a scalar
+    subquery (broadcast_scalars) must stay free of the nested-loop
     join a crossJoin(broadcast(one_row)) would reintroduce."""
     plan = formatted_plan(spark, name)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+# keys whose every plan-build job was the eager collect of a
+# broadcast_scalars call before it became a scalar subquery
+SCALAR_ONLY_BUILD_KEYS = [
+    "benford_digits", "data_mixture_report", "doc_keywords", "drift_psi",
+    "dsl_change_point", "dsl_global_agg", "dsl_more_like_this",
+    "dsl_normalize", "dsl_parent_id", "dsl_significant_terms",
+    "dsl_significant_text", "embedding_norm_outliers", "epoch_plan",
+    "esql_change_point", "lang_source_chi2", "pareto_cumshare",
+    "q15_top_supplier", "q22_idle_customers", "rfm_segmentation",
+    "source_temperature_sample", "table_profile", "table_profile_approx",
+    "vocab_coverage"]
+# keys whose scalars were collected to literals by hand in their own
+# plan module; their remaining build jobs are lineage barriers
+REROUTED_SCALAR_KEYS = ["cooccurrence_pmi", "bm25_topk",
+                        "gini_source_balance", "cluster_purity",
+                        "dsl_string_stats"]
+
+
+def build_job_stages(spark, name: str) -> list[list[str]]:
+    """Stage names of every job fired while ``name``'s plan is BUILT
+    (no action on the result), one list per job. The tables are read
+    first, so a first read's parquet schema job is not counted."""
+    from parquet_generator_spark.operators import cache
+    from parquet_generator_spark.sources.catalog import load_tables
+
+    load_tables(spark, SF_DIR)
+    sc = spark.sparkContext
+    group = f"build:{name}"
+    with cache.scope():
+        sc.setJobGroup(group, group)
+        try:
+            entrymod.queries()[name](spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return [[tracker.getStageInfo(s).name
+             for s in tracker.getJobInfo(j).stageIds]
+            for j in sorted(tracker.getJobIdsForGroup(group))]
+
+
+@pytest.mark.parametrize("name", SCALAR_ONLY_BUILD_KEYS)
+def test_scalar_attach_runs_no_build_job(spark, name):
+    """Tripwire: attaching a scalar is lazy, so building these keys
+    runs no Spark job at all."""
+    assert build_job_stages(spark, name) == []
+
+
+@pytest.mark.parametrize("name", REROUTED_SCALAR_KEYS)
+def test_rerouted_scalars_run_no_build_job(spark, name):
+    """Tripwire: no build job of these keys is called from their own
+    plan module, where their scalars used to be collected."""
+    import inspect
+    import os
+
+    module = os.path.basename(
+        inspect.getsourcefile(entrymod.queries()[name]))
+    stages = build_job_stages(spark, name)
+    assert not [j for j in stages if any(module in s for s in j)], stages
 
 
 # the only queries allowed a BroadcastNestedLoopJoin: deliberately

@@ -63,7 +63,7 @@ def test_infer_odd_docs_value_identity(spark):
     assert infer_json_schema(spark, docs) == merged
     assert infer_json_schema(spark, docs, mode="widest") == T.StructType(
         [merged["a"], merged["f"]])
-    for odd in (None, "{bad json", '"just a string"'):
+    for odd in (None, "{bad json", '{"g": 1, "h": ', '"just a string"'):
         for mode in ("merge", "widest"):
             assert infer_json_schema(spark, [odd], mode=mode) == \
                 T.StructType([])
@@ -142,6 +142,8 @@ def test_lenient_decode_handles_every_malformation(spark):
         ('{"name": "bad-type", "sev": "x"}',),  # type mismatch -> null
         ('{"name": "extra", "sev": 1, "junk": true}',),  # extra dropped
         ('{not json at all',),                # malformed -> null struct
+        ('{"name": "cut", "sev": 4',),        # truncated -> null struct
+        ('[{"name": "arr", "sev": 1}]',),     # top-level array -> nulls
         (None,),                              # null input -> null
     ]
     df = spark.createDataFrame(rows, "doc string")
@@ -151,7 +153,8 @@ def test_lenient_decode_handles_every_malformation(spark):
     # the decoder never throws (ExtendedJsonDecoder.java parity):
     # every malformation degrades to nulls
     assert got == [("ok", 3), ("missing-sev", None), ("bad-type", None),
-                   ("extra", 1), (None, None), None]
+                   ("extra", 1), (None, None), (None, None), (None, None),
+                   None]
 
 
 def test_lenient_decode_nested_depth_defaults(spark):
