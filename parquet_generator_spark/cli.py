@@ -15,12 +15,13 @@ subcommands a user scripts instead:
         --base-dir ./indices --prefix office365_signin \
         --days 7 --today 2024-01-30 --rule office365-signin --out ./out
 
-`discover` prints the terms-agg rule table (Bootstrap.java:270-286);
-`export` runs infer -> nullable-promote -> schema.asvc -> lenient
-decode -> match_phrase filter -> per-date parquet
-(Bootstrap.java:288-337 / EsParquetWriter.java); `export-dated` is
-the same export over already-parquet dated sources (the
-office365_signin fixture layout).
+`discover` prints the terms-agg rule table (Bootstrap.java:270-286)
+from the one decoded `--field`, with no schema inference (so it has
+no `--sample-ratio`); `export` runs infer -> nullable-promote ->
+schema.asvc -> lenient decode -> match_phrase filter -> one parquet
+file per date (Bootstrap.java:288-337 / EsParquetWriter.java);
+`export-dated` is the same export over already-parquet dated sources
+(the office365_signin fixture layout).
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import sys
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _load_source(spark: SparkSession, path: str,
@@ -43,22 +45,32 @@ def _load_source(spark: SparkSession, path: str,
     return spark.read.parquet(path)
 
 
+def _field_schema(path: str) -> T.StructType:
+    """The one-field decode schema of a dotted field path: each dot
+    nests a struct, and the leaf is a string, so any JSON scalar
+    (a number too) decodes to its text and prints as a bucket key."""
+    dt: T.DataType = T.StringType()
+    for name in reversed(path.split(".")):
+        dt = T.StructType([T.StructField(name, dt)])
+    return dt
+
+
 def _cmd_discover(spark: SparkSession,
                   args: argparse.Namespace) -> int:
     from parquet_generator_spark.etl import discover_rules
-    from parquet_generator_spark.schema.infer import infer_json_schema
     from parquet_generator_spark.sources.es_source import decode_docs
 
     df = _load_source(spark, args.source, args.doc_column)
+    # the terms agg reads one field, so only that field is decoded: no
+    # schema-inference job, one scan (Bootstrap.java:270-286 lists
+    # rules before any schema work too)
     if args.doc_column in df.columns:
-        schema = infer_json_schema(spark, df, column=args.doc_column,
-                                   sample_ratio=args.sample_ratio)
-        df = decode_docs(df, args.doc_column, schema)
+        df = decode_docs(df, args.doc_column, _field_schema(args.field))
     rows = discover_rules(df, field=args.field,
                           size=args.size).collect()
     print(f"{'rule':40s} {'doc_count':>10}")
     for r in rows:
-        print(f"{r['key']:40s} {r['doc_count']:>10}")
+        print(f"{r['key']!s:40} {r['doc_count']:>10}")
     return 0
 
 
@@ -99,7 +111,6 @@ def build_parser() -> argparse.ArgumentParser:
     d.add_argument("--doc-column", default="doc")
     d.add_argument("--field", default="rule_name")
     d.add_argument("--size", type=int, default=10)
-    d.add_argument("--sample-ratio", type=float, default=0.1)
 
     e = sub.add_parser("export", help="export one rule to parquet")
     e.add_argument("--source", required=True)

@@ -9,7 +9,8 @@ Reference flow (Bootstrap.java:234-337):
 Spark flow (this module): the same steps, but index fan-out is a
 partition column instead of a thread pool, schema inference merges
 across all samples instead of widest-doc-wins, and the write is a
-single distributed ``partitionBy`` job.
+``rebalance`` on the date followed by a distributed ``partitionBy``,
+one file per date as the reference writes one per index.
 """
 
 from __future__ import annotations
@@ -76,10 +77,18 @@ def json_docs_to_parquet(
     write per-date parquet + schema.asvc sidecar. Pass
     ``analyzed_columns`` to materialize index-time analyzed token
     arrays into the written dataset (:func:`materialize_analyzed`).
+    Raises ``ValueError`` when the inferred schema lacks ``rule_field``.
     """
     schema = infer_json_schema(spark, docs_df, column=doc_column,
                                sample_ratio=sample_ratio)
     decoded = decode_docs(docs_df, doc_column, schema)
+    if rule_field.split(".")[0].lower() not in {
+            c.lower() for c in decoded.columns}:
+        raise ValueError(
+            f"rule_field {rule_field!r} is not in the schema inferred "
+            f"from a sample_ratio={sample_ratio} sample of the "
+            f"documents; raise sample_ratio (a small input can sample "
+            f"no document at all)")
     filtered = decoded.filter(match_phrase(rule_field, rule_name))
     if analyzed_columns:
         filtered = materialize_analyzed(filtered, analyzed_columns)

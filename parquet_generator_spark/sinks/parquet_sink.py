@@ -6,7 +6,8 @@ saves ``<rule>/schema.asvc`` alongside. Spark-first: a single
 ``partitionBy(date_col)`` write produces the same
 one-directory-per-day layout, but distributed — each task streams
 its partition, no driver funnel — and the sidecar captures the
-all-nullable Avro schema.
+all-nullable Avro schema. A ``rebalance`` on the date column ahead of
+the write gives one file per date instead of one per scan task.
 """
 
 from __future__ import annotations
@@ -25,8 +26,15 @@ def write_partitioned(df: DataFrame, out_dir: str, name: str,
     """Write ``df`` under ``out_dir`` partitioned by ``partition_col``
     with a ``schema.asvc`` sidecar. Returns the dataset path."""
     path = os.path.join(out_dir, name)
+    partitioned = bool(partition_col) and partition_col in df.columns
+    if partitioned:
+        # rows of one date meet in one task, so each date is one file
+        # (the reference's one file per index) instead of one per scan
+        # task; AQE coalesces small dates and splits a skewed one at
+        # its advisory partition size
+        df = df.hint("rebalance", partition_col)
     writer = df.write.mode(mode)
-    if partition_col and partition_col in df.columns:
+    if partitioned:
         writer = writer.partitionBy(partition_col)
     writer.parquet(path)
 

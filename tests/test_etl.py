@@ -16,6 +16,7 @@ from parquet_generator_spark.etl import (
     json_docs_to_parquet,
 )
 from parquet_generator_spark.schema.avro_io import avro_to_struct
+from parquet_generator_spark.sinks.parquet_sink import write_partitioned
 from parquet_generator_spark.sources.dated import (
     parse_dated_name,
     recent_n_days,
@@ -123,6 +124,34 @@ def test_json_docs_pipeline(spark, tmp_path):
     written = spark.read.parquet(out)
     assert written.count() == 50
     assert set(written.columns) >= {"rule_name", "sev", "msg", "source_date"}
+
+
+def test_json_docs_empty_sample_names_rule_field(spark, tmp_path):
+    """At the default sample_ratio a 50-document input samples no
+    document, so the inferred schema has no rule field: the error names
+    rule_field and sample_ratio instead of an unresolved column."""
+    docs_df = spark.createDataFrame(
+        [(json.dumps({"rule_name": "login-anomaly", "i": i}),
+          "2024-01-01") for i in range(50)],
+        "doc string, source_date string")
+    with pytest.raises(ValueError, match="rule_field.*sample_ratio"):
+        json_docs_to_parquet(spark, docs_df, "login-anomaly",
+                             str(tmp_path))
+
+
+def test_write_partitioned_writes_one_file_per_date(spark, tmp_path):
+    """Rows of one date meet in one task before the write, so each
+    date directory holds one file, not one per input partition."""
+    df = spark.createDataFrame(
+        [(i, f"2024-01-0{i % 3 + 1}") for i in range(120)],
+        "x int, source_date string").repartition(4)
+    out = write_partitioned(df, str(tmp_path), "t")
+    files = [f for _, _, fs in os.walk(out) for f in fs
+             if f.startswith("part-") and f.endswith(".parquet")]
+    assert len(files) == 3
+    got = spark.read.parquet(out).groupBy("source_date").count()
+    assert sorted((str(r[0]), r[1]) for r in got.collect()) == [
+        ("2024-01-01", 40), ("2024-01-02", 40), ("2024-01-03", 40)]
 
 
 def test_json_docs_passthrough_column_wins_name_clash(spark, tmp_path):
