@@ -19,6 +19,9 @@ attributable:
   list grows round-over-round) is distinguishable from plan
   regressions: a plan regression reproduces in isolation
   (SPARK_GRAFT_BENCH_KEYS=<name>), session drift does not.
+- A query's time is plan build plus collect; BENCH_FULL.json `layers`
+  records the median run's split and its job and stage counters
+  (scripts/keyrun.py), read after the timed region.
 - The box itself swings ~10% run-to-run: compare within-run ratios,
   not absolute seconds, across rounds.
 """
@@ -32,8 +35,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from parquet_generator_spark.operators import cache  # noqa: E402
 from parquet_generator_spark.session import get_spark  # noqa: E402
+from scripts.keyrun import KeyRunner, median_run  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -500,13 +503,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
-    # Warmup at the smallest SF: JVM/codegen JIT plus the one-time
-    # Python-worker spawn (numpy/pandas import) for the Pandas-UDF
-    # operators, so the first UDF query isn't charged for startup.
-    warmup_dir = "/root/testdata/sf0.001"
-    for wq in ("q1_pricing_summary", "dedup_minhash", "dedup_embedding"):
-        qs[wq](spark, warmup_dir).collect()
-    cache.release_all(spark)
+    runner = KeyRunner(spark)
+    runner.warm_up(qs)
 
     # Median-of-N per query (N=3 default): single-shot totals swung
     # +/-25% run-to-run on a loaded box, which made per-query
@@ -525,34 +523,28 @@ def main() -> None:
     rows: dict[str, int] = {}
     errors: dict[str, str] = {}
     offsets: dict[str, float] = {}
+    layers: dict[str, dict] = {}
     t_session = time.perf_counter()
     for name in headline:
         offsets[name] = round(time.perf_counter() - t_session, 1)
-        per: list[float] = []
         t0 = time.perf_counter()
         try:
-            for _ in range(n_runs):
-                t1 = time.perf_counter()
-                n = len(qs[name](spark, sf_dir).collect())
-                per.append(time.perf_counter() - t1)
+            runs = [runner.run_key(name, qs[name], sf_dir)
+                    for _ in range(n_runs)]
         except Exception as exc:  # one bad query must not kill the run
-            cache.release_all(spark)
             timings[name] = round(time.perf_counter() - t0, 3)
             errors[name] = f"{type(exc).__name__}: {exc}"[:200]
             print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
             continue
-        timings[name] = round(sorted(per)[len(per) // 2], 3)
-        mins[name] = round(min(per), 3)
-        maxs[name] = round(max(per), 3)
-        rows[name] = n
-        # Release the query's tracked localCheckpoint blocks now that
-        # its results are collected — without this the single-session
-        # sweep accumulates storage blocks for the whole run (the
-        # round-8 mid-session slowdown band). No query keeps a frame
-        # for a later one, so the release leaves nothing behind.
-        cache.release_all(spark)
+        med = median_run(runs)
+        timings[name] = round(med.total_s, 3)
+        mins[name] = round(min(r.total_s for r in runs), 3)
+        maxs[name] = round(max(r.total_s for r in runs), 3)
+        rows[name] = len(med.rows)
+        # the median run's build/execute split and stage counters
+        layers[name] = {k: round(v, 4) for k, v in med.layers.items()}
         print(f"# {name}: median {timings[name]:.3f}s "
-              f"(min {mins[name]:.3f}s, {n} rows)", file=sys.stderr)
+              f"(min {mins[name]:.3f}s, {rows[name]} rows)", file=sys.stderr)
 
     # Documented-quadratic exactness baselines distort the sf>=1
     # sweep headline (knn_classify is 17% of the r10 sf1 total while
@@ -577,6 +569,7 @@ def main() -> None:
         "sf": sf,
         "order": headline,
         "t_offset": offsets,
+        "layers": layers,
     }
     if quad:
         full["quadratic_baselines"] = quad
@@ -601,28 +594,15 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
+        "queries": {k: round(v, 1) for k, v in timings.items()},
         "sf": sf,
         "n_queries": len(timings),
         "n_runs": n_runs,
         "stat": "median",
-        "detail": "BENCH_FULL.json",
     }
     if quad:
         out["quadratic_total"] = round(sum(quad.values()), 2)
         out["quadratic_baselines"] = sorted(quad)
-    # Solo-control companion (round-10 judge protocol ask): a solo
-    # run recorded at seal time rides along in every in-harness
-    # bench line, so box drift between the solo and harness numbers
-    # is self-documenting and nobody re-litigates it with an ABAB.
-    try:
-        ctl_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "SOLO_CONTROL.json")
-        with open(ctl_path) as fh:
-            out["solo_control"] = json.load(fh)
-    except (OSError, ValueError):
-        pass
     if errors:
         out["n_errors"] = len(errors)
     line = json.dumps(out, separators=(",", ":"))

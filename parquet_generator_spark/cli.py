@@ -33,6 +33,8 @@ from datetime import date
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from parquet_generator_spark.etl import DEFAULT_SAMPLE_RATIO
+
 
 def _load_source(spark: SparkSession, path: str,
                  doc_column: str = "doc") -> DataFrame:
@@ -119,7 +121,8 @@ def build_parser() -> argparse.ArgumentParser:
     e.add_argument("--doc-column", default="doc")
     e.add_argument("--field", default="rule_name")
     e.add_argument("--date-column", default="source_date")
-    e.add_argument("--sample-ratio", type=float, default=0.1)
+    e.add_argument("--sample-ratio", type=float,
+                   default=DEFAULT_SAMPLE_RATIO)
 
     x = sub.add_parser("export-dated",
                        help="export a rule from dated parquet sources")

@@ -26,6 +26,11 @@ from parquet_generator_spark.sinks.parquet_sink import write_partitioned
 from parquet_generator_spark.sources.dated import discover_recent_sources
 from parquet_generator_spark.sources.es_source import decode_docs
 
+# share of the documents schema inference reads, for `cli export` and
+# json_docs_to_parquet alike; an input under about 1/ratio documents can
+# sample none
+DEFAULT_SAMPLE_RATIO = 0.1
+
 
 def discover_rules(df: DataFrame, field: str = "rule_name",
                    size: int = 10) -> DataFrame:
@@ -68,7 +73,7 @@ def json_docs_to_parquet(
     doc_column: str = "doc",
     rule_field: str = "rule_name",
     date_column: str = "source_date",
-    sample_ratio: float = 0.001,
+    sample_ratio: float = DEFAULT_SAMPLE_RATIO,
     analyzed_columns: dict[str, tuple[str, str]] | None = None,
 ) -> str:
     """Full pipeline for a raw JSON-document source: infer a merged

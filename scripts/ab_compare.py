@@ -13,12 +13,11 @@ import importlib.util
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from parquet_generator_spark.operators import cache  # noqa: E402
 from parquet_generator_spark.session import get_spark  # noqa: E402
+from scripts.keyrun import KeyRunner, median_run  # noqa: E402
 
 
 def main() -> None:
@@ -43,20 +42,20 @@ def main() -> None:
 
     spark = get_spark("abtest", {"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
-    fo, fn = old.QUERIES[key], new.QUERIES[key]
-    fo(spark, sf).collect(); cache.release_all(spark)
-    fn(spark, sf).collect(); cache.release_all(spark)
-    res: dict[str, list[float]] = {"old": [], "new": []}
+    runner = KeyRunner(spark)
+    builds = {"old": old.QUERIES[key], "new": new.QUERIES[key]}
+    for build in builds.values():
+        runner.run_key(key, build, sf)
+    res: dict[str, list] = {"old": [], "new": []}
     for _ in range(runs):
-        for tag, fn_ in (("old", fo), ("new", fn)):
-            t0 = time.perf_counter()
-            n = len(fn_(spark, sf).collect())
-            res[tag].append(time.perf_counter() - t0)
-            cache.release_all(spark)
+        for tag, build in builds.items():
+            res[tag].append(runner.run_key(key, build, sf))
     for tag, xs in res.items():
-        s = sorted(xs)
-        print(f"RESULT {key} {tag} median {s[len(s) // 2]:.3f} "
-              f"{[round(x, 2) for x in xs]} rows={n}")
+        med = median_run(xs)
+        print(f"RESULT {key} {tag} median {med.total_s:.3f} "
+              f"(build {med.layers['plans.build_s']:.3f}, "
+              f"{med.layers['plans.build_jobs']} build jobs) "
+              f"{[round(x.total_s, 2) for x in xs]} rows={len(med.rows)}")
     spark.stop()
 
 

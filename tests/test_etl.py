@@ -127,8 +127,8 @@ def test_json_docs_pipeline(spark, tmp_path):
 
 
 def test_json_docs_empty_sample_names_rule_field(spark, tmp_path):
-    """At the default sample_ratio a 50-document input samples no
-    document, so the inferred schema has no rule field: the error names
+    """At sample_ratio=0.001 a 50-document input samples no document,
+    so the inferred schema has no rule field: the error names
     rule_field and sample_ratio instead of an unresolved column."""
     docs_df = spark.createDataFrame(
         [(json.dumps({"rule_name": "login-anomaly", "i": i}),
@@ -136,7 +136,7 @@ def test_json_docs_empty_sample_names_rule_field(spark, tmp_path):
         "doc string, source_date string")
     with pytest.raises(ValueError, match="rule_field.*sample_ratio"):
         json_docs_to_parquet(spark, docs_df, "login-anomaly",
-                             str(tmp_path))
+                             str(tmp_path), sample_ratio=0.001)
 
 
 def test_write_partitioned_writes_one_file_per_date(spark, tmp_path):

@@ -6,60 +6,38 @@ sf0.01 gate never surprises us.
 
 from __future__ import annotations
 
-import math
-
-import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
-from parquet_generator_spark.sources.catalog import TABLES
+from scripts.keyrun import KeyRunner, canon, duck_views, oracle_type_problems
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
-
-
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.6g}"
-    if isinstance(v, bool):
-        return str(int(v))
-    return str(v)
-
-
-def _canon(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
-
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(spark, name):
-    if name not in ORACLES:
-        df = QUERIES[name](spark, SF_DIR)
-        assert df.count() >= 0  # rows-only check, like the driver
-        return
-    sdf = QUERIES[name](spark, SF_DIR)
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
+@pytest.fixture(scope="module")
+def duck():
+    con = duck_views(SF_DIR)
+    yield con
+    con.close()
 
-    con = _duck()
-    cur = con.execute(ORACLES[name])
+
+@pytest.fixture(scope="module")
+def runner(spark):
+    return KeyRunner(spark)
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
+def test_query_matches_oracle(runner, duck, name):
+    run = runner.run_key(name, QUERIES[name], SF_DIR)
+    if name not in ORACLES:
+        assert len(run.rows) >= 0  # rows-only check, like the driver
+        return
+    scols, srows = run.columns, run.rows
+
+    cur = duck.execute(ORACLES[name])
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
 
@@ -67,28 +45,20 @@ def test_query_matches_oracle(spark, name):
         f"{name}: column mismatch spark={sorted(scols)} duck={sorted(dcols)}")
     assert len(srows) == len(drows), (
         f"{name}: row count spark={len(srows)} duck={len(drows)}")
-    assert _canon(srows, scols) == _canon(drows, dcols), (
+    assert canon(srows, scols) == canon(drows, dcols), (
         f"{name}: value mismatch")
 
 
-def test_no_hugeint_oracle_outputs():
+def test_no_hugeint_oracle_outputs(duck):
     """Registry-wide typed-hash tripwire (round-5 multimodal_meta,
     round-9 bpe/k_anonymity/data_card/counter_rate regressions): the
     driver's value hash is TYPED, and a DuckDB output column typed
     HUGEINT (uncast integer ``sum()``) hash-fails against Spark's
     BIGINT even when every value is identical.  DESCRIBE every oracle
     and reject any output type Spark cannot emit."""
-    forbidden = ("HUGEINT", "UHUGEINT", "UBIGINT", "UINTEGER",
-                 "USMALLINT", "UTINYINT")
-    con = _duck()
-    offenders = []
-    for name, sql in sorted(ORACLES.items()):
-        desc = con.execute(
-            f"DESCRIBE SELECT * FROM ({sql}) _q").fetchall()
-        for row in desc:
-            typ = str(row[1]).upper()
-            if any(f in typ for f in forbidden):
-                offenders.append((name, row[0], row[1]))
+    offenders = [(name, col, typ)
+                 for name, sql in sorted(ORACLES.items())
+                 for col, typ in oracle_type_problems(duck, sql)]
     assert not offenders, (
         f"oracle output columns not Spark-emittable (wrap in "
         f"CAST(... AS BIGINT)): {offenders}")

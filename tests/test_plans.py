@@ -231,15 +231,21 @@ def test_embedding_dup_lsh_plan_is_bucket_grouped(spark):
 
 
 def test_registry_consistency():
-    """The three registries can only drift apart silently: every
-    bench HEADLINE entry must exist in queries(), every oracle must
-    have a query, and rows-only entries are a deliberate, named
-    exception list."""
+    """The three registries can only drift apart silently: bench
+    HEADLINE lists every queries() key but one, each once, every
+    oracle must have a query, and rows-only entries are a deliberate,
+    named exception list."""
     import bench
 
     q = set(entrymod.queries())
     o = set(entrymod.oracle_sql())
-    assert set(bench.HEADLINE) <= q, sorted(set(bench.HEADLINE) - q)
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)), sorted(
+        k for k in set(bench.HEADLINE) if bench.HEADLINE.count(k) > 1)
+    # dedup_ngram_jaccard is the one key deliberately left unbenched
+    # (a brute-force exactness twin); any other key missing from
+    # HEADLINE would go unbenched silently
+    assert set(bench.HEADLINE) == q - {"dedup_ngram_jaccard"}, sorted(
+        set(bench.HEADLINE) ^ (q - {"dedup_ngram_jaccard"}))
     assert o <= q, sorted(o - q)
     # every entry is oracle-backed since round 5 (the former
     # rows-only trio gained mirrored/deterministic oracles)
@@ -435,6 +441,47 @@ def test_stemmer_sql_plumbing_has_one_owner():
                          if v != "s"]
     assert copies == [], copies
     assert branches == [], branches
+
+
+def test_key_runner_has_one_owner():
+    """Tripwire: ``scripts/keyrun.py`` owns how a key is run and checked,
+    so no other harness (bench.py, scripts/, the parity sweep) defines
+    its own ``norm``/``canon``, forbidden DuckDB-type list or warm-up key
+    list, or tags and reads Spark jobs itself. bench's HEADLINE is the
+    one key list allowed outside keyrun."""
+    import ast
+    import pathlib
+
+    keys = set(entrymod.queries())
+    root = pathlib.Path(__file__).resolve().parent.parent
+    paths = [root / "bench.py", *sorted((root / "scripts").glob("*.py")),
+             root / "tests" / "test_oracle_parity.py"]
+    job_calls = {"setJobGroup", "setJobDescription", "statusTracker"}
+    found = []
+    for p in paths:
+        if p.name == "keyrun.py":
+            continue
+        tree = ast.parse(p.read_text())
+        headline = {id(n.value) for n in ast.walk(tree)
+                    if isinstance(n, ast.Assign)
+                    and any(getattr(t, "id", "") == "HEADLINE"
+                            for t in n.targets)}
+        for node in ast.walk(tree):
+            where = f"{p.name}:{getattr(node, 'lineno', '?')}"
+            if (isinstance(node, ast.FunctionDef)
+                    and node.name.lstrip("_") in {"norm", "canon"}):
+                found.append(f"{where} defines {node.name}")
+            elif isinstance(node, ast.Attribute) and node.attr in job_calls:
+                found.append(f"{where} calls {node.attr}")
+            elif (isinstance(node, (ast.Tuple, ast.List, ast.Set))
+                  and id(node) not in headline):
+                lits = {e.value for e in node.elts
+                        if isinstance(e, ast.Constant)}
+                if "HUGEINT" in lits:
+                    found.append(f"{where} lists forbidden DuckDB types")
+                if len(lits & keys) >= 2:
+                    found.append(f"{where} lists registry keys")
+    assert found == [], found
 
 
 @pytest.mark.parametrize("name", ["q15_top_supplier", "vocab_coverage",
