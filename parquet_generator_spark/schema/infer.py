@@ -10,11 +10,14 @@ disjoint fields). ``promote_nullable`` mirrors
 Bootstrap.java:221-232 ``enableDefaultValue`` (every field becomes a
 ``["null", T]`` union with null default in the Avro view).
 
-At 100 TB you never infer over the full corpus: ``sample_ratio``
-bounds inference to a scan-only pass with no shuffle, and the
-resulting schema is then applied with ``from_json`` (lenient decode:
-missing fields -> null, extra fields dropped) — one pass, no
-per-row Python.
+``sample_ratio`` bounds how many documents inference PARSES, not how
+many it reads: ``DataFrame.sample`` is a Bernoulli filter over a full
+scan of the input (no shuffle), so inference is a whole extra pass
+over the documents. The schema is then applied with ``from_json``
+(lenient decode: missing fields -> null, extra fields dropped), one
+more pass with no per-row Python, so an export reads its input twice
+(each export of the traced ``etl_export`` benchmark pass reads
+48.0 MB of its 24.0 MB input).
 """
 
 from __future__ import annotations

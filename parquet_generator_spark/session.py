@@ -46,6 +46,17 @@ def get_spark(app_name: str = "parquet-generator-spark",
         # MIN/MAX/COUNT over plain parquet answered from footer stats
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
+        # lower()/upper() through the JVM's case mappings, not ICU's.
+        # The ICU default makes the first UTF8_BINARY lower() in a JVM
+        # run CollationAwareUTF8String's static initializer, which
+        # calls ICU's toTitleCase on all 1,114,112 code points to fill
+        # a table nothing here reads: 3.1-3.6 CPU-s (4 vCPUs) on every
+        # cold pass. UTF8String.toLowerCase has an ASCII fast
+        # path and otherwise calls String.toLowerCase, which gives the
+        # same strings as ICU's root-locale mapping (final sigma and
+        # dotted capital I included) in any non-tr/az/lt JVM locale.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         # Status-store retention (guide §5: the driver should do
         # almost no data work — that includes holding history). Even
         # with the UI off, AppStatusListener/SQLAppStatusListener

@@ -40,7 +40,7 @@ def main() -> None:
     new = importlib.import_module(
         f"parquet_generator_spark.plans.{mod_name}")
 
-    spark = get_spark("abtest", {"spark.ui.showConsoleProgress": "false"})
+    spark = get_spark("abtest")
     spark.sparkContext.setLogLevel("ERROR")
     runner = KeyRunner(spark)
     builds = {"old": old.QUERIES[key], "new": new.QUERIES[key]}

@@ -75,6 +75,12 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("pgs-tests", extra_conf={
         "spark.sql.shuffle.partitions": "8",
+        # The build-job tripwires in test_plans.py read stage names
+        # from the status store. Past get_spark's 500-stage cap the
+        # store evicts SKIPPED stages first, so in a long test session
+        # a key's just-finished build job can lose its skipped stages
+        # before the tripwire reads them. Keep every stage instead.
+        "spark.ui.retainedStages": "100000",
     })
     yield s
     s.stop()

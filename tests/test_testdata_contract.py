@@ -16,6 +16,8 @@ here means: update the loaders/queries AND this contract together.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -76,3 +78,22 @@ def test_table_schema_contract(sf_dir, table):
             f"{table}.{col} at {sf_dir} is {present[col]}, expected "
             f"one of {sorted(allowed)} — physical encoding drifted "
             f"(this is what broke round 3); check catalog.py loaders")
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+@pytest.mark.parametrize("table", sorted(EXPECTED))
+def test_string_columns_are_ascii(sf_dir, table):
+    """Every string value is pure ASCII. Spark's and DuckDB's lower()
+    differ on some non-ASCII text (Greek final sigma, dotted capital I:
+    tests/test_session.py pins the gap), so the oracle parity sweep
+    can only vouch for lower() on ASCII; non-ASCII data arriving here
+    means those keys need a look before their parity means anything."""
+    path = f"{sf_dir}/{table}.parquet"
+    cols = [f.name for f in pq.read_schema(path)
+            if pa.types.is_string(f.type) or pa.types.is_large_string(f.type)]
+    data = pq.read_table(path, columns=cols)
+    non_ascii = {c: pc.sum(pc.invert(pc.string_is_ascii(data[c]))).as_py() or 0
+                 for c in cols}
+    assert not any(non_ascii.values()), (
+        f"{table} at {sf_dir} has non-ASCII strings {non_ascii}: check "
+        f"the lower()-using keys against the Spark/DuckDB lower() gap")
