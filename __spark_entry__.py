@@ -79,9 +79,10 @@ FRONT_KEYS = [
 
 def merge_registries(
         modules: Iterable[ModuleType],
-) -> tuple[dict[str, QueryFn], dict[str, str]]:
-    """Union of the modules' ``QUERIES`` and ``ORACLES``; a key that
-    two modules define raises ``ValueError`` naming both."""
+) -> tuple[dict[str, QueryFn], dict[str, str], dict[str, str]]:
+    """Union of the modules' ``QUERIES`` and ``ORACLES``, plus each
+    key's owning module name; a key that two modules define raises
+    ``ValueError`` naming both."""
     queries: dict[str, QueryFn] = {}
     oracles: dict[str, str] = {}
     owner: dict[str, str] = {}
@@ -94,10 +95,11 @@ def merge_registries(
             owner[key] = mod.__name__
         queries.update(mod.QUERIES)
         oracles.update(mod.ORACLES)
-    return queries, oracles
+    return queries, oracles, owner
 
 
-def _registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
+def _registry(
+) -> tuple[dict[str, QueryFn], dict[str, str], dict[str, str]]:
     """Every ``parquet_generator_spark.plans`` module that defines
     ``QUERIES``, merged."""
     mods = (importlib.import_module(f"{plans.__name__}.{m.name}")

@@ -153,7 +153,7 @@ DATE_EXTRACT(part, date) supports ES|QL's aligned chrono names
 second_of_minute) via EXTRACT(... FROM x), BIGINT-aligned.
 
 CHANGE_POINT follows the dsl_change_point contract
-(reference_queries16.py): a deterministic step-change detector —
+(plans/esdsl_aggs.py): a deterministic step-change detector —
 the split maximizing |mean(before) - mean(after)| over the
 key-ordered series, emitted as ONE row (key, step, score).
 DOCUMENTED DIVERGENCE from ES: ES's ML version annotates rows with
@@ -169,7 +169,7 @@ an outer cross-series aggregate — ``STATS r = AVG(RATE(ctr)) BY
 bucket`` — with the time-series identity passed as
 ``parse_esql(..., tsds=(series_col, time_col, tiebreak_col))`` (the
 analog of the TSDS index's _tsid/@timestamp mapping). Semantics are
-the dsl_counter_rate reset rule (reference_queries23.py): per
+the dsl_counter_rate reset rule (plans/esdsl_aggs.py): per
 series per group, a negative delta means the counter reset and
 climbed from 0; the reset-adjusted increase over the group's
 observed span (epoch-microsecond exact) gives the per-series

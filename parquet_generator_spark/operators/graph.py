@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from parquet_generator_spark.operators import cache as _cache
+from parquet_generator_spark.operators.util import broadcast_scalars
 
 PR_QUANT = 8
 
@@ -43,27 +44,27 @@ def pagerank(pairs: DataFrame, iters: int = 3,
                                   F.col("id_a").alias("v")))
         .repartition("u"))
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    n = deg.count()  # bounded scalar: node count
-    if n == 0:
-        return pairs.select(F.col("id_a").alias("id"),
-                            F.lit(0.0).alias("rank")).limit(0)
     # undirected: out-degree = degree; co-partitioned join, no
     # exchange, and the checkpoint frees the loop from re-deriving it
     edgesd = _cache.checkpoint(
         edges.join(deg, "u").select("u", "v", "deg"))
-    base = (1.0 - damping) / n
-    ranks = deg.select("u", F.lit(round(1.0 / n, PR_QUANT))
-                       .alias("rank"))
+    # the node count n rides along every rank row: attached once as a
+    # scalar subquery instead of an eager count, and read by each
+    # round's (1 - d) / n. An empty graph flows through to zero rows.
+    ranks = (broadcast_scalars(deg, deg.agg(F.count(F.lit(1)).alias("n")))
+             .select("u", F.round(F.lit(1.0) / F.col("n"), PR_QUANT)
+                     .alias("rank"), "n"))
     for _ in range(iters):
         contrib = (edgesd.join(ranks, "u")
                    .select(F.col("v").alias("u"),
-                           (F.col("rank") / F.col("deg"))
-                           .alias("c")))
+                           (F.col("rank") / F.col("deg")).alias("c"),
+                           "n"))
         ranks = _cache.checkpoint(
             contrib.groupBy("u")
-            .agg(F.round(F.lit(base)
+            .agg(F.round(F.lit(1.0 - damping) / F.max("n")
                          + F.lit(damping) * F.sum("c"),
-                         PR_QUANT).alias("rank")), eager=False)
+                         PR_QUANT).alias("rank"),
+                 F.max("n").alias("n")), eager=False)
     return ranks.select(F.col("u").alias("id"), "rank")
 
 

@@ -25,7 +25,7 @@ Annex K defaults — simpler, bit-exact, and the decoder reads
 whatever DHT the file carries anyway.
 
 Exactness contract used by the oracle-backed query
-(plans/llm_queries22.jpeg_decode_stats): with ALL-ONES quant tables
+(plans/multimodal.jpeg_decode_stats): with ALL-ONES quant tables
 a block-constant image round-trips EXACTLY — a flat block has only
 a DC coefficient, 8*(v-128) is an integer, quantization at Q=1 is
 the identity on integers, and the IDCT of a lone DC is flat — so

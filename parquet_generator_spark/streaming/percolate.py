@@ -25,7 +25,7 @@ def percolate_stream(stream: DataFrame,
     """Match a (streaming or batch) docs frame against the
     stored-query registry; emits one row per (query_id, matching
     doc). Stateless: works in append mode with no watermark. The
-    batch percolator query (plans.reference_queries14.dsl_percolate)
+    batch percolator query (plans.esdsl_queries.dsl_percolate)
     builds its pairs through this same function — one match
     semantics, two execution modes."""
     if not registry:

@@ -325,7 +325,7 @@ def _counter_rate_fn(key: tuple[Any, ...],
 
 
 def counter_rate_stream(df: DataFrame) -> DataFrame:
-    """Streaming twin of plans.reference_queries23.dsl_counter_rate
+    """Streaming twin of plans.esdsl_aggs.dsl_counter_rate
     over a stored counter column ``ctr`` (real counters ARRIVE as
     values; the batch query synthesizes the same column for the
     oracle). State is one long per series — bounded by series

@@ -15,7 +15,7 @@ from parquet_generator_spark.operators.analyzers import (
     s_stem_sql,
 )
 from parquet_generator_spark.operators.esdsl import translate_query
-from parquet_generator_spark.plans import reference_queries22  # noqa: F401 registers english_syn
+from parquet_generator_spark.plans import esdsl_queries  # noqa: F401 registers english_syn
 from parquet_generator_spark.sources.catalog import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -7,12 +7,13 @@ from __future__ import annotations
 import pytest
 
 from parquet_generator_spark.operators import ann_index
-from parquet_generator_spark.plans.llm_queries15 import PQ_K, PQ_M
-from parquet_generator_spark.plans.llm_queries24 import (
+from parquet_generator_spark.plans.retrieval import (
     IVFPQ_CELLS,
     IVFPQ_PROBE,
     IVFPQ_QUERY,
     IVFPQ_TOPK,
+    PQ_K,
+    PQ_M,
     ann_ivfpq,
 )
 from parquet_generator_spark.sources.catalog import load_table

@@ -6,11 +6,9 @@ replaced."""
 import pytest
 
 from parquet_generator_spark.operators import cache, similarity
-from parquet_generator_spark.plans.llm_queries import (
+from parquet_generator_spark.plans.retrieval import (
     ANN_K,
     ANN_QUERY_PRED,
-)
-from parquet_generator_spark.plans.llm_queries12 import (
     IVF_CURVE_CELLS,
     IVF_PROBES,
     ivf_recall_curve,

@@ -15,7 +15,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from parquet_generator_spark.plans.llm_queries21 import (
+from parquet_generator_spark.plans.text_tokens import (
     BPE_TRAIN_MERGES,
     bpe_encode_stats_duck_sql,
     bpe_vocab_train_duck_sql,

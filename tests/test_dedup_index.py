@@ -24,7 +24,7 @@ def root(tmp_path):
 
 def test_build_serve_matches_in_query(spark, root):
     from parquet_generator_spark.operators import dedup
-    from parquet_generator_spark.plans.llm_queries8 import INC_TAU
+    from parquet_generator_spark.plans.dedup import INC_TAU
 
     docs = load_table(spark, "documents", SF)
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
@@ -77,7 +77,7 @@ def test_append_equals_rebuild(spark, root, tmp_path):
     row-identical to classifying C against an index trained on A∪B
     in one shot (hashes, band joins AND merged bucket-cap stats all
     agree)."""
-    from parquet_generator_spark.plans.llm_queries8 import INC_TAU
+    from parquet_generator_spark.plans.dedup import INC_TAU
 
     docs = load_table(spark, "documents", SF)
     part_a = docs.filter(F.col("doc_id") % 4 == 0)

@@ -13,7 +13,7 @@ from parquet_generator_spark.operators.esdsl import (
     score_query,
     translate_query,
 )
-from parquet_generator_spark.plans.reference_queries19 import msearch
+from parquet_generator_spark.plans.esdsl_queries import msearch
 
 DOCS = [
     # id, title, body

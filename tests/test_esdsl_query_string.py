@@ -161,11 +161,11 @@ def test_score_query_bool_sums_clauses(spark, docs):
 def test_geohash_sql_matches_bisection_encoder(spark):
     """The floor/div/mod SQL geohash must agree with the classic
     bisection encoder on a grid of points covering all quadrants."""
-    from parquet_generator_spark.plans.reference_queries11 import (
+    from parquet_generator_spark.plans.esdsl_aggs import (
         geohash_cell_exprs,
-        geohash_encode,
         geohash_expr,
     )
+    from parquet_generator_spark.plans.esdsl_queries import geohash_encode
 
     pts = [(la + 0.05, lo + 0.05)
            for la in range(-88, 89, 16) for lo in range(-178, 179, 31)]
@@ -235,7 +235,7 @@ def test_pinned_ranks_promoted_first(spark):
     """dsl_pinned executed for real: the promoted ids that exist in
     the corpus lead the result IN LIST ORDER (not ascending id), then
     organic matches in doc_id order."""
-    from parquet_generator_spark.plans.reference_queries12 import (
+    from parquet_generator_spark.plans.esdsl_scoring import (
         PINNED_IDS,
         dsl_pinned,
     )
@@ -291,11 +291,11 @@ def test_score_query_match_all_and_string_msm(spark):
 def test_geohash_boundary_coordinates(spark):
     """lat=90 / lon=180 must stay in the last cell (the bisection
     encoder's behavior), not wrap to the opposite hemisphere."""
-    from parquet_generator_spark.plans.reference_queries11 import (
+    from parquet_generator_spark.plans.esdsl_aggs import (
         geohash_cell_exprs,
-        geohash_encode,
         geohash_expr,
     )
+    from parquet_generator_spark.plans.esdsl_queries import geohash_encode
 
     pts = [(90.0, 0.0), (-90.0, 0.0), (0.0, 180.0), (0.0, -180.0),
            (90.0, 180.0), (-90.0, -180.0)]
@@ -312,7 +312,7 @@ def test_geo_shape_crossing_test_matches_reference(spark):
     """The SQL ray-casting expression must agree with a plain-Python
     point-in-polygon reference on a dense grid over the polygon's
     bounding box (edges, notches, outside points)."""
-    from parquet_generator_spark.plans.reference_queries14 import (
+    from parquet_generator_spark.plans.esdsl_queries import (
         POLYGON,
         _crossing_terms,
     )
@@ -345,10 +345,7 @@ def test_embedding_pq_codebook_rows_reconstruct_exactly(spark):
     """The PQ codebook rows are corpus rows — encoding them must
     find themselves (distance 0 in every subspace): recon_mse == 0,
     and everyone else's mse >= 0."""
-    from parquet_generator_spark.plans.llm_queries15 import (
-        PQ_K,
-        embedding_pq,
-    )
+    from parquet_generator_spark.plans.retrieval import PQ_K, embedding_pq
 
     rows = embedding_pq(spark, "/root/testdata/sf0.001").collect()
     base_ids = sorted(r["vec_id"] for r in rows)[:PQ_K]

@@ -922,9 +922,7 @@ def test_knn_plan_shape(spark):
     """The esql_knn driver key's plan: pre-filter pushed to the
     scan, one TakeOrderedAndProject, no join/cartesian, no Python
     eval."""
-    from parquet_generator_spark.plans.reference_queries29 import (
-        esql_knn,
-    )
+    from parquet_generator_spark.plans.esql import esql_knn
 
     df = esql_knn(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -46,3 +46,27 @@ def test_pagerank_matches_python_replica(spark):
     exp = _python_pagerank(pairs)
     assert got == exp
     assert abs(sum(got.values()) - 1.0) < 1e-3
+
+
+def test_pagerank_rounds_like_duckdb_replay(spark):
+    """At n = 512 the first rank 1/512 is an exact half at 8
+    decimals: every round, the first one included, must round it half
+    away from zero as `pagerank_duck_sql` does (0.00195313, not
+    Python's half-even 0.00195312). An empty pair list yields no
+    rows on both sides."""
+    import duckdb
+
+    from parquet_generator_spark.operators.graph import pagerank_duck_sql
+
+    for n_pairs in (256, 0):
+        pairs = [(2 * i, 2 * i + 1) for i in range(n_pairs)]
+        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+        got = {r["id"]: r["rank"] for r in pagerank(df).collect()}
+        sql = pagerank_duck_sql(
+            "SELECT 2 * i AS id_a, 2 * i + 1 AS id_b "
+            f"FROM range({n_pairs}) t(i)")
+        # the same three iterations, without the top-20 6-decimal cut
+        sql = sql[:sql.rindex("\nSELECT")] + "\nSELECT u, rank FROM r3"
+        exp = dict(duckdb.sql(sql).fetchall())
+        assert got == exp
+        assert len(got) == 2 * n_pairs

@@ -11,7 +11,7 @@ from parquet_generator_spark.operators.similarity import (
     ivfpq_topk,
     make_pq_codebooks_kmeans,
 )
-from parquet_generator_spark.plans.llm_queries24 import (
+from parquet_generator_spark.plans.retrieval import (
     IVFPQ_QUERY,
     IVFPQ_TOPK,
     ann_ivfpq,
@@ -163,9 +163,7 @@ def test_cjk_dedup_shingles_format_invariant(spark):
 
 
 def test_text_tokens_cjk_counts_planted_payload(spark):
-    from parquet_generator_spark.plans.llm_queries24 import (
-        text_tokens_cjk,
-    )
+    from parquet_generator_spark.plans.text_tokens import text_tokens_cjk
 
     rows = {r["lang"]: r for r in text_tokens_cjk(spark, SF).collect()}
     assert rows["zh"]["cjk_tokens"] > 0

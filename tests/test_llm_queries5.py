@@ -6,8 +6,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parquet_generator_spark.plans import llm_queries5 as L5
-from parquet_generator_spark.plans.llm_queries5 import PACK_BUDGET
+from parquet_generator_spark.plans.corpus import (
+    PACK_BUDGET,
+    TEMP_TARGET,
+    seq_packing,
+    source_temperature_sample,
+)
+from parquet_generator_spark.plans.dedup import span_dedup
+from parquet_generator_spark.plans.text_quality import char_entropy
 
 
 def _docs(spark, rows):
@@ -30,7 +36,7 @@ def test_seq_packing_respects_budget_and_loses_nothing(spark, tmp_path):
     d.mkdir()
     _docs(spark, rows).write.parquet(str(d / "documents.parquet"))
     out = {(r["source"], r["bin"]): (r["n_docs"], r["sum_tokens"])
-           for r in L5.seq_packing(spark, str(d)).collect()}
+           for r in seq_packing(spark, str(d)).collect()}
     assert out == {("s", 0): (2, 110),   # docs 0+1
                    ("s", 1): (1, 30),    # doc 2
                    ("s", 2): (1, 200),   # oversized doc 3 alone
@@ -44,9 +50,9 @@ def test_temperature_sample_is_deterministic_and_bounded(spark):
 
     sf = "/root/testdata/sf0.001"
     a = [tuple(r) for r in
-         L5.source_temperature_sample(spark, sf).collect()]
+         source_temperature_sample(spark, sf).collect()]
     b = [tuple(r) for r in
-         L5.source_temperature_sample(spark, sf).collect()]
+         source_temperature_sample(spark, sf).collect()]
     assert a == b                      # rerun-identical incl. id sums
     for _, n_docs, target, kept, _ in a:
         assert kept == min(target, n_docs)
@@ -55,7 +61,7 @@ def test_temperature_sample_is_deterministic_and_bounded(spark):
     # rounding) unless it is a small source being upweighted
     total_docs = sum(r[1] for r in a)
     total_kept = sum(r[3] for r in a)
-    assert 0 < total_kept <= L5.TEMP_TARGET
+    assert 0 < total_kept <= TEMP_TARGET
 
 
 def test_char_entropy_flags_degenerate_text(spark, tmp_path):
@@ -68,7 +74,7 @@ def test_char_entropy_flags_degenerate_text(spark, tmp_path):
     d.mkdir()
     _docs(spark, rows).write.parquet(str(d / "documents.parquet"))
     out = {r["doc_id"]: r for r in
-           L5.char_entropy(spark, str(d)).collect()}
+           char_entropy(spark, str(d)).collect()}
     assert out[0]["entropy"] == 0.0 and out[0]["low_entropy"]
     assert out[1]["entropy"] > 3.0
 
@@ -85,7 +91,7 @@ def test_span_dedup_flags_copied_spans_only(spark, tmp_path):
     d.mkdir()
     _docs(spark, rows).write.parquet(str(d / "documents.parquet"))
     out = {r["doc_id"]: r for r in
-           L5.span_dedup(spark, str(d)).collect()}
+           span_dedup(spark, str(d)).collect()}
     # docs 0 and 1 share exactly the one 8-token prefix span
     assert out[0]["n_dup_spans"] == 1
     assert out[1]["n_dup_spans"] == 1
@@ -100,8 +106,7 @@ def test_seq_packing_invariants_property(spark, tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from parquet_generator_spark.plans.llm_queries5 import (
-        PACK_BUDGET, seq_packing)
+    from parquet_generator_spark.plans.corpus import PACK_BUDGET, seq_packing
 
     case_dir = [0]
 
@@ -136,9 +141,7 @@ def test_maximal_dup_spans_merges_adjacent_windows(spark):
     12-token run -> the 5 consecutive duplicated 8-windows merge
     into ONE maximal span of length 12; a doc with no 8-token
     duplicate reports 0."""
-    from parquet_generator_spark.plans.llm_queries14 import (
-        maximal_dup_spans,
-    )
+    from parquet_generator_spark.plans.dedup import maximal_dup_spans
 
     shared = " ".join(f"w{i}" for i in range(12))
     df = spark.createDataFrame(
@@ -160,9 +163,7 @@ def test_maximal_dup_spans_merges_overlapping_windows(spark):
     must merge into ONE maximal span covering their union — the old
     adjacency-only merge double-counted 16 tokens in a 10-token
     overlap."""
-    from parquet_generator_spark.plans.llm_queries14 import (
-        maximal_dup_spans,
-    )
+    from parquet_generator_spark.plans.dedup import maximal_dup_spans
 
     w = [f"w{i}" for i in range(10)]
     doc1 = " ".join(w)                      # windows at offsets 0,1,2

@@ -11,11 +11,11 @@ import random
 from pyspark.sql import functions as F
 
 from parquet_generator_spark.operators.similarity import kmeans_lloyd
-from parquet_generator_spark.plans.llm_queries7 import (
+from parquet_generator_spark.plans.analytics import (
     CONCURRENCY_TTL_MIN,
-    bigram_logprob_frame,
     peak_concurrency_frame,
 )
+from parquet_generator_spark.plans.text_tokens import bigram_logprob_frame
 
 
 def test_bigram_logprob_hand_computed(spark):
@@ -132,7 +132,7 @@ def test_feature_hash_retrieval_finds_planted_neighbor(spark):
 
 
 def test_weighted_median_hand_computed(spark):
-    from parquet_generator_spark.plans.analytics5 import weighted_median
+    from parquet_generator_spark.plans.analytics import weighted_median
     # weights: price 10 w=1, price 20 w=1, price 30 w=6 -> total 8,
     # half 4; cumulative crosses 4 at price 30
     rows = [(1, 1, "A", 10.0, 1.0), (2, 1, "A", 20.0, 1.0),
@@ -196,9 +196,9 @@ def test_knn_ivf_exact_at_full_probe(spark):
     scores 0.08 accuracy — so vote agreement would test noise, not
     recall; neighbor-level recall is quantified in ivf_recall_curve
     and the ann_ivf tests.)"""
-    from parquet_generator_spark.plans.llm_queries import ANN_IVF_CELLS
-    from parquet_generator_spark.plans.llm_queries4 import knn_classify
-    from parquet_generator_spark.plans.llm_queries14 import (
+    from parquet_generator_spark.plans.retrieval import (
+        ANN_IVF_CELLS,
+        knn_classify,
         knn_classify_ivf,
     )
 

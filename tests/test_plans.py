@@ -350,8 +350,9 @@ def test_registry_rejects_a_key_defined_twice():
                           ORACLES={})
     with pytest.raises(ValueError, match="plans.one and plans.two"):
         entrymod.merge_registries([one, two])
-    queries, oracles = entrymod.merge_registries([one])
+    queries, oracles, owner = entrymod.merge_registries([one])
     assert queries == {"k": q} and oracles == {"k": "SELECT 1"}
+    assert owner == {"k": "plans.one"}
 
 
 def test_no_empty_partition_windows_in_source():
@@ -374,7 +375,7 @@ def test_no_empty_partition_windows_in_source():
     root = pathlib.Path(__file__).resolve().parent.parent
     # exact per-file site counts: a new site in an allowlisted file
     # trips this as surely as a site in a new file
-    allowed = {"plans/reference_queries31.py": 1, "operators/esql.py": 1}
+    allowed = {"plans/esdsl_scoring.py": 1, "operators/esql.py": 1}
     found = {
         str(p.relative_to(root / "parquet_generator_spark")): n
         for p in (root / "parquet_generator_spark").rglob("*.py")
@@ -406,6 +407,20 @@ def test_barriers_and_stores_have_one_owner_each():
                 stores.append(rel)
     assert barriers == [], barriers
     assert stores == [], stores
+
+
+def test_plan_modules_are_named_by_family():
+    """Tripwire: a ``plans/`` module is named by the family it holds
+    (``dedup.py``, ``esdsl_aggs.py``), never by the round that added
+    it (``llm_queries7.py``, ``analytics3.py``)."""
+    import pathlib
+
+    plans = pathlib.Path(__file__).resolve().parent.parent / \
+        "parquet_generator_spark" / "plans"
+    numbered = sorted(p.name for p in plans.glob("*.py")
+                      if re.search(r"_queries\d+\.py$", p.name)
+                      or re.search(r"^analytics\d+\.py$", p.name))
+    assert numbered == [], numbered
 
 
 def test_stemmer_sql_plumbing_has_one_owner():
@@ -604,12 +619,16 @@ def test_no_forced_broadcast_of_unbounded_frames():
     regression."""
     import inspect
 
-    from parquet_generator_spark.plans.llm_queries4 import (
-        cohort_retention, knn_classify)
-    from parquet_generator_spark.plans.llm_queries5 import (
-        bm25_topk, cooccurrence_pmi, tfidf_topterms)
-    from parquet_generator_spark.plans.llm_queries14 import (
-        knn_classify_ivf)
+    from parquet_generator_spark.plans.analytics import cohort_retention
+    from parquet_generator_spark.plans.retrieval import (
+        bm25_topk,
+        knn_classify,
+        knn_classify_ivf,
+    )
+    from parquet_generator_spark.plans.text_tokens import (
+        cooccurrence_pmi,
+        tfidf_topterms,
+    )
 
     for fn in (knn_classify_ivf, knn_classify, cohort_retention,
                tfidf_topterms, bm25_topk, cooccurrence_pmi):
@@ -624,9 +643,7 @@ def test_table_profile_approx_plan_is_expand_free(spark):
     stats, one aggregate pass) must not contain the Expand node that
     exact multi-distinct forces — that Expand is exactly what makes
     the exact profiler scale-weak."""
-    from parquet_generator_spark.plans.llm_queries9 import (
-        profile_frame_approx,
-    )
+    from parquet_generator_spark.plans.corpus import profile_frame_approx
     from parquet_generator_spark.sources.catalog import load_table
 
     li = load_table(spark, "lineitem", SF_DIR)
@@ -952,9 +969,7 @@ def test_esql_cidr_blocks_fold_to_between_arithmetic(spark):
         esql_duck_sql,
         parse_esql,
     )
-    from parquet_generator_spark.plans.reference_queries28 import (
-        ESQL_CIDR_QUERY,
-    )
+    from parquet_generator_spark.plans.esql import ESQL_CIDR_QUERY
 
     sql = esql_duck_sql(parse_esql(ESQL_CIDR_QUERY))
     assert "BETWEEN 167772160 AND 184549375" in sql  # 10.0.0.0/8

@@ -130,7 +130,7 @@ def test_porter_catches_what_s_stemmer_misses(spark):
     corpus vocabulary is base forms (sort/merge/table), the query is
     verb forms — only Porter folds them together."""
     from parquet_generator_spark.operators.esdsl import translate_query
-    from parquet_generator_spark.plans.reference_queries24 import (
+    from parquet_generator_spark.plans.esdsl_queries import (
         _PORTER_QUERY,
         dsl_match_porter,
     )

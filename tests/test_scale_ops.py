@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from parquet_generator_spark.operators.skew import salted_agg, salted_join
-from parquet_generator_spark.plans.scale_queries import approx_sketches
+from parquet_generator_spark.plans.reference_etl import approx_sketches
 from parquet_generator_spark.sources.catalog import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -82,7 +82,7 @@ def test_distributed_ntile_equals_window_ntile(spark, tmp_path,
 
     from pyspark.sql import Window
 
-    from parquet_generator_spark.plans.analytics3 import ntile_deciles
+    from parquet_generator_spark.plans.analytics import ntile_deciles
 
     rng = random.Random(seed)
     rows = [(i, float(rng.choice([10.0, 20.0, 30.0,

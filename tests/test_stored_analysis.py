@@ -18,7 +18,7 @@ from parquet_generator_spark.operators.analyzers import (
     stored_match_duck_sql,
     stored_match_phrase,
 )
-from parquet_generator_spark.plans.analyzer_queries import SPECS
+from parquet_generator_spark.plans.esdsl_queries import SPECS
 
 ROWS = [
     (1, "las canciones fueron grabadas ayer"),
@@ -156,12 +156,12 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 
 def test_central_store_all_languages(spark):
-    """The round-13 central store (plans/analyzed_store.py): one
+    """The round-13 central store (plans/esdsl_queries.py): one
     fingerprint-gated materialization carries every language's
     analyzed array plus the routed column, and every converted
     analyzer-match key serves from it with ZERO stemmer expressions
     in the plan."""
-    from parquet_generator_spark.plans.analyzed_store import (
+    from parquet_generator_spark.plans.esdsl_queries import (
         load_store,
         version_hash,
     )
@@ -183,7 +183,7 @@ def test_converted_keys_plans_are_stemmer_free(spark):
     from stored arrays: the optimized plan must carry array
     membership and NO stemmer machinery (the giant let-bound
     transform(array(...)) chains)."""
-    from parquet_generator_spark.plans.analyzer_queries import QUERIES
+    from parquet_generator_spark.plans.esdsl_queries import QUERIES
 
     for key in ("dsl_match_analyzer_fr", "dsl_match_analyzer_ru",
                 "dsl_match_lang_routed"):
@@ -201,7 +201,7 @@ def test_analyzer_catches_what_english_cannot(spark, spec):
     """Each language's planted inflections: its stored key finds
     them (as many documents as the same chain finds at query time
     over the planted column), the english chain finds none."""
-    from parquet_generator_spark.plans.analyzer_queries import (
+    from parquet_generator_spark.plans.esdsl_queries import (
         QUERIES,
         planted_expr,
     )
@@ -235,7 +235,7 @@ def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
     import json
     import os
 
-    from parquet_generator_spark.plans import analyzed_store as st
+    from parquet_generator_spark.plans import esdsl_queries as st
 
     root = os.path.dirname(st.ensure_store(spark, SF_SMALL))
     meta_p = os.path.join(root, "meta.json")
@@ -259,7 +259,7 @@ def test_store_fingerprint_ignores_hash_seed():
     import subprocess
     import sys
 
-    code = ("from parquet_generator_spark.plans.analyzed_store "
+    code = ("from parquet_generator_spark.plans.esdsl_queries "
             "import version_hash; print(version_hash())")
     root = pathlib.Path(__file__).resolve().parent.parent
     hashes = [

@@ -71,9 +71,7 @@ def test_served_key_matches_per_query_rollup(spark, tmp_path):
     """Value identity between the materialized rollup and the
     per-query dsl_tsds_downsample (the driver proves the same via
     the shared oracle; this pins it in-suite)."""
-    from parquet_generator_spark.plans.reference_queries23 import (
-        dsl_tsds_downsample,
-    )
+    from parquet_generator_spark.plans.esdsl_aggs import dsl_tsds_downsample
 
     root = str(tmp_path / "r")
     train_rollup(spark, load_table(spark, "events", SF), root)
@@ -114,9 +112,7 @@ def test_merge_is_order_insensitive(spark, tmp_path):
 def _ctr_points(spark):
     """A small synthetic counter series with organic resets and
     both within-bucket and cross-bucket (6h boundary) deltas."""
-    from parquet_generator_spark.plans.reference_queries29 import (
-        _ctr_source,
-    )
+    from parquet_generator_spark.plans.esql import _ctr_source
 
     ev = load_table(spark, "events", SF)
     return _ctr_source(ev)
