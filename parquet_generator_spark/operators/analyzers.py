@@ -810,28 +810,12 @@ def stored_match_duck_sql(stored_col: str, query: str,
                              operator, minimum_should_match)
 
 
-def _stored_phrase_sql(stored_col: str, phrase: str,
-                       analyzer: Analyzer, engine: str) -> str:
-    groups = _phrase_groups(phrase, analyzer)
-    k = len(groups)
-    if engine == "spark":
-        lam = _phrase_lambda(
-            groups, lambda j: f"element_at({stored_col}, i + {j})")
-        return (f"CASE WHEN size({stored_col}) >= {k} THEN "
-                f"exists(sequence(1, size({stored_col}) - {k} + 1), "
-                f"{lam}) ELSE false END")
-    lam = _phrase_lambda(groups, lambda j: f"{stored_col}[i + {j}]")
-    return (f"(len({stored_col}) >= {k} AND len(list_filter("
-            f"generate_series(1, len({stored_col}) - {k} + 1), "
-            f"{lam})) > 0)")
-
-
 def stored_match_phrase(stored_col: str, phrase: str,
                         analyzer: Analyzer) -> Column:
-    return F.expr(_stored_phrase_sql(stored_col, phrase, analyzer,
-                                     "spark"))
-
-
-def stored_match_phrase_duck_sql(stored_col: str, phrase: str,
-                                 analyzer: Analyzer) -> str:
-    return _stored_phrase_sql(stored_col, phrase, analyzer, "duck")
+    groups = _phrase_groups(phrase, analyzer)
+    k = len(groups)
+    lam = _phrase_lambda(
+        groups, lambda j: f"element_at({stored_col}, i + {j})")
+    return F.expr(f"CASE WHEN size({stored_col}) >= {k} THEN "
+                  f"exists(sequence(1, size({stored_col}) - {k} + 1), "
+                  f"{lam}) ELSE false END")

@@ -17,12 +17,22 @@ dangling-mass redistribution term.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from decimal import Decimal
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from parquet_generator_spark.operators import cache as _cache
 from parquet_generator_spark.operators.util import broadcast_scalars
 
 PR_QUANT = 8
+
+
+def base_term(n: Column, damping: float = 0.85) -> Column:
+    """The update's (1 - d) / n, with 1 - d taken decimal-exact as
+    DuckDB takes ``pagerank_duck_sql``'s DECIMAL literals: the double
+    ``1.0 - 0.85`` is 0.15000000000000002, which moves the unrounded
+    rank by an ulp for most n."""
+    return F.lit(float(Decimal(1) - Decimal(repr(damping)))) / n
 
 
 def pagerank(pairs: DataFrame, iters: int = 3,
@@ -61,7 +71,7 @@ def pagerank(pairs: DataFrame, iters: int = 3,
                            "n"))
         ranks = _cache.checkpoint(
             contrib.groupBy("u")
-            .agg(F.round(F.lit(1.0 - damping) / F.max("n")
+            .agg(F.round(base_term(F.max("n"), damping)
                          + F.lit(damping) * F.sum("c"),
                          PR_QUANT).alias("rank"),
                  F.max("n").alias("n")), eager=False)

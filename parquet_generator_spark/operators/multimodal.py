@@ -32,18 +32,6 @@ except ImportError:
 
 MEDIA_TYPES = ("image", "audio", "video")
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("media_type", T.StringType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-    ])),
-])
-
 FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("media_type", T.StringType()),

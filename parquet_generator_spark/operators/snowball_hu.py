@@ -117,9 +117,6 @@ _PLUR_OWNER = (("jaim", None), ("jeim", None), ("áim", "a"),
 _PLURAL = (("ák", "a"), ("ék", "e"), ("ök", None), ("ok", None),
            ("ek", None), ("ak", None), ("k", None))
 
-_TABLES = (_CASE_SPECIAL, _CASE_OTHER, _OWNED, _SING_OWNER,
-           _PLUR_OWNER, _PLURAL)
-
 
 def _r1_start(w: str) -> int:
     """0-based index where R1 begins; len(w) when R1 is empty

@@ -56,7 +56,6 @@ from parquet_generator_spark.operators.stem_sql import (
 
 # true vowels (i and y go through the marking pass)
 _TRUE_VOWELS = "aeouè"
-_VOWEL_CHARS = "aeiouyè"   # the spec's v set, pre-marking
 _DEACCENT_FROM = "äëïöüáéíóú"
 _DEACCENT_TO = "aeiouaeiou"
 _MARK_ROUNDS = 3

@@ -20,18 +20,8 @@ from parquet_generator_spark.plans.esdsl_queries import (
     _haversine_sql,
     _nested_parents,
 )
+from parquet_generator_spark.plans.spec import dsl_searches
 from parquet_generator_spark.sources.catalog import load_table
-
-
-def dsl_date_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {"avg_value": {"avg": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_DATE_HISTOGRAM_ORACLE = """
@@ -43,14 +33,6 @@ GROUP BY key ORDER BY key ASC
 """
 
 
-def dsl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"value_stats": {"stats": {"field": "value"}}},
-    })
-
-
 DSL_STATS_ORACLE = """
 SELECT count(value)          AS count,
        round(min(value), 4)  AS min,
@@ -59,23 +41,6 @@ SELECT count(value)          AS count,
        round(sum(value), 4)  AS sum
 FROM events
 """
-
-
-def dsl_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """query + bucket agg + metric sub-aggs, the full reference shape
-    (NewAggregationRequestGenerator usage in Bootstrap.java:204-212)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"bool": {
-            "must": [{"term": {"event_type": "purchase"}}],
-            "filter": [{"range": {"ts": {"gte": "2024-01-08"}}}],
-        }},
-        "aggs": {"by_user": {
-            "terms": {"field": "user_id", "size": 5},
-            "aggs": {"avg_value": {"avg": {"field": "value"}},
-                     "sum_value": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_COMPOSITE_ORACLE = """
@@ -100,21 +65,6 @@ LIMIT 5
 # top_hits is a broadcast bucket join + one window.
 
 
-def dsl_multi_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Several sibling metric aggs in one body -> one aggregate pass,
-    one output row."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {
-            "max_value": {"max": {"field": "value"}},
-            "total_value": {"sum": {"field": "value"}},
-            "n_users": {"cardinality": {"field": "user_id"}},
-            "n_events": {"value_count": {"field": "event_id"}},
-        },
-    })
-
-
 DSL_MULTI_METRIC_ORACLE = """
 SELECT max(value) AS max_value,
        round(sum(value), 4) AS total_value,
@@ -124,43 +74,12 @@ FROM events WHERE event_type = 'purchase'
 """
 
 
-def dsl_filter_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """filter bucket agg: sub-metrics over the docs matching the
-    bucket query, composed with the search-level query."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"big_purchases": {
-            "filter": {"range": {"value": {"gte": 100.0}}},
-            "aggs": {"avg_value": {"avg": {"field": "value"}},
-                     "n_users": {"cardinality": {"field": "user_id"}}},
-        }},
-    })
-
-
 DSL_FILTER_AGG_ORACLE = """
 SELECT count(*) AS doc_count,
        round(avg(value), 4) AS avg_value,
        count(DISTINCT user_id) AS n_users
 FROM events WHERE event_type = 'purchase' AND value >= 100.0
 """
-
-
-def dsl_filters_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """filters agg: named buckets from arbitrary (possibly
-    overlapping) queries; each with metric sub-aggs."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"tiers": {
-            "filters": {"filters": {
-                "low": {"range": {"value": {"lt": 50.0}}},
-                "mid": {"range": {"value": {"gte": 50.0, "lt": 150.0}}},
-                "high": {"range": {"value": {"gte": 150.0}}},
-            }},
-            "aggs": {"avg_value": {"avg": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_FILTERS_BUCKETS_ORACLE = """
@@ -172,22 +91,6 @@ FROM events GROUP BY key ORDER BY key
 """
 
 
-def dsl_range_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """range bucket agg (from inclusive, to exclusive) with a
-    cardinality sub-agg per bucket."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"value_ranges": {
-            "range": {"field": "value",
-                      "ranges": [{"key": "low", "to": 50.0},
-                                 {"key": "mid", "from": 50.0, "to": 150.0},
-                                 {"key": "high", "from": 150.0}]},
-            "aggs": {"n_users": {"cardinality": {"field": "user_id"}}},
-        }},
-    })
-
-
 DSL_RANGE_AGG_ORACLE = """
 SELECT CASE WHEN value < 50.0 THEN 'low'
             WHEN value < 150.0 THEN 'mid' ELSE 'high' END AS key,
@@ -197,41 +100,12 @@ FROM events GROUP BY key ORDER BY key
 """
 
 
-def dsl_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """percentiles metric agg (exact interpolated; {"approx": true}
-    swaps in percentile_approx for the scale path)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "view"}},
-        "aggs": {"latency": {
-            "percentiles": {"field": "value", "percents": [50, 90, 99]},
-        }},
-    })
-
-
 DSL_PERCENTILES_ORACLE = """
 SELECT round(quantile_cont(value, 0.5), 4)  AS latency_p50,
        round(quantile_cont(value, 0.9), 4)  AS latency_p90,
        round(quantile_cont(value, 0.99), 4) AS latency_p99
 FROM events WHERE event_type = 'view'
 """
-
-
-def dsl_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """terms buckets + top_hits: the 3 most recent events per
-    event_type (sort totalized by the unique event_id)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"by_type": {
-            "terms": {"field": "event_type", "size": 10},
-            "aggs": {"latest": {"top_hits": {
-                "size": 3,
-                "sort": [{"ts": "desc"}, {"event_id": "asc"}],
-                "_source": ["event_id", "user_id", "value"],
-            }}},
-        }},
-    })
 
 
 DSL_TOP_HITS_ORACLE = """
@@ -250,20 +124,6 @@ FROM b JOIN h ON b.key = h.key
 WHERE h.hit_rank <= 3
 ORDER BY b.key, h.hit_rank
 """
-
-
-def dsl_terms_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """terms-in-terms: top event types, and the top-3 users inside
-    each — two bucket levels from one grouped pass."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"by_type": {
-            "terms": {"field": "event_type", "size": 10},
-            "aggs": {"by_user": {"terms": {"field": "user_id",
-                                           "size": 3}}},
-        }},
-    })
 
 
 DSL_TERMS_NESTED_ORACLE = """
@@ -287,26 +147,6 @@ ORDER BY doc_count DESC, key ASC, sub_rank
 """
 
 
-def dsl_composite_paged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """composite agg with keyset pagination: page 2 (after a cursor)
-    of (event_type, user_id) buckets in key order with an avg
-    sub-metric — the ES scale-path aggregation, which is exactly a
-    keyed groupBy plus a lexicographic keyset predicate."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"pages": {
-            "composite": {
-                "size": 8,
-                "sources": [{"etype": {"terms": {"field": "event_type"}}},
-                            {"uid": {"terms": {"field": "user_id"}}}],
-                "after": {"etype": "click", "uid": 5},
-            },
-            "aggs": {"avg_value": {"avg": {"field": "value"}}},
-        }},
-    })
-
-
 DSL_COMPOSITE_PAGED_ORACLE = """
 SELECT event_type AS etype, user_id AS uid, count(*) AS doc_count,
        round(avg(value), 4) AS avg_value
@@ -316,20 +156,6 @@ HAVING etype > 'click' OR (etype = 'click' AND uid > 5)
 ORDER BY etype ASC, uid ASC
 LIMIT 8
 """
-
-
-def dsl_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """significant_terms: event types over-represented among
-    high-value events vs the whole stream — foreground and background
-    counts from ONE conditional-aggregate scan, scored by rate
-    lift."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"range": {"value": {"gte": 150.0}}},
-        "aggs": {"hot_types": {
-            "significant_terms": {"field": "event_type", "size": 10},
-        }},
-    })
 
 
 DSL_SIGNIFICANT_TERMS_ORACLE = """
@@ -364,25 +190,6 @@ ORDER BY score DESC, key ASC LIMIT 10
 _DAY_KEY = "strftime(date_trunc('day', ts), '%Y-%m-%d %H:%M:%S')"
 
 
-def dsl_derivative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily purchase revenue with day-over-day derivative and running
-    cumulative sum — ES `derivative` + `cumulative_sum` pipeline aggs
-    over a date_histogram parent."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {
-                "revenue": {"sum": {"field": "value"}},
-                "rev_deriv": {"derivative": {"buckets_path": "revenue"}},
-                "rev_cumsum": {"cumulative_sum":
-                               {"buckets_path": "revenue"}},
-            },
-        }},
-    })
-
-
 DSL_DERIVATIVE_ORACLE = f"""
 WITH b AS (
   SELECT {_DAY_KEY} AS key,
@@ -399,23 +206,6 @@ FROM b ORDER BY key
 """
 
 
-def dsl_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day trailing moving average of daily event volume — ES
-    `moving_fn` pipeline agg (trailing window including the current
-    bucket)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "click"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {
-                "vol_ma7": {"moving_fn": {"buckets_path": "doc_count",
-                                          "window": 7}},
-            },
-        }},
-    })
-
-
 DSL_MOVING_AVG_ORACLE = f"""
 WITH b AS (
   SELECT {_DAY_KEY} AS key, count(*) AS doc_count
@@ -429,26 +219,6 @@ FROM b ORDER BY key
 
 
 BUSY_DAY_MIN_DOCS = 8
-
-
-def dsl_bucket_script_selector(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day average order value via `bucket_script` (revenue /
-    doc_count), keeping only busy days via `bucket_selector` — the ES
-    spelling of a HAVING clause over derived bucket metrics."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {
-                "revenue": {"sum": {"field": "value"}},
-                "aov": {"bucket_script":
-                        {"expr": "revenue / doc_count"}},
-                "busy": {"bucket_selector":
-                         {"expr": f"doc_count >= {BUSY_DAY_MIN_DOCS}"}},
-            },
-        }},
-    })
 
 
 DSL_BUCKET_SCRIPT_ORACLE = f"""
@@ -468,25 +238,6 @@ ORDER BY key
 TOP_DAYS = 5
 
 
-def dsl_bucket_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top revenue days: `bucket_sort` pipeline agg re-orders and
-    truncates the bucket frame (ORDER BY metric LIMIT n after the
-    aggregate)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {
-                "revenue": {"sum": {"field": "value"}},
-                "top": {"bucket_sort": {
-                    "sort": [{"revenue": {"order": "desc"}}],
-                    "size": TOP_DAYS}},
-            },
-        }},
-    })
-
-
 DSL_BUCKET_SORT_ORACLE = f"""
 WITH b AS (
   SELECT {_DAY_KEY} AS key,
@@ -497,31 +248,6 @@ WITH b AS (
 SELECT key, doc_count, revenue
 FROM b ORDER BY revenue DESC, key LIMIT {TOP_DAYS}
 """
-
-
-def dsl_avg_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sibling pipeline aggs: reduce the per-day revenue series to
-    scalars (mean / peak daily revenue) — `avg_bucket` / `max_bucket`
-    beside the date_histogram, aggregating its bucket frame."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {
-            "per_day": {
-                "date_histogram": {"field": "ts",
-                                   "calendar_interval": "day"},
-                "aggs": {"revenue": {"sum": {"field": "value"}}},
-            },
-            "mean_daily_rev": {"avg_bucket":
-                               {"buckets_path": "per_day>revenue"}},
-            "peak_daily_rev": {"max_bucket":
-                               {"buckets_path": "per_day>revenue"}},
-            "low_daily_rev": {"min_bucket":
-                              {"buckets_path": "per_day>revenue"}},
-            "total_rev": {"sum_bucket":
-                          {"buckets_path": "per_day>revenue"}},
-        },
-    })
 
 
 DSL_AVG_BUCKET_ORACLE = f"""
@@ -535,25 +261,6 @@ SELECT round(avg(revenue), 4) AS mean_daily_rev,
        round(sum(revenue), 4) AS total_rev
 FROM b
 """
-
-
-def dsl_date_histogram_zerofill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """date_histogram with ``min_doc_count: 0`` — ES emits EMPTY
-    calendar buckets (doc_count 0, null metrics) for gaps in the data.
-    The calendar axis derives from the data min/max (one scalar agg)
-    and broadcast-left-joins the real buckets."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"bool": {"must": [
-            {"term": {"event_type": "purchase"}},
-            {"range": {"value": {"gt": 150}}},
-        ]}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day",
-                               "min_doc_count": 0},
-            "aggs": {"revenue": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_ZEROFILL_ORACLE = f"""
@@ -577,41 +284,12 @@ ORDER BY axis.key
 HIST_INTERVAL = 50
 
 
-def dsl_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numeric `histogram` bucket agg (fixed-width value bins) with a
-    metric sub-agg — floor(value/interval)*interval becomes the group
-    key, one shuffle on the bin."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"by_value": {
-            "histogram": {"field": "value", "interval": HIST_INTERVAL},
-            "aggs": {"avg_value": {"avg": {"field": "value"}}},
-        }},
-    })
-
-
 DSL_HISTOGRAM_ORACLE = f"""
 SELECT floor(value / {HIST_INTERVAL}) * {HIST_INTERVAL} AS key,
        count(*) AS doc_count, round(avg(value), 4) AS avg_value
 FROM events WHERE event_type = 'purchase'
 GROUP BY key ORDER BY key ASC
 """
-
-
-def dsl_terms_order_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """terms buckets ordered by a sub-metric (ES `"order":
-    {"avg_value": "desc"}`) instead of doc_count — the ordering is a
-    sort of the post-agg bucket frame, not a second scan."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"by_type": {
-            "terms": {"field": "event_type", "size": 3,
-                      "order": {"avg_value": "desc"}},
-            "aggs": {"avg_value": {"avg": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_TERMS_ORDER_ORACLE = """
@@ -624,47 +302,12 @@ LIMIT 3
 """
 
 
-def dsl_global_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`global` bucket agg: filtered metrics (purchase average) next
-    to corpus-wide metrics in one response — two one-row aggregates
-    cross-joined, each a single pass."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {
-            "purch_avg": {"avg": {"field": "value"}},
-            "all_docs": {"global": {},
-                         "aggs": {"avg_value": {"avg":
-                                                {"field": "value"}}}},
-        },
-    })
-
-
 DSL_GLOBAL_ORACLE = """
 SELECT (SELECT round(avg(value), 4) FROM events
         WHERE event_type = 'purchase') AS purch_avg,
        (SELECT count(*) FROM events) AS all_docs_doc_count,
        (SELECT round(avg(value), 4) FROM events) AS all_docs_avg_value
 """
-
-
-def dsl_date_range_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`date_range` bucket agg: named calendar windows (from-incl /
-    to-excl, possibly overlapping) with metric sub-aggs — the same
-    map-side bucket explode as `range`/`filters`, one shuffle."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"periods": {
-            "date_range": {"field": "ts", "ranges": [
-                {"key": "wk1", "to": "2024-01-08"},
-                {"key": "wk2", "from": "2024-01-08",
-                 "to": "2024-01-15"},
-                {"key": "rest", "from": "2024-01-15"},
-            ]},
-            "aggs": {"revenue": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_DATE_RANGE_ORACLE = """
@@ -685,17 +328,6 @@ WHERE doc_count > 0 ORDER BY key
 """
 
 
-def dsl_extended_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`extended_stats` metric agg: stats plus sum-of-squares and
-    POPULATION variance/std-deviation (ES's convention), all one
-    grouped pass."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "view"}},
-        "aggs": {"v": {"extended_stats": {"field": "value"}}},
-    })
-
-
 DSL_EXTENDED_STATS_ORACLE = """
 SELECT count(value) AS count,
        round(min(value), 4) AS min,
@@ -707,18 +339,6 @@ SELECT count(value) AS count,
        round(stddev_pop(value), 4) AS std_deviation
 FROM events WHERE event_type = 'view'
 """
-
-
-def dsl_percentile_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`percentile_ranks` metric agg: for each probe value, the
-    percentage of observations at or below it (exact; the inverse of
-    the percentiles agg)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "view"}},
-        "aggs": {"vr": {"percentile_ranks": {"field": "value",
-                                             "values": [50, 150, 300]}}},
-    })
 
 
 DSL_PERCENTILE_RANKS_ORACLE = """
@@ -733,23 +353,6 @@ FROM events WHERE event_type = 'view'
 
 
 HIGH_VALUE = 300.0
-
-
-def dsl_missing_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`missing` bucket agg: docs lacking an (optional, derived)
-    field, with metrics over that bucket — ES's null-bucket
-    companion to `exists`."""
-    ev = load_table(spark, "events", sf_dir)
-    with_amount = ev.withColumn(
-        "big_amount",
-        F.when(F.col("value") > HIGH_VALUE, F.col("value")))
-    return search(with_amount, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"no_big": {
-            "missing": {"field": "big_amount"},
-            "aggs": {"avg_small": {"avg": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_MISSING_ORACLE = f"""
@@ -774,43 +377,11 @@ WHERE event_type = 'purchase' AND value <= {HIGH_VALUE}
 # distinct-set state, no second scan).
 
 
-def dsl_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`weighted_avg` metric agg: quantity-weighted average unit price
-    of returned lineitems — sum(v*w)/sum(w) in one grouped pass."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return search(li, {
-        "query": {"term": {"l_returnflag": "R"}},
-        "aggs": {"wavg_price": {"weighted_avg": {
-            "value": {"field": "l_extendedprice"},
-            "weight": {"field": "l_quantity"},
-        }}},
-    })
-
-
 DSL_WEIGHTED_AVG_ORACLE = """
 SELECT round(sum(l_extendedprice * l_quantity) / sum(l_quantity), 4)
          AS wavg_price
 FROM lineitem WHERE l_returnflag = 'R'
 """
-
-
-def dsl_top_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`top_metrics` metric agg under a terms bucket: per event type,
-    the value of the LATEST event — a single max_by aggregate folded
-    into the terms groupBy (no per-bucket sort, no window). ES breaks
-    ties arbitrarily; `tie_break` pins the unique event_id so both
-    engines pick the same row."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "aggs": {"by_type": {
-            "terms": {"field": "event_type", "size": 10},
-            "aggs": {"last_value": {"top_metrics": {
-                "metrics": {"field": "value"},
-                "sort": {"ts": "desc"},
-                "tie_break": "event_id",
-            }}},
-        }},
-    })
 
 
 DSL_TOP_METRICS_ORACLE = """
@@ -827,23 +398,6 @@ ORDER BY c.doc_count DESC, key ASC LIMIT 10
 """
 
 
-def dsl_rare_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`rare_terms` bucket agg: the long tail — (user, day) combos
-    with exactly one purchase, ascending count order. One groupBy;
-    the rarity filter runs post-agg on key-cardinality rows."""
-    ev = load_table(spark, "events", sf_dir)
-    ev = ev.withColumn(
-        "user_day",
-        F.concat_ws(":", F.col("user_id"), F.to_date("ts")))
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"rare": {
-            "rare_terms": {"field": "user_day", "max_doc_count": 1},
-            "aggs": {"spend": {"sum": {"field": "value"}}},
-        }},
-    })
-
-
 DSL_RARE_TERMS_ORACLE = """
 SELECT concat(user_id, ':', strftime(ts, '%Y-%m-%d')) AS key,
        count(*) AS doc_count,
@@ -852,24 +406,6 @@ FROM events WHERE event_type = 'purchase'
 GROUP BY 1 HAVING count(*) <= 1
 ORDER BY doc_count ASC, key ASC
 """
-
-
-def dsl_serial_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`serial_diff` pipeline agg, lag=7: week-over-week delta of
-    daily purchase revenue — a lag window over the (bounded) day
-    frame, after the one corpus-scale grouped pass."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {
-                "revenue": {"sum": {"field": "value"}},
-                "wow": {"serial_diff": {"buckets_path": "revenue",
-                                        "lag": 7}},
-            },
-        }},
-    })
 
 
 DSL_SERIAL_DIFF_ORACLE = f"""
@@ -885,25 +421,6 @@ FROM b ORDER BY key
 """
 
 
-def dsl_stats_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`stats_bucket` sibling pipeline agg: count/min/max/avg/sum of
-    the per-day revenue metric across all buckets — one scalar agg of
-    the day frame."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {
-            "per_day": {
-                "date_histogram": {"field": "ts",
-                                   "calendar_interval": "day"},
-                "aggs": {"revenue": {"sum": {"field": "value"}}},
-            },
-            "day_stats": {"stats_bucket":
-                          {"buckets_path": "per_day>revenue"}},
-        },
-    })
-
-
 DSL_STATS_BUCKET_ORACLE = f"""
 WITH b AS (
   SELECT {_DAY_KEY} AS key, round(sum(value), 4) AS revenue
@@ -916,24 +433,6 @@ SELECT count(revenue) AS day_stats_count,
        round(sum(revenue), 4) AS day_stats_sum
 FROM b
 """
-
-
-def dsl_cumulative_cardinality(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """`cumulative_cardinality` pipeline agg: distinct purchasers seen
-    up to each day, EXACT, via the first-occurrence trick — each user
-    counts only at their first day (one value-keyed shuffle), then a
-    running sum over the bounded day frame. No per-bucket HLL unions,
-    no second scan."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts", "calendar_interval": "day"},
-            "aggs": {"users_seen": {"cumulative_cardinality":
-                                    {"field": "user_id"}}},
-        }},
-    })
 
 
 DSL_CUMULATIVE_CARDINALITY_ORACLE = f"""
@@ -951,24 +450,6 @@ SELECT b.key, b.doc_count,
 FROM b LEFT JOIN news ON b.key = news.key
 ORDER BY b.key
 """
-
-
-def dsl_adjacency_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`adjacency_matrix` bucket agg: counts for each named filter and
-    each pairwise intersection ("a&b") — constant-factor map-side
-    explode, one shuffle, empty intersections omitted."""
-    ev = load_table(spark, "events", sf_dir)
-    ev = ev.withColumn("dow", F.dayofweek("ts"))  # 1=Sun .. 7=Sat
-    return search(ev, {
-        "aggs": {"adj": {
-            "adjacency_matrix": {"filters": {
-                "big": {"range": {"value": {"gte": 300}}},
-                "purchase": {"term": {"event_type": "purchase"}},
-                "weekend": {"terms": {"dow": [1, 7]}},
-            }},
-            "aggs": {"avg_value": {"avg": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_ADJACENCY_ORACLE = """
@@ -999,21 +480,6 @@ WHERE doc_count > 0 ORDER BY key
 """
 
 
-def dsl_multi_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`multi_terms` bucket agg (ES 7.12+): buckets over (lang,
-    source) value combinations with an avg metric — one multi-column
-    groupBy shuffle, '|'-joined key_as_string, _count-desc order."""
-    docs = load_table(spark, "documents", sf_dir)
-    return search(docs, {
-        "aggs": {"by_lang_src": {
-            "multi_terms": {"terms": [{"field": "lang"},
-                                      {"field": "source"}],
-                            "size": 15},
-            "aggs": {"avg_len": {"avg": {"field": "n_chars"}}},
-        }},
-    })
-
-
 DSL_MULTI_TERMS_ORACLE = """
 SELECT concat(lang, '|', source) AS key,
        count(*) AS doc_count,
@@ -1024,24 +490,6 @@ ORDER BY doc_count DESC, key ASC LIMIT 15
 
 
 AUTO_HIST_TARGET = 10
-
-
-def dsl_auto_date_histogram(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """`auto_date_histogram`: the finest calendar interval keeping
-    the bucket count <= 10 (the events table spans ~a month, so the
-    choice lands on 'week' — non-trivially between day and month).
-    The span arithmetic that picks the unit runs on a one-row scalar
-    aggregate and is mirrored verbatim in the oracle SQL."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"auto": {
-            "auto_date_histogram": {"field": "ts",
-                                    "buckets": AUTO_HIST_TARGET},
-            "aggs": {"revenue": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 def _auto_hist_oracle(target: int) -> str:
@@ -1081,19 +529,6 @@ FROM h JOIN sel ON h.u = sel.unit ORDER BY key
 DSL_AUTO_DATE_HISTOGRAM_ORACLE = _auto_hist_oracle(AUTO_HIST_TARGET)
 
 
-def dsl_terms_include(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """terms agg with `include`/`exclude` whole-key regexes (the ES
-    partition-of-keys workflow): sources matching src1x but not
-    src12 — both filters run post-agg on key-cardinality rows."""
-    docs = load_table(spark, "documents", sf_dir)
-    return search(docs, {
-        "aggs": {"srcs": {"terms": {
-            "field": "source", "size": 20,
-            "include": "src1[0-9]", "exclude": "src12",
-        }}},
-    })
-
-
 DSL_TERMS_INCLUDE_ORACLE = """
 SELECT source AS key, count(*) AS doc_count
 FROM documents
@@ -1101,18 +536,6 @@ WHERE regexp_full_match(source, 'src1[0-9]')
   AND NOT regexp_full_match(source, 'src12')
 GROUP BY source ORDER BY doc_count DESC, key ASC LIMIT 20
 """
-
-
-def dsl_significant_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`significant_text`: tokens over-represented in English docs vs
-    the whole corpus — document-frequency lift over the text field's
-    distinct analyzed tokens (one explode + one token shuffle)."""
-    docs = load_table(spark, "documents", sf_dir)
-    return search(docs, {
-        "query": {"term": {"lang": "en"}},
-        "aggs": {"sig": {"significant_text": {"field": "text",
-                                              "size": 10}}},
-    })
 
 
 def _sig_text_oracle() -> str:
@@ -1137,23 +560,6 @@ ORDER BY score DESC, key ASC LIMIT 10
 
 
 DSL_SIGNIFICANT_TEXT_ORACLE = _sig_text_oracle()
-
-
-def dsl_histogram_zerofill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Numeric `histogram` with `min_doc_count: 0`: one user's sparse
-    purchase values over 50-wide bins, empty bins included — the bin
-    axis comes from a one-row bounds aggregate (bin-cardinality,
-    bounded by the value range, not data volume)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"bool": {"must": [
-            {"term": {"user_id": 7}},
-            {"term": {"event_type": "purchase"}},
-        ]}},
-        "aggs": {"bins": {"histogram": {"field": "value",
-                                        "interval": 50,
-                                        "min_doc_count": 0}}},
-    })
 
 
 DSL_HISTOGRAM_ZEROFILL_ORACLE = """
@@ -1764,28 +1170,6 @@ FROM samp
 
 # ----------------------------------------------------- dsl_rate
 
-def dsl_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES `rate` agg inside a date_histogram: per-day buckets with
-    the event count rescaled to an hourly rate and the value sum to
-    a per-hour rate. Pure bucket-frame arithmetic after the one
-    grouped pass (the parent interval is named explicitly — the
-    metric compiler is context-free; see esdsl._metric_cols)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "click"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts",
-                               "calendar_interval": "day"},
-            "aggs": {
-                "events_per_hour": {"rate": {
-                    "unit": "hour", "parent_interval": "day"}},
-                "value_per_hour": {"rate": {
-                    "field": "value", "unit": "hour",
-                    "parent_interval": "day"}},
-            },
-        }},
-    })
-
 
 DSL_RATE_ORACLE = """
 SELECT strftime(date_trunc('day', ts), '%Y-%m-%d %H:%M:%S') AS key,
@@ -1947,23 +1331,6 @@ GROUP BY key ORDER BY key
 
 
 # ------------------------------------------ dsl_moving_percentiles
-
-def dsl_moving_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`moving_percentiles` pipeline agg: p50/p90 of daily volume
-    over a 7-day trailing window. ES runs a t-digest over the
-    window; exact percentiles here — the window is
-    bucket-cardinality (days), a tiny second-pass frame."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "view"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts",
-                               "calendar_interval": "day"},
-            "aggs": {"vol": {"moving_percentiles": {
-                "buckets_path": "doc_count", "window": 7,
-                "percents": [50, 90]}}},
-        }},
-    })
 
 
 DSL_MOVING_PERCENTILES_ORACLE = """
@@ -2204,29 +1571,6 @@ FROM e
 
 # ------------------------------------------ dsl_min_max_sum_bucket
 
-def dsl_min_max_sum_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The three remaining sibling pipeline aggs in one body:
-    min_bucket / max_bucket / sum_bucket of per-day purchase revenue.
-    One grouped pass builds the bounded day frame; one scalar agg of
-    that frame computes all three siblings (no second scan)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {
-            "per_day": {
-                "date_histogram": {"field": "ts",
-                                   "calendar_interval": "day"},
-                "aggs": {"revenue": {"sum": {"field": "value"}}},
-            },
-            "worst_day": {"min_bucket":
-                          {"buckets_path": "per_day>revenue"}},
-            "best_day": {"max_bucket":
-                         {"buckets_path": "per_day>revenue"}},
-            "total": {"sum_bucket":
-                      {"buckets_path": "per_day>revenue"}},
-        },
-    })
-
 
 DSL_MIN_MAX_SUM_BUCKET_ORACLE = f"""
 WITH b AS (
@@ -2244,26 +1588,6 @@ FROM b
 
 _TP_PARTITION, _TP_NUM = 3, 20
 _TP_SIZE = 15
-
-
-def dsl_terms_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partitioned terms agg: page 3 of 20 over the user_id key
-    space, top spenders within the page. The md5 partition filter
-    evaluates on the RAW key before the groupBy (map-side), so a
-    page shuffles ~1/20 of the keys — ES's exact motive for the
-    feature (a single terms response over billions of keys cannot
-    materialize)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"spenders": {
-            "terms": {"field": "user_id", "size": _TP_SIZE,
-                      "include": {"partition": _TP_PARTITION,
-                                  "num_partitions": _TP_NUM},
-                      "order": {"spend": "desc"}},
-            "aggs": {"spend": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_TERMS_PARTITION_ORACLE = f"""
@@ -2329,25 +1653,6 @@ FROM d GROUP BY key ORDER BY key
 
 # ---------------------------------------------------- dsl_composite_mixed
 
-def dsl_composite_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite agg with MIXED source types — the real composite
-    contract (date_histogram x terms in one key tuple, keyset-paged
-    with `after`): ES's scale-path agg for exporting a full
-    cube slice in key order. The groupBy key is (day, type); the
-    `after` cursor compiles to one lexicographic keyset predicate
-    evaluated BEFORE the bucket sort, so each page aggregates and
-    ships only the keys past the cursor."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {"aggs": {"page": {"composite": {
-        "size": 12,
-        "sources": [
-            {"day": {"date_histogram": {"field": "ts",
-                                        "calendar_interval": "day"}}},
-            {"etype": {"terms": {"field": "event_type"}}},
-        ],
-        "after": {"day": "2024-01-10 00:00:00", "etype": "purchase"},
-    }, "aggs": {"revenue": {"sum": {"field": "value"}}}}}})
-
 
 DSL_COMPOSITE_MIXED_ORACLE = """
 WITH b AS (
@@ -2365,25 +1670,6 @@ LIMIT 12
 
 
 # ---------------------------------------------- dsl_terms_missing
-
-def dsl_terms_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`terms` agg `missing` parameter: docs whose field is null land
-    in a named substitute bucket instead of silently vanishing (ES's
-    exact contract; without `missing` they are EXCLUDED — both
-    behaviors pinned here via a runtime field that nulls out
-    low-value events). The coalesce happens BEFORE the groupBy, so
-    the substitute bucket shuffles like any other key."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "runtime_mappings": {"maybe_type": {
-            "expr": "CASE WHEN value < 50 THEN NULL "
-                    "ELSE event_type END"}},
-        "aggs": {"types": {
-            "terms": {"field": "maybe_type", "size": 10,
-                      "missing": "(none)"},
-            "aggs": {"revenue": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_TERMS_MISSING_ORACLE = """
@@ -2432,28 +1718,6 @@ GROUP BY key ORDER BY key
 
 # ------------------------------------------------ dsl_moving_fn_max
 
-def dsl_moving_fn_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`moving_fn` with MovingFunctions.max and .stdDev scripts over
-    a daily revenue histogram (trailing 7-bucket window) — the
-    named-reducer moving_fn contract beyond the unweightedAvg
-    default. Serial pipes run over the bounded bucket frame only."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"per_day": {
-            "date_histogram": {"field": "ts",
-                               "calendar_interval": "day"},
-            "aggs": {
-                "revenue": {"sum": {"field": "value"}},
-                "peak7": {"moving_fn": {
-                    "buckets_path": "revenue", "window": 7,
-                    "script": "MovingFunctions.max(values)"}},
-                "vol7": {"moving_fn": {
-                    "buckets_path": "revenue", "window": 7,
-                    "script": "MovingFunctions.stdDev(values)"}},
-            }}},
-    })
-
 
 DSL_MOVING_FN_MAX_ORACLE = """
 WITH b AS (
@@ -2472,21 +1736,6 @@ FROM b ORDER BY key
 
 
 # ------------------------------------------ dsl_terms_min_doc_count
-
-def dsl_terms_min_doc_count(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """`terms` with `min_doc_count`: sparse buckets pruned BEFORE the
-    bucket sort, so the response never surfaces keys below the
-    support floor (ES's long-tail noise filter)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"buyers": {
-            "terms": {"field": "user_id", "size": 15,
-                      "min_doc_count": 5},
-            "aggs": {"spend": {"sum": {"field": "value"}}},
-        }},
-    })
 
 
 DSL_TERMS_MIN_DOC_COUNT_ORACLE = """
@@ -2793,44 +2042,515 @@ FROM af GROUP BY cid ORDER BY bucket""")
     return "\n".join(sql)
 
 
+# derived columns that the bodies below aggregate on
+def _big_amount(ev: DataFrame) -> DataFrame:
+    return ev.withColumn(
+        "big_amount",
+        F.when(F.col("value") > HIGH_VALUE, F.col("value")))
+
+
+def _user_day(ev: DataFrame) -> DataFrame:
+    return ev.withColumn(
+        "user_day",
+        F.concat_ws(":", F.col("user_id"), F.to_date("ts")))
+
+
+def _day_of_week(ev: DataFrame) -> DataFrame:
+    return ev.withColumn("dow", F.dayofweek("ts"))  # 1=Sun .. 7=Sat
+
+
+SEARCHES = {
+    "dsl_date_histogram": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {"avg_value": {"avg": {"field": "value"}}},
+        }},
+    }),
+    "dsl_stats": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"value_stats": {"stats": {"field": "value"}}},
+    }),
+    # the reference's request shape: query + bucket agg + metric sub-aggs
+    # (NewAggregationRequestGenerator, Bootstrap.java:204-212)
+    "dsl_composite": ("events", {
+        "query": {"bool": {
+            "must": [{"term": {"event_type": "purchase"}}],
+            "filter": [{"range": {"ts": {"gte": "2024-01-08"}}}],
+        }},
+        "aggs": {"by_user": {
+            "terms": {"field": "user_id", "size": 5},
+            "aggs": {"avg_value": {"avg": {"field": "value"}},
+                     "sum_value": {"sum": {"field": "value"}}},
+        }},
+    }),
+    # sibling metric aggs: one aggregate pass, one output row
+    "dsl_multi_metric": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {
+            "max_value": {"max": {"field": "value"}},
+            "total_value": {"sum": {"field": "value"}},
+            "n_users": {"cardinality": {"field": "user_id"}},
+            "n_events": {"value_count": {"field": "event_id"}},
+        },
+    }),
+    "dsl_filter_agg": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"big_purchases": {
+            "filter": {"range": {"value": {"gte": 100.0}}},
+            "aggs": {"avg_value": {"avg": {"field": "value"}},
+                     "n_users": {"cardinality": {"field": "user_id"}}},
+        }},
+    }),
+    "dsl_filters_buckets": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"tiers": {
+            "filters": {"filters": {
+                "low": {"range": {"value": {"lt": 50.0}}},
+                "mid": {"range": {"value": {"gte": 50.0, "lt": 150.0}}},
+                "high": {"range": {"value": {"gte": 150.0}}},
+            }},
+            "aggs": {"avg_value": {"avg": {"field": "value"}}},
+        }},
+    }),
+    # ranges are from-inclusive, to-exclusive
+    "dsl_range_agg": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"value_ranges": {
+            "range": {"field": "value",
+                      "ranges": [{"key": "low", "to": 50.0},
+                                 {"key": "mid", "from": 50.0, "to": 150.0},
+                                 {"key": "high", "from": 150.0}]},
+            "aggs": {"n_users": {"cardinality": {"field": "user_id"}}},
+        }},
+    }),
+    # exact interpolated; {"approx": true} swaps in percentile_approx for
+    # the scale path
+    "dsl_percentiles": ("events", {
+        "query": {"term": {"event_type": "view"}},
+        "aggs": {"latency": {
+            "percentiles": {"field": "value", "percents": [50, 90, 99]},
+        }},
+    }),
+    # the unique event_id totalizes the sort
+    "dsl_top_hits": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"by_type": {
+            "terms": {"field": "event_type", "size": 10},
+            "aggs": {"latest": {"top_hits": {
+                "size": 3,
+                "sort": [{"ts": "desc"}, {"event_id": "asc"}],
+                "_source": ["event_id", "user_id", "value"],
+            }}},
+        }},
+    }),
+    # two bucket levels from one grouped pass
+    "dsl_terms_nested": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"by_type": {
+            "terms": {"field": "event_type", "size": 10},
+            "aggs": {"by_user": {"terms": {"field": "user_id",
+                                           "size": 3}}},
+        }},
+    }),
+    # ES's scale-path aggregation is exactly a keyed groupBy plus a
+    # lexicographic keyset predicate for `after`
+    "dsl_composite_paged": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"pages": {
+            "composite": {
+                "size": 8,
+                "sources": [{"etype": {"terms": {"field": "event_type"}}},
+                            {"uid": {"terms": {"field": "user_id"}}}],
+                "after": {"etype": "click", "uid": 5},
+            },
+            "aggs": {"avg_value": {"avg": {"field": "value"}}},
+        }},
+    }),
+    # foreground and background counts from ONE conditional-aggregate scan,
+    # scored by rate lift
+    "dsl_significant_terms": ("events", {
+        "query": {"range": {"value": {"gte": 150.0}}},
+        "aggs": {"hot_types": {
+            "significant_terms": {"field": "event_type", "size": 10},
+        }},
+    }),
+    "dsl_derivative": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {
+                "revenue": {"sum": {"field": "value"}},
+                "rev_deriv": {"derivative": {"buckets_path": "revenue"}},
+                "rev_cumsum": {"cumulative_sum":
+                               {"buckets_path": "revenue"}},
+            },
+        }},
+    }),
+    # the trailing window includes the current bucket
+    "dsl_moving_avg": ("events", {
+        "query": {"term": {"event_type": "click"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {
+                "vol_ma7": {"moving_fn": {"buckets_path": "doc_count",
+                                          "window": 7}},
+            },
+        }},
+    }),
+    "dsl_bucket_script_selector": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {
+                "revenue": {"sum": {"field": "value"}},
+                "aov": {"bucket_script":
+                        {"expr": "revenue / doc_count"}},
+                "busy": {"bucket_selector":
+                         {"expr": f"doc_count >= {BUSY_DAY_MIN_DOCS}"}},
+            },
+        }},
+    }),
+    # ORDER BY metric LIMIT n over the post-agg bucket frame
+    "dsl_bucket_sort": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {
+                "revenue": {"sum": {"field": "value"}},
+                "top": {"bucket_sort": {
+                    "sort": [{"revenue": {"order": "desc"}}],
+                    "size": TOP_DAYS}},
+            },
+        }},
+    }),
+    "dsl_avg_bucket": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {
+            "per_day": {
+                "date_histogram": {"field": "ts",
+                                   "calendar_interval": "day"},
+                "aggs": {"revenue": {"sum": {"field": "value"}}},
+            },
+            "mean_daily_rev": {"avg_bucket":
+                               {"buckets_path": "per_day>revenue"}},
+            "peak_daily_rev": {"max_bucket":
+                               {"buckets_path": "per_day>revenue"}},
+            "low_daily_rev": {"min_bucket":
+                              {"buckets_path": "per_day>revenue"}},
+            "total_rev": {"sum_bucket":
+                          {"buckets_path": "per_day>revenue"}},
+        },
+    }),
+    # ES emits EMPTY calendar buckets (doc_count 0, null metrics) for gaps;
+    # the calendar axis comes from the data min/max (one scalar agg) and
+    # broadcast-left-joins the real buckets
+    "dsl_date_histogram_zerofill": ("events", {
+        "query": {"bool": {"must": [
+            {"term": {"event_type": "purchase"}},
+            {"range": {"value": {"gt": 150}}},
+        ]}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day",
+                               "min_doc_count": 0},
+            "aggs": {"revenue": {"sum": {"field": "value"}}},
+        }},
+    }),
+    "dsl_histogram": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"by_value": {
+            "histogram": {"field": "value", "interval": HIST_INTERVAL},
+            "aggs": {"avg_value": {"avg": {"field": "value"}}},
+        }},
+    }),
+    # ordering by a sub-metric sorts the post-agg bucket frame, no second
+    # scan
+    "dsl_terms_order_metric": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"by_type": {
+            "terms": {"field": "event_type", "size": 3,
+                      "order": {"avg_value": "desc"}},
+            "aggs": {"avg_value": {"avg": {"field": "value"}}},
+        }},
+    }),
+    # two one-row aggregates cross-joined, each a single pass
+    "dsl_global_agg": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {
+            "purch_avg": {"avg": {"field": "value"}},
+            "all_docs": {"global": {},
+                         "aggs": {"avg_value": {"avg":
+                                                {"field": "value"}}}},
+        },
+    }),
+    # from-inclusive, to-exclusive, possibly overlapping windows: the same
+    # map-side bucket explode as `range`/`filters`, one shuffle
+    "dsl_date_range_agg": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"periods": {
+            "date_range": {"field": "ts", "ranges": [
+                {"key": "wk1", "to": "2024-01-08"},
+                {"key": "wk2", "from": "2024-01-08",
+                 "to": "2024-01-15"},
+                {"key": "rest", "from": "2024-01-15"},
+            ]},
+            "aggs": {"revenue": {"sum": {"field": "value"}}},
+        }},
+    }),
+    # POPULATION variance/std-deviation (ES's convention)
+    "dsl_extended_stats": ("events", {
+        "query": {"term": {"event_type": "view"}},
+        "aggs": {"v": {"extended_stats": {"field": "value"}}},
+    }),
+    # exact: the percentage of observations at or below each value
+    "dsl_percentile_ranks": ("events", {
+        "query": {"term": {"event_type": "view"}},
+        "aggs": {"vr": {"percentile_ranks": {"field": "value",
+                                             "values": [50, 150, 300]}}},
+    }),
+    "dsl_missing_agg": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"no_big": {
+            "missing": {"field": "big_amount"},
+            "aggs": {"avg_small": {"avg": {"field": "value"}}},
+        }},
+    }, _big_amount),
+    "dsl_weighted_avg": ("lineitem", {
+        "query": {"term": {"l_returnflag": "R"}},
+        "aggs": {"wavg_price": {"weighted_avg": {
+            "value": {"field": "l_extendedprice"},
+            "weight": {"field": "l_quantity"},
+        }}},
+    }),
+    # a single max_by folded into the terms groupBy (no per-bucket sort, no
+    # window); ES breaks ties arbitrarily, `tie_break` pins the unique
+    # event_id so both engines pick the same row
+    "dsl_top_metrics": ("events", {
+        "aggs": {"by_type": {
+            "terms": {"field": "event_type", "size": 10},
+            "aggs": {"last_value": {"top_metrics": {
+                "metrics": {"field": "value"},
+                "sort": {"ts": "desc"},
+                "tie_break": "event_id",
+            }}},
+        }},
+    }),
+    # one groupBy; the rarity filter runs post-agg on key-cardinality rows
+    "dsl_rare_terms": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"rare": {
+            "rare_terms": {"field": "user_day", "max_doc_count": 1},
+            "aggs": {"spend": {"sum": {"field": "value"}}},
+        }},
+    }, _user_day),
+    # a lag window over the bounded day frame, after the one corpus-scale
+    # grouped pass
+    "dsl_serial_diff": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {
+                "revenue": {"sum": {"field": "value"}},
+                "wow": {"serial_diff": {"buckets_path": "revenue",
+                                        "lag": 7}},
+            },
+        }},
+    }),
+    # one scalar agg of the day frame
+    "dsl_stats_bucket": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {
+            "per_day": {
+                "date_histogram": {"field": "ts",
+                                   "calendar_interval": "day"},
+                "aggs": {"revenue": {"sum": {"field": "value"}}},
+            },
+            "day_stats": {"stats_bucket":
+                          {"buckets_path": "per_day>revenue"}},
+        },
+    }),
+    # EXACT via the first-occurrence trick: each user counts only at their
+    # first day (one value-keyed shuffle), then a running sum over the
+    # bounded day frame; no per-bucket HLL unions, no second scan
+    "dsl_cumulative_cardinality": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts", "calendar_interval": "day"},
+            "aggs": {"users_seen": {"cumulative_cardinality":
+                                    {"field": "user_id"}}},
+        }},
+    }),
+    # constant-factor map-side explode, one shuffle, empty intersections
+    # omitted
+    "dsl_adjacency_matrix": ("events", {
+        "aggs": {"adj": {
+            "adjacency_matrix": {"filters": {
+                "big": {"range": {"value": {"gte": 300}}},
+                "purchase": {"term": {"event_type": "purchase"}},
+                "weekend": {"terms": {"dow": [1, 7]}},
+            }},
+            "aggs": {"avg_value": {"avg": {"field": "value"}}},
+        }},
+    }, _day_of_week),
+    # one multi-column groupBy shuffle, '|'-joined key_as_string,
+    # _count-desc order
+    "dsl_multi_terms": ("documents", {
+        "aggs": {"by_lang_src": {
+            "multi_terms": {"terms": [{"field": "lang"},
+                                      {"field": "source"}],
+                            "size": 15},
+            "aggs": {"avg_len": {"avg": {"field": "n_chars"}}},
+        }},
+    }),
+    # the events table spans ~a month, so the finest interval keeping <= 10
+    # buckets is 'week'; the unit is picked on a one-row scalar aggregate
+    # whose span arithmetic the oracle mirrors verbatim
+    "dsl_auto_date_histogram": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"auto": {
+            "auto_date_histogram": {"field": "ts",
+                                    "buckets": AUTO_HIST_TARGET},
+            "aggs": {"revenue": {"sum": {"field": "value"}}},
+        }},
+    }),
+    # include/exclude are whole-key regexes, run post-agg on
+    # key-cardinality rows
+    "dsl_terms_include": ("documents", {
+        "aggs": {"srcs": {"terms": {
+            "field": "source", "size": 20,
+            "include": "src1[0-9]", "exclude": "src12",
+        }}},
+    }),
+    # document-frequency lift over the distinct analyzed tokens (one explode
+    # + one token shuffle)
+    "dsl_significant_text": ("documents", {
+        "query": {"term": {"lang": "en"}},
+        "aggs": {"sig": {"significant_text": {"field": "text",
+                                              "size": 10}}},
+    }),
+    # the bin axis comes from a one-row bounds aggregate (bounded by the
+    # value range, not data volume)
+    "dsl_histogram_zerofill": ("events", {
+        "query": {"bool": {"must": [
+            {"term": {"user_id": 7}},
+            {"term": {"event_type": "purchase"}},
+        ]}},
+        "aggs": {"bins": {"histogram": {"field": "value",
+                                        "interval": 50,
+                                        "min_doc_count": 0}}},
+    }),
+    # the parent interval is named explicitly: the metric compiler is
+    # context-free (esdsl._metric_cols)
+    "dsl_rate": ("events", {
+        "query": {"term": {"event_type": "click"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts",
+                               "calendar_interval": "day"},
+            "aggs": {
+                "events_per_hour": {"rate": {
+                    "unit": "hour", "parent_interval": "day"}},
+                "value_per_hour": {"rate": {
+                    "field": "value", "unit": "hour",
+                    "parent_interval": "day"}},
+            },
+        }},
+    }),
+    # ES runs a t-digest over the window; exact percentiles here — the
+    # window is bucket-cardinality (days)
+    "dsl_moving_percentiles": ("events", {
+        "query": {"term": {"event_type": "view"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts",
+                               "calendar_interval": "day"},
+            "aggs": {"vol": {"moving_percentiles": {
+                "buckets_path": "doc_count", "window": 7,
+                "percents": [50, 90]}}},
+        }},
+    }),
+    # one scalar agg of the bounded day frame computes all three siblings
+    "dsl_min_max_sum_bucket": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {
+            "per_day": {
+                "date_histogram": {"field": "ts",
+                                   "calendar_interval": "day"},
+                "aggs": {"revenue": {"sum": {"field": "value"}}},
+            },
+            "worst_day": {"min_bucket":
+                          {"buckets_path": "per_day>revenue"}},
+            "best_day": {"max_bucket":
+                         {"buckets_path": "per_day>revenue"}},
+            "total": {"sum_bucket":
+                      {"buckets_path": "per_day>revenue"}},
+        },
+    }),
+    # the md5 partition filter runs on the RAW key before the groupBy, so a
+    # page shuffles ~1/20 of the keys (ES's motive: one terms response over
+    # billions of keys cannot materialize)
+    "dsl_terms_partition": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"spenders": {
+            "terms": {"field": "user_id", "size": _TP_SIZE,
+                      "include": {"partition": _TP_PARTITION,
+                                  "num_partitions": _TP_NUM},
+                      "order": {"spend": "desc"}},
+            "aggs": {"spend": {"sum": {"field": "value"}}},
+        }},
+    }),
+    # the `after` cursor compiles to one lexicographic keyset predicate
+    # evaluated BEFORE the bucket sort, so a page aggregates only the keys
+    # past the cursor
+    "dsl_composite_mixed": ("events", {"aggs": {"page": {"composite": {
+        "size": 12,
+        "sources": [
+            {"day": {"date_histogram": {"field": "ts",
+                                        "calendar_interval": "day"}}},
+            {"etype": {"terms": {"field": "event_type"}}},
+        ],
+        "after": {"day": "2024-01-10 00:00:00", "etype": "purchase"},
+    }, "aggs": {"revenue": {"sum": {"field": "value"}}}}}}),
+    # without `missing` ES EXCLUDES null keys; the coalesce runs before the
+    # groupBy, so the substitute bucket shuffles like any other key
+    "dsl_terms_missing": ("events", {
+        "runtime_mappings": {"maybe_type": {
+            "expr": "CASE WHEN value < 50 THEN NULL "
+                    "ELSE event_type END"}},
+        "aggs": {"types": {
+            "terms": {"field": "maybe_type", "size": 10,
+                      "missing": "(none)"},
+            "aggs": {"revenue": {"sum": {"field": "value"}}},
+        }},
+    }),
+    # named MovingFunctions reducers over the bounded bucket frame only
+    "dsl_moving_fn_max": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"per_day": {
+            "date_histogram": {"field": "ts",
+                               "calendar_interval": "day"},
+            "aggs": {
+                "revenue": {"sum": {"field": "value"}},
+                "peak7": {"moving_fn": {
+                    "buckets_path": "revenue", "window": 7,
+                    "script": "MovingFunctions.max(values)"}},
+                "vol7": {"moving_fn": {
+                    "buckets_path": "revenue", "window": 7,
+                    "script": "MovingFunctions.stdDev(values)"}},
+            }}},
+    }),
+    # sparse buckets are pruned BEFORE the bucket sort
+    "dsl_terms_min_doc_count": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"buyers": {
+            "terms": {"field": "user_id", "size": 15,
+                      "min_doc_count": 5},
+            "aggs": {"spend": {"sum": {"field": "value"}}},
+        }},
+    }),
+}
+
+
 QUERIES = {
-    "dsl_date_histogram": dsl_date_histogram,
-    "dsl_stats": dsl_stats,
-    "dsl_composite": dsl_composite,
-    "dsl_terms_nested": dsl_terms_nested,
-    "dsl_composite_paged": dsl_composite_paged,
-    "dsl_significant_terms": dsl_significant_terms,
-    "dsl_multi_metric": dsl_multi_metric,
-    "dsl_filter_agg": dsl_filter_agg,
-    "dsl_filters_buckets": dsl_filters_buckets,
-    "dsl_range_agg": dsl_range_agg,
-    "dsl_percentiles": dsl_percentiles,
-    "dsl_top_hits": dsl_top_hits,
-    "dsl_missing_agg": dsl_missing_agg,
-    "dsl_extended_stats": dsl_extended_stats,
-    "dsl_percentile_ranks": dsl_percentile_ranks,
-    "dsl_date_range_agg": dsl_date_range_agg,
-    "dsl_global_agg": dsl_global_agg,
-    "dsl_derivative": dsl_derivative,
-    "dsl_date_histogram_zerofill": dsl_date_histogram_zerofill,
-    "dsl_histogram": dsl_histogram,
-    "dsl_terms_order_metric": dsl_terms_order_metric,
-    "dsl_moving_avg": dsl_moving_avg,
-    "dsl_bucket_script_selector": dsl_bucket_script_selector,
-    "dsl_bucket_sort": dsl_bucket_sort,
-    "dsl_avg_bucket": dsl_avg_bucket,
-    "dsl_weighted_avg": dsl_weighted_avg,
-    "dsl_top_metrics": dsl_top_metrics,
-    "dsl_rare_terms": dsl_rare_terms,
-    "dsl_serial_diff": dsl_serial_diff,
-    "dsl_stats_bucket": dsl_stats_bucket,
-    "dsl_cumulative_cardinality": dsl_cumulative_cardinality,
-    "dsl_adjacency_matrix": dsl_adjacency_matrix,
-    "dsl_multi_terms": dsl_multi_terms,
-    "dsl_auto_date_histogram": dsl_auto_date_histogram,
-    "dsl_terms_include": dsl_terms_include,
-    "dsl_significant_text": dsl_significant_text,
-    "dsl_histogram_zerofill": dsl_histogram_zerofill,
+    **dsl_searches(SEARCHES),
     "dsl_nested_agg": dsl_nested_agg,
     "dsl_boxplot": dsl_boxplot,
     "dsl_mad": dsl_mad,
@@ -2847,23 +2567,15 @@ QUERIES = {
     "dsl_geo_centroid": dsl_geo_centroid,
     "dsl_diversified_sampler": dsl_diversified_sampler,
     "dsl_categorize_text": dsl_categorize_text,
-    "dsl_rate": dsl_rate,
     "dsl_geo_bounds": dsl_geo_bounds,
     "dsl_reverse_nested": dsl_reverse_nested,
     "dsl_children_agg": dsl_children_agg,
     "dsl_geo_line": dsl_geo_line,
-    "dsl_moving_percentiles": dsl_moving_percentiles,
     "dsl_change_point": dsl_change_point,
     "dsl_bucket_correlation": dsl_bucket_correlation,
     "dsl_bucket_count_ks_test": dsl_bucket_count_ks_test,
-    "dsl_min_max_sum_bucket": dsl_min_max_sum_bucket,
-    "dsl_terms_partition": dsl_terms_partition,
     "dsl_geo_distance_rings": dsl_geo_distance_rings,
-    "dsl_composite_mixed": dsl_composite_mixed,
-    "dsl_terms_missing": dsl_terms_missing,
     "dsl_date_histogram_tz": dsl_date_histogram_tz,
-    "dsl_moving_fn_max": dsl_moving_fn_max,
-    "dsl_terms_min_doc_count": dsl_terms_min_doc_count,
     "dsl_counter_rate": dsl_counter_rate,
     "dsl_tsds_downsample": dsl_tsds_downsample,
     "dsl_time_series": dsl_time_series,

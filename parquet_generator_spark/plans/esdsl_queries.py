@@ -52,6 +52,7 @@ from parquet_generator_spark.operators.util import (
     broadcast_scalars,
     widen_if_narrow,
 )
+from parquet_generator_spark.plans.spec import dsl_searches
 from parquet_generator_spark.sinks import stores
 from parquet_generator_spark.sources.catalog import load_table
 
@@ -71,14 +72,6 @@ SELECT event_id, user_id, value FROM events
 WHERE event_type = 'purchase' AND value >= 100.0
 ORDER BY event_id
 """
-
-
-def dsl_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, "lineitem", sf_dir)
-    return search(li, {
-        "query": {"range": {"l_quantity": {"gte": 45.0}}},
-        "aggs": {"flags": {"terms": {"field": "l_returnflag", "size": 10}}},
-    })
 
 
 DSL_RANGE_ORACLE = """
@@ -265,23 +258,6 @@ GROUP BY event_type ORDER BY event_type
 # ES recommends search_after over from/size deep paging.
 
 
-def dsl_runtime_field(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`runtime_mappings`: an am/pm bucket computed at search time,
-    then used as a terms-agg field — the Kibana "runtime field"
-    workflow. The definition is a SQL expression (documented
-    deviation from painless)."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "runtime_mappings": {"half_day": {
-            "expr": "CASE WHEN hour(ts) < 12 THEN 'am' ELSE 'pm' END"}},
-        "query": {"term": {"event_type": "purchase"}},
-        "aggs": {"by_half": {
-            "terms": {"field": "half_day", "size": 10},
-            "aggs": {"revenue": {"sum": {"field": "value"}}},
-        }},
-    })
-
-
 DSL_RUNTIME_FIELD_ORACLE = """
 SELECT CASE WHEN hour(ts) < 12 THEN 'am' ELSE 'pm' END AS key,
        count(*) AS doc_count,
@@ -293,20 +269,6 @@ GROUP BY key ORDER BY doc_count DESC, key ASC LIMIT 10
 
 SA_VALUE = 400.0
 SA_ID = 5000
-
-
-def dsl_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted hits with a `search_after` keyset cursor: page 2 of
-    purchases ordered by (value desc, event_id asc) after the cursor
-    (400.0, 5000). The cursor becomes a lexicographic predicate and
-    the sort+size a TakeOrderedAndProject."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"term": {"event_type": "purchase"}},
-        "sort": [{"value": "desc"}, {"event_id": "asc"}],
-        "search_after": [SA_VALUE, SA_ID],
-        "size": 10,
-    })
 
 
 DSL_SEARCH_AFTER_ORACLE = f"""
@@ -647,21 +609,6 @@ def _tok_re(t: str) -> str:
 QS_QUERY = '((spark AND window) OR "merge batch" OR quer?) AND NOT slow'
 
 
-def dsl_query_string(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`query_string` over documents.text — parens, AND/OR/NOT,
-    a quoted phrase and a `?` token wildcard in one expression —
-    faceted by source. The parsed tree compiles to nested boolean
-    rlike predicates evaluated in whole-stage codegen."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"query_string": {
-            "query": QS_QUERY, "fields": ["text"],
-            "default_operator": "OR"}},
-        "aggs": {"by_source": {"terms": {"field": "source",
-                                         "size": 25}}},
-    }))
-
-
 DSL_QUERY_STRING_ORACLE = f"""
 SELECT source AS key, count(*) AS doc_count
 FROM documents
@@ -677,21 +624,6 @@ LIMIT 25
 
 
 SQS_QUERY = 'fast + big -slow | "merge batch" | vec*'
-
-
-def dsl_simple_query_string(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """`simple_query_string` over documents.text: `+`/`|` infix
-    operators, `-` negation, a quoted phrase and a trailing-`*`
-    prefix term, folded left-to-right (the SimpleQueryParser
-    contract), faceted by lang."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"simple_query_string": {
-            "query": SQS_QUERY, "fields": ["text"],
-            "default_operator": "AND"}},
-        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 10}}},
-    }))
 
 
 # left-to-right: (((fast AND big) AND NOT slow) OR "merge batch")
@@ -710,19 +642,6 @@ LIMIT 10
 
 
 MPP_QUERY = "sort ta"
-
-
-def dsl_match_phrase_prefix(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """`match_phrase_prefix`: the analyzed token sequence with the
-    last token matched as a prefix ("sort ta" finds "sort table") —
-    one rlike, faceted by source."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"match_phrase_prefix": {"text": MPP_QUERY}},
-        "aggs": {"by_source": {"terms": {"field": "source",
-                                         "size": 25}}},
-    }))
 
 
 DSL_MATCH_PHRASE_PREFIX_ORACLE = f"""
@@ -863,22 +782,6 @@ _GAP = "([^a-z0-9]+[a-z0-9]+)"
 SPAN_SLOP = 2
 
 
-def dsl_span_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`span_near` proximity: "spark" and "window" within SPAN_SLOP
-    intervening tokens, any order (`in_order: false`), faceted by
-    source. The gap count is exact — the regex counts intervening
-    tokens directly."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"span_near": {
-            "clauses": [{"span_term": {"text": "spark"}},
-                        {"span_term": {"text": "window"}}],
-            "slop": SPAN_SLOP, "in_order": False}},
-        "aggs": {"by_source": {"terms": {"field": "source",
-                                         "size": 25}}},
-    }))
-
-
 def _near(a: str, b: str) -> str:
     return f"{_B_L}{a}{_GAP}{{0,{SPAN_SLOP}}}[^a-z0-9]+{b}{_B_R}"
 
@@ -895,21 +798,6 @@ LIMIT 25
 
 TERMS_SET = ["spark", "window", "agg", "merge"]
 TERMS_SET_MIN = 3
-
-
-def dsl_terms_set(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`terms_set`: documents containing at least TERMS_SET_MIN of
-    the four query terms (constant minimum via
-    minimum_should_match_script, the ES idiom) — k-of-m as a sum of
-    codegen int casts, faceted by lang."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"terms_set": {"text": {
-            "terms": TERMS_SET,
-            "minimum_should_match_script": {
-                "source": str(TERMS_SET_MIN)}}}},
-        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 10}}},
-    }))
 
 
 def _hits_sql() -> str:
@@ -1208,25 +1096,6 @@ INTERVALS_TERMS = ["spark", "window", "agg"]
 INTERVALS_GAPS = 4
 
 
-def dsl_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`intervals` query: an ORDERED match of three terms with a
-    SHARED max_gaps budget (the case no single regex expresses — a
-    per-gap bound admits 2x the budget), plus an `any_of` alternative
-    over an unordered pair. Compiles to nested array higher-order
-    functions over token-position lists — whole-stage codegen, no
-    UDF, no join. Faceted by lang."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"intervals": {"text": {"any_of": {"intervals": [
-            {"match": {"query": " ".join(INTERVALS_TERMS),
-                       "max_gaps": INTERVALS_GAPS, "ordered": True}},
-            {"match": {"query": "vector stream",
-                       "max_gaps": 1, "ordered": False}},
-        ]}}}},
-        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 10}}},
-    }))
-
-
 def _intervals_oracle() -> str:
     p1 = proximity_pred_sql("text", INTERVALS_TERMS, INTERVALS_GAPS,
                             True, engine="duck")
@@ -1243,21 +1112,6 @@ LIMIT 10
 
 SPAN3_TERMS = ["key", "sort", "merge"]
 SPAN3_SLOP = 5
-
-
-def dsl_span_near_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`span_near` with THREE clauses (the shape round 7 refused):
-    total slop budget shared across both gaps, in_order=false, via
-    the exact token-position chain. Faceted by source."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (search(docs, {
-        "query": {"span_near": {
-            "clauses": [{"span_term": {"text": t}}
-                        for t in SPAN3_TERMS],
-            "slop": SPAN3_SLOP, "in_order": False}},
-        "aggs": {"by_source": {"terms": {"field": "source",
-                                         "size": 25}}},
-    }))
 
 
 def _span3_oracle() -> str:
@@ -1533,6 +1387,13 @@ ORDER BY l_linenumber
 _tok_duck = token_present_duck_sql
 
 
+def hit_sql(t: str, w: float) -> str:
+    """DuckDB: the boost ``w`` when ``text`` holds the token ``t``,
+    else 0 (one term's share of a match score)."""
+    return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
+            f"THEN 1 ELSE 0 END)")
+
+
 # ----------------------------------------------- dsl_combined_fields
 
 _CF_BODY = {"combined_fields": {
@@ -1667,10 +1528,6 @@ def dsl_msearch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _msearch_oracle() -> str:
-    def hit(t: str, w: float) -> str:
-        return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END)")
-
     parts = []
     # slots 0/1: bool-should sum scoring, matching when any term hits
     for slot, (t1, w1, t2, w2) in enumerate(
@@ -1681,13 +1538,13 @@ def _msearch_oracle() -> str:
         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
           AS rank, doc_id, score FROM (
    SELECT doc_id,
-          round(CAST({hit(t1, w1)} + {hit(t2, w2)} AS DOUBLE), 4)
+          round(CAST({hit_sql(t1, w1)} + {hit_sql(t2, w2)} AS DOUBLE), 4)
             AS score
    FROM documents
    WHERE {_tok_duck('text', t1)} OR {_tok_duck('text', t2)}
    ORDER BY score DESC, doc_id ASC LIMIT 5))""")
     # slot 2: dis_max with tie_breaker 0.5
-    s1, s2 = hit("merge", 2.0), hit("window", 1.0)
+    s1, s2 = hit_sql("merge", 2.0), hit_sql("window", 1.0)
     parts.append(f"""
 (SELECT 2 AS slot,
         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT)
@@ -1728,17 +1585,10 @@ _TEMPLATE = """
 _TEMPLATE_PARAMS = {"etype": "purchase", "with_floor": True,
                     "floor": 50}
 
-
-def dsl_search_template(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES search template: the mustache body above (a var
-    substitution inside a string, a numeric substitution, and a
-    conditional range section) renders on the driver at plan time,
-    then runs as a plain search — daily revenue of purchases with
-    value >= 50. The rendered plan is indistinguishable from the
-    hand-written one (term + range push down to the scan)."""
-    ev = load_table(spark, "events", sf_dir)
-    body = render_search_template(_TEMPLATE, _TEMPLATE_PARAMS)
-    return search(ev, body)
+# rendered once on the driver, then run as a plain search: the plan is
+# indistinguishable from the hand-written body's (term + range push
+# down to the scan)
+SEARCH_TEMPLATE_BODY = render_search_template(_TEMPLATE, _TEMPLATE_PARAMS)
 
 
 DSL_SEARCH_TEMPLATE_ORACLE = f"""
@@ -2635,7 +2485,99 @@ def load_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MATCH = {s.lang: (match_query(s), match_oracle(s)) for s in SPECS}
 
+SEARCHES = {
+    "dsl_range": ("lineitem", {
+        "query": {"range": {"l_quantity": {"gte": 45.0}}},
+        "aggs": {"flags": {"terms": {"field": "l_returnflag", "size": 10}}},
+    }),
+    # the runtime field is a SQL expression (documented deviation from
+    # painless)
+    "dsl_runtime_field": ("events", {
+        "runtime_mappings": {"half_day": {
+            "expr": "CASE WHEN hour(ts) < 12 THEN 'am' ELSE 'pm' END"}},
+        "query": {"term": {"event_type": "purchase"}},
+        "aggs": {"by_half": {
+            "terms": {"field": "half_day", "size": 10},
+            "aggs": {"revenue": {"sum": {"field": "value"}}},
+        }},
+    }),
+    # the cursor becomes a lexicographic predicate and sort + size a
+    # TakeOrderedAndProject
+    "dsl_search_after": ("events", {
+        "query": {"term": {"event_type": "purchase"}},
+        "sort": [{"value": "desc"}, {"event_id": "asc"}],
+        "search_after": [SA_VALUE, SA_ID],
+        "size": 10,
+    }),
+    # the parsed tree compiles to nested boolean rlike predicates in
+    # whole-stage codegen
+    "dsl_query_string": ("documents", {
+        "query": {"query_string": {
+            "query": QS_QUERY, "fields": ["text"],
+            "default_operator": "OR"}},
+        "aggs": {"by_source": {"terms": {"field": "source",
+                                         "size": 25}}},
+    }),
+    # operators fold left-to-right (the SimpleQueryParser contract)
+    "dsl_simple_query_string": ("documents", {
+        "query": {"simple_query_string": {
+            "query": SQS_QUERY, "fields": ["text"],
+            "default_operator": "AND"}},
+        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 10}}},
+    }),
+    # the last token matches as a prefix ("sort ta" finds "sort table"):
+    # one rlike
+    "dsl_match_phrase_prefix": ("documents", {
+        "query": {"match_phrase_prefix": {"text": MPP_QUERY}},
+        "aggs": {"by_source": {"terms": {"field": "source",
+                                         "size": 25}}},
+    }),
+    # the gap count is exact: the regex counts intervening tokens directly
+    "dsl_span_near": ("documents", {
+        "query": {"span_near": {
+            "clauses": [{"span_term": {"text": "spark"}},
+                        {"span_term": {"text": "window"}}],
+            "slop": SPAN_SLOP, "in_order": False}},
+        "aggs": {"by_source": {"terms": {"field": "source",
+                                         "size": 25}}},
+    }),
+    # a constant minimum via minimum_should_match_script (the ES idiom);
+    # k-of-m is a sum of codegen int casts
+    "dsl_terms_set": ("documents", {
+        "query": {"terms_set": {"text": {
+            "terms": TERMS_SET,
+            "minimum_should_match_script": {
+                "source": str(TERMS_SET_MIN)}}}},
+        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 10}}},
+    }),
+    # one max_gaps budget SHARED by both gaps (no single regex expresses
+    # it: a per-gap bound admits 2x the budget), compiled to array
+    # higher-order functions over token positions: codegen, no UDF, no join
+    "dsl_intervals": ("documents", {
+        "query": {"intervals": {"text": {"any_of": {"intervals": [
+            {"match": {"query": " ".join(INTERVALS_TERMS),
+                       "max_gaps": INTERVALS_GAPS, "ordered": True}},
+            {"match": {"query": "vector stream",
+                       "max_gaps": 1, "ordered": False}},
+        ]}}}},
+        "aggs": {"by_lang": {"terms": {"field": "lang", "size": 10}}},
+    }),
+    # the slop budget is shared across both gaps, via the exact
+    # token-position chain
+    "dsl_span_near_multi": ("documents", {
+        "query": {"span_near": {
+            "clauses": [{"span_term": {"text": t}}
+                        for t in SPAN3_TERMS],
+            "slop": SPAN3_SLOP, "in_order": False}},
+        "aggs": {"by_source": {"terms": {"field": "source",
+                                         "size": 25}}},
+    }),
+    "dsl_search_template": ("events", SEARCH_TEMPLATE_BODY),
+}
+
+
 QUERIES = {
+    **dsl_searches(SEARCHES),
     **{f"dsl_match_analyzer_{lang}": q for lang, (q, _) in _MATCH.items()},
     "dsl_match_phrase_analyzer_de": dsl_match_phrase_analyzer_de,
     "dsl_match_lang_routed": dsl_match_lang_routed,
@@ -2644,34 +2586,24 @@ QUERIES = {
     "dsl_match_analyzer_stored": _MATCH["es"][0],
     "dsl_match_phrase_analyzer_stored": dsl_match_phrase_analyzer_de,
     "dsl_term": dsl_term,
-    "dsl_range": dsl_range,
     "dsl_bool": dsl_bool,
     "dsl_exists_prefix_wildcard": dsl_exists_prefix_wildcard,
     "dsl_nested_bool": dsl_nested_bool,
     "dsl_multi_match": dsl_multi_match,
     "dsl_fuzzy": dsl_fuzzy,
     "dsl_match_msm": dsl_match_msm,
-    "dsl_runtime_field": dsl_runtime_field,
-    "dsl_search_after": dsl_search_after,
     "dsl_more_like_this": dsl_more_like_this,
     "dsl_nested": dsl_nested,
     "dsl_geo_distance": dsl_geo_distance,
     "dsl_geo_bounding_box": dsl_geo_bounding_box,
     "dsl_has_child": dsl_has_child,
     "dsl_has_parent": dsl_has_parent,
-    "dsl_query_string": dsl_query_string,
-    "dsl_simple_query_string": dsl_simple_query_string,
-    "dsl_match_phrase_prefix": dsl_match_phrase_prefix,
     "dsl_dis_max_boosting": dsl_dis_max_boosting,
-    "dsl_span_near": dsl_span_near,
-    "dsl_terms_set": dsl_terms_set,
     "dsl_percolate": dsl_percolate,
     "dsl_geo_shape": dsl_geo_shape,
     "dsl_wrapper": dsl_wrapper,
     "dsl_ip_prefix": dsl_ip_prefix,
     "dsl_ip_range": dsl_ip_range,
-    "dsl_intervals": dsl_intervals,
-    "dsl_span_near_multi": dsl_span_near_multi,
     "dsl_date_math": dsl_date_math,
     "dsl_terms_lookup": dsl_terms_lookup,
     "dsl_field_caps": dsl_field_caps,
@@ -2680,7 +2612,6 @@ QUERIES = {
     "dsl_combined_fields": dsl_combined_fields,
     "dsl_match_bool_prefix": dsl_match_bool_prefix,
     "dsl_msearch": dsl_msearch,
-    "dsl_search_template": dsl_search_template,
     "dsl_geo_polygon": dsl_geo_polygon,
     "dsl_span_or_not": dsl_span_or_not,
     "dsl_match_analyzer": dsl_match_analyzer,

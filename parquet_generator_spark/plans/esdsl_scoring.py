@@ -16,7 +16,6 @@ from parquet_generator_spark.operators.esdsl import (
     _B_L,
     _B_R,
     score_query,
-    search,
     token_present_duck_sql,
     translate_query,
 )
@@ -24,6 +23,8 @@ from parquet_generator_spark.operators.similarity import (
     cosine_to_literal,
     cosine_to_literal_duck_sql,
 )
+from parquet_generator_spark.plans.esdsl_queries import hit_sql
+from parquet_generator_spark.plans.spec import dsl_searches
 from parquet_generator_spark.sources.catalog import load_table
 
 
@@ -326,17 +327,6 @@ RESCORE_BODY = {
 }
 
 
-def dsl_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`rescore` two-phase ranking: phase 1 ranks every dis_max match
-    and keeps the top window_size via TakeOrderedAndProject (never a
-    global sort); phase 2 re-scores ONLY that bounded window with a
-    phrase query and combines 0.7*q + 1.2*r. The expensive scorer
-    touches window_size rows regardless of corpus size — the whole
-    point of rescore at 100 TB."""
-    docs = load_table(spark, "documents", sf_dir)
-    return search(docs, RESCORE_BODY)
-
-
 def _rescore_oracle() -> str:
     from parquet_generator_spark.operators.esdsl import phrase_regex
 
@@ -384,22 +374,6 @@ KNN_QV = [round(__import__("math").sin(0.7 * i + 0.3), 4)
 KNN_FILTER = {"range": {"label": {"gte": 3}}}
 
 
-def dsl_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ES 8.x `knn` search section: filtered vector search for one
-    literal query vector, routed to the IVF index. The filter
-    (label >= 3) applies BEFORE the probe (ES filtered-kNN: every hit
-    satisfies it); the query's probe cells are computed at plan time
-    on the driver, so the executed plan is pre-filter -> single-cell
-    assignment (narrow map) -> cell IN probes -> cosine vs literal ->
-    TakeOrderedAndProject. No join, no shuffle, no corpus broadcast."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    return search(emb, {"knn": {
-        "field": "embedding", "query_vector": KNN_QV, "k": KNN_K,
-        "filter": KNN_FILTER,
-        "n_cells": KNN_CELLS, "n_probe": KNN_PROBE,
-    }})
-
-
 def _knn_oracle() -> str:
     from parquet_generator_spark.operators.similarity import (
         knn_literal_topk_duck_sql,
@@ -410,47 +384,6 @@ def _knn_oracle() -> str:
 
 
 # ------------------------------------------------- dsl_scripted_metric
-
-def dsl_scripted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``scripted_metric`` agg (bounded painless subset): the ES
-    reference's canonical fold shape — map emits a value per doc into
-    ``state``, combine folds the shard, reduce folds the shards with
-    the same operator. That associativity is exactly a Catalyst
-    partial aggregate, so both scripted metrics below run in the SAME
-    single grouped pass as the terms bucket (map-side combine + final
-    merge; no UDF, no state object, no extra shuffle). Values are
-    quantized to cents inside the script (Math.round(v*100)) so the
-    sum is an exact integer-valued double on both engines."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"range": {"value": {"gte": 0.0}}},
-        "aggs": {"types": {
-            "terms": {"field": "event_type", "size": 20},
-            "aggs": {
-                "big_cents": {"scripted_metric": {
-                    "init_script": "state.t = []",
-                    "map_script":
-                        "state.t.add(doc['value'].value >= 100.0"
-                        " ? Math.round(doc.value.value * 100) : 0)",
-                    "combine_script":
-                        "long p = 0; for (t in state.t) { p += t }"
-                        " return p",
-                    "reduce_script":
-                        "long p = 0; for (a in states) { p += a }"
-                        " return p"}},
-                "peak_cents": {"scripted_metric": {
-                    "init_script": "state.m = 0",
-                    "map_script":
-                        "state.m = Math.max(state.m,"
-                        " Math.round(doc.value.value * 100))",
-                    "combine_script":
-                        "long m = 0; for (s in state.m) m ="
-                        " Math.max(m, s); return m",
-                    "reduce_script":
-                        "long m = 0; for (a in states) m ="
-                        " Math.max(m, a); return m"}},
-            }}},
-    })
 
 
 DSL_SCRIPTED_METRIC_ORACLE = """
@@ -1043,11 +976,8 @@ def dsl_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _rrf_oracle() -> str:
-    def hit(t: str, w: float) -> str:
-        return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END)")
-
-    s1, s2, s3 = hit("join", 2.0), hit("hash", 1.5), hit("sort", 1.0)
+    s1, s2, s3 = (hit_sql("join", 2.0), hit_sql("hash", 1.5),
+                  hit_sql("sort", 1.0))
     cos_sql = cosine_to_literal_duck_sql(
         "CAST(embedding AS DOUBLE[])", _RRF_QV)
     return f"""
@@ -1128,11 +1058,8 @@ def dsl_hybrid_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hybrid_oracle() -> str:
-    def hit(t: str, w: float) -> str:
-        return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END)")
-
-    s1, s2, s3 = hit("scan", 2.0), hit("filter", 1.5), hit("batch", 1.0)
+    s1, s2, s3 = (hit_sql("scan", 2.0), hit_sql("filter", 1.5),
+                  hit_sql("batch", 1.0))
     cos_sql = cosine_to_literal_duck_sql(
         "CAST(embedding AS DOUBLE[])", _HY_QV)
     return f"""
@@ -1322,11 +1249,8 @@ def dsl_ltr_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ltr_oracle() -> str:
-    def hit(t: str, w: float) -> str:
-        return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END)")
-
-    s1, s2, s3 = hit("scan", 2.0), hit("sort", 1.5), hit("line", 1.0)
+    s1, s2, s3 = (hit_sql("scan", 2.0), hit_sql("sort", 1.5),
+                  hit_sql("line", 1.0))
     return f"""
 WITH win AS (
   SELECT doc_id, lang, text,
@@ -1431,11 +1355,7 @@ def dsl_retriever_pipeline(spark: SparkSession,
 def _retriever_pipeline_oracle() -> str:
     from parquet_generator_spark.operators.esdsl import phrase_regex
 
-    def hit(t: str, w: float) -> str:
-        return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END)")
-
-    s1, s2 = hit("merge", 2.0), hit("batch", 1.0)
+    s1, s2 = hit_sql("merge", 2.0), hit_sql("batch", 1.0)
     cos_sql = cosine_to_literal_duck_sql(
         "CAST(embedding AS DOUBLE[])", _RP_QV)
     ph = phrase_regex("merge batch")
@@ -1518,16 +1438,12 @@ def dsl_explain_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _explain_oracle() -> str:
-    def hit(t: str, w: float) -> str:
-        return (f"CAST({w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END) AS DOUBLE)")
-
+    ss = [f"CAST({hit_sql(t, b)} AS DOUBLE)" for t, b in _EXPLAIN_CLAUSES]
     parts = [
         f"SELECT {_EXPLAIN_DOC} AS doc_id, 'match:{t}' AS clause, "
-        f"round({hit(t, b)}, 4) AS contribution "
+        f"round({s}, 4) AS contribution "
         f"FROM documents WHERE doc_id = {_EXPLAIN_DOC}"
-        for t, b in _EXPLAIN_CLAUSES]
-    ss = [hit(t, b) for t, b in _EXPLAIN_CLAUSES]
+        for (t, _), s in zip(_EXPLAIN_CLAUSES, ss)]
     g = f"greatest({ss[0]}, {ss[1]}, {ss[2]})"
     tot = (f"round({g} + {_EXPLAIN_TB} * ({ss[0]} + {ss[1]} + {ss[2]}"
            f" - {g}), 4)")
@@ -1686,38 +1602,6 @@ LIMIT {SCRIPT_PAINLESS_K}
 
 # -------------------------------------- dsl_scripted_metric_loop
 
-def dsl_scripted_metric_loop(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """``scripted_metric`` whose map_script is a bounded painless
-    ``for`` loop over a doc ARRAY field — the remaining real-world
-    scripted_metric shape the fold gate refused (VERDICT r10 #8).
-    The loop bound is the array's own length, so it translates to
-    ONE higher-order aggregate() fold per document (codegen, no
-    unroll, no UDF); the per-doc value then rides the same partial
-    aggregate as every other fold. Values quantized inside the loop
-    (Math.floor(x*x*1000)) so the cross-row sum is an exact
-    integer-valued double on both engines; the per-element CAST to
-    DOUBLE pins float[] arithmetic to one promotion rule."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    return search(emb, {
-        "aggs": {"labels": {
-            "terms": {"field": "label", "size": 20},
-            "aggs": {"sq_millis": {"scripted_metric": {
-                "init_script": "state.v = 0",
-                "map_script":
-                    "for (int i = 0; i < doc['embedding'].length; "
-                    "i++) { state.v += Math.floor("
-                    "doc['embedding'][i] * doc['embedding'][i] "
-                    "* 1000) }",
-                "combine_script":
-                    "long p = 0; for (t in state.v) { p += t }"
-                    " return p",
-                "reduce_script":
-                    "long p = 0; for (a in states) { p += a }"
-                    " return p"}}},
-        }},
-    })
-
 
 _SCRIPTED_LOOP_ORACLE = """
 WITH t AS (
@@ -1737,45 +1621,6 @@ ORDER BY doc_count DESC, key ASC LIMIT 20
 
 
 # -------------------------------------- dsl_scripted_metric_while
-
-def dsl_scripted_metric_while(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """``scripted_metric`` round 12 painless widening: a bounded
-    ``while`` loop map body (the imperative spelling of the r11 for
-    fold — same one-aggregate() translation, no unroll, no UDF) and
-    a MULTI-STATEMENT accumulation sibling (``state.s += ...;
-    state.n += 1`` with a ``return`` reduce — the mean pattern) in
-    the same terms bucket. Values quantized (Math.floor(x*x*1000))
-    so cross-row sums are exact integers in both engines; unbounded
-    while conditions stay loudly refused
-    (operators/esdsl.py _MAP_WHILE_RE + fences)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    return search(emb, {
-        "aggs": {"labels": {
-            "terms": {"field": "label", "size": 20},
-            "aggs": {
-                "sq_millis": {"scripted_metric": {
-                    "init_script": "state.v = 0",
-                    "map_script":
-                        "int i = 0; while (i < "
-                        "doc['embedding'].length) { state.v += "
-                        "Math.floor(doc['embedding'][i] * "
-                        "doc['embedding'][i] * 1000); i++ }",
-                    "combine_script":
-                        "long p = 0; for (t in state.v) { p += t }"
-                        " return p",
-                    "reduce_script":
-                        "long p = 0; for (a in states) { p += a }"
-                        " return p"}},
-                "mean_vec_bucket": {"scripted_metric": {
-                    "init_script": "state.s = 0; state.n = 0",
-                    "map_script":
-                        "state.s += doc['vec_id'].value % 7; "
-                        "state.n += 1",
-                    "reduce_script":
-                        "return state.s * 1.0 / state.n"}},
-            }}},
-    })
 
 
 _SCRIPTED_WHILE_ORACLE = """
@@ -1862,11 +1707,8 @@ def dsl_retriever_linear(spark: SparkSession,
 
 
 def _retriever_linear_oracle() -> str:
-    def hit(t: str, w: float) -> str:
-        return (f"{w!r} * (CASE WHEN {_tok_duck('text', t)} "
-                f"THEN 1 ELSE 0 END)")
-
-    s1, s2, s3 = hit("join", 2.0), hit("hash", 1.5), hit("sort", 1.0)
+    s1, s2, s3 = (hit_sql("join", 2.0), hit_sql("hash", 1.5),
+                  hit_sql("sort", 1.0))
     cos_sql = cosine_to_literal_duck_sql(
         "CAST(embedding AS DOUBLE[])", _RRF_QV)
     return f"""
@@ -1976,7 +1818,110 @@ def _rrf_weighted_oracle() -> str:
     return out
 
 
+SEARCHES = {
+    # phase 1 keeps the top window_size via TakeOrderedAndProject (never a
+    # global sort); phase 2 re-scores ONLY that bounded window, so the
+    # expensive scorer touches window_size rows at any corpus size
+    "dsl_rescore": ("documents", RESCORE_BODY),
+    # the filter applies BEFORE the probe (ES filtered-kNN: every hit
+    # satisfies it); the probe cells are computed on the driver at plan
+    # time, so the plan is pre-filter -> single-cell assignment -> cell IN
+    # probes -> cosine vs literal -> TakeOrderedAndProject: no join, no
+    # shuffle, no corpus broadcast
+    "dsl_knn": ("embeddings", {"knn": {
+        "field": "embedding", "query_vector": KNN_QV, "k": KNN_K,
+        "filter": KNN_FILTER,
+        "n_cells": KNN_CELLS, "n_probe": KNN_PROBE,
+    }}),
+    # the map/combine/reduce fold is associative, i.e. a Catalyst partial
+    # aggregate: both metrics run in the terms bucket's single grouped pass
+    # (no UDF, no extra shuffle); values are quantized to cents in the
+    # script so the sum is exact on both engines
+    "dsl_scripted_metric": ("events", {
+        "query": {"range": {"value": {"gte": 0.0}}},
+        "aggs": {"types": {
+            "terms": {"field": "event_type", "size": 20},
+            "aggs": {
+                "big_cents": {"scripted_metric": {
+                    "init_script": "state.t = []",
+                    "map_script":
+                        "state.t.add(doc['value'].value >= 100.0"
+                        " ? Math.round(doc.value.value * 100) : 0)",
+                    "combine_script":
+                        "long p = 0; for (t in state.t) { p += t }"
+                        " return p",
+                    "reduce_script":
+                        "long p = 0; for (a in states) { p += a }"
+                        " return p"}},
+                "peak_cents": {"scripted_metric": {
+                    "init_script": "state.m = 0",
+                    "map_script":
+                        "state.m = Math.max(state.m,"
+                        " Math.round(doc.value.value * 100))",
+                    "combine_script":
+                        "long m = 0; for (s in state.m) m ="
+                        " Math.max(m, s); return m",
+                    "reduce_script":
+                        "long m = 0; for (a in states) m ="
+                        " Math.max(m, a); return m"}},
+            }}},
+    }),
+    # the loop bound is the array's own length, so the loop is ONE
+    # higher-order aggregate() fold per document (no unroll, no UDF);
+    # quantizing inside the loop keeps the cross-row sum exact, and the
+    # per-element CAST to DOUBLE pins float[] arithmetic to one promotion rule
+    "dsl_scripted_metric_loop": ("embeddings", {
+        "aggs": {"labels": {
+            "terms": {"field": "label", "size": 20},
+            "aggs": {"sq_millis": {"scripted_metric": {
+                "init_script": "state.v = 0",
+                "map_script":
+                    "for (int i = 0; i < doc['embedding'].length; "
+                    "i++) { state.v += Math.floor("
+                    "doc['embedding'][i] * doc['embedding'][i] "
+                    "* 1000) }",
+                "combine_script":
+                    "long p = 0; for (t in state.v) { p += t }"
+                    " return p",
+                "reduce_script":
+                    "long p = 0; for (a in states) { p += a }"
+                    " return p"}}},
+        }},
+    }),
+    # a bounded `while` is the same one-aggregate() fold as the `for` loop;
+    # the multi-statement sibling is the mean pattern; unbounded while
+    # conditions stay loudly refused (operators/esdsl.py _MAP_WHILE_RE)
+    "dsl_scripted_metric_while": ("embeddings", {
+        "aggs": {"labels": {
+            "terms": {"field": "label", "size": 20},
+            "aggs": {
+                "sq_millis": {"scripted_metric": {
+                    "init_script": "state.v = 0",
+                    "map_script":
+                        "int i = 0; while (i < "
+                        "doc['embedding'].length) { state.v += "
+                        "Math.floor(doc['embedding'][i] * "
+                        "doc['embedding'][i] * 1000); i++ }",
+                    "combine_script":
+                        "long p = 0; for (t in state.v) { p += t }"
+                        " return p",
+                    "reduce_script":
+                        "long p = 0; for (a in states) { p += a }"
+                        " return p"}},
+                "mean_vec_bucket": {"scripted_metric": {
+                    "init_script": "state.s = 0; state.n = 0",
+                    "map_script":
+                        "state.s += doc['vec_id'].value % 7; "
+                        "state.n += 1",
+                    "reduce_script":
+                        "return state.s * 1.0 / state.n"}},
+            }}},
+    }),
+}
+
+
 QUERIES = {
+    **dsl_searches(SEARCHES),
     "dsl_function_score": dsl_function_score,
     "dsl_collapse": dsl_collapse,
     "dsl_random_score": dsl_random_score,
@@ -1984,9 +1929,6 @@ QUERIES = {
     "dsl_rank_feature": dsl_rank_feature,
     "dsl_script_score": dsl_script_score,
     "dsl_distance_feature": dsl_distance_feature,
-    "dsl_scripted_metric": dsl_scripted_metric,
-    "dsl_knn": dsl_knn,
-    "dsl_rescore": dsl_rescore,
     "dsl_term_suggest": dsl_term_suggest,
     "dsl_highlight": dsl_highlight,
     "dsl_completion_suggest": dsl_completion_suggest,
@@ -2003,8 +1945,6 @@ QUERIES = {
     "dsl_multi_knn": dsl_multi_knn,
     "dsl_collapse_inner_hits": dsl_collapse_inner_hits,
     "dsl_script_score_painless": dsl_script_score_painless,
-    "dsl_scripted_metric_loop": dsl_scripted_metric_loop,
-    "dsl_scripted_metric_while": dsl_scripted_metric_while,
     "dsl_retriever_linear": dsl_retriever_linear,
     "dsl_rrf_weighted": dsl_rrf_weighted,
 }

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from parquet_generator_spark.operators.esdsl import search
 from parquet_generator_spark.operators.skew import salted_agg, salted_join
+from parquet_generator_spark.plans.spec import dsl_searches
 from parquet_generator_spark.sources.catalog import (
     load_events_between,
     load_table,
@@ -241,16 +242,6 @@ FROM events GROUP BY event_type ORDER BY event_type
 # documents plays an analyzed-text index.
 
 
-def terms_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's rule-discovery terms agg (Bootstrap.java:273)
-    on event_type."""
-    ev = load_table(spark, "events", sf_dir)
-    return search(ev, {
-        "query": {"match_all": {}},
-        "aggs": {"rules": {"terms": {"field": "event_type", "size": 10}}},
-    })
-
-
 TERMS_AGG_ORACLE = """
 SELECT event_type AS key, count(*) AS doc_count
 FROM events GROUP BY event_type
@@ -342,14 +333,23 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
+SEARCHES = {
+    # the reference's rule-discovery terms agg (Bootstrap.java:273)
+    "terms_agg": ("events", {
+        "query": {"match_all": {}},
+        "aggs": {"rules": {"terms": {"field": "event_type", "size": 10}}},
+    }),
+}
+
+
 QUERIES = {
+    **dsl_searches(SEARCHES),
     "anti_join_inactive": anti_join_inactive,
     "train_test_split": train_test_split,
     "pivot_daily_revenue": pivot_daily_revenue,
     "skew_salted_agg": skew_salted_agg,
     "skew_salted_join": skew_salted_join,
     "approx_sketches": approx_sketches,
-    "terms_agg": terms_agg,
     "match_phrase_filter": match_phrase_filter,
     "date_range_scan": date_range_scan,
     "json_decode": json_decode,

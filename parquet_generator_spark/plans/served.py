@@ -23,7 +23,10 @@ from parquet_generator_spark.plans.esdsl_aggs import (
     DSL_TSDS_DOWNSAMPLE_ORACLE,
     _CTR_MOD,
 )
-from parquet_generator_spark.plans.esql import _ctr_source, _esql_rate_oracle
+from parquet_generator_spark.plans.esql import (
+    ORACLES as ESQL_ORACLES,
+    _ctr_source,
+)
 from parquet_generator_spark.plans.retrieval import (
     IVFPQ_CELLS,
     IVFPQ_PROBE,
@@ -363,6 +366,6 @@ ORACLES = {
     "dedup_index_appended": INCREMENTAL_DEDUP_ORACLE,
     "dsl_tsds_downsample_served": DSL_TSDS_DOWNSAMPLE_ORACLE,
     "dsl_rate_served": DSL_RATE_ORACLE,
-    "esql_rate_served": _esql_rate_oracle(),
+    "esql_rate_served": ESQL_ORACLES["esql_rate"],
     "esql_rate_week_served": _rate_week_oracle(),
 }

@@ -44,9 +44,6 @@ from parquet_generator_spark.sinks import snapshots
 
 BUCKET_SECONDS = 21600  # the 6h ES downsample granularity
 
-_PUBLIC = ("event_type", "bucket", "n", "min_value", "max_value",
-           "sum_value", "last_value")
-
 
 def _meta_path(root: str) -> str:
     return os.path.join(root, "rollup_meta.json")

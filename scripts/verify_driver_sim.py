@@ -5,9 +5,13 @@ each against its DuckDB oracle (typed parity included).
     python scripts/verify_driver_sim.py KEY [KEY..] # just these keys
 
 The tables directory defaults to sf0.01; set VERIFY_SF to override.
+The first line names the registry: its key count, the sha256 of the
+sorted key list and the sha256 of the oracle texts (both as JSON).
 The session is deliberately not the package's ``get_spark``: the driver
 brings its own, so this catches a hidden dependence on our conf.
 """
+import hashlib
+import json
 import os
 import sys
 import time
@@ -24,7 +28,17 @@ from scripts.keyrun import (  # noqa: E402
 SF = os.environ.get("VERIFY_SF", "/root/testdata/sf0.01")
 
 
+def registry_line(queries, oracles) -> str:
+    def sha(obj) -> str:
+        return hashlib.sha256(
+            json.dumps(obj, sort_keys=True).encode()).hexdigest()
+    return (f"registry: {len(queries)} keys, key set sha256 "
+            f"{sha(sorted(queries))}, oracle text sha256 {sha(oracles)}")
+
+
 def main() -> int:
+    Q, O = em.queries(), em.oracle_sql()
+    print(registry_line(Q, O), flush=True)
     spark = (SparkSession.builder.master("local[8]")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false")
@@ -41,7 +55,6 @@ def main() -> int:
 
     con = duck_views(SF)
     runner = KeyRunner(spark)
-    Q, O = em.queries(), em.oracle_sql()
     fails = []
     for name in keys or sorted(Q):
         t0 = time.time()

@@ -922,9 +922,9 @@ def test_knn_plan_shape(spark):
     """The esql_knn driver key's plan: pre-filter pushed to the
     scan, one TakeOrderedAndProject, no join/cartesian, no Python
     eval."""
-    from parquet_generator_spark.plans.esql import esql_knn
+    import __spark_entry__ as entrymod
 
-    df = esql_knn(spark, SF)
+    df = entrymod.queries()["esql_knn"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
     for bad in ("SortMergeJoin", "CartesianProduct",

@@ -70,3 +70,20 @@ def test_pagerank_rounds_like_duckdb_replay(spark):
         exp = dict(duckdb.sql(sql).fetchall())
         assert got == exp
         assert len(got) == 2 * n_pairs
+
+
+def test_base_term_matches_duckdb_decimal_literals(spark):
+    """The base term is `pagerank_duck_sql`'s ``(1.0 - d) / n`` as
+    DuckDB evaluates it (DECIMAL 1.0 - 0.85 is exactly 0.15), bit for
+    bit for n = 1..5000; the double ``1.0 - 0.85`` differs at most n."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from parquet_generator_spark.operators.graph import base_term
+
+    got = dict(spark.range(1, 5001)
+               .select("id", base_term(F.col("id")).alias("b"))
+               .collect())
+    exp = dict(duckdb.sql("SELECT n, (1.0 - 0.85) / n "
+                          "FROM range(1, 5001) t(n)").fetchall())
+    assert got == exp

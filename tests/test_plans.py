@@ -969,9 +969,9 @@ def test_esql_cidr_blocks_fold_to_between_arithmetic(spark):
         esql_duck_sql,
         parse_esql,
     )
-    from parquet_generator_spark.plans.esql import ESQL_CIDR_QUERY
+    from parquet_generator_spark.plans.esql import PIPELINES
 
-    sql = esql_duck_sql(parse_esql(ESQL_CIDR_QUERY))
+    sql = esql_duck_sql(parse_esql(PIPELINES["esql_cidr_match"].query))
     assert "BETWEEN 167772160 AND 184549375" in sql  # 10.0.0.0/8
     assert "BETWEEN 3232235520 AND 3232301055" in sql  # 192.168/16
 
