@@ -94,6 +94,15 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
 JACCARD_PAIRS_MAX_ROWS = 20_000
 
 
+def jaccard(sh_a, sh_b) -> Column:
+    """Exact Jaccard of two shingle-set columns, rounded to 3 places
+    as every oracle rounds it; two empty sets score 0.0."""
+    inter = F.size(F.array_intersect(sh_a, sh_b))
+    union = F.size(sh_a) + F.size(sh_b) - inter
+    return F.round(F.when(union > 0, inter.cast("double") / union)
+                   .otherwise(0.0), 3)
+
+
 def jaccard_pairs(df: DataFrame, id_col: str, content_col: str,
                   threshold: float, k: int = 3,
                   max_rows: int | None = JACCARD_PAIRS_MAX_ROWS
@@ -120,13 +129,10 @@ def jaccard_pairs(df: DataFrame, id_col: str, content_col: str,
         F.col(id_col).alias("id"),
         F.expr(shingles_spark(content_col, k)).alias("sh"))
     a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
     return (a.join(b, F.col("a.id") < F.col("b.id"))
             .select(F.col("a.id").alias("id_a"),
                     F.col("b.id").alias("id_b"),
-                    F.round(jac, 3).alias("jaccard"))
+                    jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"))
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -162,21 +168,12 @@ _PERM_A = _rng.integers(1, _MERSENNE, size=_N_PERM, dtype=np.int64)
 _PERM_B = _rng.integers(0, _MERSENNE, size=_N_PERM, dtype=np.int64)
 
 
-def shingle_hashes_spark(sh_col: str) -> str:
-    """Shingle -> 32-bit base hash, JVM-side (md5 + conv stay inside
-    codegen; the Python side only sees int64 arrays). Same value as
-    ``int(md5(s).hexdigest()[:8], 16) % p`` would give."""
-    return (f"transform({sh_col}, s -> "
-            f"cast(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) "
-            f"% {_MERSENNE})")
-
-
 @pandas_udf(T.ArrayType(T.LongType()))
 def minhash_signature(base_hashes: pd.Series) -> pd.Series:
     """128-permutation MinHash signature from pre-hashed shingles.
     Arrow-batched; per-row cost is one (n_shingle x 128) numpy
-    min-reduce — no Python-side hashing (md5 runs in the JVM via
-    shingle_hashes_spark)."""
+    min-reduce — no Python-side hashing (md5 runs in the JVM, in
+    ``minhash_stage``)."""
     out = []
     for hs in base_hashes:
         if hs is None or len(hs) == 0:
@@ -188,6 +185,55 @@ def minhash_signature(base_hashes: pd.Series) -> pd.Series:
                % _MERSENNE).min(axis=0)
         out.append(sig.tolist())
     return pd.Series(out)
+
+
+def minhash_stage(sh: DataFrame, *cols: str) -> DataFrame:
+    """The MinHash stage: an ``(id, sh, *cols)`` frame becomes
+    ``(id, *cols, sig)``. Each shingle's 32-bit base hash is
+    ``int(md5(s).hexdigest()[:8], 16) % p``, computed in the JVM (md5
+    and conv stay inside codegen), so the Python side only sees int64
+    arrays. ``sh`` must be the inline (unbound) shingle expression:
+    the signature UDF composes over it, and the bound form breaks UDF
+    extraction. Widening the input is the caller's choice."""
+    return (sh.withColumn("bh", F.expr(
+                f"transform(sh, s -> cast(conv(substring(md5(s), 1, 8), "
+                f"16, 10) AS BIGINT) % {_MERSENNE})"))
+            .withColumn("sig", minhash_signature("bh"))
+            .select("id", *cols, "sig"))
+
+
+def minhash_bands(sig: DataFrame, *cols: str) -> DataFrame:
+    """``(id, *cols, sig)`` -> ``(id, *cols, band, band_key)``: one
+    row per document and band, the key being the band's two
+    signature rows."""
+    return sig.select("id", *cols, F.posexplode(F.expr(
+        f"transform(sequence(0, {_N_BANDS - 1}), "
+        f"b -> concat_ws(',', sig[2*b], sig[2*b+1]))"))
+        .alias("band", "band_key"))
+
+
+def _verify(cand: DataFrame, sh: DataFrame, a: str, b: str,
+            threshold: float) -> DataFrame:
+    """The candidate-verify tail of the in-query LSH pipelines:
+    ``cand`` holds id pairs in columns ``a`` and ``b``, ``sh`` the
+    ``(id, sh)`` shingle sets; keeps the pairs at exact Jaccard >=
+    threshold. The distinct candidates are materialized once, and
+    only their ids (a tiny fraction of the corpus) are shingled and
+    materialized for the verify joins. Without the checkpoints the
+    signature pipeline would re-run for the semi-join AND the final
+    join, and joining the full ``sh`` twice would re-tokenize the
+    whole corpus per side."""
+    cand = _cache.checkpoint(cand.distinct())
+    ids = (cand.select(F.col(a).alias("id"))
+           .union(cand.select(F.col(b).alias("id")))
+           .distinct())
+    shc = _cache.checkpoint(sh.select("id", "sh")
+                            .join(ids, "id", "left_semi"))
+    sa = shc.select(F.col("id").alias(a), F.col("sh").alias("sh_a"))
+    sb = shc.select(F.col("id").alias(b), F.col("sh").alias("sh_b"))
+    return (cand.join(sa, a).join(sb, b)
+            .select(a, b, jaccard("sh_a", "sh_b").alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
@@ -206,46 +252,55 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, content_col: str,
     """
     sh = widen_if_narrow(df).select(
         F.col(id_col).alias("id"),
-        # inline (unbound) shingle expr: minhash_signature composes
-        # over this column, and the bound form breaks UDF extraction
         F.expr(shingles_spark_inline(content_col, k)).alias("sh"))
-    sig = (sh.withColumn("bh", F.expr(shingle_hashes_spark("sh")))
-           .withColumn("sig", minhash_signature("bh"))
-           .select("id", "sig"))
-    bands = sig.select(
-        "id",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {_N_BANDS - 1}), "
-                   f"b -> concat_ws(',', sig[2*b], sig[2*b+1]))")
-        ).alias("band", "band_key"))
-    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap)
+    bands = _drop_hot_buckets(minhash_bands(minhash_stage(sh)),
+                              ["band", "band_key"], bucket_cap)
     buckets = (bands.groupBy("band", "band_key")
                .agg(F.array_sort(F.collect_list("id")).alias("ids"))
                .filter(F.size("ids") > 1))
-    cand = _cache.checkpoint(
-        buckets.select(F.explode(F.expr(
-            "flatten(transform(sequence(0, size(ids) - 2), "
-            "i -> transform(sequence(i + 1, size(ids) - 1), "
-            "j -> struct(ids[i] AS id_a, ids[j] AS id_b))))")).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct())
-    # verify pass: shingle only the candidate ids (a tiny fraction of
-    # the corpus) and materialize them once. Without the checkpoints
-    # the signature pipeline would re-run for the semi-join AND the
-    # final join, and joining the full `sh` twice would re-tokenize
-    # the whole corpus per side.
-    cand_ids = (cand.select(F.col("id_a").alias("id"))
-                .union(cand.select(F.col("id_b").alias("id")))
-                .distinct())
-    shc = _cache.checkpoint(sh.join(cand_ids, "id", "left_semi"))
-    a = shc.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = shc.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
-    return (cand.join(a, "id_a").join(b, "id_b")
-            .select("id_a", "id_b", F.round(jac, 3).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+    cand = (buckets.select(F.explode(F.expr(
+        "flatten(transform(sequence(0, size(ids) - 2), "
+        "i -> transform(sequence(i + 1, size(ids) - 1), "
+        "j -> struct(ids[i] AS id_a, ids[j] AS id_b))))")).alias("p"))
+        .select("p.id_a", "p.id_b"))
+    return _verify(cand, sh, "id_a", "id_b", threshold)
+
+
+# The DuckDB twin of the MinHash stage and the verify tail, shared by
+# the oracle generators: the same 128 (a*h + b) mod p permutation
+# literals, the same md5 base hashes and the same band keys.
+_MINS_DUCK = ", ".join(
+    f"coalesce(list_min(list_transform(bh, x -> "
+    f"(x * {int(a)} + {int(b)}) % {_MERSENNE})), {_MERSENNE})"
+    for a, b in zip(_PERM_A, _PERM_B))
+_BAND_KEY_DUCK = "concat(sig[2 * b.band + 1], ',', sig[2 * b.band + 2])"
+
+
+def sig_ctes_duck(*cols: str, keep_sh: bool = True) -> str:
+    """The ``h`` (base hashes) and ``sig`` CTEs over
+    ``d(id, *cols, sh)``; ``sig`` is ``(id, *cols, sig)``."""
+    keep = "".join(f"{c}, " for c in cols)
+    h_keep = keep + ("sh, " if keep_sh else "")
+    return f"""h AS (SELECT id, {h_keep}list_transform(sh, s ->
+        CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % {_MERSENNE}) AS bh
+      FROM d),
+sig AS (SELECT id, {keep}[{_MINS_DUCK}] AS sig FROM h)"""
+
+
+def _verify_cte_duck(a: str, b: str) -> str:
+    """The ``j`` CTE: exact Jaccard of every ``cand(a, b)`` pair over
+    the shingle sets of ``d``."""
+    return f"""j AS (
+  SELECT c.{a}, c.{b},
+         round(CASE WHEN len(da.sh) + len(db.sh)
+                         - len(list_intersect(da.sh, db.sh)) > 0
+               THEN CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
+                    / (len(da.sh) + len(db.sh)
+                       - len(list_intersect(da.sh, db.sh)))
+               ELSE 0.0 END, 3) AS jaccard
+  FROM cand c
+  JOIN d da ON da.id = c.{a}
+  JOIN d db ON db.id = c.{b})"""
 
 
 def minhash_lsh_pairs_duck_sql(table: str, id_col: str,
@@ -260,22 +315,14 @@ def minhash_lsh_pairs_duck_sql(table: str, id_col: str,
     both engines, exact-Jaccard verify on the candidates. Equality
     with the Spark side holds by construction on ANY dataset — even
     where the cap fires — instead of only where recall is 1."""
-    p = _MERSENNE
     sh = shingles_duck(content_col, k)
-    mins = ", ".join(
-        f"coalesce(list_min(list_transform(bh, x -> "
-        f"(x * {int(a)} + {int(b)}) % {p})), {p})"
-        for a, b in zip(_PERM_A, _PERM_B))
     cap_pred = "" if bucket_cap is None else f" AND count(*) <= {bucket_cap}"
     return f"""
 WITH d AS (SELECT {id_col} AS id, {sh} AS sh FROM {table}),
-h AS (SELECT id, sh, list_transform(sh, s ->
-        CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % {p}) AS bh
-      FROM d),
-sig AS (SELECT id, [{mins}] AS sig FROM h),
+{sig_ctes_duck()},
 bands AS (
   SELECT id, b.band,
-         concat(sig[2 * b.band + 1], ',', sig[2 * b.band + 2]) AS band_key
+         {_BAND_KEY_DUCK} AS band_key
   FROM sig, (SELECT unnest(range({_N_BANDS})) AS band) b),
 ok AS (
   SELECT band, band_key FROM bands
@@ -286,17 +333,7 @@ cand AS (
   JOIN ok USING (band, band_key)
   JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
               AND a.id < b.id),
-j AS (
-  SELECT c.id_a, c.id_b,
-         round(CASE WHEN len(da.sh) + len(db.sh)
-                         - len(list_intersect(da.sh, db.sh)) > 0
-               THEN CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-                    / (len(da.sh) + len(db.sh)
-                       - len(list_intersect(da.sh, db.sh)))
-               ELSE 0.0 END, 3) AS jaccard
-  FROM cand c
-  JOIN d da ON da.id = c.id_a
-  JOIN d db ON db.id = c.id_b)
+{_verify_cte_duck("id_a", "id_b")}
 SELECT id_a, id_b, jaccard FROM j
 WHERE jaccard >= {threshold}
 ORDER BY id_a, id_b
@@ -642,16 +679,9 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
     sh = widen_if_narrow(df).select(
         F.col(id_col).alias("id"), F.col(side_col).alias("side"),
         F.expr(shingles_spark_inline(content_col, k)).alias("sh"))
-    sig = (sh.withColumn("bh", F.expr(shingle_hashes_spark("sh")))
-           .withColumn("sig", minhash_signature("bh"))
-           .select("id", "side", "sig"))
-    bands = sig.select(
-        "id", "side",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {_N_BANDS - 1}), "
-                   f"b -> concat_ws(',', sig[2*b], sig[2*b+1]))")
-        ).alias("band", "band_key"))
-    bands = _drop_hot_buckets(bands, ["band", "band_key"], bucket_cap)
+    bands = _drop_hot_buckets(
+        minhash_bands(minhash_stage(sh, "side"), "side"),
+        ["band", "band_key"], bucket_cap)
     buckets = (bands.groupBy("band", "band_key")
                .agg(F.array_sort(F.collect_list(
                         F.when(F.col("side") == 0, F.col("id"))))
@@ -660,28 +690,11 @@ def minhash_lsh_pairs_cross(df: DataFrame, id_col: str,
                         F.when(F.col("side") == 1, F.col("id"))))
                     .alias("inc"))
                .filter((F.size("corp") > 0) & (F.size("inc") > 0)))
-    cand = _cache.checkpoint(
-        buckets.select(F.explode(F.expr(
-            "flatten(transform(inc, a -> transform(corp, "
-            "b -> struct(a AS id_in, b AS id_corp))))")).alias("p"))
-        .select("p.id_in", "p.id_corp")
-        .distinct())
-    cand_ids = (cand.select(F.col("id_in").alias("id"))
-                .union(cand.select(F.col("id_corp").alias("id")))
-                .distinct())
-    shc = _cache.checkpoint(
-        sh.select("id", "sh")
-        .join(cand_ids, "id", "left_semi"))
-    a = shc.select(F.col("id").alias("id_in"), F.col("sh").alias("sh_a"))
-    b = shc.select(F.col("id").alias("id_corp"),
-                   F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
-    return (cand.join(a, "id_in").join(b, "id_corp")
-            .select("id_in", "id_corp",
-                    F.round(jac, 3).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+    cand = (buckets.select(F.explode(F.expr(
+        "flatten(transform(inc, a -> transform(corp, "
+        "b -> struct(a AS id_in, b AS id_corp))))")).alias("p"))
+        .select("p.id_in", "p.id_corp"))
+    return _verify(cand, sh, "id_in", "id_corp", threshold)
 
 
 def minhash_cross_duck_sql(table: str, id_col: str, content_col: str,
@@ -692,24 +705,16 @@ def minhash_cross_duck_sql(table: str, id_col: str, content_col: str,
     bands, same cap on TOTAL bucket size, cross-side candidates
     only). ``side_sql`` is a SQL expression over the table's columns
     yielding 0 (corpus) or 1 (incoming)."""
-    p = _MERSENNE
     sh = shingles_duck(content_col, k)
-    mins = ", ".join(
-        f"coalesce(list_min(list_transform(bh, x -> "
-        f"(x * {int(a)} + {int(b)}) % {p})), {p})"
-        for a, b in zip(_PERM_A, _PERM_B))
     cap_pred = ("" if bucket_cap is None
                 else f" AND count(*) <= {bucket_cap}")
     return f"""
 WITH d AS (SELECT {id_col} AS id, {side_sql} AS side, {sh} AS sh
            FROM {table}),
-h AS (SELECT id, side, sh, list_transform(sh, s ->
-        CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % {p}) AS bh
-      FROM d),
-sig AS (SELECT id, side, [{mins}] AS sig FROM h),
+{sig_ctes_duck("side")},
 bands AS (
   SELECT id, side, b.band,
-         concat(sig[2 * b.band + 1], ',', sig[2 * b.band + 2])
+         {_BAND_KEY_DUCK}
            AS band_key
   FROM sig, (SELECT unnest(range({_N_BANDS})) AS band) b),
 ok AS (
@@ -723,20 +728,47 @@ cand AS (
   JOIN ok USING (band, band_key)
   JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
               AND a.side = 1 AND b.side = 0),
-j AS (
-  SELECT c.id_in, c.id_corp,
-         round(CASE WHEN len(da.sh) + len(db.sh)
-                         - len(list_intersect(da.sh, db.sh)) > 0
-               THEN CAST(len(list_intersect(da.sh, db.sh)) AS DOUBLE)
-                    / (len(da.sh) + len(db.sh)
-                       - len(list_intersect(da.sh, db.sh)))
-               ELSE 0.0 END, 3) AS jaccard
-  FROM cand c
-  JOIN d da ON da.id = c.id_in
-  JOIN d db ON db.id = c.id_corp)
+{_verify_cte_duck("id_in", "id_corp")}
 SELECT id_in, id_corp, jaccard FROM j
 WHERE jaccard >= {threshold}
 """
+
+
+def classify_dups(incoming: DataFrame, corpus_h: DataFrame,
+                  near: DataFrame) -> DataFrame:
+    """The exact/near/new verdict, ``(id, status)`` for every
+    ``incoming`` ``(id, h)`` row: exact_dup when its content md5
+    ``h`` is among ``corpus_h``'s, else near_dup when it is the
+    ``id_in`` of a verified cross pair in ``near``, else new. Exact
+    wins over near. The left semi-join keeps at most one match per
+    incoming row by itself, so the corpus hashes need no distinct."""
+    exact = (incoming.join(corpus_h.select("h"), "h", "left_semi")
+             .select("id").withColumn("e", F.lit(1)))
+    near_ids = (near.select(F.col("id_in").alias("id")).distinct()
+                .withColumn("nr", F.lit(1)))
+    return (incoming.select("id")
+            .join(exact, "id", "left")
+            .join(near_ids, "id", "left")
+            .select("id",
+                    F.when(F.col("e") == 1, "exact_dup")
+                    .when(F.col("nr") == 1, "near_dup")
+                    .otherwise("new").alias("status")))
+
+
+def classify_cross(sided: DataFrame, id_col: str, content_col: str,
+                   side_col: str, threshold: float, k: int = 3,
+                   bucket_cap: int | None = DEFAULT_BUCKET_CAP
+                   ) -> DataFrame:
+    """``classify_dups`` in one query: every ``side_col`` = 1 row of
+    ``sided`` against its ``side_col`` = 0 rows, with the near-dup
+    pairs from `minhash_lsh_pairs_cross` (never corpus x corpus)."""
+    side = F.col(side_col)
+    incoming = sided.filter(side == 1).select(
+        F.col(id_col).alias("id"), F.md5(content_col).alias("h"))
+    corpus_h = sided.filter(side == 0).select(
+        F.md5(content_col).alias("h"))
+    return classify_dups(incoming, corpus_h, minhash_lsh_pairs_cross(
+        sided, id_col, content_col, side_col, threshold, k, bucket_cap))
 
 
 # ------------------------------------------------------------------
@@ -744,10 +776,12 @@ WHERE jaccard >= {threshold}
 # ------------------------------------------------------------------
 
 # Prefix entries whose shingle's global document frequency exceeds
-# this are SKIPPED (and logged): a stopword-shingle in a tiny doc's
-# prefix would otherwise fan its full postings list into the
-# candidate join — the same hot-key skew the band buckets cap with
-# DEFAULT_BUCKET_CAP. Mirrored in the DuckDB oracle; None disables.
+# this are SKIPPED: a stopword-shingle in a tiny doc's prefix would
+# otherwise fan its full postings list into the candidate join — the
+# same hot-key skew the band buckets cap with DEFAULT_BUCKET_CAP, and
+# the same rule: a lazy filter, so no job runs at plan build and a
+# skipped entry is not logged. Mirrored in the DuckDB oracle; None
+# disables.
 DEFAULT_SHINGLE_DF_CAP = 1000
 
 
@@ -785,9 +819,9 @@ def containment_pairs(df: DataFrame, id_col: str, content_col: str,
     Verification computes the exact intersection on the candidate
     pairs only (the minhash verify recipe). Exact at the threshold
     EXCEPT pairs witnessed only by a prefix shingle over
-    ``shingle_df_cap`` — those postings lists are skipped (and
-    logged) to bound the join fan-out on stopword shingles, and the
-    DuckDB oracle applies the identical cap. The threshold is tested
+    ``shingle_df_cap`` — those postings lists are skipped to bound
+    the join fan-out on stopword shingles, and the DuckDB oracle
+    applies the identical cap. The threshold is tested
     on the UNROUNDED ratio (the oracle does the same); rounding is
     output-only. Emitted as (id_small, id_big) with
     smaller-shingle-set ids first and id order breaking size ties.
@@ -808,25 +842,16 @@ def containment_pairs(df: DataFrame, id_col: str, content_col: str,
     ranked = inv.join(dfreq, "s").withColumn(
         "rk", F.row_number().over(
             Window.partitionBy("id").orderBy(F.asc("dfq"), F.asc("s"))))
-    # tiny; reused for hot-count + join (lazy: the cap agg below
-    # materializes it)
+    # tiny, and read once, by the candidate join; the lazy checkpoint
+    # still pays: AQE runs its shuffles (document frequencies, rank
+    # window) while the plan is built, and at sf0.1 on 4 vCPUs the key
+    # took 6.8-8.6 s with it against 7.9-8.9 s without, where the
+    # execute plan ran 9 stages instead of 6
     prefix = _cache.checkpoint(
         ranked.filter(F.expr(f"rk <= {_prefix_bound(threshold)}"))
         .select("id", "s", "dfq"), eager=False)
     if shingle_df_cap is not None:
-        # eager: the count decides the warning and the cap filter; one
-        # bounded-scalar job over the (tiny, checkpointed) prefix
-        n_hot, worst = prefix.agg(
-            F.count(F.when(F.col("dfq") > shingle_df_cap, 1)),
-            F.max(F.when(F.col("dfq") > shingle_df_cap,
-                         F.col("dfq")))).collect()[0]
-        if n_hot:
-            logger.warning(
-                "containment_pairs: skipping %d prefix entr(y/ies) "
-                "with shingle document frequency over cap=%d "
-                "(largest=%d); pairs witnessed ONLY by those shingles "
-                "are NOT reported", n_hot, shingle_df_cap, worst)
-            prefix = prefix.filter(F.col("dfq") <= shingle_df_cap)
+        prefix = prefix.filter(F.col("dfq") <= shingle_df_cap)
     cand = (prefix.select(F.col("id").alias("id_a"), "s")
             .join(inv.select(F.col("id").alias("id_b"), "s"), "s")
             .filter(F.col("id_a") != F.col("id_b"))

@@ -38,13 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_generator_spark.operators import cache as _cache
-from parquet_generator_spark.operators.dedup import (
-    DEFAULT_BUCKET_CAP,
-    _N_BANDS,
-    minhash_signature,
-    shingle_hashes_spark,
-    shingles_spark_inline,
-)
+from parquet_generator_spark.operators import dedup
+from parquet_generator_spark.operators.text import shingles_spark_inline
 from parquet_generator_spark.operators.util import widen_if_narrow
 from parquet_generator_spark.sinks import snapshots
 
@@ -53,27 +48,25 @@ def _meta_path(root: str) -> str:
     return os.path.join(root, "index_meta.json")
 
 
-def _staged(df: DataFrame, id_col: str, content_col: str,
+def _read_meta(root: str) -> dict:
+    if not os.path.exists(_meta_path(root)):
+        raise FileNotFoundError(
+            f"no dedup index at {root} — train_dedup_index first")
+    with open(_meta_path(root)) as fh:
+        return json.load(fh)
+
+
+def _signed(df: DataFrame, id_col: str, content_col: str,
             k: int) -> DataFrame:
-    """(id, sh, bands...) for one side — the exact expression chain
-    of minhash_lsh_pairs_cross."""
+    """(id, _text, sh, sig) for one side, through the MinHash stage
+    that `minhash_lsh_pairs_cross` runs, behind a lazy checkpoint
+    that fuses into the first consumer's job (round 13)."""
     sh = widen_if_narrow(df).select(
         F.col(id_col).alias("id"),
         F.col(content_col).alias("_text"),
         F.expr(shingles_spark_inline(content_col, k)).alias("sh"))
-    sig = (sh.withColumn("bh", F.expr(shingle_hashes_spark("sh")))
-           .withColumn("sig", minhash_signature("bh"))
-           .select("id", "_text", "sh", "sig"))
-    return sig
-
-
-def _bands_of(sig: DataFrame) -> DataFrame:
-    return sig.select(
-        "id",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {_N_BANDS - 1}), "
-                   f"b -> concat_ws(',', sig[2*b], sig[2*b+1]))")
-        ).alias("band", "band_key"))
+    return _cache.checkpoint(dedup.minhash_stage(sh, "_text", "sh"),
+                             eager=False)
 
 
 def train_dedup_index(spark: SparkSession, corpus: DataFrame,
@@ -83,10 +76,8 @@ def train_dedup_index(spark: SparkSession, corpus: DataFrame,
     corpus (the same pass every in-query run would pay), then three
     snapshot commits; re-train overwrites, old versions stay
     time-travelable."""
-    sig = _staged(corpus, id_col, content_col, k)
-    # lazy: fuses into the first consumer's job (round 13)
-    sig = _cache.checkpoint(sig, eager=False)
-    bands = _bands_of(sig)
+    sig = _signed(corpus, id_col, content_col, k)
+    bands = dedup.minhash_bands(sig)
     hashes = sig.select("id", F.md5("_text").alias("h"))
     shingles = sig.select("id", "sh")
     buckets = (bands.groupBy("band", "band_key")
@@ -107,7 +98,7 @@ def train_dedup_index(spark: SparkSession, corpus: DataFrame,
     _commit("buckets", buckets)
     _commit("shingles", shingles)
     with open(_meta_path(root), "w") as fh:
-        json.dump({"k": k, "n_bands": _N_BANDS, "version": v}, fh)
+        json.dump({"k": k, "n_bands": dedup._N_BANDS, "version": v}, fh)
     return v
 
 
@@ -124,15 +115,9 @@ def append_dedup_batch(spark: SparkSession, root: str,
     index is value-identical to a full rebuild over corpus+appends
     (pinned in tests/test_dedup_index.py::test_append_equals_rebuild).
     """
-    if not os.path.exists(_meta_path(root)):
-        raise FileNotFoundError(
-            f"no dedup index at {root} — train_dedup_index first")
-    with open(_meta_path(root)) as fh:
-        meta = json.load(fh)
-    sig = _staged(batch, id_col, content_col, meta["k"])
-    # lazy: fuses into the first consumer's job (round 13)
-    sig = _cache.checkpoint(sig, eager=False)
-    bands = _bands_of(sig)
+    meta = _read_meta(root)
+    sig = _signed(batch, id_col, content_col, meta["k"])
+    bands = dedup.minhash_bands(sig)
 
     snapshots.commit_append(
         spark, os.path.join(root, "hashes"),
@@ -165,85 +150,66 @@ def append_dedup_batch(spark: SparkSession, root: str,
 
 def classify_served(spark: SparkSession, root: str, batch: DataFrame,
                     threshold: float, id_col: str = "id",
-                    content_col: str = "text", k: int = 3,
-                    bucket_cap: int | None = DEFAULT_BUCKET_CAP
+                    content_col: str = "text",
+                    bucket_cap: int | None = dedup.DEFAULT_BUCKET_CAP
                     ) -> DataFrame:
     """Classify a batch against the STORED index: exact_dup /
     near_dup / new (exact wins), value-identical to the in-query
-    cross classification. The batch pays one signature pass; the
-    corpus side is pure snapshot reads. The hot-bucket cap is
-    evaluated on stored-count + batch-count per bucket — the same
-    TOTAL-size semantics as `_drop_hot_buckets` over the union."""
-    sig = _staged(batch, id_col, content_col, k)
-    # lazy: fuses into the first consumer's job (round 13)
-    sig = _cache.checkpoint(sig, eager=False)
-    inc_bands = _bands_of(sig)
-    inc_h = sig.select("id", F.md5("_text").alias("h"))
+    cross classification. The batch is shingled with the index's
+    stored ``k`` and pays one signature pass; the corpus side is pure
+    snapshot reads. The hot-bucket cap is evaluated on stored-count +
+    batch-count per bucket — the same TOTAL-size semantics as
+    `_drop_hot_buckets` over the union."""
+    sig = _signed(batch, id_col, content_col, _read_meta(root)["k"])
+    inc_bands = dedup.minhash_bands(sig)
 
-    st_hashes = snapshots.read_snapshot(
-        spark, os.path.join(root, "hashes"))
-    st_bands = snapshots.read_snapshot(
-        spark, os.path.join(root, "bands"))
-    st_buckets = snapshots.read_snapshot(
-        spark, os.path.join(root, "buckets"))
-    st_sh = snapshots.read_snapshot(
-        spark, os.path.join(root, "shingles"))
-
-    # left_semi keeps at-most-one match per batch row by itself — a
-    # distinct on the stored-hash side was a pure extra exchange
-    exact_ids = (inc_h
-                 .join(st_hashes.select("h"), "h", "left_semi")
-                 .select("id").withColumn("e", F.lit(1)))
+    def stored(name: str) -> DataFrame:
+        return snapshots.read_snapshot(spark, os.path.join(root, name))
 
     keys = ["band", "band_key"]
     if bucket_cap is not None:
-        inc_counts = (inc_bands.groupBy(*keys)
-                      .agg(F.count(F.lit(1)).alias("n_inc")))
-        tot = (inc_counts.join(st_buckets, keys, "left")
-               .select(*keys,
-                       (F.col("n_inc")
-                        + F.coalesce(F.col("n_corp"), F.lit(0)))
-                       .alias("n")))
-        hot = _cache.checkpoint(
-            tot.filter(F.col("n") > bucket_cap).select(*keys))
-        inc_bands = inc_bands.join(F.broadcast(hot), keys,
-                                   "left_anti")
-        st_bands = st_bands.join(F.broadcast(hot), keys, "left_anti")
+        # a hot key always has batch rows, so dropping it from the
+        # batch bands is enough: the band-key join below then finds
+        # none of its stored rows. Lazy, so no job runs at build.
+        hot = (inc_bands.groupBy(*keys)
+               .agg(F.count(F.lit(1)).alias("n_inc"))
+               .join(stored("buckets"), keys, "left")
+               .filter(F.col("n_inc") + F.coalesce(F.col("n_corp"),
+                                                   F.lit(0))
+                       > bucket_cap)
+               .select(*keys))
+        inc_bands = inc_bands.join(F.broadcast(hot), keys, "left_anti")
 
     # the batch's band set is bounded by the batch, so it BROADCASTS
     # into the stored band table — the corpus side is never shuffled
-    # (guide §3.1: broadcast the small side; at 100 TB st_bands is
-    # the corpus-scale side and the ingest batch is the small one)
+    # (guide §3.1: broadcast the small side; at 100 TB the stored
+    # bands are the corpus-scale side and the ingest batch is the
+    # small one)
     cand = _cache.checkpoint(
-        st_bands.select(*keys, F.col("id").alias("id_corp"))
+        stored("bands").select(*keys, F.col("id").alias("id_corp"))
         .join(F.broadcast(inc_bands), keys)
         .select(F.col("id").alias("id_in"), "id_corp")
         .distinct())
     a = sig.select(F.col("id").alias("id_in"),
                    F.col("sh").alias("sh_a"))
-    b = (st_sh.join(F.broadcast(cand.select(F.col("id_corp")
-                                            .alias("id")).distinct()),
-                    "id", "left_semi")
+    b = (stored("shingles")
+         .join(F.broadcast(cand.select(F.col("id_corp")
+                                       .alias("id")).distinct()),
+               "id", "left_semi")
          .select(F.col("id").alias("id_corp"),
                  F.col("sh").alias("sh_b")))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0,
-                 inter.cast("double") / union).otherwise(0.0)
     # candidate pairs and batch shingles are both batch-bounded:
     # attach them to the (corpus-resident) candidate shingles via
     # broadcast joins so the verify tier shuffles nothing
-    near_ids = (b.join(F.broadcast(a.join(F.broadcast(cand),
-                                          "id_in")), "id_corp")
-                .select("id_in", F.round(jac, 3).alias("jaccard"))
-                .filter(F.col("jaccard") >= threshold)
-                .select(F.col("id_in").alias("id")).distinct()
-                .withColumn("nr", F.lit(1)))
-
-    return (batch.select(F.col(id_col).alias("id"))
-            .join(exact_ids, "id", "left")
-            .join(near_ids, "id", "left")
-            .select("id",
-                    F.when(F.col("e") == 1, "exact_dup")
-                    .when(F.col("nr") == 1, "near_dup")
-                    .otherwise("new").alias("status")))
+    near = (b.join(F.broadcast(a.join(F.broadcast(cand), "id_in")),
+                   "id_corp")
+            .select("id_in",
+                    dedup.jaccard("sh_a", "sh_b").alias("jaccard"))
+            .filter(F.col("jaccard") >= threshold))
+    # the verdict reads the batch scan, not the widened signature
+    # frame: its join exchange then has the scan's splits, not the
+    # widened partition count
+    return dedup.classify_dups(
+        batch.select(F.col(id_col).alias("id"),
+                     F.md5(content_col).alias("h")),
+        stored("hashes"), near)

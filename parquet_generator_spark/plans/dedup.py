@@ -221,12 +221,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr(shingles_spark("text", 3)).alias("sh")))
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
     return (cand.join(a, "id_a").join(b, "id_b")
             .select("id_a", "id_b", "cos",
-                    F.round(jac, 3).alias("jaccard"))
+                    dedup.jaccard("sh_a", "sh_b").alias("jaccard"))
             .orderBy("id_a", "id_b"))
 
 
@@ -348,33 +345,15 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classify an INCOMING batch (odd doc_ids) against the existing
     CORPUS (even doc_ids): exact_dup (content hash already indexed,
     one semi-join on md5), near_dup (MinHash banding between the two
-    sides only — `dedup.minhash_lsh_pairs_cross`, never corpus x
-    corpus), else new. Exact wins over near. The incremental shape is
+    sides only — `dedup.classify_cross`, never corpus x corpus), else
+    new. Exact wins over near. The incremental shape is
     what a streaming/batch ingest runs every cycle: the corpus side's
     signatures would be precomputed and persisted; here both sides
     run through the one signature pass."""
     docs = load_table(spark, "documents", sf_dir)
     sided = docs.withColumn("side", (F.col("doc_id") % 2).cast("int"))
-    incoming = sided.filter(F.col("side") == 1)
-    # no distinct on the corpus-hash side: left_semi already keeps
-    # at most one match per incoming row (round-13, guide §2.4 —
-    # "a distinct on data the join semantics already dedupe")
-    corpus_h = (sided.filter(F.col("side") == 0)
-                .select(F.md5("text").alias("h")))
-    exact_ids = (incoming.select("doc_id", F.md5("text").alias("h"))
-                 .join(corpus_h, "h", "left_semi")
-                 .select("doc_id").withColumn("e", F.lit(1)))
-    near_ids = (dedup.minhash_lsh_pairs_cross(
-        sided, "doc_id", "text", "side", INC_TAU)
-        .select(F.col("id_in").alias("doc_id")).distinct()
-        .withColumn("nr", F.lit(1)))
-    return (incoming.select("doc_id")
-            .join(exact_ids, "doc_id", "left")
-            .join(near_ids, "doc_id", "left")
-            .select("doc_id",
-                    F.when(F.col("e") == 1, "exact_dup")
-                    .when(F.col("nr") == 1, "near_dup")
-                    .otherwise("new").alias("status"))
+    return (dedup.classify_cross(sided, "doc_id", "text", "side", INC_TAU)
+            .select(F.col("id").alias("doc_id"), "status")
             .orderBy("doc_id"))
 
 
@@ -460,8 +439,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles are >= 90% contained in the larger's — the quote/
     inclusion case Jaccard-based near-dup misses. See
     dedup.containment_pairs for the prefix-filtered inverted-index
-    plan and the stopword-shingle df cap (skip-and-log, mirrored in
-    the DuckDB oracle)."""
+    plan and the stopword-shingle df cap (skipped, mirrored in the
+    DuckDB oracle)."""
     docs = load_table(spark, "documents", sf_dir)
     return (dedup.containment_pairs(docs, "doc_id", "text",
                                     CONTAIN_TAU)
@@ -845,25 +824,6 @@ ORDER BY d.doc_id
 # the calibration queries ride the shared near-dup edge stage.
 
 
-def _sig_expr() -> tuple:
-    """(spark signature builder, duck signature CTE) sharing dedup's
-    exact permutation constants so the estimate is bit-identical on
-    both engines."""
-    p = dedup._MERSENNE
-    mins = ", ".join(
-        f"coalesce(list_min(list_transform(bh, x -> "
-        f"(x * {int(a)} + {int(b)}) % {p})), {p})"
-        for a, b in zip(dedup._PERM_A, dedup._PERM_B))
-    duck = f"""
-d AS (SELECT doc_id AS id, {dedup.shingles_duck('text', 3)} AS sh
-      FROM documents),
-h AS (SELECT id, list_transform(sh, s ->
-        CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT) % {p}) AS bh
-      FROM d),
-sig AS (SELECT id, [{mins}] AS sig FROM h)"""
-    return mins, duck
-
-
 def minhash_estimate_error(spark: SparkSession, sf_dir: str
                            ) -> DataFrame:
     """MinHash estimator calibration: for every verified near-dup
@@ -883,12 +843,9 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str
            .distinct())
     docs = load_table(spark, "documents", sf_dir) \
         .join(ids, "doc_id", "left_semi")
-    sig = (docs.select(
+    sig = dedup.minhash_stage(docs.select(
         F.col("doc_id").alias("id"),
-        F.expr(shingles_spark_inline("text", 3)).alias("sh"))
-        .withColumn("bh", F.expr(dedup.shingle_hashes_spark("sh")))
-        .withColumn("sig", dedup.minhash_signature("bh"))
-        .select("id", "sig"))
+        F.expr(shingles_spark_inline("text", 3)).alias("sh")))
     a = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sa"))
     b = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sb"))
     est = (F.size(F.filter(F.zip_with("sa", "sb", lambda x, y: x == y),
@@ -905,9 +862,11 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str
 def _minhash_estimate_oracle() -> str:
     pairs_sql = dedup.minhash_lsh_pairs_duck_sql(
         "documents", "doc_id", "text", JACCARD_THRESHOLD).strip()
-    _, duck_sig = _sig_expr()
     return f"""
-WITH pairs AS ({pairs_sql}),{duck_sig},
+WITH pairs AS ({pairs_sql}),
+d AS (SELECT doc_id AS id, {shingles_duck('text', 3)} AS sh
+      FROM documents),
+{dedup.sig_ctes_duck(keep_sh=False)},
 j AS (
   SELECT p.id_a, p.id_b, p.jaccard,
          round(len(list_filter(list_zip(a.sig, b.sig),

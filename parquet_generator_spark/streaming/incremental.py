@@ -4,9 +4,9 @@ new, appending the verdicts to a parquet log.
 
 The production ingest-loop shape (Auto-Loader-style file stream +
 foreachBatch): foreachBatch hands every micro-batch to the full
-batch API, so the classification reuses the exact md5 semi-join and
-the cross-side-only MinHash banding from
-`operators.dedup.minhash_lsh_pairs_cross` — state lives in the
+batch API, so each one runs `operators.dedup.classify_cross` (the md5
+semi-join and the cross-side-only MinHash banding of
+`minhash_lsh_pairs_cross`) over corpus + batch — state lives in the
 static corpus (whose band signatures a production deployment would
 precompute and persist), never in the stream, so there is nothing
 for a watermark to bound.
@@ -20,38 +20,6 @@ from pyspark.sql import functions as F
 from parquet_generator_spark.operators import dedup
 
 
-def classify_against_corpus(batch: DataFrame, corpus: DataFrame,
-                            threshold: float,
-                            id_col: str = "doc_id",
-                            content_col: str = "text") -> DataFrame:
-    """Batch kernel shared by the stream and its batch-equivalence
-    test: (id, status) for every incoming row."""
-    sided = (corpus.select(F.col(id_col).alias("id"),
-                           F.col(content_col).alias("c"))
-             .withColumn("side", F.lit(0))
-             .unionByName(
-                 batch.select(F.col(id_col).alias("id"),
-                              F.col(content_col).alias("c"))
-                 .withColumn("side", F.lit(1))))
-    corpus_h = (sided.filter(F.col("side") == 0)
-                .select(F.md5("c").alias("h")).distinct())
-    incoming = sided.filter(F.col("side") == 1)
-    exact_ids = (incoming.select("id", F.md5("c").alias("h"))
-                 .join(corpus_h, "h", "left_semi")
-                 .select("id").withColumn("e", F.lit(1)))
-    near_ids = (dedup.minhash_lsh_pairs_cross(
-        sided, "id", "c", "side", threshold)
-        .select(F.col("id_in").alias("id")).distinct()
-        .withColumn("nr", F.lit(1)))
-    return (incoming.select("id")
-            .join(exact_ids, "id", "left")
-            .join(near_ids, "id", "left")
-            .select("id",
-                    F.when(F.col("e") == 1, "exact_dup")
-                    .when(F.col("nr") == 1, "near_dup")
-                    .otherwise("new").alias("status")))
-
-
 def incremental_dedup_writer(stream: DataFrame, corpus: DataFrame,
                              out_path: str, checkpoint_dir: str,
                              threshold: float = 0.5,
@@ -60,9 +28,15 @@ def incremental_dedup_writer(stream: DataFrame, corpus: DataFrame,
     """writeStream.foreachBatch classifier; drains with availableNow
     (continuous ingest: drop the trigger)."""
 
+    def sided(df: DataFrame, side: int) -> DataFrame:
+        return df.select(F.col(id_col).alias("id"),
+                         F.col(content_col).alias("c"),
+                         F.lit(side).alias("side"))
+
     def classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (classify_against_corpus(batch_df, corpus, threshold,
-                                 id_col, content_col)
+        (dedup.classify_cross(
+            sided(corpus, 0).unionByName(sided(batch_df, 1)),
+            "id", "c", "side", threshold)
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(out_path))
 

@@ -3,24 +3,35 @@ replica of the exact quantized iteration."""
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from parquet_generator_spark.operators.graph import PR_QUANT, pagerank
 
 
+def _round_half_up(x):
+    """Spark's round of a positive double: half away from zero, on
+    its shortest decimal form."""
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-PR_QUANT),
+                                           rounding=ROUND_HALF_UP))
+
+
 def _python_pagerank(pairs, iters=3, damping=0.85):
+    """Replays `pagerank`: 1 - d taken decimal-exact, as `base_term`
+    takes it, and every round rounded half away from zero."""
     edges = {}
     for a, b in pairs:
         edges.setdefault(a, []).append(b)
         edges.setdefault(b, []).append(a)
     n = len(edges)
-    ranks = {u: round(1.0 / n, PR_QUANT) for u in edges}
-    base = (1.0 - damping) / n
+    ranks = {u: _round_half_up(1.0 / n) for u in edges}
+    base = float(Decimal(1) - Decimal(repr(damping))) / n
     for _ in range(iters):
         incoming = {u: 0.0 for u in edges}
         for u, outs in edges.items():
             share = ranks[u] / len(outs)
             for v in outs:
                 incoming[v] += share
-        ranks = {u: round(base + damping * incoming[u], PR_QUANT)
+        ranks = {u: _round_half_up(base + damping * incoming[u])
                  for u in edges}
     return ranks
 

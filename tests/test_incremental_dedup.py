@@ -149,8 +149,8 @@ def test_containment_prefix_bound_exact_at_threshold(spark):
 def test_containment_shingle_df_cap_mirrored(spark):
     """Hot-postings skew guard: a tiny doc whose every prefix shingle
     is a stopword-shingle (document frequency over the cap) loses its
-    pairs on BOTH engines — skip-and-log, never a silent one-sided
-    truncation — while the uncapped run still finds them."""
+    pairs on BOTH engines — never a one-sided truncation — while the
+    uncapped run still finds them."""
     from parquet_generator_spark.operators.dedup import (
         containment_pairs,
         containment_pairs_duck_sql,

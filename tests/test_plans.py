@@ -409,6 +409,25 @@ def test_barriers_and_stores_have_one_owner_each():
     assert stores == [], stores
 
 
+def test_minhash_stage_is_written_once():
+    """Tripwire: the MinHash signature UDF has one call site in the
+    package (``dedup.minhash_stage``) and the 64 band keys are built
+    in one place per engine, so every near-dup caller shares the
+    stage."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / \
+        "parquet_generator_spark"
+    texts = [p.read_text() for p in sorted(pkg.rglob("*.py"))]
+    calls = sum(len(re.findall(r"(?<!def )\bminhash_signature\(", t))
+                for t in texts)
+    assert calls == 1, calls
+    for band_key in ("concat_ws(',', sig[2*b], sig[2*b+1])",
+                     "concat(sig[2 * b.band + 1], ',', "
+                     "sig[2 * b.band + 2])"):
+        assert sum(t.count(band_key) for t in texts) == 1, band_key
+
+
 def test_plan_modules_are_named_by_family():
     """Tripwire: a ``plans/`` module is named by the family it holds
     (``dedup.py``, ``esdsl_aggs.py``), never by the round that added

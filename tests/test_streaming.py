@@ -404,8 +404,8 @@ def test_sliding_agg_stream_matches_batch(spark, tmp_path):
 
 
 def test_stream_incremental_dedup_matches_batch(spark, tmp_path):
+    from parquet_generator_spark.operators.dedup import classify_cross
     from parquet_generator_spark.streaming.incremental import (
-        classify_against_corpus,
         incremental_dedup_writer,
     )
 
@@ -447,8 +447,11 @@ def test_stream_incremental_dedup_matches_batch(spark, tmp_path):
 
     got = {r["id"]: r["status"]
            for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    batch = {r["id"]: r["status"] for r in classify_against_corpus(
-        spark.createDataFrame(incoming, schema), corpus, 0.5).collect()}
+    sided = corpus.withColumn("side", F.lit(0)).unionByName(
+        spark.createDataFrame(incoming, schema)
+        .withColumn("side", F.lit(1)))
+    batch = {r["id"]: r["status"] for r in classify_cross(
+        sided, "doc_id", "text", "side", 0.5).collect()}
     assert got == batch
     assert got == {1: "exact_dup", 3: "near_dup", 5: "new",
                    7: "near_dup", 9: "new"}
