@@ -65,7 +65,10 @@ def infer_json_schema(
                 [T.StructField(column, T.StringType())]))
     else:
         docs_df = json_docs
-    sampled = docs_df if sample_ratio >= 1.0 else docs_df.sample(sample_ratio, seed=42)
+    # keyword fraction: PySpark reads a positional fraction's seed from
+    # the second argument and would silently drop seed=42
+    sampled = (docs_df if sample_ratio >= 1.0
+               else docs_df.sample(fraction=sample_ratio, seed=42))
     if mode == "widest":
         docs = [r[0] for r in
                 sampled.select(F.col(column).cast("string")).collect()]

@@ -69,6 +69,22 @@ def test_infer_odd_docs_value_identity(spark):
                 T.StructType([])
 
 
+def test_inference_sample_honours_its_seed(spark):
+    """A sampled inference sees the same documents on every run: 200
+    documents with one distinct field each, inferred twice at
+    ``sample_ratio=0.5``, give the fields of exactly the documents
+    ``sample(fraction=0.5, seed=42)`` keeps."""
+    docs = spark.createDataFrame(
+        [(json.dumps({f"f{i:03d}": i}),) for i in range(200)],
+        "value string")
+    first, second = (
+        [f.name for f in infer_json_schema(
+            spark, docs, sample_ratio=0.5).fields] for _ in range(2))
+    kept = sorted(next(iter(json.loads(r["value"])))
+                  for r in docs.sample(fraction=0.5, seed=42).collect())
+    assert first == second
+    assert sorted(first) == kept
+
 def test_merge_widen_and_conflict():
     a = T.StructType([T.StructField("x", T.IntegerType()),
                       T.StructField("y", T.StringType())])
