@@ -7,7 +7,6 @@ percolation, and date math.
 from __future__ import annotations
 
 import base64 as _b64
-import hashlib
 import json as _json
 import os
 import re
@@ -25,7 +24,6 @@ from parquet_generator_spark.operators.analyzers import (
     analyzed_match_duck_sql,
     analyzed_match_phrase_duck_sql,
     analyzed_tokens,
-    analyzed_tokens_sql,
     get_analyzer,
     register_analyzer,
     stored_match,
@@ -2114,8 +2112,7 @@ class AnalyzerSpec:
     snippets: tuple[str, str, str]
 
 
-# Row order is the store's column order and feeds its fingerprint
-# (version_hash): reordering rebuilds every store.
+# Row order is the store's column order.
 SPECS = (
     # case system + tidy: taloissa/talojen -> talo,
     # kirjoissakin -> kirj
@@ -2395,33 +2392,12 @@ _PASSES = [("es", "de"), ("fr", "it"), ("pt", "nl"), ("ro", "ru"),
            ("fi", "hu"), ("sv", "da", "no"), ("ar",)]
 
 
-def version_hash() -> str:
-    """Hash of every generated analysis expression + planted
-    literal: changes whenever a stemmer, tokenizer charset or
-    planted snippet changes, forcing a store rebuild."""
-    h = hashlib.md5()
-    for suffix, analyzer_name, mixed in _specs():
-        h.update(suffix.encode())
-        h.update(mixed.encode())
-        for engine in ("spark", "duck"):
-            h.update(analyzed_tokens_sql(
-                "mixed", get_analyzer(analyzer_name), engine)
-                .encode())
-    routed_mixed, route = _routed()
-    h.update(routed_mixed.encode())
-    for lang, analyzer_name in route.items():
-        h.update(lang.encode())
-        h.update(analyzed_tokens_sql(
-            "mixed", get_analyzer(analyzer_name), "spark").encode())
-    return h.hexdigest()
-
-
 def ensure_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the analyzed store for ``sf_dir``; returns
     the parquet path of the analyzed documents table."""
     root = stores.ensure(
         "analyzed_store", sf_dir, ["documents.parquet"],
-        lambda r: _build(spark, sf_dir, r), tag=version_hash())
+        lambda r: _build(spark, sf_dir, r))
     return os.path.join(root, _DATA)
 
 

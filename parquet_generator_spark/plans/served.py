@@ -1,7 +1,7 @@
 """Keys served from a persisted store.
 
 Each key is one ``stores.ensure`` build (rebuilt only when its source
-files change) plus a read of the stored artifact. Its oracle is the
+files or the package's code change) plus a read of the stored artifact. Its oracle is the
 same result computed from the source tables, so the store adds
 persistence, not different math.
 """
@@ -108,7 +108,7 @@ def ann_ivfpq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
             ann_index.append_ivfpq_batch(spark, root, batch)
 
     root = stores.ensure("ivfpq_index_appended", sf_dir,
-                         ["embeddings.parquet"], build, tag="appended")
+                         ["embeddings.parquet"], build)
     return ann_index.serve_ivfpq(spark, root, IVFPQ_QUERY,
                                  IVFPQ_TOPK, n_probe=IVFPQ_PROBE)
 
@@ -179,7 +179,7 @@ def dedup_index_appended(spark: SparkSession,
             id_col="doc_id", content_col="text")
 
     root = stores.ensure("dedup_index_appended", sf_dir,
-                         ["documents.parquet"], build, tag="appended")
+                         ["documents.parquet"], build)
     return _classify_odd_docs(spark, root, docs)
 
 

@@ -161,10 +161,8 @@ def test_central_store_all_languages(spark):
     analyzed array plus the routed column, and every converted
     analyzer-match key serves from it with ZERO stemmer expressions
     in the plan."""
-    from parquet_generator_spark.plans.esdsl_queries import (
-        load_store,
-        version_hash,
-    )
+    from parquet_generator_spark.plans.esdsl_queries import load_store
+    from parquet_generator_spark.sinks.stores import code_hash
 
     store = load_store(spark, SF_SMALL)
     cols = set(store.columns)
@@ -174,8 +172,10 @@ def test_central_store_all_languages(spark):
     assert {"doc_id", "source", "lang"} <= cols
     # no leftover staging columns
     assert not [c for c in cols if c.startswith("mixed")]
-    # version hash is stable within a session (fingerprint contract)
-    assert version_hash() == version_hash()
+    # the code hash is a pure function of the package's files
+    # (fingerprint contract): the per-process cache agrees with a
+    # fresh computation
+    assert code_hash() == code_hash.__wrapped__()
 
 
 def test_converted_keys_plans_are_stemmer_free(spark):
@@ -229,20 +229,21 @@ def test_analyzer_catches_what_english_cannot(spark, spec):
 
 def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
                                                    monkeypatch):
-    """The meta fingerprint covers the analyzer VERSION hash: a
+    """The meta fingerprint covers the package's code hash: a
     stemmer fix invalidates the store instead of serving stale
     analysis."""
     import json
     import os
 
     from parquet_generator_spark.plans import esdsl_queries as st
+    from parquet_generator_spark.sinks.stores import code_hash
 
     root = os.path.dirname(st.ensure_store(spark, SF_SMALL))
     meta_p = os.path.join(root, "meta.json")
     with open(meta_p) as fh:
         fp1 = json.load(fh)["fingerprint"]
-    assert fp1.endswith(st.version_hash())
-    # simulate a stemmer change: stamp a bogus version into meta ->
+    assert fp1.endswith(code_hash())
+    # simulate a stemmer change: stamp a bogus code hash into meta ->
     # next ensure_store must rebuild and restore the real hash
     with open(meta_p, "w") as fh:
         json.dump({"fingerprint": fp1[:-4] + "dead"}, fh)
@@ -252,15 +253,15 @@ def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
 
 
 def test_store_fingerprint_ignores_hash_seed():
-    """The analyzer version hash must not depend on PYTHONHASHSEED,
-    or every fresh process would rebuild the store."""
+    """The package's code hash must not depend on PYTHONHASHSEED,
+    or every fresh process would rebuild every store."""
     import os
     import pathlib
     import subprocess
     import sys
 
-    code = ("from parquet_generator_spark.plans.esdsl_queries "
-            "import version_hash; print(version_hash())")
+    code = ("from parquet_generator_spark.sinks.stores "
+            "import code_hash; print(code_hash())")
     root = pathlib.Path(__file__).resolve().parent.parent
     hashes = [
         subprocess.run([sys.executable, "-c", code], cwd=root,

@@ -1,10 +1,12 @@
 """The persisted-store contract (sinks/stores.py): build once, reuse
-while the sources and tag are unchanged, rebuild otherwise, and never
+while the sources and the package's code are unchanged, rebuild
+otherwise, and never
 leave a valid marker behind a failed build. No Spark: ``build`` is a
 fake that writes one file."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -51,11 +53,15 @@ def test_touched_source_rebuilds(sf_dir):
         assert fh.read() == "2"
 
 
-def test_changed_tag_rebuilds(sf_dir):
+def test_changed_code_rebuilds(sf_dir, monkeypatch):
     build = _counting_build()
-    stores.ensure("s", sf_dir, ["t.parquet"], build, tag="v1")
-    stores.ensure("s", sf_dir, ["t.parquet"], build, tag="v1")
-    stores.ensure("s", sf_dir, ["t.parquet"], build, tag="v2")
+    root = stores.ensure("s", sf_dir, ["t.parquet"], build)
+    with open(os.path.join(root, "meta.json")) as fh:
+        assert json.load(fh)["fingerprint"].endswith(stores.code_hash())
+    stores.ensure("s", sf_dir, ["t.parquet"], build)
+    # the same sources under an edited package
+    monkeypatch.setattr(stores, "code_hash", lambda: "edited")
+    stores.ensure("s", sf_dir, ["t.parquet"], build)
     assert build.calls == 2
 
 
