@@ -595,9 +595,9 @@ GROUP BY key ORDER BY doc_count DESC, key ASC
 # over the scanned column — one narrow predicate per document, no
 # Python, no join; the relevance query is pure CASE arithmetic + a
 # TakeOrderedAndProject top-k; geohash bucketing is bit arithmetic
-# generated ONCE as engine-neutral SQL text (floor/div/mod — the
-# Morton-interleave recipe of sinks/maintenance.py:59 in base-32
-# clothing), one grouped pass.
+# generated ONCE as engine-neutral SQL text (floor/div/mod — a
+# Morton (Z-order) bit interleave in base-32 clothing), one grouped
+# pass.
 
 
 def _tok_re(t: str) -> str:
