@@ -1,5 +1,6 @@
-"""Structured Streaming tests: file-source ingest ETL and the
-watermarked windowed aggregation, drained with availableNow."""
+"""Structured Streaming tests: watermarked window aggregations,
+stateful operators, stream joins and foreachBatch sinks, drained with
+availableNow."""
 
 from __future__ import annotations
 
@@ -10,54 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parquet_generator_spark.sources.catalog import load_table
-from parquet_generator_spark.streaming.ingest import (
-    stream_json_ingest,
-    write_parquet_stream,
-)
 from parquet_generator_spark.streaming.windowed import windowed_event_counts
 
 SF = "/root/testdata/sf0.001"
-
-DOC_SCHEMA = T.StructType([
-    T.StructField("rule_name", T.StringType()),
-    T.StructField("sev", T.LongType()),
-    T.StructField("day", T.StringType()),
-])
-
-
-def test_stream_ingest_end_to_end(spark, tmp_path):
-    src = tmp_path / "in"
-    src.mkdir()
-    for batch in range(3):
-        with open(src / f"batch_{batch}.json", "w") as fh:
-            for i in range(20):
-                fh.write(json.dumps({
-                    "rule_name": "login-anomaly" if i % 2 else "other",
-                    "sev": i,
-                    "day": f"2024-01-0{batch + 1}"}) + "\n")
-
-    stream = stream_json_ingest(spark, str(src), DOC_SCHEMA,
-                                rule_name="login-anomaly")
-    q = write_parquet_stream(stream, str(tmp_path / "out"),
-                             str(tmp_path / "ckpt"),
-                             partition_col="day")
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(str(tmp_path / "out"))
-    assert out.count() == 30  # 10 matching docs per batch
-    # partition-column type is re-inferred on read; compare as strings
-    days = out.select(F.col("day").cast("string").alias("day")).distinct()
-    assert set(r["day"] for r in days.collect()) \
-        == {"2024-01-01", "2024-01-02", "2024-01-03"}
-
-    # restart with same checkpoint: no reprocessing (exactly-once)
-    q2 = write_parquet_stream(
-        stream_json_ingest(spark, str(src), DOC_SCHEMA,
-                           rule_name="login-anomaly"),
-        str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        partition_col="day")
-    q2.awaitTermination(120)
-    assert spark.read.parquet(str(tmp_path / "out")).count() == 30
 
 
 def test_windowed_agg_stream_matches_batch(spark, tmp_path):
