@@ -359,60 +359,6 @@ def test_sliding_agg_stream_matches_batch(spark, tmp_path):
     assert total == 2 * ev.count()
 
 
-def test_stream_incremental_dedup_matches_batch(spark, tmp_path):
-    from parquet_generator_spark.operators.dedup import classify_cross
-    from parquet_generator_spark.streaming.incremental import (
-        incremental_dedup_writer,
-    )
-
-    base = ("the quick brown fox jumps over the lazy dog while the "
-            "cat sleeps near the warm stove in the kitchen corner")
-    near = base.replace("corner", "today")
-    corpus = spark.createDataFrame(
-        [(0, base),
-         (2, "completely different words about spark shuffles and "
-             "parquet footers and adaptive query execution")],
-        "doc_id long, text string")
-
-    incoming = [
-        (1, base),                # exact dup of 0
-        (3, near),                # near dup of 0
-        (5, "unrelated novel content nothing matches here at all "
-            "with enough words to shingle properly"),
-        (7, near),                # near dup arriving in batch 2
-        (9, "another brand new document with its own distinct "
-            "vocabulary entirely unlike the corpus"),
-    ]
-    src = tmp_path / "in"
-    src.mkdir()
-    schema = "doc_id long, text string"
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    for name, rows in (("b0", incoming[:3]), ("b1", incoming[3:])):
-        pq.write_table(
-            pa.table({"doc_id": [r[0] for r in rows],
-                      "text": [r[1] for r in rows]}),
-            str(src / f"{name}.parquet"))
-
-    stream = spark.readStream.schema(
-        spark.createDataFrame([], schema).schema).parquet(str(src))
-    q = incremental_dedup_writer(stream, corpus,
-                                 str(tmp_path / "out"),
-                                 str(tmp_path / "ckpt"))
-    q.awaitTermination(120)
-
-    got = {r["id"]: r["status"]
-           for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-    sided = corpus.withColumn("side", F.lit(0)).unionByName(
-        spark.createDataFrame(incoming, schema)
-        .withColumn("side", F.lit(1)))
-    batch = {r["id"]: r["status"] for r in classify_cross(
-        sided, "doc_id", "text", "side", 0.5).collect()}
-    assert got == batch
-    assert got == {1: "exact_dup", 3: "near_dup", 5: "new",
-                   7: "near_dup", 9: "new"}
-
-
 def test_rate_anomalies_stream_matches_batch_and_flags_spike(
         spark, tmp_path):
     import datetime
