@@ -442,6 +442,62 @@ def test_plan_modules_are_named_by_family():
     assert numbered == [], numbered
 
 
+def test_every_package_module_is_reachable():
+    """Tripwire: every module under ``parquet_generator_spark/`` is
+    reached by static imports from an entry point — a ``plans/``
+    module (the registry loads each one), ``cli``, ``etl``,
+    ``__main__``, ``session`` — or named by the analyzers' stemmer
+    table (imported by name). A module only tests import is dead
+    weight."""
+    import ast
+    import pathlib
+
+    from parquet_generator_spark.operators.analyzers import _STEMMERS
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / \
+        "parquet_generator_spark"
+    files = {}
+    for p in pkg.rglob("*.py"):
+        parts = p.relative_to(pkg.parent).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        files[".".join(parts)] = p
+
+    def imports(mod):
+        here = mod if files[mod].name == "__init__.py" else \
+            mod.rpartition(".")[0]
+        for node in ast.walk(ast.parse(files[mod].read_text())):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = here
+                for _ in range(node.level - 1):
+                    base = base.rpartition(".")[0]
+                if node.level:
+                    base = ".".join(filter(None, [base, node.module]))
+                else:
+                    base = node.module
+                yield base
+                yield from (f"{base}.{a.name}" for a in node.names)
+
+    roots = [m for m in files if m.startswith(f"{pkg.name}.plans")]
+    roots += [f"{pkg.name}.{m}" for m in
+              ("cli", "etl", "__main__", "session")]
+    roots += [f"{pkg.name}.operators.{m}" for m, _ in _STEMMERS.values()]
+    seen, todo = set(), list(roots)
+    while todo:
+        mod = todo.pop()
+        # importing a.b.c runs a and a.b first
+        chain = mod.split(".")
+        for i in range(1, len(chain) + 1):
+            name = ".".join(chain[:i])
+            if name in files and name not in seen:
+                seen.add(name)
+                todo.extend(imports(name))
+    unreached = sorted(set(files) - seen)
+    assert unreached == [], unreached
+
+
 def test_stemmer_sql_plumbing_has_one_owner():
     """Tripwire: ``operators/stem_sql.py`` owns the dialect plumbing,
     so no stemmer module defines its own ``_let``/``_st``/``_ql``/
