@@ -1,9 +1,9 @@
 """Keys served from a persisted store.
 
 Each key is one ``stores.ensure`` build (rebuilt only when its source
-files or the package's code change) plus a read of the stored artifact. Its oracle is the
-same result computed from the source tables, so the store adds
-persistence, not different math.
+files or the package's code change) plus a read of the stored
+artifact. Its oracle is the same result computed from the source
+tables, so the store adds persistence, not different math.
 """
 
 from __future__ import annotations

@@ -85,6 +85,7 @@ def test_inference_sample_honours_its_seed(spark):
     assert first == second
     assert sorted(first) == kept
 
+
 def test_merge_widen_and_conflict():
     a = T.StructType([T.StructField("x", T.IntegerType()),
                       T.StructField("y", T.StringType())])

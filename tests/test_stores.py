@@ -1,8 +1,7 @@
 """The persisted-store contract (sinks/stores.py): build once, reuse
 while the sources and the package's code are unchanged, rebuild
-otherwise, and never
-leave a valid marker behind a failed build. No Spark: ``build`` is a
-fake that writes one file."""
+otherwise, and never leave a valid marker behind a failed build. No
+Spark: ``build`` is a fake that writes one file."""
 
 from __future__ import annotations
 
