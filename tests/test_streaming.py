@@ -87,42 +87,6 @@ def test_stream_dedup_drops_cross_batch_duplicates(spark, tmp_path):
     assert len({r["key"] for r in rows}) == 5
 
 
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    from parquet_generator_spark.streaming.stateful import (
-        running_purchase_totals,
-    )
-
-    ev = load_table(spark, "events", SF)
-    expected = {
-        (r["user_id"], r["n"], round(r["s"], 6))
-        for r in (ev.filter(F.col("event_type") == "purchase")
-                  .groupBy("user_id")
-                  .agg(F.count(F.lit(1)).alias("n"),
-                       F.sum("value").alias("s")).collect())
-    }
-
-    # 4 files -> 4 micro-batches; state must carry across them
-    ev.repartition(4).write.parquet(str(tmp_path / "events_state"))
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(str(tmp_path / "events_state")))
-    q = (running_purchase_totals(stream)
-         .writeStream.format("memory").queryName("runtot")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    # update mode emits one row per (user, batch); the LAST emission
-    # per user is the final running total
-    final = spark.sql("""
-        select user_id, n_purchases, total_spend from (
-          select *, row_number() over (partition by user_id
-                                       order by n_purchases desc) rk
-          from runtot) where rk = 1""").collect()
-    got = {(r["user_id"], r["n_purchases"], round(r["total_spend"], 6))
-           for r in final}
-    assert got == expected
-
-
 def test_foreachbatch_upsert_latest_wins(spark, tmp_path):
     import json as _json
 
@@ -240,59 +204,6 @@ def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
     assert s_unmatched <= b_unmatched
 
 
-def test_timeout_sessions_emit_on_watermark_expiry(spark, tmp_path):
-    import json as _json
-
-    from parquet_generator_spark.streaming.stateful import timeout_sessions
-
-    src = tmp_path / "sess_in"
-    src.mkdir()
-    # user 1: two sessions separated by > 30 min; user 2: one session.
-    # Files arrive in time order so the watermark rises monotonically.
-    batches = [
-        [(1, "2024-01-01 10:00:00"), (1, "2024-01-01 10:10:00"),
-         (2, "2024-01-01 10:05:00")],
-        [(1, "2024-01-01 12:00:00"),   # closes user 1's first session
-         (2, "2024-01-01 12:01:00")],  # closes user 2's only session
-        [(1, "2024-01-01 23:00:00"),   # closes user 1's second session
-         (2, "2024-01-01 23:00:01")],
-    ]
-    import os as _os
-    import time as _time
-    now = _time.time()
-    for i, rows in enumerate(batches):
-        p = src / f"b{i}.json"
-        with open(p, "w") as fh:
-            for uid, ts in rows:
-                fh.write(_json.dumps({"user_id": uid, "ts": ts}) + "\n")
-        # the file source orders micro-batches by mtime; same-second
-        # writes tie and arrive out of order, so pin distinct mtimes
-        _os.utime(p, (now + i * 10, now + i * 10))
-
-    schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).json(str(src)))
-    q = (timeout_sessions(stream)
-         .writeStream.format("memory").queryName("tosess")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    got = {(r["user_id"], str(r["session_start"]), str(r["session_end"]),
-            r["n_events"])
-           for r in spark.sql("select * from tosess").collect()}
-    # sessions whose (end + 30 min) the final watermark passed; the
-    # 23:00 sessions stay open in state (no later watermark advance)
-    assert got == {
-        (1, "2024-01-01 10:00:00", "2024-01-01 10:10:00", 2),
-        (2, "2024-01-01 10:05:00", "2024-01-01 10:05:00", 1),
-        (1, "2024-01-01 12:00:00", "2024-01-01 12:00:00", 1),
-        (2, "2024-01-01 12:01:00", "2024-01-01 12:01:00", 1),
-    }
-
-
 def test_stream_near_dedup_collapses_reformatted_payloads(spark, tmp_path):
     """Signature dedup must suppress payloads that are identical
     modulo tokenization (key order / whitespace) across micro-batches
@@ -357,71 +268,6 @@ def test_sliding_agg_stream_matches_batch(spark, tmp_path):
     # overlap invariant: total windowed rows = 2x the event count
     total = sum(r["n"] for r in streamed)
     assert total == 2 * ev.count()
-
-
-def test_rate_anomalies_stream_matches_batch_and_flags_spike(
-        spark, tmp_path):
-    import datetime
-
-    from parquet_generator_spark.streaming.stateful import (
-        rate_anomalies,
-    )
-
-    base = datetime.datetime(2024, 5, 1)
-    rows = []
-    # user 1: steady values 100 +- 2, then a 500 spike at event 20
-    for i in range(25):
-        v = 500.0 if i == 20 else 100.0 + (i % 5) - 2.0
-        rows.append((i, 1, base + datetime.timedelta(minutes=i), v))
-    # user 2: wildly varying from the start — the spike-sized value
-    # is NOT anomalous for this user
-    for i in range(25):
-        rows.append((100 + i, 2, base + datetime.timedelta(minutes=i),
-                     float((i * 997) % 700)))
-    schema = "event_id long, user_id long, ts timestamp, value double"
-    df = spark.createDataFrame(rows, schema)
-
-    # python Welford replica = the expected verdicts
-    # (applyInPandasWithState itself only runs on streams)
-    from parquet_generator_spark.streaming.stateful import (
-        ANOMALY_MIN_N,
-        ANOMALY_Z,
-    )
-    expected = set()
-    by_user = {}
-    for eid, uid, ts, v in sorted(rows, key=lambda r: (r[2], r[0])):
-        n, mean, m2 = by_user.get(uid, (0, 0.0, 0.0))
-        if n >= ANOMALY_MIN_N:
-            var = m2 / n
-            if var > 0 and abs((v - mean) / var ** 0.5) > ANOMALY_Z:
-                expected.add((uid, eid))
-        n += 1
-        d = v - mean
-        mean += d / n
-        m2 += d * (v - mean)
-        by_user[uid] = (n, mean, m2)
-    assert (1, 20) in expected
-    assert all(u != 1 or e == 20 for u, e in expected)
-
-    # stream the events in two batches; verdicts must match
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    src = tmp_path / "in"
-    src.mkdir()
-    half = sorted(rows, key=lambda r: (r[2], r[0]))
-    for name, part in (("b0", half[:25]), ("b1", half[25:])):
-        pq.write_table(pa.table({
-            "event_id": [r[0] for r in part],
-            "user_id": [r[1] for r in part],
-            "ts": [r[2] for r in part],
-            "value": [r[3] for r in part]}), str(src / f"{name}.parquet"))
-    stream = spark.readStream.schema(df.schema).parquet(str(src))
-    q = (rate_anomalies(stream)
-         .writeStream.format("memory").queryName("anom")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    streamed = spark.sql("select * from anom").collect()
-    assert {(r["user_id"], r["event_id"]) for r in streamed} == expected
 
 
 def test_window_distinct_stream_matches_batch(spark, tmp_path):
@@ -674,64 +520,6 @@ def test_swap_crash_recovery_never_loses_table(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
     assert not os.path.exists(path + "_old")
     assert not os.path.exists(path + "_staging")
-
-
-def test_counter_rate_stream_matches_batch(spark, tmp_path):
-    """The stateful streaming counter-rate (per-series last-value
-    state bridging micro-batches) sums to the batch twin's per-day
-    totals: every event's reconstructed increase is emitted exactly
-    once even when a series' rows split across batches."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
-    from parquet_generator_spark.streaming.stateful import (
-        counter_rate_stream,
-    )
-    import __spark_entry__ as em
-
-    ev = load_table(spark, "events", SF)
-    # the stored-counter column, identical to the batch query's
-    # synthesis (cumsum of a per-event weight, mod 1000)
-    w_cum = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-             .rowsBetween(Window.unboundedPreceding, 0))
-    ctr = ev.select(
-        "user_id", "ts", "event_id",
-        (F.sum(F.col("event_id") % 5 + 1).over(w_cum) % 1000)
-        .alias("ctr"))
-
-    src = str(tmp_path / "ctr_src")
-    os.makedirs(src)
-    bounds = ["2024-01-01", "2024-01-11", "2024-01-21", "2024-02-01"]
-    for i in range(3):
-        stage = str(tmp_path / f"c{i}")
-        (ctr.filter((F.col("ts") >= bounds[i])
-                    & (F.col("ts") < bounds[i + 1]))
-         .coalesce(1).write.mode("overwrite").parquet(stage))
-        part = glob.glob(stage + "/part-*.parquet")[0]
-        shutil.move(part, f"{src}/chunk{i}.parquet")
-        os.utime(f"{src}/chunk{i}.parquet", (1700000000 + i * 60,) * 2)
-
-    stream = (spark.readStream.schema(ctr.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    q = (counter_rate_stream(stream)
-         .writeStream.format("memory").queryName("ctr_rate")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(240)
-
-    got = (spark.sql("select * from ctr_rate")
-           .groupBy("day")
-           .agg(F.sum("n_events").alias("n_events"),
-                F.sum("n_resets").alias("n_resets"),
-                F.sum("inc").alias("total_increase"))
-           .orderBy("day"))
-    batch = (em.queries()["dsl_counter_rate"](spark, SF)
-             .select("day", "n_events", "n_resets", "total_increase")
-             .orderBy("day"))
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, batch.collect()))
 
 
 def test_foreachbatch_changelog_tombstones(spark, tmp_path):
