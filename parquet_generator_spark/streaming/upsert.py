@@ -1,18 +1,13 @@
-"""foreachBatch upsert (merge) sink: latest-wins per key into a
-parquet dataset.
+"""Latest-wins merge: one row per key across an existing table and a
+new micro-batch.
 
 The reference's continuous loop deletes and rewrites whole files per
 pull (EsParquetWriter.java:52-56); the streaming-native form is a
-per-micro-batch MERGE. Parquet has no transactional merge, so each
-batch rewrites via a staging directory swap — the pattern is exactly
-what a table format (Delta/Iceberg) executes natively; swapping the
-writer is a one-line change and the plan above it is identical.
+per-micro-batch MERGE. ``streaming.windowed``'s update-mode top-k
+runner merges its running counts with it.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -27,74 +22,3 @@ def merge_latest(existing: DataFrame | None, batch: DataFrame,
         *[F.desc(c) for c in order_cols])
     return (combined.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") == 1).drop("_rk"))
-
-
-def _merge_writer(stream: DataFrame, table_path: str,
-                  checkpoint_dir: str, key_cols: list[str],
-                  order_cols: list[str], merge_fn):
-    """Shared foreachBatch staging-swap body: per micro-batch, run
-    ``merge_fn(existing, batch, key_cols, order_cols)`` against the
-    current table, write to a staging dir, atomically swap."""
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        existing = (spark.read.parquet(table_path)
-                    if os.path.exists(table_path) else None)
-        merged = merge_fn(existing, batch_df, key_cols, order_cols)
-        staging = table_path + "_staging"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.exists(table_path):
-            shutil.rmtree(table_path)
-        os.replace(staging, table_path)
-
-    return (stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def upsert_writer(stream: DataFrame, table_path: str, checkpoint_dir: str,
-                  key_cols: list[str], order_cols: list[str]):
-    """writeStream.foreachBatch upsert into ``table_path``; drains
-    with availableNow (continuous mode: drop the trigger)."""
-    return _merge_writer(stream, table_path, checkpoint_dir,
-                         key_cols, order_cols, merge_latest)
-
-
-def merge_changelog(existing: DataFrame | None, batch: DataFrame,
-                    key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    """CDC merge with tombstones (the streaming half of the
-    changelog_apply compaction): latest-wins per key across
-    existing+batch, tombstone rows RETAINED in the table — dropping
-    them at compaction would let a LATE-ARRIVING stale upsert
-    resurrect a deleted key (caught by the out-of-order test:
-    maxFilesPerTrigger gives no arrival-order guarantee). Readers
-    filter ``op != delete`` (:func:`read_live`); a vacuum may drop
-    tombstones only once no older data can still arrive — the
-    Debezium/Delta tombstone-retention contract. A genuinely newer
-    upsert (higher order_cols) still wins over the tombstone:
-    upsert-after-delete resurrection works. Same keyed-window
-    latest-wins plan as :func:`merge_latest` (tombstone retention is
-    a POLICY difference — rows are kept because nothing filters the
-    delete op here; readers drop them via :func:`read_live`)."""
-    return merge_latest(existing, batch, key_cols, order_cols)
-
-
-def read_live(table: DataFrame, op_col: str = "op",
-              delete_op: str = "delete") -> DataFrame:
-    """The live view over a changelog table: tombstones filtered
-    out (they stay in storage for out-of-order protection)."""
-    return table.filter(F.col(op_col) != delete_op)
-
-
-def changelog_writer(stream: DataFrame, table_path: str,
-                     checkpoint_dir: str, key_cols: list[str],
-                     order_cols: list[str]):
-    """foreachBatch CDC apply into ``table_path``: per micro-batch,
-    merge_changelog against the current table and atomically swap
-    (staging-dir rename — the upsert_writer posture; a table format
-    would MERGE natively). The table keeps tombstone rows so
-    out-of-order arrivals cannot resurrect deleted keys; read the
-    live view through :func:`read_live`."""
-    return _merge_writer(stream, table_path, checkpoint_dir,
-                         key_cols, order_cols, merge_changelog)

@@ -225,7 +225,7 @@ def run_topk_stream_update(stream_df: DataFrame, counts_path: str,
     the ``topk_path`` table. Work per batch is O(updated windows x
     keys), independent of stream lifetime; both sink tables live on
     disk, not in state. On a table format the two staging swaps
-    become native MERGEs (see upsert.py)."""
+    become native MERGEs."""
     import os
 
     from pyspark.sql import Window

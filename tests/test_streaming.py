@@ -87,40 +87,6 @@ def test_stream_dedup_drops_cross_batch_duplicates(spark, tmp_path):
     assert len({r["key"] for r in rows}) == 5
 
 
-def test_foreachbatch_upsert_latest_wins(spark, tmp_path):
-    import json as _json
-
-    from parquet_generator_spark.streaming.upsert import upsert_writer
-
-    src = tmp_path / "upsert_in"
-    src.mkdir()
-    # three versions of the same 4 keys arrive across micro-batches
-    for version in range(3):
-        with open(src / f"v{version}.json", "w") as fh:
-            for k in range(4):
-                fh.write(_json.dumps({
-                    "key": f"k{k}", "version": version,
-                    "payload": f"k{k}-v{version}"}) + "\n")
-
-    schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("payload", T.StringType()),
-    ])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).json(str(src)))
-    q = upsert_writer(stream, str(tmp_path / "upsert_out"),
-                      str(tmp_path / "upsert_ckpt"),
-                      key_cols=["key"], order_cols=["version"])
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(str(tmp_path / "upsert_out")).collect()
-    # one row per key, and regardless of file arrival order the
-    # highest version won
-    assert {(r["key"], r["version"], r["payload"]) for r in out} == {
-        (f"k{k}", 2, f"k{k}-v2") for k in range(4)}
-
-
 def test_stream_static_enrich_matches_batch(spark, tmp_path):
     from parquet_generator_spark.streaming.enrich import (
         enrich_events_with_customer,
@@ -520,87 +486,3 @@ def test_swap_crash_recovery_never_loses_table(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
     assert not os.path.exists(path + "_old")
     assert not os.path.exists(path + "_staging")
-
-
-def test_foreachbatch_changelog_tombstones(spark, tmp_path):
-    import json as _json
-
-    from parquet_generator_spark.streaming.upsert import (
-        changelog_writer,
-    )
-
-    src = tmp_path / "cdc_in"
-    src.mkdir()
-    # batch 0: insert k0..k3 v0; batch 1: delete k1, update k2;
-    # batch 2: re-insert k1 (resurrection), delete k3
-    batches = [
-        [{"key": f"k{k}", "version": 0, "op": "upsert",
-          "payload": f"k{k}-v0"} for k in range(4)],
-        [{"key": "k1", "version": 1, "op": "delete", "payload": None},
-         {"key": "k2", "version": 1, "op": "upsert",
-          "payload": "k2-v1"}],
-        [{"key": "k1", "version": 2, "op": "upsert",
-          "payload": "k1-v2"},
-         {"key": "k3", "version": 2, "op": "delete", "payload": None}],
-    ]
-    for i, rows in enumerate(batches):
-        with open(src / f"b{i}.json", "w") as fh:
-            for r in rows:
-                fh.write(_json.dumps(r) + "\n")
-
-    schema = T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("version", T.LongType()),
-        T.StructField("op", T.StringType()),
-        T.StructField("payload", T.StringType()),
-    ])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).json(str(src)))
-    q = changelog_writer(stream, str(tmp_path / "cdc_out"),
-                         str(tmp_path / "cdc_ckpt"),
-                         key_cols=["key"], order_cols=["version"])
-    q.awaitTermination(120)
-
-    from parquet_generator_spark.streaming.upsert import read_live
-
-    table = spark.read.parquet(str(tmp_path / "cdc_out"))
-    out = read_live(table).collect()
-    got = {(r["key"], r["version"], r["payload"]) for r in out}
-    # k0 untouched v0; k1 resurrected at v2; k2 updated v1;
-    # k3 deleted (absent from the LIVE view regardless of the
-    # order maxFilesPerTrigger happened to deliver the files in —
-    # its tombstone is retained in storage)
-    assert got == {("k0", 0, "k0-v0"), ("k1", 2, "k1-v2"),
-                   ("k2", 1, "k2-v1")}
-    stored = {(r["key"], r["op"]) for r in table.collect()}
-    assert ("k3", "delete") in stored
-
-
-def test_merge_changelog_batch_semantics(spark):
-    from parquet_generator_spark.streaming.upsert import (
-        merge_changelog,
-        read_live,
-    )
-
-    existing = spark.createDataFrame(
-        [("a", 1, "upsert", "a1"), ("b", 1, "upsert", "b1")],
-        ["key", "version", "op", "payload"])
-    batch = spark.createDataFrame(
-        [("a", 2, "delete", None), ("c", 1, "upsert", "c1"),
-         ("b", 0, "upsert", "b0")],  # stale update loses
-        ["key", "version", "op", "payload"])
-    merged = merge_changelog(existing, batch, ["key"], ["version"])
-    got = {(r["key"], r["version"]) for r in
-           read_live(merged).collect()}
-    assert got == {("b", 1), ("c", 1)}
-    # the tombstone is retained in the table itself
-    assert {(r["key"], r["op"]) for r in merged.collect()} == {
-        ("a", "delete"), ("b", "upsert"), ("c", "upsert")}
-    # out-of-order protection: a STALE upsert arriving after the
-    # delete must NOT resurrect the key
-    stale = spark.createDataFrame(
-        [("a", 1, "upsert", "a1-late")],
-        ["key", "version", "op", "payload"])
-    again = merge_changelog(merged, stale, ["key"], ["version"])
-    assert ("a",) not in {(r["key"],) for r in
-                          read_live(again).collect()}
