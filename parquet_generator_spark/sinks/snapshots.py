@@ -21,14 +21,8 @@ Semantics:
   the loser gets ``ConcurrentWriteError`` — the Delta/Iceberg
   protocol's conflict rule, minus the retry machinery.
 - Time travel: ``read_snapshot(spark, path, version=N)`` reads
-  exactly version N's files, forever (files are immutable; VACUUM is
-  the only thing that deletes, and only files unreferenced by ANY
-  retained manifest).
-- MERGE is copy-on-write over the matched keys: unmatched rows'
-  FILES are carried into the new version untouched (no rewrite);
-  only files that actually contain a matching key are rewritten.
-  File pruning uses the manifest's per-file key min/max — the same
-  stats-based pruning the formats do.
+  exactly version N's files, forever (files are immutable and
+  nothing deletes them).
 
 The reference's loop deletes and rewrites its output file per pull
 (EsParquetWriter.java:52-56) — restart-from-scratch semantics. This
@@ -118,10 +112,9 @@ def _write_data_files(df: DataFrame, path: str,
                 try:
                     json_stats[k] = [_plain(v[0]), _plain(v[1])]
                 except UnicodeDecodeError:
-                    # non-UTF8 bytes don't JSON-roundtrip losslessly;
-                    # a lossy min/max could wrongly CARRY a file that
-                    # holds matching keys. No stats entry = the file
-                    # always rewrites (correct, just more IO).
+                    # non-UTF8 bytes don't JSON-roundtrip losslessly,
+                    # and a lossy min/max would misstate the file's
+                    # key range: record no bound rather than a wrong one
                     continue
             entry["stats"] = json_stats
         entries.append(entry)
@@ -222,114 +215,3 @@ def history(path: str) -> list[dict]:
                     "n_files": len(m["files"]),
                     "total_rows": m["total_rows"]})
     return out
-
-
-def merge_upsert(spark: SparkSession, path: str, source: DataFrame,
-                 key_cols: list[str], order_cols: list[str],
-                 expected_version: int | None = None) -> int:
-    """MERGE (latest-wins upsert) as a copy-on-write commit:
-
-    1. prune: target files whose key min/max ranges cannot contain
-       any source key are CARRIED into the new version untouched;
-    2. rewrite: the remaining files' rows merge with the source via
-       upsert.merge_latest (one row per key, newest wins — source
-       rows outrank target rows of the same key);
-    3. commit: carried entries + rewritten files + brand-new keys,
-       one atomic manifest (losers raise ConcurrentWriteError).
-
-    Requires the table to have been written with stat_cols covering
-    ``key_cols[0]`` for pruning to engage; without stats every file
-    rewrites (correct, just more IO)."""
-    from pyspark.sql import functions as F
-
-    from parquet_generator_spark.streaming.upsert import merge_latest
-
-    parent = read_manifest(path, expected_version)
-    schema = T.StructType.fromJson(json.loads(parent["schema"]))
-    k0 = key_cols[0]
-    bounds = source.agg(F.min(k0).alias("lo"),
-                        F.max(k0).alias("hi")).collect()[0]
-    lo, hi = bounds["lo"], bounds["hi"]
-
-    carried, rewrite = [], []
-    for f in parent["files"]:
-        s = f.get("stats", {}).get(k0)
-        if s is not None and lo is not None \
-                and (s[1] < lo or s[0] > hi):
-            carried.append(f)
-        else:
-            rewrite.append(f)
-
-    touched_paths = [os.path.join(path, f["path"]) for f in rewrite]
-    if touched_paths:
-        target = spark.read.schema(schema).parquet(*touched_paths)
-    else:
-        target = spark.createDataFrame([], schema)
-    # schema enforcement: the source casts to the TABLE schema (a
-    # MERGE must not widen the table's types behind readers' backs)
-    src_cast = source.select(
-        [F.col(c.name).cast(c.dataType).alias(c.name) for c in schema])
-    # source outranks target rows of the same key: explicit epoch
-    merged = merge_latest(
-        target.withColumn("_src", F.lit(0)),
-        src_cast.withColumn("_src", F.lit(1)),
-        key_cols, order_cols + ["_src"]).drop("_src")
-    new_files = _write_data_files(merged, path, stat_cols=[k0])
-    return _commit(path, parent["version"], carried + new_files,
-                   parent["schema"], "merge")
-
-
-def vacuum(spark: SparkSession, path: str,
-           keep_versions: int = 2) -> list[str]:
-    """Delete data files unreferenced by the ``keep_versions`` most
-    recent manifests (and drop the older manifests) — the only
-    operation that ever removes a data file. Returns deleted paths."""
-    versions = sorted(
-        int(os.path.basename(p)[1:-5])
-        for p in glob.glob(os.path.join(_manifest_dir(path), "v*.json")))
-    keep = set(versions[-keep_versions:])
-    referenced: set[str] = set()
-    for v in keep:
-        referenced |= {f["path"] for f in read_manifest(path, v)["files"]}
-    deleted = []
-    for fp in glob.glob(os.path.join(path, "data", "*.parquet")):
-        rel = os.path.relpath(fp, path)
-        if rel not in referenced:
-            os.remove(fp)
-            deleted.append(rel)
-    for v in versions:
-        if v not in keep:
-            os.remove(_manifest_path(path, v))
-    return deleted
-
-
-def snapshot_upsert_writer(stream: DataFrame, table_path: str,
-                           checkpoint_dir: str, key_cols: list[str],
-                           order_cols: list[str]):
-    """Streaming MERGE sink: every micro-batch commits one atomic,
-    time-travelable snapshot version (create on first batch, stats-
-    pruned copy-on-write merge_upsert after) — the table-format
-    upgrade of upsert.upsert_writer's staging-swap, with history and
-    concurrent-writer safety for free. The reference's loop deletes
-    and rewrites its file per pull (EsParquetWriter.java:52-56);
-    here every pull is an auditable commit."""
-
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
-        spark = batch_df.sparkSession
-        if not os.path.exists(_manifest_dir(table_path)):
-            from parquet_generator_spark.streaming.upsert import (
-                merge_latest,
-            )
-            first = merge_latest(None, batch_df, key_cols, order_cols)
-            create_table(spark, table_path, first,
-                         stat_cols=[key_cols[0]])
-        else:
-            merge_upsert(spark, table_path, batch_df,
-                         key_cols, order_cols)
-
-    return (stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())

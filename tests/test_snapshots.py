@@ -1,12 +1,9 @@
 """Snapshot/table-format layer: time travel, optimistic concurrency,
-stats-pruned copy-on-write MERGE, vacuum safety."""
+empty versions, lossless per-file stats."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
-from pyspark.sql import functions as F
 
 from parquet_generator_spark.sinks import snapshots as snap
 from parquet_generator_spark.sources.catalog import load_table
@@ -54,71 +51,6 @@ def test_concurrent_writer_rejected(spark, tmp_path):
     assert snap.current_version(t) == 3
 
 
-def test_merge_upsert_updates_inserts_and_prunes(spark, tmp_path):
-    t = str(tmp_path / "tbl3")
-    df = _nations(spark).withColumn("payload", F.lit("old"))
-    # two files with disjoint key ranges so stats pruning can engage
-    snap.create_table(spark, t,
-                      df.filter("n_nationkey < 12")
-                      .repartitionByRange(1, "n_nationkey"),
-                      stat_cols=["n_nationkey"])
-    snap.commit_append(spark, t,
-                       df.filter("n_nationkey >= 12")
-                       .repartitionByRange(1, "n_nationkey"),
-                       stat_cols=["n_nationkey"])
-    n_before = len(snap.read_manifest(t)["files"])
-
-    source = spark.createDataFrame(
-        [(13, "ZZTOP", 1, "new"), (99, "NEWLAND", 2, "new")],
-        ["n_nationkey", "n_name", "n_regionkey", "payload"])
-    snap.merge_upsert(spark, t, source,
-                      key_cols=["n_nationkey"],
-                      order_cols=["n_nationkey"])
-    cur = snap.read_snapshot(spark, t)
-    assert cur.count() == 26  # 25 originals, 1 updated, 1 inserted
-    upd = cur.filter("n_nationkey = 13").collect()[0]
-    assert upd["n_name"] == "ZZTOP" and upd["payload"] == "new"
-    assert cur.filter("n_nationkey = 99").count() == 1
-    assert cur.filter("payload = 'old'").count() == 24
-    # the low-range file (keys < 12) was outside the source key range
-    # and must be CARRIED, not rewritten
-    m = snap.read_manifest(t)
-    carried = [f for f in m["files"]
-               if f["stats"]["n_nationkey"][1] < 12]
-    prev = snap.read_manifest(t, m["parent"])
-    assert any(f in prev["files"] for f in carried)
-    assert n_before == len(prev["files"])
-
-
-def test_merge_is_time_travelable(spark, tmp_path):
-    t = str(tmp_path / "tbl4")
-    df = _nations(spark)
-    snap.create_table(spark, t, df, stat_cols=["n_nationkey"])
-    source = spark.createDataFrame(
-        [(0, "RENAMED", 0)], ["n_nationkey", "n_name", "n_regionkey"])
-    snap.merge_upsert(spark, t, source, ["n_nationkey"],
-                      ["n_nationkey"])
-    old = snap.read_snapshot(spark, t, 1).filter("n_nationkey = 0")
-    new = snap.read_snapshot(spark, t, 2).filter("n_nationkey = 0")
-    assert old.collect()[0]["n_name"] != "RENAMED"
-    assert new.collect()[0]["n_name"] == "RENAMED"
-
-
-def test_vacuum_deletes_only_unreferenced(spark, tmp_path):
-    t = str(tmp_path / "tbl5")
-    df = _nations(spark)
-    snap.create_table(spark, t, df)
-    snap.commit_overwrite(spark, t, df.limit(5))
-    snap.commit_overwrite(spark, t, df.limit(3))
-    deleted = snap.vacuum(spark, t, keep_versions=2)
-    assert deleted  # v1's files are unreferenced by v2/v3
-    # retained versions still read correctly
-    assert snap.read_snapshot(spark, t, 2).count() == 5
-    assert snap.read_snapshot(spark, t, 3).count() == 3
-    with pytest.raises(FileNotFoundError):
-        snap.read_manifest(t, 1)
-
-
 def test_empty_overwrite_reads_back_empty(spark, tmp_path):
     t = str(tmp_path / "tbl6")
     df = _nations(spark)
@@ -129,76 +61,21 @@ def test_empty_overwrite_reads_back_empty(spark, tmp_path):
     assert empty.columns == df.columns
 
 
-def test_merge_upsert_non_utf8_key_stats_never_prune(spark, tmp_path):
-    """Stats pruning must not trust lossy bounds: a binary key whose
+def test_non_utf8_key_stats_are_dropped(spark, tmp_path):
+    """A manifest must not record lossy bounds: a binary key whose
     parquet min/max bytes are not valid UTF-8 used to be stored with
-    U+FFFD substitution, which could inflate the recorded min above
-    the source hi and wrongly CARRY a file holding matching keys.
-    Now such stats are dropped entirely, so the file always rewrites
-    and the MERGE replaces the matching row."""
+    U+FFFD substitution, which could put the recorded min above keys
+    the file holds. Such stats are dropped entirely, while valid
+    UTF-8 stats are kept and the rows read back unchanged."""
     t = str(tmp_path / "tbl_bin")
     df = spark.createDataFrame(
-        [(bytearray(b"\xff\x01"), "v1"), (bytearray(b"\xfe\x02"), "v1")],
+        [(bytearray(b"\xff\x01"), "v1"), (bytearray(b"\xfe\x02"), "v2")],
         "k binary, payload string")
-    snap.create_table(spark, t, df, stat_cols=["k"])
+    snap.create_table(spark, t, df.coalesce(1), stat_cols=["k", "payload"])
     # no stats entry may survive for the non-UTF8 binary key
     for f in snap.read_manifest(t)["files"]:
-        assert "k" not in f.get("stats", {})
-    source = spark.createDataFrame(
-        [(bytearray(b"\xff\x01"), "v2")], "k binary, payload string")
-    snap.merge_upsert(spark, t, source, key_cols=["k"],
-                      order_cols=["payload"])
-    cur = snap.read_snapshot(spark, t)
-    assert cur.count() == 2
-    rows = {bytes(r["k"]): r["payload"] for r in cur.collect()}
-    assert rows[b"\xff\x01"] == "v2" and rows[b"\xfe\x02"] == "v1"
-
-
-def test_streaming_upsert_commits_versions(spark, tmp_path):
-    """Each micro-batch is one snapshot commit: the final version
-    equals the batch latest-wins merge, and earlier versions remain
-    time-travelable (one version per non-empty batch)."""
-    import glob
-    import shutil
-
-    from parquet_generator_spark.sinks.snapshots import (
-        history,
-        read_snapshot,
-        snapshot_upsert_writer,
-    )
-    from parquet_generator_spark.streaming.upsert import merge_latest
-
-    ev = (load_table(spark, "events", SF).limit(300)
-          .select("event_id", "user_id", "ts", "value"))
-    src = str(tmp_path / "ev_src")
-    os.makedirs(src)
-    # 3 ordered chunks -> 3 micro-batches (maxFilesPerTrigger=1)
-    chunks = [ev.filter(F.col("event_id") % 3 == i) for i in range(3)]
-    for i, ch in enumerate(chunks):
-        stage = str(tmp_path / f"st{i}")
-        ch.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(stage + "/part-*.parquet")[0]
-        shutil.move(part, f"{src}/chunk{i}.parquet")
-        os.utime(f"{src}/chunk{i}.parquet",
-                 (1700000000 + i * 60,) * 2)
-
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    t = str(tmp_path / "snap_tbl")
-    q = snapshot_upsert_writer(
-        stream, t, str(tmp_path / "ck"),
-        key_cols=["user_id"], order_cols=["ts", "event_id"])
-    q.awaitTermination(240)
-
-    hist = history(t)
-    assert [h["operation"] for h in hist] == ["create", "merge", "merge"]
-    # final table == batch latest-wins over everything
-    expect = sorted(map(tuple, merge_latest(
-        None, ev, ["user_id"], ["ts", "event_id"]).collect()))
-    got = sorted(map(tuple, read_snapshot(spark, t).collect()))
-    assert got == expect
-    # time travel: version 1 holds only chunk 0's users
-    v1_users = {r["user_id"] for r in
-                read_snapshot(spark, t, 1).collect()}
-    c0_users = {r["user_id"] for r in chunks[0].collect()}
-    assert v1_users == c0_users
+        assert "k" not in f["stats"]
+        assert f["stats"]["payload"] == ["v1", "v2"]
+    rows = {bytes(r["k"]): r["payload"]
+            for r in snap.read_snapshot(spark, t).collect()}
+    assert rows == {b"\xff\x01": "v1", b"\xfe\x02": "v2"}
