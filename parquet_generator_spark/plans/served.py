@@ -188,8 +188,7 @@ def dedup_index_appended(spark: SparkSession,
 def _ensure_rollup(spark: SparkSession, sf_dir: str) -> str:
     """Downsample-on-write: the 6h rollup is materialized through the
     snapshot table format ONCE per events version
-    (sinks/tsds_rollup.py owns the merge-on-append lifecycle for
-    incremental slices)."""
+    (sinks/tsds_rollup.py)."""
     return stores.ensure(
         "tsds_rollup", sf_dir, ["events.parquet"],
         lambda root: train_rollup(
@@ -202,9 +201,7 @@ def dsl_tsds_downsample_served(spark: SparkSession,
     ES downsample-on-write contract): the plan scans the snapshot's
     series x buckets rows — never raw events. Oracle = the
     per-query key's oracle verbatim, so the driver proves the
-    materialized rollup value-identical to the on-the-fly one; the
-    merge-on-append lifecycle (append == rebuild) is pinned in
-    tests/test_tsds_rollup.py."""
+    materialized rollup value-identical to the on-the-fly one."""
     root = _ensure_rollup(spark, sf_dir)
     return (serve_rollup(spark, root)
             .orderBy("event_type", "bucket"))
@@ -228,8 +225,8 @@ def dsl_tsds_downsample_served(spark: SparkSession,
 #   serve_ctr_rates owns the stitch).
 #
 # Scale: a rate panel at 100 TB reads series x buckets rollup rows —
-# never raw events; the rollup itself was paid once at write time
-# (and incrementally per appended slice). This is exactly ES 8.5+
+# never raw events; the rollup itself was paid once at write time.
+# This is exactly ES 8.5+
 # TSDS downsampling: rate over a downsampled index is served from
 # first/last+increase per downsample bucket.
 

@@ -6,29 +6,21 @@ ES downsampling REPLACES a raw time-series index with one document
 per (dimension tuple, bucket) carrying last/min/max/sum/count.
 ``dsl_tsds_downsample`` computes that rollup per QUERY; this sink
 materializes it ONCE through the snapshot table format
-(sinks/snapshots.py: versioned manifests, time travel) and keeps it
-current with MERGE-ON-APPEND — a new slice of events pays one
-grouped pass over the slice plus a merge against the existing
-rollup (series x buckets rows, tiny next to raw), never a re-scan
-of the historical corpus.
+(sinks/snapshots.py: versioned manifests, time travel), and
+``stores.ensure`` rebuilds it when the events change.
 
-Merge correctness details:
-- ``sum`` is carried UNROUNDED internally (_sum_raw) and rounded at
-  serve time — merging rounded partial sums would drift from the
-  per-query rollup; min/max commute with rounding (monotone), so
-  they merge directly;
-- the last-value pick carries its (ts, event_id) witness columns so
-  a merge can re-adjudicate "latest" across old and new slices with
-  the same tie-break the per-query window uses;
-- append == rebuild is pinned in tests/test_tsds_rollup.py, and the
-  driver key ``dsl_tsds_downsample_served`` reuses the per-query
-  key's DuckDB oracle VERBATIM, so the driver itself proves the
-  materialized rollup value-identical to the on-the-fly one.
+- ``sum`` is stored UNROUNDED (_sum_raw) and rounded at serve time:
+  ``dsl_rate_served`` adds four 6h sums into a day, and adding
+  rounded partial sums would drift from the per-query rollup;
+- the driver key ``dsl_tsds_downsample_served`` reuses the
+  per-query key's DuckDB oracle VERBATIM, so the driver itself
+  proves the materialized rollup value-identical to the on-the-fly
+  one.
 
 At 100 TB this is the TSDS write path: the rollup shuffles on
 (series, bucket) — the _tsid routing key the index already uses —
-once per ingested slice, and every downsample-granularity query
-afterwards scans series x buckets rows instead of raw events.
+once per build, and every downsample-granularity query afterwards
+scans series x buckets rows instead of raw events.
 """
 
 from __future__ import annotations
@@ -50,8 +42,8 @@ def _meta_path(root: str) -> str:
 
 
 def _slice_rollup(events: DataFrame) -> DataFrame:
-    """The internal per-slice rollup: one row per (series, bucket)
-    with mergeable stats + the last-value witness."""
+    """The internal rollup: one row per (series, bucket) with
+    unrounded stats + the last value and its (ts, id) witness."""
     b = events.select(
         "event_type", "value", "ts", "event_id",
         F.date_format(
@@ -75,24 +67,6 @@ def _slice_rollup(events: DataFrame) -> DataFrame:
     return stats.join(last, ["event_type", "bucket"])
 
 
-def _merge(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Merge two internal rollups: counts/sums add, min/max fold,
-    the later (ts, id) witness wins the last value."""
-    u = old.unionByName(new)
-    return (u.groupBy("event_type", "bucket")
-            .agg(F.sum("n").alias("n"),
-                 F.min("_min_raw").alias("_min_raw"),
-                 F.max("_max_raw").alias("_max_raw"),
-                 F.sum("_sum_raw").alias("_sum_raw"),
-                 F.max(F.struct("_last_ts", "_last_id",
-                                "_last_raw")).alias("_w"))
-            .select("event_type", "bucket", "n", "_min_raw",
-                    "_max_raw", "_sum_raw",
-                    F.col("_w._last_ts").alias("_last_ts"),
-                    F.col("_w._last_id").alias("_last_id"),
-                    F.col("_w._last_raw").alias("_last_raw")))
-
-
 def _table(root: str) -> str:
     return os.path.join(root, "rollup_6h")
 
@@ -111,21 +85,6 @@ def train_rollup(spark: SparkSession, events: DataFrame,
         v = snapshots.create_table(spark, path, df)
     else:
         v = snapshots.commit_overwrite(spark, path, df)
-    with open(_meta_path(root), "w") as fh:
-        json.dump({"version": v, "bucket_seconds": BUCKET_SECONDS},
-                  fh)
-    return v
-
-
-def append_rollup(spark: SparkSession, root: str,
-                  new_events: DataFrame) -> int:
-    """Merge-on-append: one grouped pass over the NEW slice, one
-    merge against the current rollup (series x buckets rows), one
-    overwrite commit. The historical corpus is never re-scanned."""
-    path = _table(root)
-    old = snapshots.read_snapshot(spark, path)
-    merged = _merge(old, _slice_rollup(new_events))
-    v = snapshots.commit_overwrite(spark, path, merged)
     with open(_meta_path(root), "w") as fh:
         json.dump({"version": v, "bucket_seconds": BUCKET_SECONDS},
                   fh)
@@ -160,13 +119,6 @@ def serve_rollup(spark: SparkSession, root: str,
 # the day's observed span is (last witness - first witness). This
 # mirrors ES TSDS downsampling of counter fields (8.5+): rate over
 # a downsampled index uses exactly the first/last+increase shape.
-#
-# Merge-on-append contract: slices must be time-disjoint per
-# (series, bucket) — the ES model, where downsampling runs on
-# SEALED indices and appends are later time slices. The merge
-# re-adjudicates first/last by witness and stitches the boundary
-# increase between the two slices; interleaved slices would need
-# the raw points back and raise instead.
 
 def _ctr_bucket(ts_col):
     return ((F.unix_timestamp(ts_col) / BUCKET_SECONDS)
@@ -213,67 +165,6 @@ def _reset_adj(delta, cur):
             .when(delta >= 0, delta).otherwise(cur))
 
 
-def ctr_merge(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Merge two time-disjoint counter-rollup slices: first/last by
-    witness, n adds, and the combined within-bucket increase is
-    earlier.inner + boundary(earlier.last -> later.first) +
-    later.inner. Overlap per (series, bucket) raises at action time
-    via the _overlap sentinel column (assert_true)."""
-    o = old.select([F.col(c).alias(f"o_{c}") if c not in
-                    ("series", "bk") else F.col(c)
-                    for c in old.columns])
-    nw = new.select([F.col(c).alias(f"n_{c}") if c not in
-                     ("series", "bk") else F.col(c)
-                     for c in new.columns])
-    j = o.join(nw, ["series", "bk"], "full_outer")
-    both = F.col("o_n").isNotNull() & F.col("n_n").isNotNull()
-    old_first = (F.struct("o_first_us", "o_first_tie")
-                 < F.struct("n_first_us", "n_first_tie"))
-    # time-disjoint check: the earlier slice's last witness must
-    # precede the later slice's first witness
-    disjoint = F.when(
-        ~both, F.lit(True)).otherwise(F.when(
-            old_first,
-            F.struct("o_last_us", "o_last_tie")
-            < F.struct("n_first_us", "n_first_tie")).otherwise(
-            F.struct("n_last_us", "n_last_tie")
-            < F.struct("o_first_us", "o_first_tie")))
-    guard = F.assert_true(
-        disjoint, F.lit("ctr_merge: interleaved slices for a "
-                        "(series, bucket) — counter rollups merge "
-                        "only time-disjoint appends"))
-    e = {}  # earlier slice fields / later slice fields
-    for f in ("first_us", "first_tie", "first_val"):
-        e[f] = F.when(old_first, F.col(f"o_{f}")).otherwise(
-            F.col(f"n_{f}"))
-    lt = {}
-    for f in ("last_us", "last_tie", "last_val"):
-        lt[f] = F.when(old_first, F.col(f"n_{f}")).otherwise(
-            F.col(f"o_{f}"))
-    b_prev = F.when(old_first, F.col("o_last_val")).otherwise(
-        F.col("n_last_val"))
-    b_next = F.when(old_first, F.col("n_first_val")).otherwise(
-        F.col("o_first_val"))
-    binc = _reset_adj(b_next - b_prev, b_next)
-    one = F.col("o_n").isNull()  # only-new rows
-    merged = j.select(
-        "series", "bk",
-        F.when(guard.isNull() & both,
-               F.col("o_n") + F.col("n_n"))
-        .when(one, F.col("n_n")).otherwise(F.col("o_n")).alias("n"),
-        *[F.when(both, e[f]).when(one, F.col(f"n_{f}"))
-          .otherwise(F.col(f"o_{f}")).alias(f)
-          for f in ("first_us", "first_tie", "first_val")],
-        *[F.when(both, lt[f]).when(one, F.col(f"n_{f}"))
-          .otherwise(F.col(f"o_{f}")).alias(f)
-          for f in ("last_us", "last_tie", "last_val")],
-        F.when(both,
-               F.col("o_inner_inc") + binc + F.col("n_inner_inc"))
-        .when(one, F.col("n_inner_inc"))
-        .otherwise(F.col("o_inner_inc")).alias("inner_inc"))
-    return merged
-
-
 def _ctr_table(root: str) -> str:
     return os.path.join(root, "ctr_rollup_6h")
 
@@ -290,17 +181,6 @@ def train_ctr_rollup(spark: SparkSession, points: DataFrame,
     except FileNotFoundError:
         return snapshots.create_table(spark, path, df)
     return snapshots.commit_overwrite(spark, path, df)
-
-
-def append_ctr_rollup(spark: SparkSession, root: str,
-                      new_points: DataFrame, series: str,
-                      ts: str = "ts", tie: str = "event_id",
-                      val: str = "ctr") -> int:
-    path = _ctr_table(root)
-    old = snapshots.read_snapshot(spark, path)
-    merged = ctr_merge(old, ctr_slice_rollup(new_points, series,
-                                             ts, tie, val))
-    return snapshots.commit_overwrite(spark, path, merged)
 
 
 def serve_ctr_rates(spark: SparkSession, root: str,

@@ -1,14 +1,13 @@
-"""TSDS downsample-on-write (sinks/tsds_rollup.py): merge-on-append
-== full rebuild, snapshot versioning, and the serve plan never
-touching raw events."""
+"""TSDS downsample-on-write (sinks/tsds_rollup.py): the served
+rollup equals the per-query one, counter rates stitched from 6h
+buckets equal the raw rates, and the serve plan never touches raw
+events."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parquet_generator_spark.sinks import snapshots
 from parquet_generator_spark.sinks.tsds_rollup import (
-    append_rollup,
     serve_rollup,
     train_rollup,
 )
@@ -20,35 +19,6 @@ SF = "/root/testdata/sf0.001"
 def _sorted_rows(df):
     return [tuple(r) for r in
             df.orderBy("event_type", "bucket").collect()]
-
-
-def test_append_equals_rebuild(spark, tmp_path):
-    """Split the events by a deterministic hash, train on slice A,
-    append slice B: the merged rollup must equal training on the
-    whole corpus at once — counts, extremes, UNROUNDED sums, and
-    the (ts, id)-adjudicated last value."""
-    ev = load_table(spark, "events", SF)
-    a = ev.filter(F.crc32(F.col("event_id").cast("string")) % 2
-                  == 0)
-    b = ev.filter(F.crc32(F.col("event_id").cast("string")) % 2
-                  == 1)
-
-    inc_root = str(tmp_path / "inc")
-    train_rollup(spark, a, inc_root)
-    v = append_rollup(spark, inc_root, b)
-    assert v == 2
-
-    full_root = str(tmp_path / "full")
-    train_rollup(spark, ev, full_root)
-
-    got = _sorted_rows(serve_rollup(spark, inc_root))
-    want = _sorted_rows(serve_rollup(spark, full_root))
-    assert got == want and len(got) > 0
-    # time travel: version 1 still readable and equals slice A alone
-    a_only = _sorted_rows(serve_rollup(spark, inc_root, version=1))
-    a_root = str(tmp_path / "a")
-    train_rollup(spark, a, a_root)
-    assert a_only == _sorted_rows(serve_rollup(spark, a_root))
 
 
 def test_serve_plan_scans_rollup_not_events(spark, tmp_path):
@@ -81,30 +51,6 @@ def test_served_key_matches_per_query_rollup(spark, tmp_path):
     assert got == want
 
 
-def test_merge_is_order_insensitive(spark, tmp_path):
-    """Appending slices in either order lands on the same rollup
-    (counts/extremes/sum are commutative; the last-value witness
-    adjudicates by (ts, id), not arrival order)."""
-    ev = load_table(spark, "events", SF)
-    h = F.crc32(F.col("event_id").cast("string")) % 3
-    s0, s1, s2 = (ev.filter(h == i) for i in range(3))
-
-    r1 = str(tmp_path / "r1")
-    train_rollup(spark, s0, r1)
-    append_rollup(spark, r1, s1)
-    append_rollup(spark, r1, s2)
-
-    r2 = str(tmp_path / "r2")
-    train_rollup(spark, s2, r2)
-    append_rollup(spark, r2, s0)
-    append_rollup(spark, r2, s1)
-
-    assert (_sorted_rows(serve_rollup(spark, r1))
-            == _sorted_rows(serve_rollup(spark, r2)))
-    assert snapshots.history(str(tmp_path / "r1" / "rollup_6h"))[
-        -1]["version"] == 3
-
-
 # ------------------------------------------------------------------
 # counter rollup (TSDS RATE service)
 # ------------------------------------------------------------------
@@ -116,41 +62,6 @@ def _ctr_points(spark):
 
     ev = load_table(spark, "events", SF)
     return _ctr_source(ev)
-
-
-def _ctr_rows(df):
-    return [tuple(r) for r in df.orderBy("series", "bk").collect()]
-
-
-def test_ctr_append_equals_rebuild(spark, tmp_path):
-    """Time-split the counter series (the TSDS append shape: later
-    slices arrive later), train on the early half, append the late
-    half: the stitched rollup — including the boundary increase
-    between the slices — must equal training on everything."""
-    from parquet_generator_spark.sinks.tsds_rollup import (
-        append_ctr_rollup,
-        train_ctr_rollup,
-    )
-
-    pts = _ctr_points(spark)
-    cut = pts.selectExpr(
-        "percentile_approx(unix_timestamp(ts), 0.5) AS c"
-    ).first()["c"]
-    early = pts.filter(F.unix_timestamp("ts") <= cut)
-    late = pts.filter(F.unix_timestamp("ts") > cut)
-
-    inc_root = str(tmp_path / "cinc")
-    train_ctr_rollup(spark, early, inc_root, series="user_id")
-    append_ctr_rollup(spark, inc_root, late, series="user_id")
-
-    full_root = str(tmp_path / "cfull")
-    train_ctr_rollup(spark, pts, full_root, series="user_id")
-
-    got = _ctr_rows(snapshots.read_snapshot(
-        spark, str(tmp_path / "cinc" / "ctr_rollup_6h")))
-    want = _ctr_rows(snapshots.read_snapshot(
-        spark, str(tmp_path / "cfull" / "ctr_rollup_6h")))
-    assert got == want and len(got) > 0
 
 
 def test_ctr_served_day_rate_equals_raw(spark, tmp_path):
@@ -208,22 +119,3 @@ def test_ctr_serve_rejects_finer_buckets(spark, tmp_path):
     train_ctr_rollup(spark, pts, root, series="user_id")
     with _pytest.raises(ValueError, match="not a multiple"):
         serve_ctr_rates(spark, root, 3600)
-
-
-def test_ctr_merge_rejects_interleaved_slices(spark, tmp_path):
-    """Interleaved appends cannot be stitched without raw points —
-    the merge must fail loudly, not silently corrupt increases."""
-    import pytest as _pytest
-
-    from parquet_generator_spark.sinks.tsds_rollup import (
-        append_ctr_rollup,
-        train_ctr_rollup,
-    )
-
-    pts = _ctr_points(spark)
-    odd = pts.filter(F.col("event_id") % 2 == 1)
-    even = pts.filter(F.col("event_id") % 2 == 0)
-    root = str(tmp_path / "cx")
-    train_ctr_rollup(spark, odd, root, series="user_id")
-    with _pytest.raises(Exception, match="interleaved"):
-        append_ctr_rollup(spark, root, even, series="user_id")
