@@ -80,13 +80,6 @@ def exact_dedup_groups(df: DataFrame, id_col: str, content_col: str) -> DataFram
                  F.count(F.lit(1)).alias("n_copies")))
 
 
-def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
-    """The deduplicated dataset itself (keeps the min-id row per
-    distinct content)."""
-    keep = exact_dedup_groups(df, id_col, content_col).select("keep_id")
-    return df.join(keep, df[id_col] == keep["keep_id"], "left_semi")
-
-
 # ------------------------------------------------------------------
 # exact n-gram Jaccard (verifier / small-scale path)
 # ------------------------------------------------------------------

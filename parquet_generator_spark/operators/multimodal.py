@@ -1,5 +1,5 @@
 """Multimodal column plumbing: opaque binary payloads + typed
-metadata, with decode / feature-extract / resize / frame-sample as
+metadata, with decode / feature-extract / frame-sample as
 Arrow-batched ``mapInPandas`` stages.
 
 The Spark-side contract is fully real — schemas, partitioning, UDF
@@ -261,38 +261,6 @@ def decode_image_stats(media: DataFrame) -> DataFrame:
                 "media_id", "width", "height", "channels", "mean_px"])
 
     return media.mapInPandas(run, schema=IMAGE_STATS_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Distributed image resize via mapInPandas: real decode
-    (BMP/PNG), nearest-neighbor index-map resample, re-encode as BMP.
-    Output schema == input schema (payload replaced)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for p in pdf["payload"]:
-                if p is None:
-                    payloads.append(None)
-                    continue
-                arr = decode_image(p)
-                if arr.ndim == 2:
-                    arr = np.stack([arr] * 3, axis=-1)
-                if arr.shape[2] == 4:
-                    arr = arr[:, :, :3]
-                yi = np.arange(height) * arr.shape[0] // height
-                xi = np.arange(width) * arr.shape[1] // width
-                payloads.append(encode_bmp(arr[yi][:, xi]))
-            out = pdf.copy()
-            out["payload"] = payloads
-            if "meta" in out.columns:
-                out["meta"] = [
-                    {**m, "width": width, "height": height}
-                    if isinstance(m, dict) else m
-                    for m in out["meta"]]
-            yield out
-
-    return media.mapInPandas(run, schema=media.schema)
 
 
 def frame_sample(media: DataFrame, every_ms: int) -> DataFrame:

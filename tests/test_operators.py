@@ -22,10 +22,10 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_exact_dedup_removes_copies(spark):
+    """One group per distinct content: the minimum id is kept and
+    the copies are counted."""
     df = spark.createDataFrame(
         [(1, "aa"), (2, "bb"), (3, "aa"), (4, "aa")], "id long, t string")
-    kept = dedup.exact_dedup(df, "id", "t").collect()
-    assert sorted(r["id"] for r in kept) == [1, 2]
     groups = {r["keep_id"]: r["n_copies"]
               for r in dedup.exact_dedup_groups(df, "id", "t").collect()}
     assert groups == {1: 3, 2: 1}
@@ -440,30 +440,6 @@ def test_bmp_roundtrip_and_png_decode():
     assert np.array_equal(decode_image(png), px)
 
 
-def test_resize_images_real(spark):
-    """Nearest-neighbor resize decodes real BMPs, resamples, and
-    re-encodes — the corner pixels of the source survive."""
-    import numpy as np
-
-    from parquet_generator_spark.operators.multimodal import (
-        decode_image,
-        encode_bmp,
-        resize_images,
-    )
-
-    arr = np.zeros((4, 6, 3), np.uint8)
-    arr[0, 0] = (10, 20, 30)
-    arr[3, 5] = (200, 150, 100)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_bmp(arr)))],
-        "media_id long, payload binary")
-    out = resize_images(df, width=2, height=2).collect()
-    got = decode_image(bytes(out[0]["payload"]))
-    assert got.shape == (2, 2, 3)
-    assert tuple(got[0, 0]) == (10, 20, 30)        # top-left survives
-    assert tuple(got[1, 1]) == tuple(arr[2, 3])     # nn index map
-
-
 def test_fuzzy_transpositions_parity_and_semantics(spark):
     """Opt-in ES fuzzy_transpositions: the OSA distance matches
     DuckDB's damerau_levenshtein on random word pairs, and the
@@ -542,16 +518,15 @@ def test_nested_term_backslash_value(spark):
     assert [r["id"] for r in esdsl.search(df, {"query": q2}).collect()] == [3]
 
 
-def test_decode_stats_and_resize_null_payload(spark):
+def test_decode_stats_null_payload(spark):
     """Null payloads are in-contract: decode_image_stats emits a
-    null-stats row and resize_images passes the null through instead
-    of crashing the Arrow batch (round-6 advice regression)."""
+    null-stats row instead of crashing the Arrow batch (round-6
+    advice regression)."""
     import numpy as np
 
     from parquet_generator_spark.operators.multimodal import (
         decode_image_stats,
         encode_bmp,
-        resize_images,
     )
 
     arr = np.full((3, 3, 3), 7, np.uint8)
@@ -561,9 +536,6 @@ def test_decode_stats_and_resize_null_payload(spark):
     stats = {r["media_id"]: r for r in decode_image_stats(df).collect()}
     assert stats[1]["width"] == 3 and stats[1]["mean_px"] == 7.0
     assert stats[2]["width"] is None and stats[2]["mean_px"] is None
-    out = {r["media_id"]: r["payload"]
-           for r in resize_images(df, 2, 2).collect()}
-    assert out[1] is not None and out[2] is None
 
 
 def test_jaccard_pairs_quadratic_guard(spark):
