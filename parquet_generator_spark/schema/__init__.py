@@ -1,6 +1,5 @@
 from parquet_generator_spark.schema.infer import (
     infer_json_schema,
-    merge_schemas,
     promote_nullable,
 )
 from parquet_generator_spark.schema.avro_io import (
@@ -10,7 +9,6 @@ from parquet_generator_spark.schema.avro_io import (
 
 __all__ = [
     "infer_json_schema",
-    "merge_schemas",
     "promote_nullable",
     "avro_to_struct",
     "struct_to_avro",

@@ -1,4 +1,4 @@
-"""JSON schema inference, merging/widening, nullable promotion.
+"""JSON schema inference and nullable promotion.
 
 Reference parity: Bootstrap.java:288-306 samples one JSON doc per
 index, infers an Avro schema per doc (kitesdk JsonUtil.inferSchema)
@@ -91,44 +91,6 @@ def infer_json_schema(
     schema = T.StructType(
         [f for f in inferred.schema.fields if not f.name.startswith("_corrupt")])
     return promote_nullable(schema)
-
-
-_WIDEN_ORDER = {
-    "byte": 0, "short": 1, "integer": 2, "long": 3,
-    "float": 4, "double": 5, "decimal": 5,
-}
-
-
-def merge_schemas(a: T.DataType, b: T.DataType) -> T.DataType:
-    """Recursively merge two types, widening numerics and falling
-    back to string on conflict (the lenient-ETL resolution: never
-    fail schema merge mid-pipeline)."""
-    if a == b:
-        return a
-    if isinstance(a, T.NullType):
-        return b
-    if isinstance(b, T.NullType):
-        return a
-    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
-        names = list(dict.fromkeys([f.name for f in a.fields]
-                                   + [f.name for f in b.fields]))
-        af = {f.name: f for f in a.fields}
-        bf = {f.name: f for f in b.fields}
-        fields = []
-        for n in names:
-            if n in af and n in bf:
-                fields.append(T.StructField(
-                    n, merge_schemas(af[n].dataType, bf[n].dataType), True))
-            else:
-                fields.append(T.StructField(
-                    n, (af.get(n) or bf.get(n)).dataType, True))
-        return T.StructType(fields)
-    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
-        return T.ArrayType(merge_schemas(a.elementType, b.elementType), True)
-    an, bn = a.typeName(), b.typeName()
-    if an in _WIDEN_ORDER and bn in _WIDEN_ORDER:
-        return a if _WIDEN_ORDER[an] >= _WIDEN_ORDER[bn] else b
-    return T.StringType()
 
 
 def promote_nullable(dt: T.DataType) -> T.DataType:

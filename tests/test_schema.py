@@ -1,4 +1,4 @@
-"""Schema inference / merge / nullable-promotion / Avro I/O tests.
+"""Schema inference / nullable-promotion / Avro I/O tests.
 
 Parity fixtures: the reference repo's own output at
 /root/reference/office365_signin (schema.asvc + per-day parquet),
@@ -15,7 +15,6 @@ from pyspark.sql import types as T
 from parquet_generator_spark.schema import (
     avro_to_struct,
     infer_json_schema,
-    merge_schemas,
     promote_nullable,
     struct_to_avro,
 )
@@ -84,17 +83,6 @@ def test_inference_sample_honours_its_seed(spark):
                   for r in docs.sample(fraction=0.5, seed=42).collect())
     assert first == second
     assert sorted(first) == kept
-
-
-def test_merge_widen_and_conflict():
-    a = T.StructType([T.StructField("x", T.IntegerType()),
-                      T.StructField("y", T.StringType())])
-    b = T.StructType([T.StructField("x", T.DoubleType()),
-                      T.StructField("y", T.LongType()),
-                      T.StructField("z", T.BooleanType())])
-    m = merge_schemas(a, b)
-    got = {f.name: f.dataType.typeName() for f in m.fields}
-    assert got == {"x": "double", "y": "string", "z": "boolean"}
 
 
 def test_promote_nullable_recursive():
