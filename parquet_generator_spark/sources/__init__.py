@@ -1,3 +1,3 @@
-from parquet_generator_spark.sources.catalog import TABLES, load_table, load_tables
+from parquet_generator_spark.sources.catalog import TABLES, load_table
 
-__all__ = ["TABLES", "load_table", "load_tables"]
+__all__ = ["TABLES", "load_table"]

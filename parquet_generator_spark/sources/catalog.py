@@ -136,9 +136,3 @@ def load_events_between(spark: SparkSession, sf_dir: str,
     lo, hi = F.lit(start_iso).cast(t), F.lit(end_iso).cast(t)
     return _normalize_ts(
         raw.filter((F.col("ts") >= lo) & (F.col("ts") < hi)))
-
-
-def load_tables(spark: SparkSession,
-                sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-

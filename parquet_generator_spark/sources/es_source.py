@@ -23,8 +23,8 @@ never clears its cursors):
   ``search_after`` keyset pagination, and ``close_pit`` releases it.
 
 Network I/O uses only stdlib urllib (no extra deps); the test
-environment has no ES, so tests exercise ``read_json_fixture`` plus
-a canned-wire-protocol HTTP server (tests/test_es_contract.py).
+environment has no ES, so tests run the reader against a
+canned-wire-protocol HTTP server (tests/test_es_contract.py).
 """
 
 from __future__ import annotations
@@ -214,11 +214,3 @@ def decode_docs(df: DataFrame, column: str,
                            if f.name.lower() not in taken])
     return (df.withColumn("_rec", lenient_decode(F.col(column), schema))
               .select(*keep, "_rec.*"))
-
-
-def read_json_fixture(spark: SparkSession, path: str,
-                      schema: T.StructType) -> DataFrame:
-    """File-backed stand-in for an ES index (one JSON doc per line):
-    same decode path as read_elasticsearch, minus the network."""
-    raw = spark.read.text(path).withColumnRenamed("value", "doc")
-    return decode_docs(raw, "doc", promote_nullable(schema))

@@ -21,7 +21,7 @@ from parquet_generator_spark.sources.dated import (
     parse_dated_name,
     recent_n_days,
 )
-from parquet_generator_spark.sources.es_source import read_json_fixture
+from parquet_generator_spark.sources.es_source import decode_docs
 from parquet_generator_spark.schema.infer import infer_json_schema
 
 REF_DIR = "/root/reference/office365_signin"
@@ -70,8 +70,6 @@ def test_discover_rules_parses_only_the_rule_field(spark):
     import re
 
     from pyspark.sql import types as T
-
-    from parquet_generator_spark.sources.es_source import decode_docs
 
     schema = T.StructType([T.StructField(n, T.StringType())
                            for n in ("msg", "rule_name", "user", "ip")])
@@ -177,7 +175,8 @@ def test_fixture_reader_lenient_decode(spark, tmp_path):
     p.write_text('{"a": 1, "b": "x"}\n{"a": 2}\n{"b": "y", "c": true}\n')
     schema = infer_json_schema(
         spark, ['{"a": 1, "b": "x"}', '{"c": true}'])
-    df = read_json_fixture(spark, str(p), schema)
+    raw = spark.read.text(str(p)).withColumnRenamed("value", "doc")
+    df = decode_docs(raw, "doc", schema)
     rows = {tuple(r) for r in df.select("a", "b", "c").collect()}
     # missing fields decode to null, never error (ExtendedJsonDecoder
     # behavior)

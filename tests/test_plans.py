@@ -609,9 +609,10 @@ def build_job_stages(spark, name: str) -> list[list[str]]:
     (no action on the result), one list per job. The tables are read
     first, so a first read's parquet schema job is not counted."""
     from parquet_generator_spark.operators import cache
-    from parquet_generator_spark.sources.catalog import load_tables
+    from parquet_generator_spark.sources.catalog import TABLES, load_table
 
-    load_tables(spark, SF_DIR)
+    for t in TABLES:
+        load_table(spark, t, SF_DIR)
     sc = spark.sparkContext
     group = f"build:{name}"
     with cache.scope():
