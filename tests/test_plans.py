@@ -498,6 +498,100 @@ def test_every_package_module_is_reachable():
     assert unreached == [], unreached
 
 
+# Definitions no entry point calls that stay, each with its reason.
+# They count as used, so what they call is used too.
+_KEPT_FOR_TESTS = {
+    "geohash_encode": "row-wise reference for the SQL geohash encoder",
+    "embedding_dup_pairs_gemm": "dense-GEMM reference for the LSH "
+                                "embedding near-dup pairs",
+    "stored_match_duck_sql": "DuckDB reference for the stored "
+                             "analyzed-match plan",
+    "lsh_band_buckets": "SQL banding that band_buckets_np is pinned "
+                        "bit-identical to",
+    "make_centroids_kmeans": "k-means quantizer; tests check its "
+                             "recall against the keys' smallest-id one",
+    "make_pq_codebooks_kmeans": "k-means PQ codebooks; tests check "
+                                "their recall against the keys' ones",
+    "read_elasticsearch": "the reference's live-cluster scroll/PIT "
+                          "read, run against a local fake cluster",
+    "close_pit": "releases read_elasticsearch's point-in-time",
+    "lenient_decode_avro": "full-Avro lenient decode, checked against "
+                           "the reference's decoder semantics",
+    "esql_rows": "ES|QL collect that releases fork checkpoints for "
+                 "callers without a release harness",
+    "stream_dedup": "streaming form of the dedup step: "
+                    "watermark-bounded state across micro-batches",
+    "near_dedup_by_signature": "streaming SimHash dedup with "
+                               "watermark-bounded state",
+    "run_topk_stream": "stream runner of stream_windowed_topk, checked "
+                       "against the batch key",
+    "run_topk_stream_update": "update-mode stream runner of "
+                              "stream_windowed_topk, checked against "
+                              "the batch key",
+    "history": "snapshot commit log, read to check commit operations",
+    "__version__": "the package's version attribute",
+}
+
+
+def test_every_package_definition_is_reachable():
+    """Tripwire: every top-level ``def``, ``class`` and assigned name
+    in ``parquet_generator_spark/`` is used by an entry point. The
+    roots are every other top-level statement of a package module
+    (imports and ``__all__`` aside), the entry module, ``bench.py``,
+    ``scripts/`` and ``perfbench/``, plus the ``{kind}_stem`` /
+    ``{kind}_stem_sql`` functions ``analyzers._stemmer`` looks up by
+    name. A name is used when a root, or a definition already used,
+    mentions it as a name or an attribute. A definition only tests
+    call is dead weight, unless ``_KEPT_FOR_TESTS`` gives a reason."""
+    import ast
+    import pathlib
+
+    from parquet_generator_spark.operators.analyzers import _STEMMERS
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    defs = {}  # name -> top-level nodes defining it
+    roots = []
+    for p in sorted((repo / "parquet_generator_spark").rglob("*.py")):
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                names = []
+            if names == ["__all__"]:
+                continue
+            for n in names:
+                defs.setdefault(n, []).append(node)
+            if not names:
+                roots.append(node)
+    for p in [repo / "__spark_entry__.py", repo / "bench.py",
+              *sorted((repo / "scripts").glob("*.py")),
+              *sorted((repo / "perfbench").glob("*.py"))]:
+        roots.append(ast.parse(p.read_text()))
+
+    def mentions(node):
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Name):
+                yield sub.id
+            elif isinstance(sub, ast.Attribute):
+                yield sub.attr
+
+    todo = [n for r in roots for n in mentions(r)]
+    todo += [f"{kind}_stem{suffix}" for kind in _STEMMERS
+             for suffix in ("", "_sql")]
+    todo += list(_KEPT_FOR_TESTS)
+    while todo:
+        for node in defs.pop(todo.pop(), []):
+            todo.extend(mentions(node))
+    unused = sorted(defs)
+    assert unused == [], unused
+
+
 def test_stemmer_sql_plumbing_has_one_owner():
     """Tripwire: ``operators/stem_sql.py`` owns the dialect plumbing,
     so no stemmer module defines its own ``_let``/``_st``/``_ql``/

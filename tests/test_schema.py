@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import types as T
 
 from parquet_generator_spark.schema import (

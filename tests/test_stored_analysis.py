@@ -252,22 +252,39 @@ def test_store_rebuilds_on_analyzer_version_change(spark, tmp_path,
         assert json.load(fh)["fingerprint"] == fp1
 
 
-def test_store_fingerprint_ignores_hash_seed():
-    """The package's code hash must not depend on PYTHONHASHSEED,
-    or every fresh process would rebuild every store."""
+def test_store_fingerprint_ignores_hash_seed(tmp_path):
+    """A store built in one process is reused by the next, whatever
+    its PYTHONHASHSEED: a seed-dependent fingerprint would rebuild
+    every store in every fresh process."""
     import os
     import pathlib
+    import shutil
     import subprocess
     import sys
+    import uuid
 
-    code = ("from parquet_generator_spark.sinks.stores "
-            "import code_hash; print(code_hash())")
-    root = pathlib.Path(__file__).resolve().parent.parent
-    hashes = [
-        subprocess.run([sys.executable, "-c", code], cwd=root,
-                       env={**os.environ, "PYTHONHASHSEED": seed},
-                       capture_output=True, text=True,
-                       check=True).stdout
-        for seed in ("1", "2")
-    ]
-    assert hashes[0] == hashes[1], hashes
+    from parquet_generator_spark.sinks import stores
+
+    name = f"hash_seed_probe_{uuid.uuid4().hex}"
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "src.txt").write_text("rows")
+    counter = tmp_path / "builds"
+    code = ("import sys\n"
+            "from parquet_generator_spark.sinks import stores\n"
+            "name, sf, counter = sys.argv[1:]\n"
+            "def build(root):\n"
+            "    with open(counter, 'a') as fh:\n"
+            "        fh.write('built\\n')\n"
+            "stores.ensure(name, sf, ['src.txt'], build)\n")
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    try:
+        for seed in ("1", "2"):
+            subprocess.run(
+                [sys.executable, "-c", code, name, str(sf), str(counter)],
+                cwd=repo, env={**os.environ, "PYTHONHASHSEED": seed},
+                check=True)
+    finally:
+        shutil.rmtree(os.path.join(stores._BASE, name),
+                      ignore_errors=True)
+    assert counter.read_text() == "built\n"

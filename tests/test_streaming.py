@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
