@@ -21,8 +21,8 @@ Semantics:
   the loser gets ``ConcurrentWriteError`` — the Delta/Iceberg
   protocol's conflict rule, minus the retry machinery.
 - Time travel: ``read_snapshot(spark, path, version=N)`` reads
-  exactly version N's files, forever (files are immutable and
-  nothing deletes them).
+  exactly version N's files, forever (files are immutable, and no
+  commit deletes one).
 
 The reference's loop deletes and rewrites its output file per pull
 (EsParquetWriter.java:52-56) — restart-from-scratch semantics. This
